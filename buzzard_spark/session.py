@@ -34,33 +34,44 @@ ENGINE_CONFS = {
     # through to the slow BytesToBytesMap. 2^20 slots keeps those maps on
     # the fast path (measured: flagship agg −20% on both clustered and
     # crawl-order layouts at 128M rows; ~16 MB per in-flight task, well
-    # inside executor memory at any scale). Parameterised for clusters
-    # with smaller executors.
-    'spark.sql.codegen.aggregate.fastHashMap.capacityBit':
-        os.environ.get('SPARK_GRAFT_AGG_FASTMAP_BITS', '20'),
+    # inside executor memory at any scale).
+    'spark.sql.codegen.aggregate.fastHashMap.capacityBit': '20',
     # reliable checkpoints written by checkpoint_release() are deleted by
     # the ContextCleaner once the referencing DataFrame is GC'd
     'spark.cleaner.referenceTracking.cleanCheckpoints': 'true',
 }
 
 
+def _local_dir() -> str | None:
+    """``$SPARK_GRAFT_LOCAL_DIR`` (default: tmpfs), created on demand;
+    None when it cannot be created."""
+    d = os.environ.get('SPARK_GRAFT_LOCAL_DIR', '/dev/shm/spark-local')
+    try:
+        os.makedirs(d, exist_ok=True)
+    except OSError:
+        return None
+    return d
+
+
 def get_session(master: str | None = None, app_name: str = 'buzzard_spark',
                 shuffle_partitions: int | None = None) -> SparkSession:
+    """Session sized to the host unless overridden: ``local[cpus]`` with
+    the CPUs this process may run on ($SPARK_GRAFT_CPUS) and half of
+    physical memory for the driver ($SPARK_GRAFT_DRIVER_MEM)."""
     if master is None:
-        cpus = os.environ.get('SPARK_GRAFT_CPUS', '32')
+        cpus = os.environ.get('SPARK_GRAFT_CPUS',
+                              str(len(os.sched_getaffinity(0))))
         master = f'local[{cpus}]'
     if shuffle_partitions is None:
         n = master.split('[')[-1].rstrip(']*')
         shuffle_partitions = int(n) if n.isdigit() else 32
-    local_dir = os.environ.get('SPARK_GRAFT_LOCAL_DIR', '/dev/shm/spark-local')
-    try:
-        os.makedirs(local_dir, exist_ok=True)
-    except OSError:
-        local_dir = None
+    ram = os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES')  # MemTotal
+    local_dir = _local_dir()
     builder = (SparkSession.builder.master(master).appName(app_name)
                .config('spark.sql.shuffle.partitions', str(shuffle_partitions))
                .config('spark.driver.memory',
-                       os.environ.get('SPARK_GRAFT_DRIVER_MEM', '48g')))
+                       os.environ.get('SPARK_GRAFT_DRIVER_MEM',
+                                      f'{(ram // 2) >> 20}m')))
     if local_dir:
         # tmpfs shuffle dirs: immune to neighbor disk I/O on the shared host
         builder = builder.config('spark.local.dir', local_dir)
@@ -71,11 +82,10 @@ def get_session(master: str | None = None, app_name: str = 'buzzard_spark',
 
 def warm_session(spark) -> None:
     """One-time session warmup: JVM codegen, the Arrow/pandas Python
-    worker pool, and the window codegen path — the same first-use costs
-    bench.py's inline warmup absorbs (measured 5-7s otherwise billed to
-    whichever query a harness runs first). Correctness harnesses
-    (tools/check_oracle.py, the driver's gate mimic) call this so their
-    per-query walls measure operators, not session spin-up."""
+    worker pool, and the window codegen path (measured 5-7s otherwise
+    billed to whichever operation a harness runs first). perfbench's
+    worker calls this during set-up so its per-operation walls measure
+    operators, not session spin-up."""
     import pandas as _pd
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
@@ -102,12 +112,7 @@ def ensure_checkpoint_dir(spark) -> None:
     import atexit
     import shutil
     import tempfile
-    base = os.environ.get('SPARK_GRAFT_LOCAL_DIR', '/dev/shm/spark-local')
-    try:
-        os.makedirs(base, exist_ok=True)
-    except OSError:
-        base = None
-    d = tempfile.mkdtemp(prefix='bzs-ckpt-', dir=base)
+    d = tempfile.mkdtemp(prefix='bzs-ckpt-', dir=_local_dir())
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     sc.setCheckpointDir(d)
 
@@ -121,13 +126,10 @@ def release_blocks(cached=()):
     checkpoint first — same cache-lifetime contract as
     :func:`checkpoint_release`, minus the file round-trip."""
     for df in cached:
-        try:
-            df.unpersist()
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == 'LogicalRDD':
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == 'LogicalRDD':
+            plan.rdd().unpersist(False)
 
 
 def checkpoint_release(result, cached=()):
@@ -142,15 +144,5 @@ def checkpoint_release(result, cached=()):
     the returned DataFrame is GC'd (cleanCheckpoints=true)."""
     ensure_checkpoint_dir(result.sparkSession)
     out = result.checkpoint(eager=True)
-    for df in cached:
-        try:
-            df.unpersist()
-            # a localCheckpoint()ed DataFrame persists its INTERNAL RDD,
-            # which the CacheManager (Dataset.unpersist) does not manage —
-            # release the LogicalRDD's blocks directly
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == 'LogicalRDD':
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
+    release_blocks(cached)
     return out

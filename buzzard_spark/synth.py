@@ -2,12 +2,12 @@
 
 Two sources, same geoparsing arithmetic (functions.sqlgen):
 
-- ``pages_from_documents``: the driver's ``documents`` parquet with derived
+- ``pages_from_documents``: the testdata ``documents`` parquet with derived
   url / lat / lng — used by the oracle-checked queries (the DuckDB oracle
   re-derives the identical columns in SQL).
 - ``synthetic_pages``: ``spark.range(n)``-generated pages at any scale —
-  used by bench.py (10^6–10^7 rows in-sandbox; the generator is O(1) memory
-  per partition and scale-free, matching the 10^12-design).
+  used by perfbench (the generator is O(1) memory per partition and
+  scale-free).
 
 Everything is built from Catalyst expressions — zero Python in the row path.
 """

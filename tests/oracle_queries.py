@@ -1,17 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Oracle query registry: every operator run over the testdata tables.
 
-``queries()`` exposes the engine's operators over the driver testdata;
-``oracle_sql()`` mirrors each one in DuckDB SQL. Shared arithmetic comes
+``queries()`` exposes the engine's operators over the testdata;
+``oracle_sql()`` mirrors each one in DuckDB SQL, and
+tests/test_oracle_queries.py compares the two. Shared arithmetic comes
 from buzzard_spark.functions.sqlgen so both sides evaluate identical
 IEEE-754 expressions.
 """
 
 from __future__ import annotations
-
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from collections.abc import Callable
 
@@ -370,7 +366,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat ANN probing ALL cells (nprobe == n_cells) — exhaustive, so
-    the driver oracle is the same brute-force truth as `ann_topk` while
+    the DuckDB oracle is the same brute-force truth as `ann_topk` while
     the query exercises the full IVF plumbing (deterministic spherical
     k-means quantizer, matmul cell assignment, per-cell equi-join). The
     nprobe < n_cells recall tradeoff is pinned by pytest
@@ -1060,7 +1056,7 @@ def q_compact_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed tile-grid enumeration (Footprint.tile(shrink) as rows —
-    the §2.1 tiling algebra at the driver surface)."""
+    the §2.1 tiling algebra as a query)."""
     return raster_ops.tile_grid_df(spark, TILE_FP, 48)
 
 
@@ -1578,17 +1574,7 @@ def q_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.countDistinct('host').alias('n_hosts')))
 
 
-# Registry order is COVERAGE order, not history order (round-5 lesson:
-# the driver's correctness window checked exactly the first 50 entries and
-# the three §2 anchors parked at positions 86-88 lost their green rows —
-# VERDICT r5 #2). Any prefix the driver manages to check now covers the
-# survey: tier 1 = one query per SURVEY §2 family, tier 2 = the
-# LLM-data-pipeline core (tiers 1+2 are exactly the first 50), tier 3 =
-# variants and secondary meta/profile queries. Within a tier, cheap
-# queries lead so a truncated window buys the most rows. The name→func
-# mapping and every oracle are unchanged — this is ordering only.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # ---- tier 1: SURVEY §2 family anchors ----
     'tile_assign': q_tile_assign,
     'tile_grid': q_tile_grid,
     'cell_assign_counts': q_cell_assign_counts,
@@ -1608,7 +1594,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     'tiff_meta': q_tiff_meta,
     'polygonize_components': q_polygonize_components,
     'find_lines_total': q_find_lines_total,
-    # ---- tier 2: LLM-data-pipeline core (prefix of 50 ends here) ----
     'doc_fingerprint': q_doc_fingerprint,
     'dedup_exact': q_dedup_exact,
     'token_count': q_token_count,
@@ -1640,7 +1625,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     'dedup_near_pairs': q_dedup_near_pairs,
     'setsim_pairs': q_setsim_pairs,
     'dedup_clusters': q_dedup_clusters,
-    # ---- tier 3: variants / secondary meta and profile queries ----
     'pip_join_pairs': q_pip_join_pairs,
     'pip_polygon_count': q_pip_polygon_count,
     'cell_rollup': q_cell_rollup,
@@ -1680,40 +1664,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     'pareto_front': q_pareto_front,
     'join_sample': q_join_sample,
 }
-
-
-def bench_extra_queries() -> dict[str, Callable[[SparkSession, str],
-                                                DataFrame]]:
-    """Bench-only timed rows (VERDICT r4 directive #6): the IVF / IVF-PQ
-    queries in ``queries()`` deliberately probe ALL cells so the
-    brute-force oracle is exhaustive truth; these variants run the
-    nprobe < n_cells configuration users actually run at scale (recall
-    pinned by pytest — test_ivf_topk recall / ivfpq recall-at-truncation
-    — so no oracle applies; bench.py times them alongside the sweep)."""
-
-    def ivf_nprobe4(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = spark.read.parquet(f'{sf_dir}/embeddings.parquet')
-        corpus = emb.select('vec_id', F.col('embedding').alias('vec'))
-        queries_df = (emb.where(F.col('vec_id') < 8)
-                      .select(F.col('vec_id').alias('qid'),
-                              F.col('embedding').alias('qvec')))
-        return (similarity_ops.ivf_topk(corpus, queries_df, 10,
-                                        n_cells=16, nprobe=4)
-                .select('qid', 'vec_id', 'rnk'))
-
-    def ivfpq_nprobe4(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = spark.read.parquet(f'{sf_dir}/embeddings.parquet')
-        corpus = emb.select('vec_id', F.col('embedding').alias('vec'))
-        queries_df = (emb.where(F.col('vec_id') < 8)
-                      .select(F.col('vec_id').alias('qid'),
-                              F.col('embedding').alias('qvec')))
-        return (similarity_ops.ivfpq_topk(corpus, queries_df, 10,
-                                          n_cells=16, nprobe=4,
-                                          m_sub=8, ks=16, rerank=100)
-                .select('qid', 'vec_id', 'rnk'))
-
-    return {'ivf_topk_nprobe4': ivf_nprobe4,
-            'ivfpq_topk_nprobe4': ivfpq_nprobe4}
 
 
 def _near_dup_ctes() -> str:
@@ -1949,7 +1899,7 @@ def oracle_sql() -> dict[str, str]:
                  mnx=sqlgen.dlit(VECTOR_MASK[0]), mny=sqlgen.dlit(VECTOR_MASK[1]),
                  mxx=sqlgen.dlit(VECTOR_MASK[2]), mxy=sqlgen.dlit(VECTOR_MASK[3])),
         # CAST(SUM(...) AS BIGINT): DuckDB SUM(BIGINT) returns HUGEINT which
-        # lands in pandas as float64 and breaks the driver's value hash
+        # lands in pandas as float64 — keep integer sums integer
         'lineitem_pricing': (
             'SELECT l_returnflag, l_linestatus, '
             'CAST(SUM(CAST(ROUND(l_quantity * 100.0, 0) AS BIGINT)) AS BIGINT) '
@@ -2599,8 +2549,3 @@ def oracle_sql() -> dict[str, str]:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(QUERIES)
 
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001: cell-indexed
-    point-in-region join + per-region counts."""
-    return q_pip_count_by_region(spark, '/root/testdata/sf0.001')
