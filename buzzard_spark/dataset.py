@@ -28,6 +28,7 @@ import pandas as pd
 
 from buzzard_spark.kernels.footprint import Footprint
 from buzzard_spark.operators import raster_io, recipe, vector_source
+from buzzard_spark.session import local_frame
 from buzzard_spark.sources.snapshot_table import SnapshotTable
 
 
@@ -239,8 +240,8 @@ class NumpyRasterProxy(RasterProxy):
                     {'tile_y': ty, 'tile_x': tx, 'y0': y0, 'x0': x0,
                      'h': sub.shape[0], 'w': sub.shape[1]}, sub))
         cols = [f.split()[0] for f in DATA_TILE_SCHEMA.split(', ')]
-        return self.spark.createDataFrame(pd.DataFrame(rows)[cols],
-                                          DATA_TILE_SCHEMA)
+        return local_frame(self.spark, pd.DataFrame(rows, columns=cols),
+                           DATA_TILE_SCHEMA)
 
     def set_data(self, array, fp=None, mask=None, channel=0):
         """Masked in-place write into the wrapped array (aligned window)."""

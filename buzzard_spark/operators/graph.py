@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from buzzard_spark.session import local_frame
+
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
                          id_col: str = 'node',
@@ -104,9 +106,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                 parent[rb] = ra
         labels = [(n, find(n)) for n in parent]
         spark = nodes.sparkSession
-        star = (spark.createDataFrame(labels, 'u long, comp long')
-                if labels else
-                spark.createDataFrame([], 'u long, comp long'))
+        star = local_frame(spark, labels, 'u long, comp long')
         out = (nodes.select(F.col(id_col).alias('u'))
                .join(F.broadcast(star), 'u', 'left')
                .select(F.col('u').alias(id_col),
@@ -264,7 +264,7 @@ def pagerank_exact_uniform(nodes: DataFrame, edges: DataFrame,
         schema = StructType([
             StructField('v', base_nodes.schema[0].dataType),
             StructField('pr_scaled', LongType())])
-        return spark.createDataFrame(list(a.items()), schema)
+        return local_frame(spark, a.items(), schema)
 
     scores = base_nodes.select('v', F.lit(1).cast('long').alias('a'))
     rounds = []
@@ -493,8 +493,8 @@ def resolve_redirects(edges: DataFrame, src: str = 'src',
             StructField(src, t.schema['s'].dataType),
             StructField('final', t.schema['d'].dataType),
             StructField('is_cycle', BooleanType(), nullable=False)])
-        out = spark.createDataFrame(
-            [(s, final[s], final[s] is None) for s in d_map], schema)
+        out = local_frame(
+            spark, [(s, final[s], final[s] is None) for s in d_map], schema)
         release_blocks([t])
         return out
 
@@ -603,8 +603,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
         schema = StructType([
             StructField('node', seeds.schema[0].dataType),
             StructField('hop', LongType())])
-        out = spark.createDataFrame(
-            [(n, h) for n, h in hop_of.items()], schema)
+        out = local_frame(spark, hop_of.items(), schema)
         release_blocks([e])
         return out
 
@@ -727,8 +726,7 @@ def sssp_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
         schema = StructType([
             StructField('node', seeds.schema[0].dataType),
             StructField('dist', LongType())])
-        out = spark.createDataFrame(
-            [(n, d) for n, d in dist_of.items()], schema)
+        out = local_frame(spark, dist_of.items(), schema)
         release_blocks([e])
         return out
 
@@ -844,7 +842,7 @@ def trustrank_exact_uniform(nodes: DataFrame, edges: DataFrame,
             schema = StructType([
                 StructField('v', base_nodes.schema[0].dataType),
                 StructField('tr_scaled', LongType())])
-            return spark.createDataFrame(list(a.items()), schema)
+            return local_frame(spark, a.items(), schema)
 
     flag = (nodes.select(F.col(id_col).alias('v'))
             .join(seeds.select(F.col(seeds.columns[0]).alias('v'))

@@ -1,32 +1,46 @@
 """kNN via cell-ring expansion (north_rule operator).
 
-Plan shape (all JVM until the final window):
+Plan shape for a batch of at most ``broadcast_rows`` queries (serving):
 
-1. assign every query its cell; explode the (2r+1)² ring offsets with
-   sequence()+explode (longitude wraps, latitude clips),
-2. equi-join candidate pages on cell,
+1. one Arrow trip fetches the batch (``limit(broadcast_rows + 1)``, one
+   job);
+2. the driver builds the ring side — every query's ring-``k_ring`` cells
+   (``cells.cell_of`` + ``cells.ring``: longitude wraps, latitude clips)
+   — as an Arrow-built local relation (:func:`driver_rings`). Spark sees
+   its true size and broadcasts it against the pages: the page table is
+   never shuffled (:func:`ring_join`);
 3. exact distance + per-query top-k via ROW_NUMBER over (dist2, page_id)
-   — deterministic tie-breaking,
-4. geometric guarantee check: a page outside ring r is at least
-   r·min(cell_w, cell_h) degrees away, so a query is *settled* iff it found
-   k candidates with kth distance² ≤ (r·min(cw,ch))²; unsettled queries
-   (sparse neighborhoods) fall back to a brute-force pass — at scale this
-   is a tiny fraction, and the fallback broadcasts only those queries.
+   — deterministic tie-breaking — fetched through Arrow;
+4. geometric guarantee check, on the driver: a page outside ring r is at
+   least r·min(cell_w, cell_h) degrees away, so a query is *settled* iff
+   it found k candidates with kth distance² < (r·min(cw,ch))²; unsettled
+   queries (sparse neighborhoods, the poles) take one brute-force pass
+   that broadcasts only those queries;
+5. the result is a local relation: nothing is persisted, no checkpoint
+   file is written, and the caller's collect runs no Spark job.
 
-The iterated-ring variant of the reference survey (§2.5) is folded into
-one round + guarantee + fallback: one shuffle instead of R.
+A batch larger than ``broadcast_rows`` cannot be held on the driver and
+takes the distributed loop instead (:func:`_knn_bulk`): the ring side is
+exploded in SQL (:func:`ring_cells`), settled by ``groupBy``, and the
+ring radius doubles over the unsettled subset until it fits the brute
+pass; the result is materialized by ``checkpoint_release``.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from buzzard_spark.kernels import cells
 from buzzard_spark.operators.spatial_join import assign_cell
+from buzzard_spark.session import checkpoint_release, local_frame
 
 DIST2 = ('(lat - qlat) * (lat - qlat) + (lng - qlng) * (lng - qlng)')
+OUT_COLS = ('qid', 'page_id', 'dist2', 'rnk')
 
 
 def ring_cells(queries: DataFrame, res: int, k_ring: int) -> DataFrame:
@@ -50,6 +64,31 @@ def ring_cells(queries: DataFrame, res: int, k_ring: int) -> DataFrame:
     return q.drop('_qx', '_qy')
 
 
+def driver_rings(spark, batch, schema: StructType, res: int,
+                 k_ring: int) -> DataFrame:
+    """The small-batch ring side: one (qid, qlat, qlng, cell) row per
+    query and ring cell, the cells of :func:`ring_cells` computed on the
+    driver, as a local relation. ``batch`` is the fetched pandas frame of
+    ``schema``'s (qid, qlat, qlng). A query with a NULL coordinate gets no
+    ring (assign_cell's -1 sentinel joins nothing either)."""
+    lat = batch['qlat'].to_numpy(dtype=np.float64)
+    lng = batch['qlng'].to_numpy(dtype=np.float64)
+    ok = np.flatnonzero(~(np.isnan(lat) | np.isnan(lng)))
+    rings = [cells.ring(c, k_ring, res)
+             for c in cells.cell_of(lat[ok], lng[ok], res)]
+    frame = batch.iloc[np.repeat(ok, [len(r) for r in rings])].assign(
+        cell=np.concatenate(rings or [np.empty(0, np.int64)]))
+    return local_frame(spark, frame, StructType(
+        list(schema.fields) + [StructField('cell', LongType(), False)]))
+
+
+def ring_join(rings: DataFrame, pages_c: DataFrame) -> DataFrame:
+    """Candidate (query, page) pairs: the ring side equi-joined to the
+    cell-assigned pages on ``cell``."""
+    return rings.join(pages_c, 'cell').select(
+        'qid', 'qlat', 'qlng', 'page_id', 'lat', 'lng')
+
+
 def _topk(cand: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy('qid').orderBy(F.col('dist2').asc(), F.col('page_id').asc())
     return (cand
@@ -58,27 +97,72 @@ def _topk(cand: DataFrame, k: int) -> DataFrame:
             .where(F.col('rnk') <= k))
 
 
+def _brute(pages: DataFrame, batch: DataFrame, k: int) -> DataFrame:
+    """Exact top-k of a small query batch against every page (the batch
+    is the broadcast side)."""
+    cand = F.broadcast(batch).crossJoin(pages.select('page_id', 'lat', 'lng'))
+    return _topk(cand, k).select(*OUT_COLS)
+
+
+def _covers_grid(r: int, res: int) -> bool:
+    # a ring this wide covers every cell (lat clips, lng wraps): its
+    # candidates are the full corpus — exact by construction
+    nx, ny = cells.dims(res)
+    return r >= max(ny - 1, nx // 2 + 1)
+
+
+def _guarantee(r: int, res: int) -> float:
+    # a page outside ring r is at least r·min(cw, ch) away; settle with a
+    # strict `<`: at kth == guarantee an outside-ring page could tie
+    cw, ch = cells.cell_size_deg(res)
+    return (r * min(cw, ch)) ** 2
+
+
 def knn(pages: DataFrame, queries: DataFrame, k: int, res: int,
         k_ring: int = 2, broadcast_rows: int = 100_000) -> DataFrame:
     """queries(qid, qlat, qlng) × pages(page_id, lat, lng) → top-k rows
     (qid, page_id, dist2, rnk). Exact — ring join + guarantee + fallback.
 
-    Fallback structure (VERDICT r3 #7 — the round-3 version collected ALL
-    unsettled query rows to the driver unconditionally, unbounded with a
-    bulk query table over a sparse corpus): one limit-collect bounds the
-    driver trip; at or below ``broadcast_rows`` rows the unsettled set
-    takes the broadcast brute pass (the query side is the broadcast-bounded dimension), above it the
-    ring radius doubles and the join re-runs DISTRIBUTIVELY on the
-    unsettled subset only — no driver materialization of anything
-    query-table-sized. Terminates: once the ring covers the whole grid the
-    candidate set is the full corpus, which settles every query exactly.
+    One limit-fetch bounds the driver trip: at or below ``broadcast_rows``
+    queries the whole batch is served through local relations (module
+    docstring); above it :func:`_knn_bulk` runs distributed and no
+    query-table-sized set is ever materialized on the driver.
     """
-    cw, ch = cells.cell_size_deg(res)
-    nx, ny = cells.dims(res)
+    spark = queries.sparkSession
+    q = queries.select('qid', 'qlat', 'qlng')
+    batch = q.limit(broadcast_rows + 1).toPandas()
+    if len(batch) > broadcast_rows:
+        return _knn_bulk(pages, q, k, res, k_ring, broadcast_rows)
 
-    from buzzard_spark.session import checkpoint_release
+    rings = driver_rings(spark, batch, q.schema, res, k_ring)
+    topk_df = _topk(ring_join(rings, assign_cell(pages, res)), k) \
+        .select(*OUT_COLS)
+    top = topk_df.toPandas()
+    if not _covers_grid(k_ring, res):
+        stats = top.groupby('qid').agg(found=('rnk', 'max'),
+                                       kth=('dist2', 'max'))
+        settled = stats.index[(stats['found'] == k)
+                              & (stats['kth'] < _guarantee(k_ring, res))]
+        top = top[top['qid'].isin(settled)]
+        unsettled = batch[~batch['qid'].isin(settled)]
+        if len(unsettled):
+            brute = _brute(pages, local_frame(spark, unsettled, q.schema), k)
+            top = pd.concat([top, brute.toPandas()], ignore_index=True)
+    return local_frame(spark, top, topk_df.schema)
 
-    out_cols = ('qid', 'page_id', 'dist2', 'rnk')
+
+def _knn_bulk(pages: DataFrame, queries: DataFrame, k: int, res: int,
+              k_ring: int, broadcast_rows: int) -> DataFrame:
+    """Distributed rounds for a query table too large for the driver.
+
+    One limit-fetch per round both bounds the driver AND delivers the
+    unsettled rows: at or below ``broadcast_rows`` rows they take the
+    broadcast brute pass, above it the ring radius doubles and the join
+    re-runs DISTRIBUTIVELY on the unsettled subset only. Terminates: once
+    the ring covers the whole grid the candidate set is the full corpus,
+    which settles every query exactly.
+    """
+    spark = queries.sparkSession
     pages_c = assign_cell(pages, res)
     cached: list[DataFrame] = []
     parts: list[DataFrame] = []
@@ -86,45 +170,32 @@ def knn(pages: DataFrame, queries: DataFrame, k: int, res: int,
     r = k_ring
     while True:
         rings = ring_cells(qcur, res, r)
-        cand = rings.join(pages_c, 'cell').select(
-            'qid', 'qlat', 'qlng', 'page_id', 'lat', 'lng')
-        topk = _topk(cand, k).select(
+        topk = _topk(ring_join(rings, pages_c), k).select(
             'qid', 'qlat', 'qlng', 'page_id', 'dist2', 'rnk').persist()
         cached.append(topk)
-        # ring covers every cell (lat clips, lng wraps): candidates == the
-        # full corpus — exact by construction, no guarantee check needed
-        if r >= max(ny - 1, nx // 2 + 1):
-            parts.append(topk.select(*out_cols))
+        if _covers_grid(r, res):
+            parts.append(topk.select(*OUT_COLS))
             break
-        guarantee = (r * min(cw, ch)) ** 2
-        # strict `<`: at kth == guarantee an outside-ring page could tie
         settled_stats = (topk.groupBy('qid')
                          .agg(F.max('rnk').alias('found'),
                               F.max('dist2').alias('kth'))
                          .where((F.col('found') == k) &
-                                (F.col('kth') < guarantee)))
+                                (F.col('kth') < _guarantee(r, res))))
         parts.append(topk.join(settled_stats.select('qid'), 'qid',
-                               'left_semi').select(*out_cols))
+                               'left_semi').select(*OUT_COLS))
         unsettled_q = qcur.join(settled_stats.select('qid'), 'qid',
                                 'left_anti')
-        # one limit-collect both bounds the driver AND delivers the rows
-        # (<= broadcast_rows rows back means the whole set came back; at
-        # most broadcast_rows+1 rows ever reach the driver) — replaces
-        # the separate count job + collect job
-        un_rows = unsettled_q.limit(broadcast_rows + 1).collect()
-        if not un_rows:
+        un = unsettled_q.limit(broadcast_rows + 1).toPandas()
+        if un.empty:
             break
-        if len(un_rows) <= broadcast_rows:
-            brute_q = queries.sparkSession.createDataFrame(
-                un_rows, unsettled_q.schema)
-            brute_cand = F.broadcast(brute_q).crossJoin(
-                pages.select('page_id', 'lat', 'lng'))
-            parts.append(_topk(brute_cand, k).select(*out_cols))
+        if len(un) <= broadcast_rows:
+            parts.append(_brute(pages, local_frame(spark, un,
+                                                   unsettled_q.schema), k))
             break
         # too many to broadcast: widen the ring and re-join distributively
         # on the unsettled subset only (localCheckpoint truncates the
         # growing anti-join lineage; materialized by the next round's
-        # limit-collect)
+        # limit-fetch)
         qcur = unsettled_q.localCheckpoint(eager=False)
         cached.append(qcur)
         r *= 2

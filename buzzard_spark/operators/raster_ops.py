@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from buzzard_spark.kernels import geometry, raster
+from buzzard_spark.session import local_frame
 
 TILE_SCHEMA = ('tile_y int, tile_x int, y0 int, x0 int, h int, w int, '
                'mask binary')
@@ -794,7 +795,7 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
 
     if edges_px.isEmpty():
         from buzzard_spark.session import checkpoint_release
-        empty = spark.createDataFrame([], LINE_SCHEMA)
+        empty = local_frame(spark, [], LINE_SCHEMA)
         return checkpoint_release(empty, [edges_px, pixels] + registry)
     ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
             .unionByName(edges_px.select('eid', F.col('eb').alias('node'))))
@@ -960,7 +961,7 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
         .persist()
     if runs.isEmpty():
         runs.unpersist()
-        return spark.createDataFrame([], POLY_SCHEMA)
+        return local_frame(spark, [], POLY_SCHEMA)
     edges = _border_edges(runs.drop('node'), tile_size)
     # composed CC: round blocks go to the registry; the single reliable
     # checkpoint at the end of this function releases them (VERDICT r3 #2)

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from buzzard_spark.session import local_frame
+
 COS = ('(aggregate(zip_with(vec, qvec, (x, y) -> CAST(x AS DOUBLE) * '
        'CAST(y AS DOUBLE)), 0E0, (acc, v) -> acc + v) / '
        '(sqrt(aggregate(vec, 0E0, (acc, v) -> acc + CAST(v AS DOUBLE) * '
@@ -134,8 +136,8 @@ def cosine_near_pairs(emb: DataFrame, threshold: float,
         F.expr(f'pmod(xxhash64(CAST({id_col} AS LONG)), {n_blocks})')
         .cast('int').alias('_b'))
 
-    pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+    pairs = local_frame(
+        spark, [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         'bi int, bj int')
     left = (tagged.join(F.broadcast(pairs), tagged._b == pairs.bi)
             .select('bi', 'bj', F.lit(0).alias('side'), '_id', '_u'))

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from buzzard_spark.session import local_frame
+
 
 # slices with stop below this run as sort+offset+limit: Spark plans them
 # as TakeOrderedAndProject (per-partition top-`stop` heaps, no global-sort
@@ -87,7 +89,7 @@ def _sliced_by_order(df: DataFrame, fid_col: str, start: int,
     for pid, n in counts:
         offsets.append((pid, acc))
         acc += n
-    off_df = spark.createDataFrame(offsets, '_pid int, _off long')
+    off_df = local_frame(spark, offsets, '_pid int, _off long')
     w = Window.partitionBy('_pid').orderBy(F.col(fid_col).asc())
     pos = F.col('_off') + F.row_number().over(w) - 1
     out = (ranged.join(F.broadcast(off_df), '_pid')

@@ -117,13 +117,44 @@ def ensure_checkpoint_dir(spark) -> None:
     sc.setCheckpointDir(d)
 
 
+def local_frame(spark, data, schema):
+    """A ``LocalRelation`` holding driver-resolved ``data`` under ``schema``.
+
+    ``data`` is a sequence of row tuples or a pandas frame (columns taken
+    by POSITION); ``schema`` is a StructType or a DDL string whose types
+    and nullability the frame keeps (pandas NaN/None become NULL). The
+    rows travel to the JVM as one Arrow table, so the plan is a local
+    relation with its true size: the planner can broadcast it, and
+    scanning it starts no Spark job. A list ``createDataFrame`` instead
+    builds a ``LogicalRDD`` over a Python RDD — no size estimate (never
+    broadcast) and Python worker tasks on every scan. Engine code builds
+    every driver-resolved frame here."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        cols = [pa.Array.from_pandas(data.iloc[:, i], type=f.type)
+                for i, f in enumerate(arrow)]
+    else:
+        data = list(data)
+        cols = [pa.array([row[i] for row in data], type=f.type)
+                for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow),
+                                 schema)
+
+
 def release_blocks(cached=()):
     """Unpersist every DataFrame in ``cached`` immediately (including the
     internal RDD blocks a ``localCheckpoint`` pins, which Dataset.unpersist
     does not manage). For operator fast paths whose RESULT is a local
-    relation (createDataFrame of driver-resolved rows): the result holds no
-    lineage into the cached frames, so nothing needs a materializing
-    checkpoint first — same cache-lifetime contract as
+    relation (:func:`local_frame` of driver-resolved rows): the result
+    holds no lineage into the cached frames, so nothing needs a
+    materializing checkpoint first — same cache-lifetime contract as
     :func:`checkpoint_release`, minus the file round-trip."""
     for df in cached:
         df.unpersist()

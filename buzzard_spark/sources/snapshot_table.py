@@ -39,6 +39,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from buzzard_spark.session import local_frame
+
 
 class CommitConflictError(RuntimeError):
     """A replace-commit (compaction) lost the CAS race to a concurrent
@@ -472,8 +474,8 @@ class SnapshotTable:
         from pyspark.sql.types import StructType
         for m in reversed(manifests):
             if m.get('schema'):
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(m['schema'])))
+                return local_frame(
+                    spark, [], StructType.fromJson(json.loads(m['schema'])))
         for m in reversed(manifests):
             if m['files']:
                 any_path = os.path.join(self.root, m['files'][0]['path'])
@@ -644,7 +646,7 @@ class SnapshotTable:
         if paths:
             parts.append(spark.read.parquet(*paths).select(*key_cols))
         if legacy_rows:
-            parts.append(spark.createDataFrame(legacy_rows, ', '.join(
+            parts.append(local_frame(spark, legacy_rows, ', '.join(
                 f'{c} long' for c in key_cols)))
         if not parts:
             return None

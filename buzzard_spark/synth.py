@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from buzzard_spark.functions import sqlgen
+from buzzard_spark.session import local_frame
 
 
 def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,9 +114,9 @@ def regions_pentagon(spark: SparkSession, count: int) -> DataFrame:
         rows.append((r, bytearray(geometry.wkb_polygon(ring)),
                      float(vy.min()), float(vx.min()),
                      float(vy.max()), float(vx.max())))
-    return spark.createDataFrame(
-        rows, 'region_id long, wkb binary, minlat double, minlng double, '
-              'maxlat double, maxlng double')
+    return local_frame(
+        spark, rows, 'region_id long, wkb binary, minlat double, '
+                     'minlng double, maxlat double, maxlng double')
 
 
 def regions_rect_wkb(spark: SparkSession, count: int) -> DataFrame:
@@ -134,9 +135,9 @@ def regions_rect_wkb(spark: SparkSession, count: int) -> DataFrame:
                            (lo_x, hi_y), (lo_x, lo_y)])
         rows.append((r, bytearray(geometry.wkb_polygon(ring)),
                      float(lo_y), float(lo_x), float(hi_y), float(hi_x)))
-    return spark.createDataFrame(
-        rows, 'region_id long, wkb binary, minlat double, minlng double, '
-              'maxlat double, maxlng double')
+    return local_frame(
+        spark, rows, 'region_id long, wkb binary, minlat double, '
+                     'minlng double, maxlat double, maxlng double')
 
 
 def features(spark: SparkSession, count: int) -> DataFrame:
@@ -167,9 +168,9 @@ def features(spark: SparkSession, count: int) -> DataFrame:
             bbox = (x - 0.5, y - 0.5, x + 0.5, y + 0.5)
         rows.append((i, bytearray(wkb), *[float(v) for v in bbox],
                      i * 1.5, kinds[mode]))
-    return spark.createDataFrame(
-        rows, 'fid long, wkb binary, minx double, miny double, '
-              'maxx double, maxy double, volume double, kind string')
+    return local_frame(
+        spark, rows, 'fid long, wkb binary, minx double, miny double, '
+                     'maxx double, maxy double, volume double, kind string')
 
 
 def regions(spark: SparkSession, count: int) -> DataFrame:

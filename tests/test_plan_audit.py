@@ -5,8 +5,13 @@
 - column pruning must reach the scan (ReadSchema),
 - the region cover join must be a broadcast hash join,
 - the cell-assignment path must stay inside WholeStageCodegen with no
-  Python UDF (BatchEvalPython/ArrowEvalPython) nodes.
+  Python UDF (BatchEvalPython/ArrowEvalPython) nodes,
+- a small kNN batch broadcasts its ring side to the pages and returns a
+  local relation, persisting and checkpointing nothing.
 """
+
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -290,3 +295,44 @@ def test_round5_batch2_plans_no_python_no_cartesian(spark):
     # being bounded instead; their building blocks (distance_pairs,
     # groupBy cascades) are covered above and by the operator tests.
     assert comp.count() > 0
+
+
+def test_knn_small_batch_plan(spark):
+    """Small-batch kNN: the ring join is a broadcast hash join with no
+    hash exchange of the pages on ``cell``; the call leaves no persisted
+    RDD and no checkpoint file; the result is a local relation."""
+    from buzzard_spark.operators import knn
+    from buzzard_spark.session import ensure_checkpoint_dir
+
+    pages = synth.synthetic_pages(spark, 20_000).select(
+        'page_id', 'lat', 'lng')
+    queries = spark.createDataFrame(
+        [(i, -40.0 + 10.0 * i, -170.0 + 45.0 * i) for i in range(8)],
+        'qid long, qlat double, qlng double')
+
+    rings = knn.driver_rings(spark, queries.toPandas(), queries.schema, 4, 2)
+    joined = knn.ring_join(rings, spatial_join.assign_cell(pages, 4))
+    joined.collect()  # finalize the AQE plan
+    plan = _plan(joined)
+    # the ring side (left) is the broadcast one and the pages stream;
+    # these test pages are small enough that a ring side without a size
+    # estimate would get the pages broadcast instead (BuildRight)
+    assert re.search(r'BroadcastHashJoin .*, Inner, BuildLeft', plan)
+    assert 'SortMergeJoin' not in plan
+    assert not re.search(r'Exchange hashpartitioning\(cell#', plan)
+
+    ensure_checkpoint_dir(spark)
+    ckpt = spark.sparkContext.getCheckpointDir().replace('file:', '', 1)
+
+    def files():
+        return {os.path.join(d, n) for d, _, ns in os.walk(ckpt) for n in ns}
+
+    jsc = spark.sparkContext._jsc
+    persisted = set(dict(jsc.getPersistentRDDs()))
+    ckpt_files = files()
+    out = knn.knn(pages, queries, 5, 4)
+    assert set(dict(jsc.getPersistentRDDs())) == persisted
+    assert files() == ckpt_files
+    assert (out._jdf.queryExecution().optimizedPlan().getClass()
+            .getSimpleName() == 'LocalRelation')
+    assert out.count() == 8 * 5

@@ -4,6 +4,7 @@ plus cell-index kernel sanity."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StringType
 
 from buzzard_spark import synth
 from buzzard_spark.functions import sqlgen
@@ -54,56 +55,161 @@ def test_cell_bounds_center():
     assert minlat < clat < maxlat and minlng < clng < maxlng
 
 
-@pytest.mark.parametrize('n_pages, n_q, k, res, k_ring', [
-    (3000, 25, 10, 4, 2),     # dense: ring path settles most queries
-    (200, 15, 8, 6, 1),       # sparse: brute-force fallback dominates
-])
-def test_knn_matches_bruteforce(spark, n_pages, n_q, k, res, k_ring):
+def _queries(spark, kind, n_q):
+    """A query batch: ``hashed`` spreads over the testdata's lat band;
+    ``antimeridian`` sits within 0.05 deg of lng ±180; ``polar`` lies above
+    85 deg, where no page is (the ring finds too few: brute pass)."""
+    if kind == 'hashed':
+        return spark.range(n_q).select(
+            F.col('id').alias('qid'),
+            F.expr(sqlgen.lat_sql('(id * 7919 + 13)')).alias('qlat'),
+            F.expr(sqlgen.lng_sql('(id * 7919 + 13)')).alias('qlng'))
+    rng = np.random.RandomState(11)
+    lat = rng.uniform(-60.0, 60.0, n_q)
+    lng = rng.uniform(-180.0, 180.0, n_q)
+    sign = rng.choice([-1.0, 1.0], n_q)
+    if kind == 'antimeridian':
+        lng = sign * rng.uniform(179.95, 180.0, n_q)
+    elif kind == 'polar':
+        lat = sign * rng.uniform(85.5, 89.99, n_q)
+    return spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lng))],
+        'qid long, qlat double, qlng double')
+
+
+def _pages(spark, n_pages, duplicated=False):
     pages = synth.synthetic_pages(spark, n_pages).select(
         'page_id', 'lat', 'lng')
-    queries = spark.range(n_q).select(
-        F.col('id').alias('qid'),
-        F.expr(sqlgen.lat_sql('(id * 7919 + 13)')).alias('qlat'),
-        F.expr(sqlgen.lng_sql('(id * 7919 + 13)')).alias('qlng'))
+    if duplicated:
+        # every third page again under a new id: equal dist2 at every
+        # query, so the (dist2, page_id) order decides the ranks
+        pages = pages.unionByName(
+            pages.where(F.col('page_id') % 3 == 0)
+            .withColumn('page_id', F.col('page_id') + n_pages))
+    return pages
 
-    got = {(r['qid'], r['rnk']): r['page_id']
-           for r in knn_ops.knn(pages, queries, k, res, k_ring).collect()}
 
+def _assert_bruteforce(got_rows, pages, queries, k):
+    """``got_rows`` equal numpy brute force: per query the k nearest pages
+    by (dist2, page_id), ranked 1..k."""
+    got = {(r['qid'], r['rnk']): r['page_id'] for r in got_rows}
     p = np.asarray(pages.orderBy('page_id').collect())
     q = np.asarray(queries.orderBy('qid').collect())
-    for qi in range(n_q):
+    for qi in range(len(q)):
         d2 = (p[:, 1] - q[qi, 1]) ** 2 + (p[:, 2] - q[qi, 2]) ** 2
         order = np.lexsort((p[:, 0], d2))[:k]
         for rnk, idx in enumerate(order, 1):
-            assert got[(qi, rnk)] == p[idx, 0], (qi, rnk)
-    assert len(got) == n_q * k
+            assert got[(q[qi, 0], rnk)] == p[idx, 0], (qi, rnk)
+    assert len(got) == len(q) * k
 
 
-def test_knn_distributed_fallback_no_driver_collect(spark):
+@pytest.mark.parametrize('n_pages, n_q, k, res, k_ring, kind', [
+    # dense: ring path settles most queries
+    pytest.param(3000, 25, 10, 4, 2, 'hashed', id='3000-25-10-4-2'),
+    # sparse: brute-force fallback dominates
+    pytest.param(200, 15, 8, 6, 1, 'hashed', id='200-15-8-6-1'),
+    # the ring wraps across lng ±180
+    pytest.param(3000, 12, 6, 3, 2, 'antimeridian', id='antimeridian'),
+    # above every page: every query takes the brute pass
+    pytest.param(3000, 6, 6, 4, 1, 'polar', id='polar'),
+    # res 0, ring 5: the ring covers the whole 8x4 grid (settled by
+    # construction, no guarantee check)
+    pytest.param(300, 10, 6, 0, 5, 'hashed', id='ring-covers-grid'),
+    # duplicated page coordinates: ties ordered by page_id
+    pytest.param(600, 15, 8, 1, 1, 'duplicated', id='duplicate-coords'),
+])
+def test_knn_matches_bruteforce(spark, n_pages, n_q, k, res, k_ring, kind):
+    pages = _pages(spark, n_pages, duplicated=kind == 'duplicated')
+    queries = _queries(spark, kind, n_q)
+    out = knn_ops.knn(pages, queries, k, res, k_ring)
+    _assert_bruteforce(out.collect(), pages, queries, k)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        ('qid', queries.schema['qid'].dataType),
+        ('page_id', pages.schema['page_id'].dataType),
+        ('dist2', DoubleType()), ('rnk', IntegerType())]
+
+
+def test_knn_distributed_fallback_no_driver_collect(spark, monkeypatch):
     """Sparse corpus, every query unsettled, broadcast threshold too small
     to admit the driver collect (VERDICT r3 #7): the ring must widen
     DISTRIBUTIVELY (eventually to full grid cover) and still equal brute
-    force exactly."""
+    force exactly.
+
+    Mixed case: with ``broadcast_rows`` between 1 and the batch size the
+    first round runs distributed and its unsettled remainder (the polar
+    queries) takes the broadcast brute pass."""
     n_pages, n_q, k, res = 6, 40, 4, 4
-    pages = synth.synthetic_pages(spark, n_pages).select(
-        'page_id', 'lat', 'lng')
-    queries = spark.range(n_q).select(
-        F.col('id').alias('qid'),
-        F.expr(sqlgen.lat_sql('(id * 7919 + 13)')).alias('qlat'),
-        F.expr(sqlgen.lng_sql('(id * 7919 + 13)')).alias('qlng'))
+    pages = _pages(spark, n_pages)
+    queries = _queries(spark, 'hashed', n_q)
+    out = knn_ops.knn(pages, queries, k, res, k_ring=1, broadcast_rows=1)
+    _assert_bruteforce(out.collect(), pages, queries, k)
 
-    got = {(r['qid'], r['rnk']): r['page_id']
-           for r in knn_ops.knn(pages, queries, k, res, k_ring=1,
-                                broadcast_rows=1).collect()}
+    brute_batches = []
+    brute = knn_ops._brute
 
-    p = np.asarray(pages.orderBy('page_id').collect())
-    q = np.asarray(queries.orderBy('qid').collect())
-    for qi in range(n_q):
-        d2 = (p[:, 1] - q[qi, 1]) ** 2 + (p[:, 2] - q[qi, 2]) ** 2
-        order = np.lexsort((p[:, 0], d2))[:k]
-        for rnk, idx in enumerate(order, 1):
-            assert got[(qi, rnk)] == p[idx, 0], (qi, rnk)
-    assert len(got) == n_q * k
+    def spy(pages, batch, k):
+        brute_batches.append(batch.count())
+        return brute(pages, batch, k)
+
+    monkeypatch.setattr(knn_ops, '_brute', spy)
+    pages = _pages(spark, 3000)
+    queries = _queries(spark, 'hashed', 37).unionByName(
+        _queries(spark, 'polar', 3).withColumn('qid', F.col('qid') + 37))
+    out = knn_ops.knn(pages, queries, k, 2, k_ring=1, broadcast_rows=10)
+    _assert_bruteforce(out.collect(), pages, queries, k)
+    assert len(brute_batches) == 1 and 1 <= brute_batches[0] <= 10
+
+
+def test_knn_small_and_bulk_paths_agree(spark):
+    """The driver path (batch within ``broadcast_rows``) and the
+    distributed path return the same rows under the same schema: qid and
+    page_id keep their input types (string, int here), rnk stays int."""
+    pages = _pages(spark, 400).withColumn('page_id',
+                                          F.col('page_id').cast('int'))
+    queries = _queries(spark, 'hashed', 12).withColumn(
+        'qid', F.concat(F.lit('q'), F.col('qid').cast('string')))
+    small = knn_ops.knn(pages, queries, 5, 4, k_ring=1)
+    bulk = knn_ops.knn(pages, queries, 5, 4, k_ring=1, broadcast_rows=1)
+    assert small.schema == bulk.schema
+    assert [(f.name, f.dataType) for f in small.schema] == [
+        ('qid', StringType()), ('page_id', IntegerType()),
+        ('dist2', DoubleType()), ('rnk', IntegerType())]
+    assert sorted(small.collect()) == sorted(bulk.collect())
+    assert small.count() == 12 * 5
+
+
+@pytest.mark.parametrize('res, k_ring', [
+    (4, 1),
+    (2, 3),
+    (0, 4),     # 2·k_ring + 1 > nx: the lng wrap would repeat cells
+    (0, 5),     # covers the whole grid
+])
+def test_driver_rings_match_ring_cells(spark, res, k_ring):
+    """cells.ring on the driver (the small-batch ring side) and
+    ring_cells in SQL give the same cell set per query: at the poles,
+    at the antimeridian, on the clamped grid edges, and when the ring is
+    wider than the grid."""
+    pts = [(90.0, 0.0), (-90.0, 12.5), (89.99, 179.99), (-89.99, -180.0),
+           (0.0, 180.0), (0.0, -180.0), (45.3, 179.97), (-12.0, -179.96),
+           (33.3, 44.4), (-60.1, 100.2)]
+    queries = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pts)],
+        'qid long, qlat double, qlng double')
+    driver = knn_ops.driver_rings(spark, queries.toPandas(), queries.schema,
+                                  res, k_ring)
+    sql = knn_ops.ring_cells(queries, res, k_ring)
+
+    def cell_sets(df):
+        out: dict = {}
+        for r in df.select('qid', 'cell').collect():
+            out.setdefault(r['qid'], []).append(r['cell'])
+        return out
+
+    got, want = cell_sets(driver), cell_sets(sql)
+    assert got.keys() == want.keys() == set(range(len(pts)))
+    for qid, cs in got.items():
+        assert len(cs) == len(set(cs)), qid       # no repeated cell
+        assert set(cs) == set(want[qid]), qid
 
 
 def test_assign_cell_null_coords_drop_from_join(spark):
