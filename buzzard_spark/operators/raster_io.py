@@ -147,7 +147,7 @@ def set_data(spark: SparkSession, cache_root: str, raster_fp,
         mask = np.ones(tuple(fp.shape), dtype=bool)
     payload = {'planes': planes, 'mask': mask, 'x0': x0, 'y0': y0}
 
-    def _apply(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _apply(key, pdf):
         out = []
         for _, row in pdf.iterrows():
             plane = payload['planes'][int(row['channel'])]

@@ -81,7 +81,7 @@ def rasterize(spark: SparkSession, fp, polys: DataFrame,
 
     gt = tuple(float(v) for v in fp.gt)
 
-    def _burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _burn(key, pdf):
         from buzzard_spark.kernels.footprint import Footprint
         row = pdf.iloc[0]
         y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)
@@ -119,7 +119,7 @@ def rasterize_lines(spark: SparkSession, fp, lines: DataFrame,
 
     gt = tuple(float(v) for v in fp.gt)
 
-    def _burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _burn(key, pdf):
         from buzzard_spark.kernels.footprint import Footprint
         row = pdf.iloc[0]
         y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)
@@ -161,7 +161,7 @@ def rasterize_counts(spark: SparkSession, fp, polys: DataFrame,
 
     gt = tuple(float(v) for v in fp.gt)
 
-    def _count(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _count(key, pdf):
         # one Python round-trip per TILE; all its candidate regions burn
         # in a numpy loop (one tiny group per (tile, region) would pay the
         # Arrow/pickle overhead per region instead)
@@ -197,7 +197,7 @@ def tile_runs(mask_tiles: DataFrame) -> DataFrame:
     per row/run): the labeled tile is flattened with a sentinel zero
     column appended to each row, so maximal constant-label segments of the
     flat array ARE the runs — one np.diff/flatnonzero pass per tile."""
-    def _runs(key, pdf: pd.DataFrame):
+    def _runs(key, pdf):
         frames = []
         for _, row in pdf.iterrows():
             h, w = int(row.h), int(row.w)
@@ -274,7 +274,7 @@ def _thin_subiter(tiles: DataFrame, sub: int, carry: bool) -> DataFrame:
     halos = tiles.mapInPandas(_emit_halo, 'tile_y int, tile_x int, '
                                           'y int, x int')
 
-    def _apply(key, tpdf: pd.DataFrame, hpdf: pd.DataFrame) -> pd.DataFrame:
+    def _apply(key, tpdf, hpdf):
         if not len(tpdf):
             return pd.DataFrame(columns=[
                 'tile_y', 'tile_x', 'y0', 'x0', 'h', 'w', 'mask', '_chg'])
@@ -353,7 +353,7 @@ def _thin_block(tiles: DataFrame, n_sub: int) -> DataFrame:
     halos = tiles.mapInPandas(_emit_halo, 'tile_y int, tile_x int, '
                                           'y int, x int')
 
-    def _apply(key, tpdf: pd.DataFrame, hpdf: pd.DataFrame) -> pd.DataFrame:
+    def _apply(key, tpdf, hpdf):
         if not len(tpdf):
             return pd.DataFrame(columns=[
                 'tile_y', 'tile_x', 'y0', 'x0', 'h', 'w', 'mask', '_chg'])
@@ -474,7 +474,7 @@ def _tile_halo_pixels_h(mask_tiles: DataFrame, halo: int) -> DataFrame:
     """``_tile_halo_pixels`` with a configurable halo depth: pixels within
     ``halo`` of a tile border replicate into the adjacent neighbor(s).
     Requires ``halo`` <= the smallest tile dimension (one-tile reach)."""
-    def _emit(key, pdf: pd.DataFrame):
+    def _emit(key, pdf):
         tys, txs, ys_o, xs_o, owns = [], [], [], [], []
 
         def _add(ty, tx, gy, gx, own):
@@ -534,7 +534,7 @@ def _edges_with_links(pixels: DataFrame) -> DataFrame:
     are computed exactly as the global kernel computes them. Segments
     fully inside squares (la AND lb both set) are dropped here, exactly
     like the unfused filter."""
-    def _emit(key, pdf: pd.DataFrame):
+    def _emit(key, pdf):
         cols = ['eid', 'ax', 'ay', 'bx', 'by', 'ea', 'eb', 'la', 'lb']
         if not len(pdf):
             return pd.DataFrame(columns=cols)
@@ -668,7 +668,7 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     # reach across such a tile, so keep the unfused 1-px-halo path
     pixels = _tile_halo_pixels(mask_tiles).persist()
 
-    def _edges(key, pdf: pd.DataFrame):
+    def _edges(key, pdf):
         # kernel edge rule (kernels.raster.find_lines): 4-neighbors always;
         # diagonals only when no 4-connected detour exists. Vectorized on a
         # dense local grid over the group's bbox (≤ (tile+2)² bools): each
@@ -718,7 +718,7 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     edges_px = (pixels.groupBy('tile_y', 'tile_x')
                 .applyInPandas(_edges,
                                'ax int, ay int, bx int, by int, dir int'))
-    def _tile_links(key, pdf: pd.DataFrame):
+    def _tile_links(key, pdf):
         # the reference's 2×2-square collapse map, tile-local: each tile
         # resolves its OWN pixels' square membership from the 1-px halo
         # view (all four members of any square containing p sit inside
@@ -819,7 +819,7 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
     intra = pairs_t.where(F.col('_ta') == F.col('_tb'))
     cross = pairs_t.where(F.col('_ta') != F.col('_tb')).select('id_a', 'id_b')
 
-    def _uf(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _uf(key, pdf):
         parent = {}
 
         def find(a):
@@ -863,7 +863,7 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
 
     coef = tuple(float(v) for v in fp._coef)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         # one reducer per chain: rebuild vertex-list segments (with the
         # square-collapse endpoint extensions) and merge them with the
         # SAME deterministic linemerge walk as the kernel
@@ -974,7 +974,7 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
 
     coef = tuple(float(v) for v in fp._coef)
 
-    def _trace(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _trace(key, pdf):
         gid = int(key[0])
         rings_px = raster.trace_rings_from_runs(
             pdf['y'].to_numpy(), pdf['xs'].to_numpy(), pdf['xe'].to_numpy())
@@ -1047,7 +1047,7 @@ def zonal_stats(spark: SparkSession, fp, polys: DataFrame,
     vfn = value_fn if value_fn is not None else (
         lambda ys, xs: (17 * xs[None, :] + 31 * ys[:, None]) % 97)
 
-    def _stats(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _stats(key, pdf):
         from buzzard_spark.kernels.footprint import Footprint
         row = pdf.iloc[0]
         tile_gt = list(gt)

@@ -66,7 +66,7 @@ def cached_tile_compute(
     if n_pending:
         gt = tuple(float(v) for v in fp.gt)
 
-        def _compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def _compute(key, pdf):
             from buzzard_spark.kernels.footprint import Footprint
             out = []
             for _, row in pdf.iterrows():
@@ -142,7 +142,7 @@ def derived_tile_compute(
     gt = tuple(float(v) for v in fp.gt)
     prim_names = sorted(primitives)
 
-    def _compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _compute(key, pdf):
         from buzzard_spark.kernels.footprint import Footprint
         row = pdf.iloc[0]
         y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)

@@ -148,7 +148,7 @@ def cosine_near_pairs(emb: DataFrame, threshold: float,
 
     thr = float(threshold)
 
-    def _block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _block(key, pdf):
         bi, bj = key
         lm = pdf[pdf['side'] == 0]
         lids = lm['_id'].to_numpy()
@@ -379,7 +379,7 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, k: int,
     cand = (indexed.join(F.broadcast(probed), 'cell')
             .select('qid', 'qvec', 'vec_id', 'vec', 'code'))
 
-    def _adc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _adc(key, pdf):
         Cb, Bb = bc.value
         q = np.asarray(pdf['qvec'].iloc[0], dtype=np.float64)
         q = q / max(np.linalg.norm(q), 1e-12)

@@ -39,6 +39,14 @@ ENGINE_CONFS = {
     # reliable checkpoints written by checkpoint_release() are deleted by
     # the ContextCleaner once the referencing DataFrame is GC'd
     'spark.cleaner.referenceTracking.cleanCheckpoints': 'true',
+    # Python workers fork from the engine's daemon (pydaemon.py): on
+    # Python < 3.12 PySpark's per-task importlib.invalidate_caches() made
+    # every worker re-read the spark-core jar and pyspark.zip directories
+    # (measured 140-440 ms per task on a 4-vCPU host, on the critical path
+    # of every pandas-UDF stage); the daemon re-reads an archive only when
+    # its stat stamp changed. Workers must be able to import buzzard_spark
+    # (as every engine UDF already requires).
+    'spark.python.daemon.module': 'buzzard_spark.pydaemon',
 }
 
 
@@ -57,7 +65,10 @@ def get_session(master: str | None = None, app_name: str = 'buzzard_spark',
                 shuffle_partitions: int | None = None) -> SparkSession:
     """Session sized to the host unless overridden: ``local[cpus]`` with
     the CPUs this process may run on ($SPARK_GRAFT_CPUS) and half of
-    physical memory for the driver ($SPARK_GRAFT_DRIVER_MEM)."""
+    physical memory for the driver ($SPARK_GRAFT_DRIVER_MEM). Python
+    workers start from ``buzzard_spark.pydaemon`` (ENGINE_CONFS), so
+    ``buzzard_spark`` must be importable where they run — on the
+    workers' PYTHONPATH or in their working directory."""
     if master is None:
         cpus = os.environ.get('SPARK_GRAFT_CPUS',
                               str(len(os.sched_getaffinity(0))))

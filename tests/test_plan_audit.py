@@ -7,11 +7,14 @@
 - the cell-assignment path must stay inside WholeStageCodegen with no
   Python UDF (BatchEvalPython/ArrowEvalPython) nodes,
 - a small kNN batch broadcasts its ring side to the pages and returns a
-  local relation, persisting and checkpointing nothing.
+  local relation, persisting and checkpointing nothing,
+- Python workers come from the engine daemon, so a task's
+  importlib.invalidate_caches() re-reads no unchanged zip archive.
 """
 
 import os
 import re
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -336,3 +339,36 @@ def test_knn_small_batch_plan(spark):
     assert (out._jdf.queryExecution().optimizedPlan().getClass()
             .getSimpleName() == 'LocalRelation')
     assert out.count() == 8 * 5
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12),
+                    reason='zipimporter.invalidate_caches is lazy on 3.12+')
+def test_python_workers_skip_unchanged_zip_rereads(spark):
+    """Inside a task: zipimport carries the engine daemon's stamp rule, and
+    a second invalidate_caches() keeps every zipimporter's directory
+    object. Catches a dropped daemon conf or a pyspark that bypasses it."""
+    def _probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        def dirs():
+            return {p: id(i._files)
+                    for p, i in sys.path_importer_cache.items()
+                    if isinstance(i, zipimport.zipimporter)}
+        before = dirs()
+        importlib.invalidate_caches()
+        for _ in batches:
+            yield pd.DataFrame({
+                'module': [zipimport.zipimporter.invalidate_caches.__module__],
+                'zips': [len(before)],
+                'kept': [before == dirs()]})
+
+    rows = spark.range(4, numPartitions=2).mapInPandas(
+        _probe, 'module string, zips long, kept boolean').collect()
+    assert rows
+    for r in rows:
+        assert r.module == 'buzzard_spark.pydaemon'
+        assert r.zips > 0 and r.kept
