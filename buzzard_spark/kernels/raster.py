@@ -19,7 +19,7 @@ GDAL-free numpy reimplementations of the reference's conversions
 
 All functions operate in *raster* pixel space given arrays plus the
 footprint's affine for world conversion; they are numpy-only and run
-per-tile inside applyInPandas in the distributed layer.
+per tile inside the distributed layer's Arrow / pandas UDFs.
 """
 
 from __future__ import annotations
@@ -42,10 +42,17 @@ def _world_to_pixel_float(fp, xs, ys):
     return xs * a + ys * b + c, xs * d + ys * e + f
 
 
+_BURN_BLOCK = 1 << 20  # pixels per block of rows in _burn_rings_centers
+
+
 def _burn_rings_centers(out, rings_px, value):
-    """Even-odd scanline at pixel centers (GDAL default rule)."""
+    """Even-odd scanline at pixel centers (GDAL default rule).
+
+    All scanlines at once (the interval form of the polygon): every
+    (edge, straddled row) crossing is computed in one pass, and a pixel
+    is inside iff an odd number of its row's crossings lie strictly left
+    of its center."""
     h, w = out.shape
-    ys = np.arange(h) + 0.5
     # all rings' edges participate jointly in the even-odd rule
     x1 = np.concatenate([r[:-1, 0] for r in rings_px])
     y1 = np.concatenate([r[:-1, 1] for r in rings_px])
@@ -55,17 +62,38 @@ def _burn_rings_centers(out, rings_px, value):
     x1, y1, x2, y2 = x1[keep], y1[keep], x2[keep], y2[keep]
     if len(x1) == 0:
         return
-    for iy, cy in enumerate(ys):
-        straddle = (y1 > cy) != (y2 > cy)
-        if not straddle.any():
-            continue
-        xc = x1[straddle] + (cy - y1[straddle]) * \
-            (x2[straddle] - x1[straddle]) / (y2[straddle] - y1[straddle])
-        xc.sort()
-        # pixel center cx = ix + 0.5 inside iff odd # of crossings to its left
-        idx = np.searchsorted(xc, np.arange(w) + 0.5, side='left')
-        inside = (idx % 2) == 1
-        out[iy, inside] = value
+    # candidate rows of each edge, one row of slack per side (NaN spans
+    # every row); the exact straddle test below decides
+    lo = np.clip(np.nan_to_num(np.floor(np.minimum(y1, y2)) - 1, nan=0.0),
+                 0, h).astype(np.int64)
+    hi = np.clip(np.nan_to_num(np.ceil(np.maximum(y1, y2)) + 1, nan=h),
+                 0, h).astype(np.int64)
+    n = hi - lo
+    edge = np.repeat(np.arange(len(x1)), n)
+    iy = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n - lo, n)
+    cy = iy + 0.5
+    y1, y2 = y1[edge], y2[edge]
+    straddle = (y1 > cy) != (y2 > cy)
+    if not straddle.any():
+        return
+    edge, iy, cy = edge[straddle], iy[straddle], cy[straddle]
+    y1, y2, x1, x2 = y1[straddle], y2[straddle], x1[edge], x2[edge]
+    xc = x1 + (cy - y1) * (x2 - x1) / (y2 - y1)
+    # a crossing counts for the centers right of it: toggle the parity
+    # at its first such pixel, then accumulate along each row
+    ix = np.searchsorted(np.arange(w) + 0.5, xc, side='right')
+    # rows go in blocks of ~_BURN_BLOCK pixels, so the parity buffers stay
+    # small however large the array is
+    order = np.argsort(iy, kind='stable')
+    iy, ix = iy[order], ix[order]
+    step = max(1, _BURN_BLOCK // (w + 1))
+    for r0 in range(int(iy[0]), int(iy[-1]) + 1, step):
+        a, b = np.searchsorted(iy, (r0, r0 + step))
+        nrows = min(step, int(iy[-1]) + 1 - r0)
+        toggles = np.bincount((iy[a:b] - r0) * (w + 1) + ix[a:b],
+                              minlength=nrows * (w + 1))
+        inside = np.cumsum(toggles.reshape(nrows, w + 1)[:, :w], axis=1) & 1
+        out[r0:r0 + nrows][inside.astype(bool)] = value
 
 
 def _burn_rings_all_touched(out, rings_px, value):

@@ -2,21 +2,26 @@
 
 The reference runs these per-array on one machine
 (reference: buzzard/_footprint.py:1538-1935); here rasters are DataFrames
-of tile rows and the kernels (kernels.raster) run per tile inside
-applyInPandas:
+of tile rows and the kernels (kernels.raster) run per tile in Python
+stages that receive only the columns their kernel reads, as Arrow tables:
 
-- ``rasterize``  — polygons ⨝ tiles (bbox broadcast join) →
-  groupBy(tile).applyInPandas(burn) → tile mask rows.
+- ``rasterize``  — tiles ⨝ broadcast(polygons) on bbox
+  (``_tile_candidates``) → groupBy(tile).applyInArrow(burn) → tile mask
+  rows. ``rasterize_lines``, ``rasterize_counts`` and ``zonal_stats``
+  share the same candidate join and stage shape.
 - ``polygonize`` — the reference never had to stitch (single array;
   SURVEY.md §7.3 hard part 3). Three phases:
-    1. per-tile run-length labeling (applyInPandas → run rows),
+    1. per-tile run-length labeling (``tile_runs``: one mapInArrow over
+       the tile rows, no shuffle → run rows),
     2. cross-tile connectivity: border runs of vertically adjacent tiles
        are interval-joined; the resulting (tile,label) graph is small
        (O(total tile-border length)) and resolved with union-find,
     3. runs shuffled by global component id; one reducer per component
-       rebuilds the component's (sparse, bbox-cropped) mask and traces
-       rings with the exact same kernel as the single-node path — so
-       distributed output == kernel output by construction.
+       (applyInArrow over its (y, xs, xe) runs) traces rings with the
+       exact same kernel as the single-node path — so distributed
+       output == kernel output by construction.
+
+The thinning and line-vectorizing stages still run as pandas UDFs.
 
 Tile rows: (tile_y int, tile_x int, y0 int, x0 int, h int, w int,
 mask binary) — mask is a packed bool numpy buffer.
@@ -26,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +42,19 @@ TILE_SCHEMA = ('tile_y int, tile_x int, y0 int, x0 int, h int, w int, '
                'mask binary')
 RUN_SCHEMA = 'tile_y int, tile_x int, y int, xs int, xe int, lab int'
 POLY_SCHEMA = 'component_id long, wkb binary, area double, n_rings int'
+COUNT_SCHEMA = 'region_id long, n_pixels long'
+ZONAL_SCHEMA = ('region_id long, n_pixels long, v_sum long, v_min long, '
+                'v_max long')
+
+_WINDOW = ('tile_y', 'tile_x', 'y0', 'x0', 'h', 'w')
+_ARROW_TYPES = {'int': pa.int32(), 'long': pa.int64(),
+                'double': pa.float64(), 'binary': pa.binary()}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The pyarrow schema an Arrow UDF must return for a DDL string."""
+    return pa.schema([(name, _ARROW_TYPES[typ]) for name, typ in
+                      (field.split() for field in ddl.split(','))])
 
 
 def tile_grid_df(spark: SparkSession, fp, tile_size: int) -> DataFrame:
@@ -60,81 +79,76 @@ def tile_grid_df(spark: SparkSession, fp, tile_size: int) -> DataFrame:
     )
 
 
-def rasterize(spark: SparkSession, fp, polys: DataFrame,
-              tile_size: int = 256) -> DataFrame:
-    """polys (region_id, wkb, minlat, minlng, maxlat, maxlng — world bbox)
-    → tile mask rows. Only tiles intersecting ≥1 polygon are emitted."""
+def _tile_candidates(spark: SparkSession, fp, tile_size: int,
+                     geoms: DataFrame, cols: tuple) -> DataFrame:
+    """Tiles ⨝ broadcast(geoms) on bbox overlap: one row per (tile,
+    geometry) pair, projected to the tile window and the geometry
+    columns ``cols`` the kernel reads.
+
+    geoms carries a world bbox (minlat, minlng, maxlat, maxlng). The tile
+    bbox below, and the per-tile footprint ``_tile_fp`` builds, hold for
+    a north-up fp only, so any other fp is refused.
+    """
     a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    # world bbox of each tile (north-up: a>0, e<0)
-    tiles = tiles.select(
+    if not (b == 0 and d == 0 and a > 0 and e < 0):
+        raise ValueError('tiled rasterization needs a north-up footprint '
+                         '(b = d = 0, a > 0, e < 0); affine: %s'
+                         % str(fp._coef))
+    tiles = tile_grid_df(spark, fp, tile_size).select(
         '*',
         (F.col('x0') * a + c).alias('t_minx'),
         ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
         ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
         (F.col('y0') * e + f).alias('t_maxy'),
     )
-    cand = tiles.join(
-        F.broadcast(polys),
+    return tiles.join(
+        F.broadcast(geoms),
         (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
+        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat'))
+    ).select(*_WINDOW, *cols)
 
+
+def _window(tbl):
+    """(y0, x0, h, w) of a candidate group's tile."""
+    return tuple(tbl.column(k)[0].as_py() for k in ('y0', 'x0', 'h', 'w'))
+
+
+def _tile_fp(gt, y0, x0, h, w):
+    """Footprint of a tile window of the north-up grid ``gt``."""
+    from buzzard_spark.kernels.footprint import Footprint
+    return Footprint(gt=(gt[0] + x0 * gt[1], gt[1], gt[2],
+                         gt[3] + y0 * gt[5], gt[4], gt[5]), rsize=(w, h))
+
+
+def _mask_tiles(spark, fp, geoms, tile_size, burn) -> DataFrame:
+    """One tile mask row per tile with ≥1 candidate geometry:
+    ``burn(tile_fp, wkbs)`` → bool mask."""
+    cand = _tile_candidates(spark, fp, tile_size, geoms, ('wkb',))
     gt = tuple(float(v) for v in fp.gt)
+    schema = _arrow_schema(TILE_SCHEMA)
 
-    def _burn(key, pdf):
-        from buzzard_spark.kernels.footprint import Footprint
-        row = pdf.iloc[0]
-        y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + x0 * gt[1]
-        tile_gt[3] = gt[3] + y0 * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(w, h))
-        mask = raster.burn_polygons(tile_fp, [bytes(b) for b in pdf['wkb']])
-        return pd.DataFrame([{
-            'tile_y': int(row.tile_y), 'tile_x': int(row.tile_x),
-            'y0': y0, 'x0': x0, 'h': h, 'w': w,
-            'mask': bytearray(np.packbits(mask).tobytes()),
-        }])
+    def _burn(tbl):
+        mask = burn(_tile_fp(gt, *_window(tbl)),
+                    tbl.column('wkb').to_pylist())
+        row = {k: [tbl.column(k)[0].as_py()] for k in _WINDOW}
+        row['mask'] = [np.packbits(mask).tobytes()]
+        return pa.Table.from_pydict(row, schema=schema)
 
-    return cand.groupBy('tile_y', 'tile_x').applyInPandas(_burn, TILE_SCHEMA)
+    return cand.groupBy('tile_y', 'tile_x').applyInArrow(_burn, TILE_SCHEMA)
+
+
+def rasterize(spark: SparkSession, fp, polys: DataFrame,
+              tile_size: int = 256) -> DataFrame:
+    """polys (region_id, wkb, minlat, minlng, maxlat, maxlng — world bbox)
+    → tile mask rows. Only tiles intersecting ≥1 polygon are emitted."""
+    return _mask_tiles(spark, fp, polys, tile_size, raster.burn_polygons)
 
 
 def rasterize_lines(spark: SparkSession, fp, lines: DataFrame,
                     tile_size: int = 256) -> DataFrame:
     """linestrings (line_id, wkb, minlat, minlng, maxlat, maxlng) → tile
     mask rows via per-tile DDA burn (kernels.raster.burn_lines)."""
-    a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    tiles = tiles.select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    cand = tiles.join(
-        F.broadcast(lines),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
-
-    gt = tuple(float(v) for v in fp.gt)
-
-    def _burn(key, pdf):
-        from buzzard_spark.kernels.footprint import Footprint
-        row = pdf.iloc[0]
-        y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + x0 * gt[1]
-        tile_gt[3] = gt[3] + y0 * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(w, h))
-        mask = raster.burn_lines(tile_fp, [bytes(b_) for b_ in pdf['wkb']])
-        return pd.DataFrame([{
-            'tile_y': int(row.tile_y), 'tile_x': int(row.tile_x),
-            'y0': y0, 'x0': x0, 'h': h, 'w': w,
-            'mask': bytearray(np.packbits(mask).tobytes()),
-        }])
-
-    return cand.groupBy('tile_y', 'tile_x').applyInPandas(_burn, TILE_SCHEMA)
+    return _mask_tiles(spark, fp, lines, tile_size, raster.burn_lines)
 
 
 def rasterize_counts(spark: SparkSession, fp, polys: DataFrame,
@@ -145,40 +159,24 @@ def rasterize_counts(spark: SparkSession, fp, polys: DataFrame,
     The aggregation-shaped variant of ``rasterize`` — the distributed
     answer to "how many pixels does each polygon cover on this grid".
     """
-    a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    tiles = tiles.select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    cand = tiles.join(
-        F.broadcast(polys),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
-
+    cand = _tile_candidates(spark, fp, tile_size, polys,
+                            ('region_id', 'wkb'))
     gt = tuple(float(v) for v in fp.gt)
+    schema = _arrow_schema(COUNT_SCHEMA)
 
-    def _count(key, pdf):
+    def _count(tbl):
         # one Python round-trip per TILE; all its candidate regions burn
         # in a numpy loop (one tiny group per (tile, region) would pay the
-        # Arrow/pickle overhead per region instead)
-        from buzzard_spark.kernels.footprint import Footprint
-        row = pdf.iloc[0]
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + int(row.x0) * gt[1]
-        tile_gt[3] = gt[3] + int(row.y0) * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(int(row.w), int(row.h)))
-        out = []
-        for rid, wkb in zip(pdf['region_id'], pdf['wkb']):
-            mask = raster.burn_polygons(tile_fp, [bytes(wkb)])
-            out.append({'region_id': int(rid), 'n_pixels': int(mask.sum())})
-        return pd.DataFrame(out)
+        # per-group overhead per region instead)
+        tile_fp = _tile_fp(gt, *_window(tbl))
+        rids = tbl.column('region_id').to_pylist()
+        counts = [int(raster.burn_polygons(tile_fp, [wkb]).sum())
+                  for wkb in tbl.column('wkb').to_pylist()]
+        return pa.Table.from_pydict(
+            {'region_id': rids, 'n_pixels': counts}, schema=schema)
 
     return (cand.groupBy('tile_y', 'tile_x')
-            .applyInPandas(_count, 'region_id long, n_pixels long')
+            .applyInArrow(_count, COUNT_SCHEMA)
             .groupBy('region_id')
             .agg(F.sum('n_pixels').alias('n_pixels'))
             .where(F.col('n_pixels') > 0))
@@ -193,42 +191,45 @@ def _unpack_mask(buf, h, w):
 def tile_runs(mask_tiles: DataFrame) -> DataFrame:
     """Per-tile 4-connected labeling → run rows (global pixel coords).
 
-    Run extraction is fully vectorized (round-3; round 2 looped Python
-    per row/run): the labeled tile is flattened with a sentinel zero
-    column appended to each row, so maximal constant-label segments of the
-    flat array ARE the runs — one np.diff/flatnonzero pass per tile."""
-    def _runs(key, pdf):
-        frames = []
-        for _, row in pdf.iterrows():
-            h, w = int(row.h), int(row.w)
-            mask = _unpack_mask(row['mask'], h, w)
-            labels, _n = raster._label_components(mask)
-            flat = np.concatenate(
-                [labels.astype(np.int64),
-                 np.zeros((h, 1), np.int64)], axis=1).ravel()
-            change = np.flatnonzero(flat != np.r_[0, flat[:-1]])
-            if change.size == 0:
-                continue
-            seg_end = np.r_[change[1:], flat.size]
-            vals = flat[change]
-            keep = vals != 0
-            s, e, v = change[keep], seg_end[keep], vals[keep]
-            w1 = w + 1
-            frames.append(pd.DataFrame({
-                'tile_y': np.full(len(s), int(row.tile_y), np.int32),
-                'tile_x': np.full(len(s), int(row.tile_x), np.int32),
-                'y': (int(row.y0) + s // w1).astype(np.int64),
-                'xs': (int(row.x0) + s % w1).astype(np.int64),
-                'xe': (int(row.x0) + s % w1 + (e - s)).astype(np.int64),
-                'lab': v,
-            }))
-        if not frames:
-            return pd.DataFrame(
-                columns=['tile_y', 'tile_x', 'y', 'xs', 'xe', 'lab'])
-        return pd.concat(frames, ignore_index=True)
+    Each tile row is labeled on its own, so this is a per-row
+    mapInArrow over the tile rows: no shuffle, no per-group overhead.
+    Run extraction is vectorized: the labeled tile is flattened with a
+    sentinel zero column appended to each row, so maximal constant-label
+    segments of the flat array ARE the runs — one np.diff/flatnonzero
+    pass per tile."""
+    schema = _arrow_schema(RUN_SCHEMA)
 
-    return (mask_tiles.groupBy('tile_y', 'tile_x')
-            .applyInPandas(_runs, RUN_SCHEMA))
+    def _runs(batches):
+        for batch in batches:
+            tiles = batch.to_pydict()
+            cols = {k: [] for k in schema.names}
+            for ty, tx, y0, x0, h, w, buf in zip(
+                    *(tiles[k] for k in _WINDOW), tiles['mask']):
+                labels, _n = raster._label_components(
+                    _unpack_mask(buf, h, w))
+                flat = np.concatenate(
+                    [labels.astype(np.int64),
+                     np.zeros((h, 1), np.int64)], axis=1).ravel()
+                change = np.flatnonzero(flat != np.r_[0, flat[:-1]])
+                if change.size == 0:
+                    continue
+                seg_end = np.r_[change[1:], flat.size]
+                vals = flat[change]
+                keep = vals != 0
+                s, e, v = change[keep], seg_end[keep], vals[keep]
+                w1 = w + 1
+                cols['tile_y'].append(np.full(len(s), ty, np.int32))
+                cols['tile_x'].append(np.full(len(s), tx, np.int32))
+                cols['y'].append(y0 + s // w1)
+                cols['xs'].append(x0 + s % w1)
+                cols['xe'].append(x0 + s % w1 + (e - s))
+                cols['lab'].append(v)
+            if cols['lab']:
+                yield pa.RecordBatch.from_pydict(
+                    {k: np.concatenate(c) for k, c in cols.items()},
+                    schema=schema)
+
+    return mask_tiles.select(*_WINDOW, 'mask').mapInArrow(_runs, RUN_SCHEMA)
 
 
 LINE_SCHEMA = 'chain_id long, wkb binary, n_pts int'
@@ -946,19 +947,25 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
 
     Scale shape (nothing graph- or mask-sized touches the driver):
 
-    1. per-tile run-length labeling (``tile_runs``, applyInPandas),
+    1. per-tile run-length labeling (``tile_runs``, one mapInArrow),
     2. cross-tile connectivity = distributed connected components over the
        border-run adjacency graph (operators.graph, large-star/small-star
        joins) — replaces a driver-side union-find,
     3. one reducer per component traces rings directly from its runs
-       (``kernels.raster.trace_rings_from_runs``): O(perimeter) memory —
-       the component's dense bbox mask (O(area), OOM at continent scale)
-       is never rebuilt.
+       (``kernels.raster.trace_rings_from_runs``, applyInArrow over the
+       component's (y, xs, xe) columns): O(perimeter) memory — the
+       component's dense bbox mask (O(area), OOM at continent scale) is
+       never rebuilt.
     """
     from buzzard_spark.operators.graph import connected_components
 
     runs = tile_runs(mask_tiles).withColumn('node', F.expr(_NODE_PACK)) \
         .persist()
+    # Keep this check: it is the single job that materializes ``runs``
+    # before the border joins and CC rounds scan it. Without it the four
+    # border-join scans start as concurrent jobs on the cold cache and
+    # each recomputes ``tile_runs`` (measured on a 4-vCPU host: 4
+    # single-task jobs of 0.12-0.16 s each, all labeling the same tiles).
     if runs.isEmpty():
         runs.unpersist()
         return local_frame(spark, [], POLY_SCHEMA)
@@ -969,15 +976,16 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
     labels = connected_components(
         runs.select('node').distinct(), edges, id_col='node',
         cache_registry=registry)
-    tagged = runs.join(labels, 'node').withColumnRenamed('comp',
-                                                         'component_id')
+    tagged = (runs.join(labels, 'node')
+              .select(F.col('comp').alias('component_id'), 'y', 'xs', 'xe'))
 
     coef = tuple(float(v) for v in fp._coef)
+    schema = _arrow_schema(POLY_SCHEMA)
 
-    def _trace(key, pdf):
-        gid = int(key[0])
+    def _trace(key, tbl):
         rings_px = raster.trace_rings_from_runs(
-            pdf['y'].to_numpy(), pdf['xs'].to_numpy(), pdf['xe'].to_numpy())
+            tbl.column('y').to_numpy(), tbl.column('xs').to_numpy(),
+            tbl.column('xe').to_numpy())
         rings_w = []
         a, b, c, d, e_, f_ = coef
         for ring in rings_px:
@@ -989,15 +997,15 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
         order = np.argsort(areas)[::-1]
         rings_w = [rings_w[i] for i in order]
         wkb = geometry.wkb_polygon(rings_w[0], rings_w[1:])
-        return pd.DataFrame([{
-            'component_id': gid,
-            'wkb': bytearray(wkb),
-            'area': geometry.polygon_area(rings_w),
-            'n_rings': len(rings_w),
-        }])
+        return pa.Table.from_pydict({
+            'component_id': [key[0].as_py()],
+            'wkb': [wkb],
+            'area': [geometry.polygon_area(rings_w)],
+            'n_rings': [len(rings_w)],
+        }, schema=schema)
 
     from buzzard_spark.session import checkpoint_release
-    out = tagged.groupBy('component_id').applyInPandas(_trace, POLY_SCHEMA)
+    out = tagged.groupBy('component_id').applyInArrow(_trace, POLY_SCHEMA)
     # materialize the polygons, release the persisted run table + CC rounds
     return checkpoint_release(out, [runs] + registry)
 
@@ -1029,54 +1037,35 @@ def zonal_stats(spark: SparkSession, fp, polys: DataFrame,
     value tiles on (tile_y, tile_x) instead of recomputing — the
     aggregation shape is unchanged.
     """
-    a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    tiles = tiles.select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    cand = tiles.join(
-        F.broadcast(polys),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
-
+    cand = _tile_candidates(spark, fp, tile_size, polys,
+                            ('region_id', 'wkb'))
     gt = tuple(float(v) for v in fp.gt)
     vfn = value_fn if value_fn is not None else (
         lambda ys, xs: (17 * xs[None, :] + 31 * ys[:, None]) % 97)
+    schema = _arrow_schema(ZONAL_SCHEMA)
 
-    def _stats(key, pdf):
-        from buzzard_spark.kernels.footprint import Footprint
-        row = pdf.iloc[0]
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + int(row.x0) * gt[1]
-        tile_gt[3] = gt[3] + int(row.y0) * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(int(row.w), int(row.h)))
-        ys = np.arange(int(row.y0), int(row.y0) + int(row.h),
-                       dtype=np.int64)
-        xs = np.arange(int(row.x0), int(row.x0) + int(row.w),
-                       dtype=np.int64)
+    def _stats(tbl):
+        y0, x0, h, w = _window(tbl)
+        tile_fp = _tile_fp(gt, y0, x0, h, w)
+        ys = np.arange(y0, y0 + h, dtype=np.int64)
+        xs = np.arange(x0, x0 + w, dtype=np.int64)
         vals = np.asarray(vfn(ys, xs), dtype=np.int64)
-        out = []
-        for rid, wkb in zip(pdf['region_id'], pdf['wkb']):
-            mask = raster.burn_polygons(tile_fp, [bytes(wkb)])
+        out = {k: [] for k in schema.names}
+        for rid, wkb in zip(tbl.column('region_id').to_pylist(),
+                            tbl.column('wkb').to_pylist()):
+            mask = raster.burn_polygons(tile_fp, [wkb])
             if not mask.any():
                 continue
             mv = vals[mask]
-            out.append({'region_id': int(rid),
-                        'n_pixels': int(mask.sum()),
-                        'v_sum': int(mv.sum()),
-                        'v_min': int(mv.min()),
-                        'v_max': int(mv.max())})
-        return pd.DataFrame(
-            out, columns=['region_id', 'n_pixels', 'v_sum', 'v_min',
-                          'v_max'])
+            out['region_id'].append(rid)
+            out['n_pixels'].append(int(mask.sum()))
+            out['v_sum'].append(int(mv.sum()))
+            out['v_min'].append(int(mv.min()))
+            out['v_max'].append(int(mv.max()))
+        return pa.Table.from_pydict(out, schema=schema)
 
     return (cand.groupBy('tile_y', 'tile_x')
-            .applyInPandas(_stats, 'region_id long, n_pixels long, '
-                                   'v_sum long, v_min long, v_max long')
+            .applyInArrow(_stats, ZONAL_SCHEMA)
             .groupBy('region_id')
             .agg(F.sum('n_pixels').alias('n_pixels'),
                  F.sum('v_sum').alias('v_sum'),

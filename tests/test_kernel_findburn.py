@@ -118,6 +118,76 @@ def test_burn_labelize(fullfp):
     assert out[2, 2] == 1 and out[2, 9] == 2
 
 
+def _burn_rings_centers_rowwise(out, rings_px, value):
+    """Reference: the one-scanline-at-a-time form of
+    ``raster._burn_rings_centers`` (sorted crossings per row, then a
+    ``searchsorted`` of the pixel centers into them)."""
+    h, w = out.shape
+    x1 = np.concatenate([r[:-1, 0] for r in rings_px])
+    y1 = np.concatenate([r[:-1, 1] for r in rings_px])
+    x2 = np.concatenate([r[1:, 0] for r in rings_px])
+    y2 = np.concatenate([r[1:, 1] for r in rings_px])
+    keep = y1 != y2
+    x1, y1, x2, y2 = x1[keep], y1[keep], x2[keep], y2[keep]
+    if len(x1) == 0:
+        return
+    for iy, cy in enumerate(np.arange(h) + 0.5):
+        straddle = (y1 > cy) != (y2 > cy)
+        if not straddle.any():
+            continue
+        xc = x1[straddle] + (cy - y1[straddle]) * \
+            (x2[straddle] - x1[straddle]) / (y2[straddle] - y1[straddle])
+        xc.sort()
+        idx = np.searchsorted(xc, np.arange(w) + 0.5, side='left')
+        out[iy, (idx % 2) == 1] = value
+
+
+def _random_ring(rng, h, w):
+    """Closed ring in pixel space, partly past the tile: integer,
+    half-integer (pixel-center ties) or float vertices, with some
+    horizontal edges."""
+    n = int(rng.integers(3, 9))
+    kind = rng.integers(3)
+    if kind == 0:
+        xs = rng.integers(-3, w + 4, n).astype(float)
+        ys = rng.integers(-3, h + 4, n).astype(float)
+    elif kind == 1:
+        xs = rng.integers(-6, 2 * w + 8, n) / 2.0
+        ys = rng.integers(-6, 2 * h + 8, n) / 2.0
+    else:
+        xs = rng.uniform(-3, w + 3, n)
+        ys = rng.uniform(-3, h + 3, n)
+    flat = rng.random(n) < 0.3
+    ys[1:][flat[1:]] = ys[:-1][flat[1:]]
+    ring = np.column_stack([xs, ys])
+    return np.vstack([ring, ring[:1]])
+
+
+@pytest.mark.parametrize('block', [raster._BURN_BLOCK, 40],
+                         ids=['one-block', 'row-blocks'])
+def test_burn_vectorized_matches_rowwise(monkeypatch, block):
+    """Seeded property check: the all-scanlines burn is bit-identical to
+    the row-by-row scanline, labelize order included (later polygons
+    overwrite earlier ones), over ≥2000 rings; also when its rows go in
+    many small blocks."""
+    monkeypatch.setattr(raster, '_BURN_BLOCK', block)
+    rng = np.random.default_rng(20230618)
+    n_rings = 0
+    for _ in range(700):
+        h, w = int(rng.integers(1, 33)), int(rng.integers(1, 33))
+        got = np.zeros((h, w), np.uint8)
+        want = np.zeros((h, w), np.uint8)
+        for value in range(1, int(rng.integers(1, 4)) + 1):
+            # several rings per polygon: even-odd holes across rings
+            rings = [_random_ring(rng, h, w)
+                     for _ in range(int(rng.integers(1, 4)))]
+            n_rings += len(rings)
+            raster._burn_rings_centers(got, rings, value)
+            _burn_rings_centers_rowwise(want, rings, value)
+        assert np.array_equal(got, want), (h, w)
+    assert n_rings >= 2000
+
+
 def test_slopes_flat_and_ramp():
     fp = Footprint(tl=(0, 10), size=(10, 10), rsize=(10, 10))
     flat = np.full((10, 10), 7.0)

@@ -9,13 +9,17 @@
 - a small kNN batch broadcasts its ring side to the pages and returns a
   local relation, persisting and checkpointing nothing,
 - Python workers come from the engine daemon, so a task's
-  importlib.invalidate_caches() re-reads no unchanged zip archive.
+  importlib.invalidate_caches() re-reads no unchanged zip archive,
+- the rasterize / zonal / polygonize Python stages are Arrow-native and
+  receive only their kernel's columns; run labeling maps the tile rows
+  without a shuffle.
 """
 
 import os
 import re
 import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -372,3 +376,83 @@ def test_python_workers_skip_unchanged_zip_rereads(spark):
     for r in rows:
         assert r.module == 'buzzard_spark.pydaemon'
         assert r.zips > 0 and r.kept
+
+
+_WINDOW = ['tile_y', 'tile_x', 'y0', 'x0', 'h', 'w']
+
+
+def _python_inputs(plan, node):
+    """Input columns of every ``node`` Python call in a plan string,
+    expression ids stripped."""
+    return [re.sub(r'#\d+L?', '', args).split(', ') for args in
+            re.findall(node + r' (?:\[[^\]]*\], )?\w+\(([^)]*)\)', plan)]
+
+
+@pytest.fixture(scope='module')
+def raster_inputs(spark, tmp_path_factory):
+    """A 21x18 north-up grid, three overlapping rect zones on it, and a
+    parquet copy of their rasterized tile rows."""
+    from buzzard_spark import Footprint
+    from buzzard_spark.kernels import geometry
+    from buzzard_spark.operators import raster_ops
+
+    rows = []
+    for rid, (x0, y0, x1, y1) in enumerate(
+            [(1, -9, 7, -2), (5, -15, 16, -6), (12, -17, 20, -12)]):
+        ring = np.asarray([(x0, y0), (x1, y0), (x1, y1), (x0, y1),
+                           (x0, y0)], float)
+        rows.append((rid, bytearray(geometry.wkb_polygon(ring)),
+                     float(y0), float(x0), float(y1), float(x1)))
+    polys = spark.createDataFrame(
+        rows, 'region_id long, wkb binary, minlat double, minlng double, '
+              'maxlat double, maxlng double')
+    fp = Footprint(tl=(0, 0), size=(21, 18), rsize=(21, 18))
+    path = str(tmp_path_factory.mktemp('raster_tiles') / 'tiles')
+    raster_ops.rasterize(spark, fp, polys, tile_size=6).write.parquet(path)
+    return fp, polys, path
+
+
+def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
+                                                   monkeypatch):
+    """rasterize, rasterize_counts, zonal_stats and polygonize's trace run
+    as FlatMapGroupsInArrow over exactly their kernel's columns; no
+    pandas grouped map is left on these paths."""
+    from buzzard_spark import session
+    from buzzard_spark.operators import raster_ops
+
+    fp, polys, path = raster_inputs
+    tiles = raster_ops.rasterize(spark, fp, polys, tile_size=6)
+    traced = []
+    release = session.checkpoint_release
+
+    def spy(df, cached):
+        traced.append(_plan(df))
+        return release(df, cached)
+
+    monkeypatch.setattr(session, 'checkpoint_release', spy)
+    # polygonize reads the tiles back, so its only grouped map is its own;
+    # its closing checkpoint is the last one taken
+    back = spark.read.parquet(path)
+    assert raster_ops.polygonize(spark, fp, back, tile_size=6).count() > 0
+    for plan, inputs in (
+            (_plan(tiles), _WINDOW + ['wkb']),
+            (_plan(raster_ops.rasterize_counts(spark, fp, polys, 6)),
+             _WINDOW + ['region_id', 'wkb']),
+            (_plan(raster_ops.zonal_stats(spark, fp, polys, tile_size=6)),
+             _WINDOW + ['region_id', 'wkb']),
+            (traced[-1], ['component_id', 'y', 'xs', 'xe'])):
+        assert _python_inputs(plan, 'FlatMapGroupsInArrow') == [inputs]
+        assert 'FlatMapGroupsInPandas' not in plan
+
+
+def test_tile_runs_maps_tile_rows_without_exchange(spark, raster_inputs):
+    """Run labeling is a per-row map straight over the tile scan."""
+    from buzzard_spark.operators import raster_ops
+
+    _fp, _polys, path = raster_inputs
+    runs = raster_ops.tile_runs(spark.read.parquet(path))
+    assert runs.count() > 0
+    plan = _plan(runs)
+    assert _python_inputs(plan, 'MapInArrow') == [_WINDOW + ['mask']]
+    assert 'Exchange' not in plan
+    assert 'FlatMapGroupsIn' not in plan

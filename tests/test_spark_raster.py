@@ -6,7 +6,7 @@ cross-tile stitching is exercised hard (tile_size=6 over a 21×18 raster).
 import numpy as np
 import pytest
 
-from buzzard_spark import Footprint
+from buzzard_spark import Env, Footprint
 from buzzard_spark.kernels import geometry, raster
 from buzzard_spark.operators import raster_ops
 from tests.test_kernel_findburn import _GRID
@@ -65,6 +65,24 @@ def test_distributed_polygonize_matches_kernel(spark, fullfp, truth):
 
     # hole preservation survived the distributed path
     assert any(r['n_rings'] > 1 for r in result)
+
+
+@pytest.mark.parametrize('op', ['rasterize', 'rasterize_lines',
+                                'rasterize_counts', 'zonal_stats'])
+@pytest.mark.parametrize('gt', [
+    (0., 1., 0.25, 0., 0.25, -1.),  # rotated
+    (0., 1., 0., -18., 0., 1.),     # south-up
+    (21., -1., 0., 0., 0., -1.),    # east-left
+], ids=['rotated', 'south-up', 'east-left'])
+def test_tiled_rasterization_refuses_non_north_up(spark, fullfp, truth,
+                                                  op, gt):
+    """The tile bbox join and the per-tile footprint assume a north-up
+    grid; any other grid is refused instead of silently mis-filtered."""
+    polys_df = _polys_df(spark, fullfp, truth)
+    with Env(allow_complex_footprint=True):
+        fp = Footprint(gt=gt, rsize=(21, 18))
+    with pytest.raises(ValueError, match='north-up'):
+        getattr(raster_ops, op)(spark, fp, polys_df, tile_size=6)
 
 
 def test_distributed_rasterize_lines_matches_kernel(spark):
