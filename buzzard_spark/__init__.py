@@ -1,15 +1,16 @@
 """buzzard_spark — a PySpark-native spatial-join + tiling engine.
 
-Re-expresses the capabilities of ``preligens-lab/buzzard`` (reference at
-/root/reference) as distributed Spark operators over web-page tables:
+Re-expresses the capabilities of ``preligens-lab/buzzard`` as distributed
+Spark operators over web-page tables:
 
 - ``kernels``   — pure-numpy Footprint algebra (tiling, affine conversions,
-  precision discipline), geometry (PIP, WKB), cell index, raster kernels.
-  No Spark imports; usable inside pandas UDFs.
+  precision discipline), geometry (PIP, WKB), cell index, raster kernels,
+  baseline GeoTIFF codec. No Spark imports; usable inside pandas UDFs.
 - ``operators`` — distributed operators (spatial join, kNN, tiling explode,
-  per-tile rasterize/polygonize, dedup, similarity, text analysis).
+  per-tile rasterize/polygonize, raster I/O, connected components). The
+  stateless ones (``assign_cell``, ``pip_join_rect``, ``nearest_k_refs``)
+  run unchanged on a structured-streaming DataFrame.
 - ``sources``   — table format shim (parquet + snapshot manifest, Iceberg-style).
-- ``streaming`` — structured-streaming variants.
 
 The kernel semantics mirror buzzard's ``Footprint``
 (reference: buzzard/_footprint.py) bit-for-bit where the reference test

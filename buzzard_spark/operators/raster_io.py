@@ -187,9 +187,9 @@ def window_geotiff(spark: SparkSession, tiles: DataFrame, raster_fp,
     the window (same sync-read contract and driver-side-array warning),
     the values clip to uint8 and the window Footprint's geotransform
     writes as GeoTIFF ModelPixelScale/ModelTiepoint tags, so any GeoTIFF
-    reader (including :func:`buzzard_spark.operators.multimodal
-    .decode_tiff` / ``geotiff_footprint`` — the round-trip pytest) sees
-    the correct georeferencing.
+    reader (including :func:`buzzard_spark.kernels.geotiff.decode_tiff`
+    / ``geotiff_footprint`` — the round-trip pytest) sees the correct
+    georeferencing.
 
     Reference analogue: ``Dataset.create_raster`` + ``set_data`` +
     GDAL's GTiff driver writing the file
@@ -198,7 +198,7 @@ def window_geotiff(spark: SparkSession, tiles: DataFrame, raster_fp,
     hand-off to GIS tools). Greyscale (2-D) and RGB (3-channel) windows
     only — the baseline-TIFF codec's domain.
     """
-    from buzzard_spark.operators.multimodal import encode_tiff
+    from buzzard_spark.kernels.geotiff import encode_tiff
 
     fp = request_fp if request_fp is not None else raster_fp
     arr = get_data(spark, tiles, raster_fp, request_fp=request_fp,

@@ -896,9 +896,8 @@ def kmeans_assign(points: DataFrame, k: int, iters: int,
                   id_col: str = 'page_id',
                   lat: str = 'lat', lng: str = 'lng',
                   scale: int = 1_000_000) -> DataFrame:
-    """Distributed Lloyd k-means over point coordinates — the training
-    loop the IVF index family consumes (similarity.py's IVF cells use a
-    one-shot nearest-centroid fold; this iterates it)::
+    """Distributed Lloyd k-means over point coordinates — the
+    :func:`nearest_region` fold iterated ``iters`` times::
 
         (id_col, cluster)   -- assignment after ``iters`` Lloyd rounds;
                             -- NULL-coordinate points get cluster −1
@@ -915,8 +914,7 @@ def kmeans_assign(points: DataFrame, k: int, iters: int,
     literal-fold — a pure codegen map, NO join and NO ×k blowup — then
     one map-side-combinable groupBy(cluster) over k groups. The k
     centroid rows come to the driver each round (a dimension-sized
-    collect, the same bounded trip similarity.py's IVF documents);
-    nothing corpus-sized ever does.
+    collect); nothing corpus-sized ever does.
 
     Scale shape (10^12 pages): ``iters`` corpus scans, each one map +
     one k-group aggregate — the textbook MapReduce k-means; no state
@@ -1036,9 +1034,8 @@ def sample_join_pairs(pages: DataFrame, regions: DataFrame, res: int,
     Bottom-k-by-hash IS a uniform sample without replacement (each pair's
     rank is an i.i.d. function of its identity alone), and it is
     DETERMINISTIC: independent of partitioning, retries, join order and
-    engine — the same invariance contract as
-    :func:`buzzard_spark.operators.corpus.deterministic_sample`, extended
-    from base tables to a JOIN RESULT. Nothing result-sized is ever
+    engine — a hash-gated sample, applied to a JOIN RESULT rather than
+    a base table. Nothing result-sized is ever
     shuffled or collected: the hash gate evaluates inside the join's
     output pipeline (codegen), and TakeOrdered k reduces per-partition
     tops — the full join output never exists as a materialized dataset.

@@ -17,7 +17,7 @@ from tests import oracle_queries
 
 SF_DIR = '/root/testdata/sf0.01'  # TESTDATA.md
 TABLES = ('region nation customer supplier part orders lineitem events '
-          'documents embeddings').split()
+          'documents').split()
 ORACLES = oracle_queries.oracle_sql()
 
 pytestmark = pytest.mark.skipif(not os.path.isdir(SF_DIR),

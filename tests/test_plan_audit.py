@@ -109,21 +109,6 @@ def test_tile_sql_is_round_free():
     assert 'ROUND' not in tx.upper() and 'ROUND' not in ty.upper()
 
 
-def test_near_dup_plan_no_python(spark):
-    """The whole MinHash/LSH pipeline (shingles, signature, banding,
-    candidate join, exact verify) must stay JVM-side."""
-    from buzzard_spark.operators import dedup
-
-    df = spark.createDataFrame(
-        [(i, f'w{i} w{i+1} w{i+2} w{i+3} common words here') for i in range(50)],
-        'doc_id long, text string')
-    pairs = dedup.near_dup_pairs(df, threshold=0.6, materialize=False)
-    plan = _plan(pairs)
-    assert 'BatchEvalPython' not in plan
-    assert 'ArrowEvalPython' not in plan
-    spark.catalog.clearCache()  # materialize=False leaves caching to caller
-
-
 def test_cell_assign_no_python(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     q = spatial_join.assign_cell(pages, 9).groupBy('cell').count()
@@ -133,171 +118,23 @@ def test_cell_assign_no_python(spark, pages_parquet):
     assert '*(' in plan  # whole-stage-codegen stage markers
 
 
-def test_new_similarity_and_simhash_plans_no_cartesian(spark):
-    """The round-3 pair operators must never plan a cartesian product:
-    simhash_near_pairs is an equi-join on (band, value);
-    cosine_near_pairs joins through the broadcast block-pair table and a
-    single shuffle keyed by (bi, bj); ivf_topk candidates arrive via an
-    equi-join on cell id. No BatchEvalPython anywhere (the pandas stages
-    are Arrow [FlatMap]GroupsInPandas/MapInPandas by construction)."""
-    import numpy as np
-
-    from buzzard_spark.operators import dedup, similarity
-
-    sims = spark.createDataFrame(
-        [(i, i * 7919) for i in range(50)], 'doc_id long, simhash long')
-    q1 = dedup.simhash_near_pairs(sims, max_hamming=3)
-    p1 = _plan(q1)
-    assert 'CartesianProduct' not in p1 and 'BroadcastNestedLoopJoin' not in p1
-    assert 'BatchEvalPython' not in p1
-
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in np.arange(8) + i]) for i in range(40)],
-        'vec_id long, vec array<double>')
-    q2 = similarity.cosine_near_pairs(emb, threshold=0.9, n_blocks=4)
-    p2 = _plan(q2)
-    assert 'CartesianProduct' not in p2 and 'BroadcastNestedLoopJoin' not in p2
-    assert 'BroadcastHashJoin' in p2  # the block-pair replication joins
-    assert 'BatchEvalPython' not in p2
-
-    queries = spark.createDataFrame(
-        [(i, [float(v) for v in np.arange(8) + i]) for i in range(3)],
-        'qid long, qvec array<double>')
-    q3 = similarity.ivf_topk(emb, queries, 5, n_cells=4, nprobe=2)
-    p3 = _plan(q3)
-    assert 'CartesianProduct' not in p3 and 'BroadcastNestedLoopJoin' not in p3
-    assert 'BatchEvalPython' not in p3
-
-
-def test_corpus_ops_plans_no_python_no_cartesian(spark):
-    """Round-4 corpus operators stay JVM-side and bucketed: no Python in
-    the row path, no cartesian products; tfidf's vocab join broadcasts
-    when (and only when) asked."""
-    from buzzard_spark.operators import corpus, dedup
-
-    docs = spark.createDataFrame(
-        [(i, f'w{i % 7} shared text w{i % 5} tail{i}') for i in range(40)],
-        'doc_id long, text string')
-
-    for q in (corpus.chunk_dedup(docs),
-              corpus.repetition_stats(docs),
-              dedup.containment_pairs(docs, k=3, threshold=0.5,
-                                      materialize=False)):
-        p = _plan(q)
-        assert 'BatchEvalPython' not in p
-        assert 'CartesianProduct' not in p
-        assert 'BroadcastNestedLoopJoin' not in p
-
-    p_bc = _plan(corpus.tfidf_top_terms(docs, broadcast_vocab=True))
-    assert 'BroadcastHashJoin' in p_bc
-    assert 'BatchEvalPython' not in p_bc
-    p_sh = _plan(corpus.tfidf_top_terms(docs, broadcast_vocab=False))
-    assert 'BatchEvalPython' not in p_sh
-    assert 'CartesianProduct' not in p_sh
-    # containment_pairs(materialize=False) leaves its input pinned by
-    # contract (caller-managed); drop the mark so later cache-hygiene
-    # assertions see a clean session
-    spark.catalog.clearCache()
-
-
-def test_sketch_plans_no_python_no_cartesian(spark):
-    """Round-5 sketches stay JVM-side: md5-nibble hashing and bit
-    arithmetic are codegen expressions; the CM probe join is a hash
-    join on (i, c), never a cartesian."""
-    from buzzard_spark.operators import sketch
-
-    df = spark.createDataFrame(
-        [(f'g{i % 2}', f'v{i % 50}') for i in range(200)],
-        'g string, v string')
-    for q in (sketch.approx_distinct(df, 'v', 'g', p=4),
-              sketch.count_min_estimates(df, 'v', d=2, width=16)):
-        p = _plan(q)
-        assert 'BatchEvalPython' not in p
-        assert 'CartesianProduct' not in p
-        assert 'BroadcastNestedLoopJoin' not in p
-
-
-def test_bloom_probe_plan_has_no_join_or_exchange(spark):
-    """Bloom pruning must be a pure codegen filter on the probe side:
-    no Join node, no Exchange, no Python eval — the words ride in the
-    predicate as a literal array."""
-    from buzzard_spark.operators import sketch as sketch_ops
-    probe = spark.range(0, 50_000, 1, 8).selectExpr('id AS k')
-    build = spark.range(0, 100).selectExpr('id * 7 AS k')
-    out = sketch_ops.bloom_filter(probe, build, 'k', 'k', m_bits=1024)
-    plan = _plan(out)
-    assert 'Join' not in plan
-    assert 'Exchange' not in plan
-    assert 'BatchEvalPython' not in plan and 'ArrowEvalPython' not in plan
-    # '*(1)' is executedPlan().toString()'s whole-stage-codegen marker
-    assert '*(1)' in plan
-
-
-def test_asof_join_single_shuffle(spark):
-    """The union+window as-of join must shuffle ONCE on the key: one
-    hashpartitioning Exchange (plus AQE wrappers), never a range/
-    cartesian join."""
-    from buzzard_spark.operators.temporal import asof_join
-    probes = spark.range(0, 10_000, 1, 8).selectExpr(
-        'id % 50 AS k', 'id AS ts', 'id AS event_id')
-    states = spark.range(0, 500).selectExpr(
-        'id % 50 AS k', 'id * 20 AS ts', "concat('v', id) AS v")
-    out = asof_join(probes, states, on='k', right_cols=['v'])
-    plan = _plan(out)
-    assert plan.count('Exchange hashpartitioning') == 1
-    assert 'CartesianProduct' not in plan
-    assert 'SortMergeJoin' not in plan and 'BroadcastNestedLoop' not in plan
-
-
-def test_frontier_schedule_single_shuffle_broadcast_rates(spark):
-    """Politeness scheduling with broadcast rates: the host-rate join
-    must be broadcast (no shuffle), leaving exactly the one window
-    Exchange on host."""
-    from buzzard_spark.operators import text as text_ops
-    urls = spark.range(0, 20_000, 1, 8).selectExpr(
-        "concat('https://h', CAST(id % 200 AS STRING), '.x/p', "
-        "CAST(id AS STRING)) AS url", 'id % 13 AS prio')
-    rates = spark.range(200).selectExpr(
-        "concat('h', CAST(id AS STRING), '.x') AS host",
-        '1 + id % 4 AS rate')
-    out = text_ops.frontier_schedule(urls, priority_col='prio',
-                                     host_rates=F.broadcast(rates))
-    plan = _plan(out)
-    assert 'BroadcastHashJoin' in plan
-    assert plan.count('Exchange hashpartitioning') == 1
-    assert 'BatchEvalPython' not in plan
-
-
 def test_round5_batch2_plans_no_python_no_cartesian(spark):
-    """The round-5 second-batch operators stay JVM-side and
-    cartesian-free: DBSCAN's ε-graph, compact_cells' level cascade,
-    setsim's prefix join and pareto_front's bucketed windows must show
-    no Python eval nodes, no CartesianProduct/BroadcastNestedLoopJoin,
-    and pareto_front no corpus-scale single-partition window (its only
-    unpartitioned window runs over the bucket AGGREGATE table)."""
-    from buzzard_spark.operators.corpus import pareto_front
-    from buzzard_spark.operators.dedup import setsim_pairs
-    from buzzard_spark.operators.spatial_join import (
-        compact_cells, dbscan, distance_pairs)
+    """The round-5 second-batch spatial operators stay JVM-side and
+    cartesian-free: DBSCAN's ε-graph (distance_pairs) must show no Python
+    eval nodes and no CartesianProduct/BroadcastNestedLoopJoin, and
+    compact_cells' level cascade must run."""
+    from buzzard_spark.operators.spatial_join import (compact_cells,
+                                                      distance_pairs)
 
     pages = synth.synthetic_pages(spark, 5_000)
 
     eps_graph = distance_pairs(pages, 2.0, 5)
-    sky = pareto_front(
-        pages.selectExpr('page_id % 97 AS x', 'page_id % 89 AS y'),
-        'x', 'y', bucket_width=16)
     cells_df = pages.selectExpr('page_id % 4096 AS cell')
     comp = compact_cells(cells_df, 3)
-    ss = setsim_pairs(
-        pages.selectExpr('page_id AS doc_id',
-                         "concat('w', CAST(page_id % 29 AS STRING), "
-                         "' x y z w', CAST(page_id % 7 AS STRING)) "
-                         'AS text'), 1, 2)
-    for name, df in [('eps', eps_graph), ('sky', sky), ('setsim', ss)]:
-        p = _plan(df)
-        assert 'BatchEvalPython' not in p and 'ArrowEvalPython' not in p, name
-        assert 'CartesianProduct' not in p, name
-        assert 'BroadcastNestedLoopJoin' not in p, name
+    p = _plan(eps_graph)
+    assert 'BatchEvalPython' not in p and 'ArrowEvalPython' not in p
+    assert 'CartesianProduct' not in p
+    assert 'BroadcastNestedLoopJoin' not in p
     # compact_cells/dbscan eagerly checkpoint — audit via collected output
     # being bounded instead; their building blocks (distance_pairs,
     # groupBy cascades) are covered above and by the operator tests.

@@ -8,13 +8,9 @@ the Spark plan and its SQL twin cannot hide behind their agreement.
 """
 
 import duckdb
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from buzzard_spark.operators.dedup import setsim_pairs_oracle_sql
-from buzzard_spark.operators.graph import (bfs_hops_oracle_sql,
-                                           sssp_hops_oracle_sql)
 from buzzard_spark.operators.spatial_join import (
     compact_cells_oracle_sql, dbscan_oracle_sql)
 
@@ -77,85 +73,3 @@ def test_dbscan_oracle_equals_python_reference(p, eps, mp):
             cl = [lab[c] for c in nbrs[i] if c in core]
             want[i] = (min(cl), 'border') if cl else (-1, 'noise')
     assert got == want
-
-
-edges_strategy = st.lists(
-    st.tuples(st.integers(0, 12), st.integers(0, 12),
-              st.integers(0, 9)),
-    min_size=1, max_size=40)
-
-
-@settings(max_examples=40, deadline=None)
-@given(es=edges_strategy, mh=st.integers(0, 6))
-def test_bfs_and_sssp_oracles_equal_python_reference(es, mh):
-    """BFS min-hop and bounded SSSP oracles == python dynamic programs
-    over arbitrary digraphs (cycles, multi-edges, self-loops)."""
-    e_sql = ' UNION ALL '.join(
-        f"SELECT 'n{a}' AS src, 'n{b}' AS dst, CAST({w} AS BIGINT) AS w"
-        for a, b, w in es)
-    s_sql = "SELECT 'n0' AS node"
-
-    # python reference: hop-bounded Bellman-Ford over unit / real weights
-    def bounded(dist0, weight_of):
-        dist = {0: 0}
-        for _ in range(mh):
-            new = dict(dist)
-            for a, b, w in es:
-                if a in dist:
-                    cand = dist[a] + weight_of(w)
-                    if cand < new.get(b, 1 << 60):
-                        new[b] = cand
-            dist = new
-        return {f'n{n}': d for n, d in dist.items()}
-
-    got_b = dict(_con().execute(
-        bfs_hops_oracle_sql(e_sql, s_sql, mh)).fetchall())
-    assert got_b == bounded(0, lambda w: 1)
-    got_s = dict(_con().execute(
-        sssp_hops_oracle_sql(e_sql, s_sql, mh)).fetchall())
-    assert got_s == bounded(0, lambda w: w)
-
-
-docs_strategy = st.lists(
-    st.lists(st.sampled_from('abcdefgh'), min_size=1, max_size=8),
-    min_size=2, max_size=12)
-
-
-@settings(max_examples=40, deadline=None)
-@given(ds=docs_strategy, num=st.integers(1, 4))
-def test_setsim_oracle_equals_python_reference(ds, num):
-    """Set-similarity oracle == python brute Jaccard at num/4."""
-    den = 4
-    docs = [(i, ' '.join(ws)) for i, ws in enumerate(ds)]
-    d_sql = ' UNION ALL '.join(
-        f"SELECT {i} AS doc_id, '{t}' AS text" for i, t in docs)
-    got = {(r[0], r[1]): (r[2], r[3]) for r in _con().execute(
-        setsim_pairs_oracle_sql(d_sql, num, den)).fetchall()}
-    sets = {i: set(t.split()) for i, t in docs}
-    want = {}
-    for i in sets:
-        for j in sets:
-            if i < j:
-                inter = len(sets[i] & sets[j])
-                uni = len(sets[i] | sets[j])
-                if inter * den >= num * uni:
-                    want[(i, j)] = (inter, uni)
-    assert got == want
-
-
-@settings(max_examples=80, deadline=None)
-@given(a=st.text(alphabet='abcxyz019/:. ', max_size=24),
-       b=st.text(alphabet='abcxyz019/:. ', max_size=24))
-def test_levenshtein_duckdb_equals_python_dp(a, b):
-    """editdist_pairs' verify function: DuckDB's levenshtein == the
-    textbook unit-cost DP on arbitrary strings (the Spark side is pinned
-    against DuckDB in test_spark_trainops — this closes python too)."""
-    dp = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        prev, dp[0] = dp[0], i
-        for j, cb in enumerate(b, 1):
-            prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1,
-                                     prev + (ca != cb))
-    want = dp[len(b)]
-    got = _con().execute('SELECT levenshtein(?, ?)', [a, b]).fetchone()[0]
-    assert got == want, (a, b)

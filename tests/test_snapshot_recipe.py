@@ -556,45 +556,19 @@ def test_compact_materializes_deletes(spark, tmp_path):
     assert not any(m.get('delete_predicate') for m in t.manifests())
 
 
-# -- streaming snapshot sink (epoch-idempotent foreachBatch) -------------------
-
-def test_snapshot_sink_idempotent_replay(spark, tmp_path):
-    """Replaying an epoch (foreachBatch's at-least-once contract after a
-    crash) must not double-append; distinct epochs append normally."""
-    from buzzard_spark.streaming.stream_ops import snapshot_sink
-    root = str(tmp_path / 'sink')
-    write = snapshot_sink(root)
-    b0 = spark.range(0, 5).selectExpr('id AS k')
-    b1 = spark.range(5, 8).selectExpr('id AS k')
-    write(b0, 0)
-    write(b0, 0)                       # replay of epoch 0 — must be a no-op
-    write(b1, 1)
-    t = SnapshotTable(root)
-    got = sorted(r['k'] for r in t.read(spark).collect())
-    assert got == list(range(8))
-    assert t.current_snapshot_id() == 2
-    epochs = [m.get('app_meta', {}).get('epoch_id') for m in t.manifests()]
-    assert epochs == [0, 1]
-
-
-def test_snapshot_sink_end_to_end_stream(spark, tmp_path):
-    """Real writeStream → foreachBatch(snapshot_sink) run over a file
-    source; table contents equal the batch read of the same input."""
-    from buzzard_spark.streaming.stream_ops import snapshot_sink
-    src = str(tmp_path / 'src')
-    spark.range(0, 50).selectExpr('id AS k', 'id % 7 AS g') \
-        .repartition(4).write.parquet(src)
-    root = str(tmp_path / 'sink')
-    stream = (spark.readStream.schema('k long, g long')
-              .option('maxFilesPerTrigger', 2).parquet(src))
-    q = (stream.writeStream
-         .option('checkpointLocation', str(tmp_path / 'ckpt'))
-         .foreachBatch(snapshot_sink(root))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(r['k'] for r in
-                 SnapshotTable(root).read(spark).collect())
-    assert got == list(range(50))
+def test_append_records_extra_meta(spark, tmp_path):
+    """``extra_meta`` lands verbatim in the manifest as ``app_meta`` (the
+    slot a foreachBatch writer keeps its epoch id in); appends without
+    it record none."""
+    t = SnapshotTable(str(tmp_path / 'meta'))
+    t.append(spark.range(0, 5).selectExpr('id AS k'),
+             extra_meta={'epoch_id': 0})
+    t.append(spark.range(5, 8).selectExpr('id AS k'))
+    t.append(spark.range(8, 9).selectExpr('id AS k'),
+             extra_meta={'epoch_id': 1})
+    assert [m.get('app_meta') for m in t.manifests()] == [
+        {'epoch_id': 0}, None, {'epoch_id': 1}]
+    assert sorted(r['k'] for r in t.read(spark).collect()) == list(range(9))
 
 
 def test_read_incremental_append_only_delta(spark, tmp_path):

@@ -135,8 +135,7 @@ def test_window_geotiff_roundtrip(spark, raster_fp, cache):
     the clipped window values, and geotiff_footprint reconstructs the
     window's exact geotransform — the engine's no-GDAL raster→file path
     round-trips through its own codec."""
-    from buzzard_spark.operators.multimodal import (decode_tiff,
-                                                    geotiff_footprint)
+    from buzzard_spark.kernels.geotiff import decode_tiff, geotiff_footprint
     from buzzard_spark.operators.raster_io import window_geotiff
 
     win = Footprint(tl=(2.0, 8.0), size=(3.0, 3.0), rsize=(30, 30))

@@ -1,42 +1,16 @@
-"""Structured Streaming conformance: streaming results == batch results
-on the same input, with multi-micro-batch state exercised via
-maxFilesPerTrigger=1 over a split events directory."""
+"""Structured Streaming conformance: the stateless spatial operators run
+unchanged on a streaming DataFrame, and their streaming results equal the
+batch results on the same input."""
 
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from buzzard_spark.streaming import stream_ops
+from buzzard_spark import synth
+from buzzard_spark.operators.spatial_join import (assign_cell, nearest_k_refs,
+                                                  pip_join_rect)
 
 
-@pytest.fixture(scope='module')
-def events_dir(spark, tmp_path_factory):
-    """events.parquet split into 4 time-ordered files (written oldest
-    first, so micro-batch order ≈ event-time order and the watermark drops
-    nothing) → 4 micro-batches."""
-    import time
-
-    import duckdb
-
-    out = str(tmp_path_factory.mktemp('events_stream'))
-    con = duckdb.connect()
-    src = '/root/testdata/sf0.001/events.parquet'
-    n = con.sql(f"SELECT COUNT(*) FROM '{src}'").fetchone()[0]
-    step = -(-n // 4)
-    for i in range(4):
-        con.sql(
-            f"COPY (SELECT * FROM '{src}' ORDER BY ts, event_id "
-            f'LIMIT {step} OFFSET {i * step}) '
-            f"TO '{out}/part-{i}.parquet' (FORMAT PARQUET)")
-        time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-    return out
-
-
-def _run_stream(df, tmp_path, mode='update'):
+def _run_stream(df, tmp_path):
     sink = f'mem_{abs(hash(str(tmp_path))) % 10**9}'
     q = (df.writeStream.format('memory').queryName(sink)
-         .outputMode(mode)
+         .outputMode('append')
          .option('checkpointLocation', str(tmp_path / 'ckpt'))
          .trigger(availableNow=True)
          .start())
@@ -44,476 +18,19 @@ def _run_stream(df, tmp_path, mode='update'):
     return sink
 
 
-def test_windowed_counts_match_batch(spark, events_dir, tmp_path):
-    stream = stream_ops.read_events_stream(spark, events_dir)
-    agg = stream_ops.windowed_event_counts(stream)
-    sink = _run_stream(agg, tmp_path, mode='append')
-    # append mode emits only watermark-closed windows; with availableNow the
-    # final watermark closes all but the trailing window(s) — compare the
-    # emitted subset against batch truth
-    got = {(r['win_start'], r['event_type']): (r['n_events'], r['sum_value'])
-           for r in spark.sql(f'SELECT * FROM {sink}').collect()}
-    batch = spark.read.parquet(events_dir)
-    truth = {(r['win_start'], r['event_type']): (r['n_events'], r['sum_value'])
-             for r in (batch.groupBy(
-                 F.window('ts', '1 hour').alias('win'), 'event_type')
-                 .agg(F.count('*').alias('n_events'),
-                      F.sum('value').alias('sum_value'))
-                 .select(F.col('win.start').alias('win_start'),
-                         'event_type', 'n_events', 'sum_value')).collect()}
-    assert got  # something was emitted
-    for key, val in got.items():
-        assert truth[key][0] == val[0]
-        assert truth[key][1] == pytest.approx(val[1])
-
-
-def test_stateful_running_totals(spark, events_dir, tmp_path):
-    stream = stream_ops.read_events_stream(spark, events_dir,
-                                           max_files_per_trigger=1)
-    totals = stream_ops.stateful_running_totals(stream)
-    sink = _run_stream(totals, tmp_path, mode='update')
-    # the LAST update per key is the running total across all 4 batches
-    rows = spark.sql(f'SELECT * FROM {sink}').collect()
-    final = {}
-    for r in rows:  # memory sink appends updates in batch order
-        final[r['event_type']] = (r['n_events'], r['sum_value'])
-    truth = {r['event_type']: (r['n'], r['s'])
-             for r in (spark.read.parquet(events_dir)
-                       .groupBy('event_type')
-                       .agg(F.count('*').alias('n'), F.sum('value').alias('s'))
-                       ).collect()}
-    assert set(final) == set(truth)
-    for k in truth:
-        assert final[k][0] == truth[k][0]
-        assert final[k][1] == pytest.approx(truth[k][1])
-    # state really spanned multiple micro-batches: more updates than keys
-    assert len(rows) > len(truth)
-
-
 def test_stream_cell_assign_matches_batch(spark, tmp_path):
     pages_dir = str(tmp_path / 'pages')
-    from buzzard_spark import synth
     synth.synthetic_pages(spark, 1000).write.parquet(pages_dir)
     schema = spark.read.parquet(pages_dir).schema
     stream = (spark.readStream.schema(schema).parquet(pages_dir))
-    assigned = stream_ops.stream_cell_assign(stream, res=9)
-    sink = _run_stream(assigned.select('page_id', 'cell'), tmp_path,
-                       mode='append')
+    assigned = assign_cell(stream, 9)
+    sink = _run_stream(assigned.select('page_id', 'cell'), tmp_path)
     got = {r['page_id']: r['cell']
            for r in spark.sql(f'SELECT * FROM {sink}').collect()}
-    from buzzard_spark.operators.spatial_join import assign_cell
     truth = {r['page_id']: r['cell']
              for r in assign_cell(spark.read.parquet(pages_dir), 9)
              .select('page_id', 'cell').collect()}
     assert got == truth
-
-
-def test_stream_dedup_exact_matches_batch(spark, tmp_path):
-    """Exact dedup over 3 micro-batches: duplicates within AND across
-    micro-batches are dropped; the survivor set equals the batch
-    keep-first truth (doc_id ascends with arrival order by construction,
-    so first-seen == min doc_id)."""
-    import time
-
-    src = tmp_path / 'docs_stream'
-    src.mkdir()
-    batches = [
-        [(0, '2024-01-01 00:00:00', 'alpha bravo'),
-         (1, '2024-01-01 00:01:00', 'charlie delta'),
-         (2, '2024-01-01 00:02:00', 'alpha bravo')],      # intra-batch dup
-        [(3, '2024-01-01 01:00:00', 'alpha bravo'),       # cross-batch dup
-         (4, '2024-01-01 01:01:00', 'echo foxtrot')],
-        [(5, '2024-01-01 02:00:00', 'charlie delta'),     # cross-batch dup
-         (6, '2024-01-01 02:01:00', 'golf hotel')],
-    ]
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, 'doc_id long, ts string, text string')
-         .withColumn('ts', F.to_timestamp('ts'))
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-    stream = (spark.readStream
-              .schema('doc_id long, ts timestamp, text string')
-              .option('maxFilesPerTrigger', 1)
-              .parquet(f'{src}/*'))
-    out = stream_ops.stream_dedup_exact(stream)
-    sink = _run_stream(out.select('doc_id', 'text'), tmp_path, mode='append')
-    got = {r['doc_id'] for r in spark.sql(f'SELECT * FROM {sink}').collect()}
-    assert got == {0, 1, 4, 6}
-
-    from buzzard_spark.operators import dedup
-    batch_df = spark.read.schema(
-        'doc_id long, ts timestamp, text string').parquet(f'{src}/*')
-    keep = {r['keep_id'] for r in dedup.exact_dedup(batch_df).collect()}
-    assert got == keep
-
-
-def test_stream_dedup_readmits_beyond_watermark_horizon(spark, tmp_path):
-    """State must be watermark-bounded (ADVICE r3): a replay arriving
-    AFTER the horizon has passed the first sighting is a fresh first
-    occurrence again. Plain dropDuplicates keeps its state rows forever
-    (dropping the replay and growing state unboundedly); only
-    dropDuplicatesWithinWatermark passes this."""
-    import time
-
-    src = tmp_path / 'docs_rearrive'
-    src.mkdir()
-    batches = [
-        [(0, '2024-01-01 00:00:00', 'alpha bravo')],
-        # advances the watermark to 08:00; eviction of expired state lags
-        # one micro-batch (purge runs after a batch's rows are processed),
-        # so a spacer batch lets alpha's expired row (02:00) actually drop
-        [(1, '2024-01-01 10:00:00', 'something else')],
-        [(2, '2024-01-01 10:05:00', 'spacer doc')],
-        [(3, '2024-01-01 10:30:00', 'alpha bravo')],   # beyond horizon
-        [(4, '2024-01-01 10:31:00', 'alpha bravo')],   # within: dropped
-    ]
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, 'doc_id long, ts string, text string')
-         .withColumn('ts', F.to_timestamp('ts'))
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream
-              .schema('doc_id long, ts timestamp, text string')
-              .option('maxFilesPerTrigger', 1)
-              .parquet(f'{src}/*'))
-    out = stream_ops.stream_dedup_exact(stream)
-    sink = _run_stream(out.select('doc_id'), tmp_path, mode='append')
-    got = {r['doc_id'] for r in spark.sql(f'SELECT * FROM {sink}').collect()}
-    assert got == {0, 1, 2, 3}
-
-
-def test_stream_chunk_dedup_matches_batch(spark, tmp_path):
-    """Chunk-level dedup over 3 micro-batches: surviving (doc_id, idx)
-    chunk rows equal the batch chunk_dedup keep set (doc ids ascend with
-    arrival order, so streaming first-seen == batch min (doc_id, idx))."""
-    import time
-
-    src = tmp_path / 'chunk_stream'
-    src.mkdir()
-    batches = [
-        [(0, '2024-01-01 00:00:00', 'a b c d'),
-         (1, '2024-01-01 00:01:00', 'x y a b')],   # 'a b' dups doc0#0
-        [(2, '2024-01-01 01:00:00', 'c d'),        # dups doc0#1
-         (3, '2024-01-01 01:01:00', 'p q r s')],
-        [(4, '2024-01-01 02:00:00', 'p q x y')],   # both chunks dup
-    ]
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, 'doc_id long, ts string, text string')
-         .withColumn('ts', F.to_timestamp('ts'))
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream
-              .schema('doc_id long, ts timestamp, text string')
-              .option('maxFilesPerTrigger', 1)
-              .parquet(f'{src}/*'))
-    out = stream_ops.stream_chunk_dedup(stream, chunk_words=2)
-    sink = _run_stream(out.select('doc_id', 'idx', 'chunk'),
-                       tmp_path, mode='append')
-    got = {(r['doc_id'], r['idx'], r['chunk'])
-           for r in spark.sql(f'SELECT * FROM {sink}').collect()}
-    assert got == {(0, 0, 'a b'), (0, 1, 'c d'), (1, 0, 'x y'),
-                   (3, 0, 'p q'), (3, 1, 'r s')}
-
-    from buzzard_spark.operators.corpus import chunk_dedup
-    batch_df = spark.read.schema(
-        'doc_id long, ts timestamp, text string').parquet(f'{src}/*')
-    rebuilt = {r['doc_id']: r['clean_text']
-               for r in chunk_dedup(batch_df, chunk_words=2).collect()}
-    # streaming survivors reassembled per doc == batch clean_text
-    streamed = {}
-    for doc_id, idx, chunk in sorted(got):
-        streamed[doc_id] = (streamed.get(doc_id, '') + ' ' + chunk).strip()
-    for doc_id, text in rebuilt.items():
-        assert streamed.get(doc_id, '') == text
-
-
-def test_stream_sessionize_matches_batch(spark, tmp_path):
-    """Gap-based streaming sessionization == the batch window-function
-    sessionizer: sessions closed by a later event AND sessions closed by
-    event-time timeout (a flush event for a sentinel user advances the
-    watermark past every real user's last+gap, then a spacer batch lets
-    the timeout sweep fire)."""
-    import time
-
-    gap, wm = 30, '10 minutes'
-    src = tmp_path / 'sess_stream'
-    src.mkdir()
-    batches = [
-        # user 1: two sessions (09:00-09:10, 11:00); user 2: one session
-        [(1, '2024-01-01 09:00:00'), (1, '2024-01-01 09:10:00'),
-         (2, '2024-01-01 09:05:00')],
-        [(1, '2024-01-01 11:00:00'),            # closes user1 session 1
-         (2, '2024-01-01 09:20:00')],           # extends user2 session
-        # sentinel: watermark -> ~2024-01-02, past every last+gap
-        [(999, '2024-01-02 00:00:00')],
-        [(999, '2024-01-02 00:00:01')],         # spacer: timeout sweep
-    ]
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, 'user_id long, ts string')
-         .withColumn('ts', F.to_timestamp('ts'))
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream.schema('user_id long, ts timestamp')
-              .option('maxFilesPerTrigger', 1).parquet(f'{src}/*'))
-    out = stream_ops.stream_sessionize(stream, gap_minutes=gap,
-                                       watermark=wm)
-    sink = _run_stream(out, tmp_path, mode='append')
-    got = {(r['user_id'], r['session_start'].isoformat(),
-            r['session_end'].isoformat(), r['n_events'])
-           for r in spark.sql(f'SELECT * FROM {sink}').collect()
-           if r['user_id'] != 999}
-    assert got == {
-        (1, '2024-01-01T09:00:00', '2024-01-01T09:10:00', 2),
-        (1, '2024-01-01T11:00:00', '2024-01-01T11:00:00', 1),
-        (2, '2024-01-01T09:05:00', '2024-01-01T09:20:00', 2),
-    }
-
-    # cross-check against the batch sessionizer's (n_sessions, longest)
-    batch_df = spark.read.schema('user_id long, ts timestamp').parquet(
-        f'{src}/*').where('user_id != 999')
-    w = __import__('pyspark.sql.window', fromlist=['Window']).Window \
-        .partitionBy('user_id').orderBy('ts')
-    sess = (batch_df
-            .withColumn('prev_ts', F.lag('ts').over(w))
-            .withColumn('new_sess', F.expr(
-                f'CASE WHEN prev_ts IS NULL OR ts > prev_ts + '
-                f'INTERVAL {gap} MINUTES THEN 1 ELSE 0 END'))
-            .withColumn('sess_id', F.sum('new_sess').over(
-                w.rowsBetween(-(1 << 30), 0))))
-    truth = {(r['user_id'], r['n']) for r in
-             sess.groupBy('user_id', 'sess_id')
-             .agg(F.count('*').alias('n')).collect()}
-    assert {(u, n) for u, _, _, n in got} == truth
-
-
-def test_stream_sessionize_late_event_joins_open_session(spark, tmp_path):
-    """A late event (ts < last, within watermark) counts into the open
-    session without reopening/extending it."""
-    import time
-
-    src = tmp_path / 'sess_late'
-    src.mkdir()
-    batches = [
-        [(1, '2024-01-01 09:00:00'), (1, '2024-01-01 09:20:00')],
-        [(1, '2024-01-01 09:10:00')],           # late, inside the session
-        [(999, '2024-01-02 00:00:00')],         # watermark flush
-        [(999, '2024-01-02 00:00:01')],         # timeout sweep spacer
-    ]
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, 'user_id long, ts string')
-         .withColumn('ts', F.to_timestamp('ts'))
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream.schema('user_id long, ts timestamp')
-              .option('maxFilesPerTrigger', 1).parquet(f'{src}/*'))
-    out = stream_ops.stream_sessionize(stream, gap_minutes=30,
-                                       watermark='10 minutes')
-    sink = _run_stream(out, tmp_path, mode='append')
-    got = [(r['session_start'].isoformat(), r['session_end'].isoformat(),
-            r['n_events'])
-           for r in spark.sql(f'SELECT * FROM {sink}').collect()
-           if r['user_id'] == 1]
-    assert got == [('2024-01-01T09:00:00', '2024-01-01T09:20:00', 3)]
-
-
-def test_stream_sessionize_late_earlier_event_extends_start(spark, tmp_path):
-    """A within-watermark late event EARLIER than the open session's
-    recorded start (but within the merge gap) extends session_start
-    backwards — matching the batch sessionizer, which sees all events
-    sorted (ADVICE r4)."""
-    import time
-
-    src = tmp_path / 'sess_late_early'
-    src.mkdir()
-    batches = [
-        [(1, '2024-01-01 09:10:00'), (1, '2024-01-01 09:20:00')],
-        [(1, '2024-01-01 09:00:00')],   # late AND earlier than start
-        [(999, '2024-01-02 00:00:00')],  # watermark flush
-        [(999, '2024-01-02 00:00:01')],  # timeout sweep spacer
-    ]
-    for i, rows in enumerate(batches):
-        (spark.createDataFrame(rows, 'user_id long, ts string')
-         .withColumn('ts', F.to_timestamp('ts'))
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream.schema('user_id long, ts timestamp')
-              .option('maxFilesPerTrigger', 1).parquet(f'{src}/*'))
-    out = stream_ops.stream_sessionize(stream, gap_minutes=30,
-                                       watermark='30 minutes')
-    sink = _run_stream(out, tmp_path, mode='append')
-    got = [(r['session_start'].isoformat(), r['session_end'].isoformat(),
-            r['n_events'])
-           for r in spark.sql(f'SELECT * FROM {sink}').collect()
-           if r['user_id'] == 1]
-    assert got == [('2024-01-01T09:00:00', '2024-01-01T09:20:00', 3)]
-
-
-def test_stream_count_min_matches_batch(spark, tmp_path):
-    """Streaming CM sketch over 3 micro-batches == batch sketch cells
-    over the union of rows (complete mode: the sketch IS the state)."""
-    import time
-
-    src = tmp_path / 'vals_stream'
-    src.mkdir()
-    all_rows = []
-    for i in range(3):
-        rows = [(f'k{(j * j + i) % 17}',) for j in range(40)]
-        all_rows += rows
-        (spark.createDataFrame(rows, 'v string')
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream.schema('v string')
-              .option('maxFilesPerTrigger', 1).parquet(f'{src}/*'))
-    out = stream_ops.stream_count_min(stream, 'v', d=3, width=8)
-    sink = _run_stream(out, tmp_path, mode='complete')
-    got = {(r['i'], r['c']): r['cell'] for r in
-           spark.sql(f'SELECT * FROM {sink}').collect()}
-
-    from buzzard_spark.operators import sketch
-    batch = spark.createDataFrame(all_rows, 'v string')
-    # batch twin: the probe table's sketch CTE — recompute cells the
-    # same way (sum of per-value counts)
-    est = sketch.count_min_estimates(batch, 'v', d=3, width=8)
-    # cross-check: every value's cm_est equals min over its streamed cells
-    import hashlib
-
-    def col(v, i, w=8):
-        h = hashlib.md5((v + f':cm{i}:').encode()).hexdigest()
-        return int(h[:8], 16) % w
-
-    for r in est.collect():
-        v = r['v']
-        assert r['cm_est'] == min(got[(i, col(v, i))] for i in range(3))
-
-
-def test_stream_hll_registers_match_batch(spark, tmp_path):
-    """Streaming HLL registers over 3 micro-batches == the batch
-    sketch's register table over the union (MAX is order-insensitive:
-    the streaming state is exactly the sketch)."""
-    import time
-
-    src = tmp_path / 'hll_stream'
-    src.mkdir()
-    all_rows = []
-    for i in range(3):
-        rows = [(f'g{j % 2}', f'v{(j * 13 + i * 100) % 300}',)
-                for j in range(80)]
-        all_rows += rows
-        (spark.createDataFrame(rows, 'g string, v string')
-         .coalesce(1).write.parquet(str(src / f'b{i}')))
-        time.sleep(1.1)
-    stream = (spark.readStream.schema('g string, v string')
-              .option('maxFilesPerTrigger', 1).parquet(f'{src}/*'))
-    out = stream_ops.stream_hll_registers(stream, 'v', 'g', p=4)
-    sink = _run_stream(out, tmp_path, mode='complete')
-    got = {(r['g'], r['_b']): r['_m'] for r in
-           spark.sql(f'SELECT * FROM {sink}').collect()}
-
-    from buzzard_spark.operators import sketch
-    m, h, bucket, w, rho, _, _ = sketch._hll_frags('v', 4, 'spark')
-    batch = (spark.createDataFrame(all_rows, 'g string, v string')
-             .select('g', F.expr(h).alias('_h'))
-             .select('g', F.expr(bucket).alias('_b'),
-                     F.expr(w).alias('_w'))
-             .select('g', '_b', F.expr(rho).alias('_r'))
-             .groupBy('g', '_b').agg(F.max('_r').alias('_m')))
-    want = {(r['g'], r['_b']): r['_m'] for r in batch.collect()}
-    assert got == want
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream attribution join over 2 micro-batches per side ==
-    batch join with the same predicate (incl. a cross-micro-batch
-    match and an out-of-window non-match)."""
-    import time
-
-    lsrc, rsrc = tmp_path / 'ljoin', tmp_path / 'rjoin'
-    lsrc.mkdir(); rsrc.mkdir()
-    lrows = [
-        [(1, '2024-01-01 00:00:00'), (2, '2024-01-01 00:01:00')],
-        [(1, '2024-01-01 01:00:00')],
-    ]
-    rrows = [
-        [(1, '2024-01-01 00:05:00')],     # in-window match for l-batch 0
-        [(2, '2024-01-01 00:30:00'),      # out of 10-min window: no match
-         (1, '2024-01-01 01:09:00')],     # cross-batch in-window match
-    ]
-    for i, rows in enumerate(lrows):
-        (spark.createDataFrame(rows, 'user_id long, l_ts string')
-         .withColumn('l_ts', F.to_timestamp('l_ts'))
-         .coalesce(1).write.parquet(str(lsrc / f'b{i}')))
-        time.sleep(1.1)
-    for i, rows in enumerate(rrows):
-        (spark.createDataFrame(rows, 'user_id long, r_ts string')
-         .withColumn('r_ts', F.to_timestamp('r_ts'))
-         .coalesce(1).write.parquet(str(rsrc / f'b{i}')))
-        time.sleep(1.1)
-    ls = (spark.readStream.schema('user_id long, l_ts timestamp')
-          .option('maxFilesPerTrigger', 1).parquet(f'{lsrc}/*'))
-    rs = (spark.readStream.schema('user_id long, r_ts timestamp')
-          .option('maxFilesPerTrigger', 1).parquet(f'{rsrc}/*'))
-    out = stream_ops.stream_interval_join(ls, rs)
-    sink = _run_stream(out, tmp_path, mode='append')
-    got = {(r['user_id'], r['lag_sec'])
-           for r in spark.sql(f'SELECT * FROM {sink}').collect()}
-
-    lb = spark.read.schema('user_id long, l_ts timestamp') \
-        .parquet(f'{lsrc}/*').alias('l')
-    rb = spark.read.schema('user_id long, r_ts timestamp') \
-        .parquet(f'{rsrc}/*').alias('r')
-    cond = ((F.col('l.user_id') == F.col('r.user_id'))
-            & (F.col('r.r_ts') >= F.col('l.l_ts'))
-            & (F.col('r.r_ts') <= F.col('l.l_ts')
-               + F.expr('INTERVAL 10 minutes')))
-    want = {(r['user_id'], r['lag'])
-            for r in lb.join(rb, cond).select(
-                F.col('l.user_id').alias('user_id'),
-                (F.unix_timestamp('r.r_ts')
-                 - F.unix_timestamp('l.l_ts')).cast('long').alias('lag'))
-            .collect()}
-    assert got == want and len(got) == 2
-
-
-def test_stream_weighted_sample_matches_batch(spark, tmp_path):
-    """Streaming priority sampling == batch weighted_sample over the
-    same rows: priorities are order-insensitive pure functions, so the
-    final per-stratum sample (rows with max n_seen) must match batch
-    membership, priorities, AND the w_est estimator exactly."""
-    import time
-    rows = [(i, 'en' if i % 2 == 0 else 'fr', 10 + (i * 37) % 90)
-            for i in range(60)]
-    src = tmp_path / 'ws_stream'
-    src.mkdir()
-    for bi, chunk in enumerate((rows[:25], rows[25:])):
-        (spark.createDataFrame(chunk, 'doc_id long, lang string, w long')
-         .coalesce(1).write.parquet(str(src / f'b{bi}')))
-        time.sleep(1.1)
-    stream = (spark.readStream
-              .schema('doc_id long, lang string, w long')
-              .option('maxFilesPerTrigger', 1).parquet(f'{src}/*'))
-    out = stream_ops.stream_weighted_sample(stream, 'w', 5,
-                                            strata_col='lang')
-    sink = _run_stream(out, tmp_path, mode='update')
-    all_rows = spark.sql(f'SELECT * FROM {sink}').collect()
-    latest = {}
-    for r in all_rows:
-        if (r['stratum'] not in latest
-                or r['n_seen'] > latest[r['stratum']][0]['n_seen']):
-            latest.setdefault(r['stratum'], [])
-            latest[r['stratum']] = [x for x in latest[r['stratum']]
-                                    if x['n_seen'] >= r['n_seen']]
-            latest[r['stratum']].append(r)
-        elif r['n_seen'] == latest[r['stratum']][0]['n_seen']:
-            latest[r['stratum']].append(r)
-    got = {(r['stratum'], r['doc_id'], r['priority'], r['w_est'])
-           for rs in latest.values() for r in rs}
-
-    from buzzard_spark.operators import corpus
-    batch = spark.createDataFrame(rows, 'doc_id long, lang string, w long')
-    exp = {(r['lang'], r['doc_id'], r['priority'], r['w_est'])
-           for r in corpus.weighted_sample(batch, 'w', 5,
-                                           strata_col='lang').collect()}
-    assert got == exp
 
 
 def test_stream_pip_join_matches_batch(spark, tmp_path):
@@ -521,15 +38,12 @@ def test_stream_pip_join_matches_batch(spark, tmp_path):
     the batch PIP join's pairs — stateless stream-static join, NULL
     coords emit nothing."""
     pages_dir = str(tmp_path / 'pip_pages')
-    from buzzard_spark import synth
-    from buzzard_spark.operators.spatial_join import pip_join_rect
     synth.synthetic_pages(spark, 800).write.parquet(pages_dir)
     regions = synth.regions(spark, 40)
     schema = spark.read.parquet(pages_dir).schema
     stream = spark.readStream.schema(schema).parquet(pages_dir)
-    joined = stream_ops.stream_pip_join(stream, regions, res=4) \
-        .select('page_id', 'region_id')
-    sink = _run_stream(joined, tmp_path, mode='append')
+    joined = pip_join_rect(stream, regions, 4).select('page_id', 'region_id')
+    sink = _run_stream(joined, tmp_path)
     got = {(r['page_id'], r['region_id'])
            for r in spark.sql(f'SELECT * FROM {sink}').collect()}
     truth = {(r['page_id'], r['region_id'])
@@ -543,87 +57,16 @@ def test_nearest_k_refs_streaming_matches_batch(spark, tmp_path):
     """The k-array fold is stateless, so it runs unchanged on a stream:
     streaming output == batch output row-for-row."""
     pages_dir = str(tmp_path / 'nk_pages')
-    from buzzard_spark import synth
-    from buzzard_spark.operators.spatial_join import nearest_k_refs
     synth.synthetic_pages(spark, 500).write.parquet(pages_dir)
     cents = spark.createDataFrame(
         [(i, -30.0 + i * 7.0, -120.0 + i * 23.0) for i in range(9)],
         'region_id long, clat double, clng double')
     schema = spark.read.parquet(pages_dir).schema
     stream = spark.readStream.schema(schema).parquet(pages_dir)
-    sink = _run_stream(nearest_k_refs(stream, cents, 3), tmp_path,
-                       mode='append')
+    sink = _run_stream(nearest_k_refs(stream, cents, 3), tmp_path)
     got = sorted(tuple(r) for r in
                  spark.sql(f'SELECT * FROM {sink}').collect())
     truth = sorted(tuple(r) for r in
                    nearest_k_refs(spark.read.parquet(pages_dir),
                                   cents, 3).collect())
     assert got == truth and truth
-
-
-def test_stream_interval_join_hot_key_skew_matches_batch(spark, tmp_path):
-    """VERDICT r5 #7: the bounded-state claim under the skew a real
-    attribution stream has — ONE user owns 50% of the events on both
-    sides (a bot / megasite), the rest spread over 20 cold users. The
-    hot key multiplies join state and output (quadratic in its per-window
-    event count) exactly where state expiry must still hold; conformance
-    is the full multiset of (user, l_ts, r_ts, lag) rows vs the batch
-    join with the identical predicate."""
-    import time
-
-    lsrc = tmp_path / 'lskew'
-    rsrc_dir = tmp_path / 'rskew'
-    lsrc.mkdir(); rsrc_dir.mkdir()
-
-    def ts(minute):
-        return f'2024-01-01 00:{minute:02d}:00'
-
-    # left: 2 micro-batches; user 1 hot (20 events), users 2..21 one each
-    lrows = [[(1, ts(m)) for m in range(10)] +
-             [(u, ts(u % 30)) for u in range(2, 12)],
-             [(1, ts(10 + m)) for m in range(10)] +
-             [(u, ts(u % 30)) for u in range(12, 22)]]
-    rrows = [[(1, ts(2 + m)) for m in range(10)] +
-             [(u, ts((u % 30) + 5)) for u in range(2, 12)],
-             [(1, ts(13 + m)) for m in range(10)] +
-             [(u, ts((u % 30) + 15)) for u in range(12, 22)]]
-    for i, rows in enumerate(lrows):
-        (spark.createDataFrame(rows, 'user_id long, l_ts string')
-         .withColumn('l_ts', F.to_timestamp('l_ts'))
-         .coalesce(1).write.parquet(str(lsrc / f'b{i}')))
-        time.sleep(1.1)
-    for i, rows in enumerate(rrows):
-        (spark.createDataFrame(rows, 'user_id long, r_ts string')
-         .withColumn('r_ts', F.to_timestamp('r_ts'))
-         .coalesce(1).write.parquet(str(rsrc_dir / f'b{i}')))
-        time.sleep(1.1)
-    ls = (spark.readStream.schema('user_id long, l_ts timestamp')
-          .option('maxFilesPerTrigger', 1).parquet(f'{lsrc}/*'))
-    rs = (spark.readStream.schema('user_id long, r_ts timestamp')
-          .option('maxFilesPerTrigger', 1).parquet(f'{rsrc_dir}/*'))
-    out = stream_ops.stream_interval_join(ls, rs)
-    sink = _run_stream(out, tmp_path, mode='append')
-    got = sorted((r['user_id'], str(r['l_ts']), str(r['r_ts']),
-                  r['lag_sec'])
-                 for r in spark.sql(f'SELECT * FROM {sink}').collect())
-
-    lb = spark.read.schema('user_id long, l_ts timestamp') \
-        .parquet(f'{lsrc}/*').alias('l')
-    rb = spark.read.schema('user_id long, r_ts timestamp') \
-        .parquet(f'{rsrc_dir}/*').alias('r')
-    cond = ((F.col('l.user_id') == F.col('r.user_id'))
-            & (F.col('r.r_ts') >= F.col('l.l_ts'))
-            & (F.col('r.r_ts') <= F.col('l.l_ts')
-               + F.expr('INTERVAL 10 minutes')))
-    want = sorted((r['user_id'], str(r['l_ts']), str(r['r_ts']),
-                   r['lag'])
-                  for r in lb.join(rb, cond).select(
-                      F.col('l.user_id').alias('user_id'),
-                      'l.l_ts', 'r.r_ts',
-                      (F.unix_timestamp('r.r_ts')
-                       - F.unix_timestamp('l.l_ts'))
-                      .cast('long').alias('lag')).collect())
-    # the hot key must dominate the output (the skew actually bit)
-    hot = sum(1 for r in want if r[0] == 1)
-    assert hot > len(want) // 2
-    assert got == want

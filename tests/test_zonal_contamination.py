@@ -1,16 +1,9 @@
-"""Tests for zonal raster statistics and benchmark decontamination."""
+"""Tests for zonal raster statistics and the ε-join's plan shape."""
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from buzzard_spark.kernels.footprint import Footprint
-from buzzard_spark.operators import corpus
 from buzzard_spark.operators import raster_ops
-
-
-def _docs(spark, rows, idc='doc_id'):
-    return spark.createDataFrame(rows, f'{idc} long, text string')
 
 
 def rect_wkb(minx, miny, maxx, maxy):
@@ -18,62 +11,6 @@ def rect_wkb(minx, miny, maxx, maxy):
     ring = np.asarray([(minx, miny), (maxx, miny), (maxx, maxy),
                        (minx, maxy), (minx, miny)])
     return geometry.wkb_polygon(ring)
-
-
-def test_contamination_check_pairs_and_counts(spark):
-    """Docs sharing >= 1 benchmark n-gram are flagged with the DISTINCT
-    shared-gram count; clean and too-short docs are absent."""
-    docs = _docs(spark, [
-        (1, 'a b c d e f g h i j'),        # 2 shared grams with bench 10
-        (2, 'x y z a b c d e f g h q'),    # 1 shared gram with bench 10
-        (3, 'p q r s t u v w'),            # clean (own grams only)
-        (4, 'a b c'),                      # too short, no grams
-    ])
-    bench = _docs(spark, [
-        (10, 'a b c d e f g h i'),          # grams: 2
-        (11, 'zz yy xx ww vv uu tt ss'),     # matches nothing
-    ], idc='bench_id')
-    got = {(r['doc_id'], r['bench_id']): r['n_shared_grams'] for r in
-           corpus.contamination_check(docs, bench).collect()}
-    assert got == {(1, 10): 2, (2, 10): 1}
-
-
-def test_contamination_check_duplicate_grams_counted_once(spark):
-    """A gram repeated inside a doc (or bench item) still counts ONCE —
-    the contract is distinct shared grams."""
-    docs = _docs(spark, [(1, 'a b c d e f g h a b c d e f g h')])
-    bench = _docs(spark, [(10, 'a b c d e f g h')], idc='bench_id')
-    got = corpus.contamination_check(docs, bench).collect()
-    assert len(got) == 1 and got[0]['n_shared_grams'] == 1
-
-
-def test_contamination_matches_duckdb_oracle(spark):
-    """Engine (hash join) == DuckDB oracle (string join) on a corpus with
-    overlaps, repeats and short rows."""
-    duckdb = pytest.importorskip('duckdb')
-    rows = [(i, ' '.join(f'w{(i * 7 + k) % 23}' for k in range(15)))
-            for i in range(30)]
-    brows = [(100 + i, ' '.join(f'w{(i * 7 + k) % 23}' for k in range(9)))
-             for i in range(4)]
-    docs, bench = _docs(spark, rows), _docs(spark, brows, idc='bench_id')
-    got = sorted(tuple(r) for r in
-                 corpus.contamination_check(docs, bench).collect())
-    con = duckdb.connect()
-    corpus_cte = ' UNION ALL '.join(
-        f"SELECT {i} AS doc_id, '{t}' AS text" for i, t in rows)
-    bench_cte = ' UNION ALL '.join(
-        f"SELECT {i} AS bench_id, '{t}' AS text" for i, t in brows)
-    want = sorted(tuple(r) for r in con.execute(
-        corpus.contamination_check_oracle_sql(
-            corpus_cte, bench_cte)).fetchall())
-    assert got == want
-
-
-def test_contamination_rejects_unigrams(spark):
-    with pytest.raises(ValueError):
-        corpus.contamination_check(
-            _docs(spark, [(1, 'a b')]),
-            _docs(spark, [(2, 'a b')], idc='bench_id'), ngram_words=1)
 
 
 def test_zonal_stats_matches_numpy(spark):
@@ -136,30 +73,6 @@ def test_zonal_stats_custom_value_fn(spark):
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_contamination_plan_broadcasts_bench(spark):
-    """The bench gram table must be broadcast — the corpus side joins
-    map-side with no shuffle before the join; no Python eval nodes."""
-    docs = _docs(spark, [(i, 'a b c d e f g h i j') for i in range(50)])
-    bench = _docs(spark, [(10, 'a b c d e f g h')], idc='bench_id')
-    plan = _plan(corpus.contamination_check(docs, bench))
-    assert 'BroadcastHashJoin' in plan
-    assert 'SortMergeJoin' not in plan
-    assert 'BatchEvalPython' not in plan and 'ArrowEvalPython' not in plan
-
-
-def test_redact_pii_plan_is_pure_map(spark):
-    """Redaction is one codegen projection: no Exchange, no join, no
-    Python."""
-    from buzzard_spark.operators.text import redact_pii
-    docs = _docs(spark, [(1, 'a@b.cc 10.0.0.1 123456789')])
-    plan = _plan(redact_pii(docs))
-    assert 'Exchange' not in plan
-    assert 'Join' not in plan
-    assert 'BatchEvalPython' not in plan and 'ArrowEvalPython' not in plan
-    # '*(1)' is executedPlan().toString()'s whole-stage-codegen marker
-    assert '*(1)' in plan
 
 
 def test_distance_pairs_plan_single_shuffle_no_cartesian(spark):
