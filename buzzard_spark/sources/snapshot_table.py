@@ -108,15 +108,11 @@ class SnapshotTable:
 
     def append(self, df: DataFrame, key_cols: list[str] | None = None,
                observe: dict | None = None,
-               extra_meta: dict | None = None,
                _replaces: int | None = None,
                _expected_tip: int | None = None) -> dict:
         """Append df as a new snapshot. Returns the manifest dict.
 
         key_cols: tile/content keys recorded for resume anti-joins.
-        extra_meta: small application-owned dict recorded verbatim in the
-        manifest as ``app_meta`` (e.g. the streaming sink's epoch id for
-        exactly-once replay detection — never data, never keys).
         observe: extra named aggregate Columns measured during the write
         (runs through Spark's Observation API — one pass, no extra job).
         _replaces: internal (``compact``): commit with ``parent: None`` so
@@ -233,8 +229,6 @@ class SnapshotTable:
                 'keys_path': keys_path,
                 'metrics': dict(obs.get) if obs is not None else {},
             }
-            if extra_meta:
-                manifest['app_meta'] = extra_meta
             if _replaces is not None:
                 manifest['compacted_from'] = _replaces
             path = os.path.join(self.manifest_dir, f'snap-{snap_id}.json')

@@ -218,21 +218,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _spread_py(df: DataFrame, min_parts: int = 8) -> DataFrame:
-    """Fan-out for the Python-codec (mapInPandas) queries: the documents
-    table arrives as ONE split, so every per-doc encode/decode otherwise
-    runs on a single core (measured: png_meta 3.2s single-split vs 0.9s
-    at 8-16 tasks). Unlike ``_spread``, a moderate task count wins here —
-    each extra task multiplies Arrow batch round-trips and Python-worker
-    handoffs across the media plans' 3-4 Python stages, and 8-16 workers
-    already hide the decode (32-way measured SLOWER than 8-way for the
-    light codecs). No-op when the input is already split enough (the
-    production case)."""
-    if df.rdd.getNumPartitions() >= min_parts:
-        return df
-    return df.repartition(min_parts)
-
-
 N_FL_HORIZ = 25        # find_lines oracle: horizontal lines (rows 3..243)
 N_FL_DIAG = 25         # 45° diagonals, x-spacing 4 (Chebyshev distance 2)
 FL_DIAG_LEN = 140      # diagonal pixel run length - 1
@@ -448,8 +433,8 @@ def q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from buzzard_spark.kernels import geotiff
 
-    docs = _spread_py(spark.read.parquet(f'{sf_dir}/documents.parquet')
-                      .select('doc_id'))
+    docs = _spread(spark.read.parquet(f'{sf_dir}/documents.parquet')
+                   .select('doc_id'))
 
     def _mk(batches):
         for pdf in batches:

@@ -556,21 +556,6 @@ def test_compact_materializes_deletes(spark, tmp_path):
     assert not any(m.get('delete_predicate') for m in t.manifests())
 
 
-def test_append_records_extra_meta(spark, tmp_path):
-    """``extra_meta`` lands verbatim in the manifest as ``app_meta`` (the
-    slot a foreachBatch writer keeps its epoch id in); appends without
-    it record none."""
-    t = SnapshotTable(str(tmp_path / 'meta'))
-    t.append(spark.range(0, 5).selectExpr('id AS k'),
-             extra_meta={'epoch_id': 0})
-    t.append(spark.range(5, 8).selectExpr('id AS k'))
-    t.append(spark.range(8, 9).selectExpr('id AS k'),
-             extra_meta={'epoch_id': 1})
-    assert [m.get('app_meta') for m in t.manifests()] == [
-        {'epoch_id': 0}, None, {'epoch_id': 1}]
-    assert sorted(r['k'] for r in t.read(spark).collect()) == list(range(9))
-
-
 def test_read_incremental_append_only_delta(spark, tmp_path):
     """Incremental scan returns exactly the rows appended after the
     checkpointed snapshot; None means from-the-beginning; the tip yields

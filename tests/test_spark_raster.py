@@ -208,13 +208,19 @@ def _canon_lines(lines):
     return sorted(out)
 
 
-@pytest.mark.parametrize('width', [30, 29])
-def test_distributed_vectorize_lines_matches_kernel(spark, width):
+@pytest.mark.parametrize('width, tile_size', [
+    pytest.param(30, 7, id='30'), pytest.param(29, 7, id='29'),
+    pytest.param(29, 2, id='29-ts2'), pytest.param(10, 1, id='10-ts1')])
+def test_distributed_vectorize_lines_matches_kernel(spark, width, tile_size):
     """Cross-tile polyline stitching == kernel find_lines on the full mask
     (junction splits, cycles, diagonal runs — tiles cut every chain).
-    Width 29 leaves a 1-px remainder column of tiles (29 % 7 == 1), which
-    takes the unfused 1-px-halo edge path."""
-    fp = Footprint(tl=(0, 24), size=(width, 24), rsize=(width, 24))
+    Width 29 leaves a 1-px remainder column of tiles at tile_size 7
+    (29 % 7 == 1) and at tile_size 2, where the 2-px halo also reaches
+    two tiles over. Width 10 rasterizes the same lines on a coarse 10×10
+    grid of 1-px tiles, where every halo pixel comes from a tile 1 or 2
+    tiles away."""
+    fp = Footprint(tl=(0, 24), size=(max(width, 29), 24),
+                   rsize=(width, min(width, 24)))
     lines = [
         np.asarray([(2.5, 20.5), (27.5, 20.5)]),             # long horizontal
         np.asarray([(5.5, 22.5), (5.5, 3.5), (25.5, 3.5)]),  # L crossing it
@@ -231,9 +237,10 @@ def test_distributed_vectorize_lines_matches_kernel(spark, width):
     lines_df = spark.createDataFrame(
         rows, 'line_id long, wkb binary, minlat double, minlng double, '
               'maxlat double, maxlng double')
-    tiles = raster_ops.rasterize_lines(spark, fp, lines_df, tile_size=7)
-    got_rows = raster_ops.vectorize_lines(spark, fp, tiles, tile_size=7) \
-        .collect()
+    tiles = raster_ops.rasterize_lines(spark, fp, lines_df,
+                                       tile_size=tile_size)
+    got_rows = raster_ops.vectorize_lines(spark, fp, tiles,
+                                          tile_size=tile_size).collect()
     got = [geometry.wkb_decode(bytes(r['wkb']))[1] for r in got_rows]
 
     mask = raster.burn_lines(fp, lines)
@@ -343,25 +350,45 @@ def _stitch(rows, shape):
     return out
 
 
-@pytest.mark.parametrize('seed', [0, 1, 2])
-def test_thin_tiles_deep_halo_matches_kernel(spark, seed):
-    """The halo-deepened thinning block (n_sub subiterations per exchange,
+@pytest.mark.parametrize('seed, shape, tile_sizes', [
+    *(pytest.param(seed, (39, 54), (16, 6, 3), id=str(seed))
+      for seed in (0, 1, 2)),
+    pytest.param(3, (22, 25), (3,), id='3-ts3'),
+    pytest.param(4, (10, 10), (1,), id='4-ts1')])
+def test_thin_tiles_deep_halo_matches_kernel(spark, seed, shape, tile_sizes):
+    """The halo-deepened thinning block (4 subiterations per exchange,
     _thin_block) must stay bit-identical to kernels.raster.thin on the
-    stitched mask — exercised at halo depth 4 (tile_size=16 grid, the
-    production configuration) AND depth 2 (ragged 3-px boundary tiles) on
-    random multi-blob masks whose thinning runs many real iterations."""
+    stitched mask — on the tile_size=16 grid (halo within the next
+    tile), with ragged 3-px boundary tiles (tile_size 6), and on grids
+    whose 4-px halo reaches 2 tiles over (tile_size 3, with 1-px
+    remainder tiles) or 4 tiles over (1-px tiles), on random multi-blob
+    masks whose thinning runs many real iterations. The small grids keep
+    small masks: on them every tile is one Python group of the round's
+    cogroup."""
     rng = np.random.default_rng(seed)
-    mask = np.zeros((39, 54), bool)
+    h, w = shape
+    mask = np.zeros(shape, bool)
     for _ in range(6):
-        cy, cx = rng.integers(4, 35), rng.integers(4, 50)
+        cy, cx = rng.integers(4, h - 4), rng.integers(4, w - 4)
         ry, rx = rng.integers(2, 8), rng.integers(2, 10)
-        yy, xx = np.ogrid[:39, :54]
+        yy, xx = np.ogrid[:h, :w]
         mask |= ((yy - cy) ** 2 / max(ry, 1) ** 2 +
                  (xx - cx) ** 2 / max(rx, 1) ** 2) <= 1.0
     want = raster.thin(mask)
     assert want.sum() > 0 and (want != mask).any()
-    for ts in (16, 6):
+    for ts in tile_sizes:
         tiles = _mask_tiles_df(spark, mask, ts)
-        got_rows = raster_ops.thin_tiles(spark, tiles).collect()
+        got_rows = raster_ops.thin_tiles(spark, tiles, tile_size=ts).collect()
         got = _stitch(got_rows, mask.shape)
         assert (got == want).all(), f'tile_size={ts} mismatch'
+
+
+def test_thin_tiles_rejects_off_grid_tiles(spark):
+    """The halo is indexed by the tile grid, so tile rows that do not lie
+    on the ``tile_size`` grid are refused instead of thinned wrongly."""
+    from pyspark.errors import PythonException
+
+    mask = np.ones((8, 8), bool)
+    tiles = _mask_tiles_df(spark, mask, 4)
+    with pytest.raises(PythonException, match='off the tile_size=3 grid'):
+        raster_ops.thin_tiles(spark, tiles, tile_size=3).collect()
