@@ -8,8 +8,8 @@ Spark operators over web-page tables:
   baseline GeoTIFF codec. No Spark imports; usable inside pandas UDFs.
 - ``operators`` — distributed operators (spatial join, kNN, tiling explode,
   per-tile rasterize/polygonize, raster I/O, connected components). The
-  stateless ones (``assign_cell``, ``pip_join_rect``, ``nearest_k_refs``)
-  run unchanged on a structured-streaming DataFrame.
+  stateless ones (``assign_cell``, ``pip_join_rect``) run unchanged on a
+  structured-streaming DataFrame.
 - ``sources``   — table format shim (parquet + snapshot manifest, Iceberg-style).
 
 The kernel semantics mirror buzzard's ``Footprint``

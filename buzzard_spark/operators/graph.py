@@ -9,9 +9,8 @@ every round shuffles the current edge set keyed by node id, so AQE handles
 skewed hubs like any other hot key.
 
 Used by ``raster_ops.polygonize`` (border-run adjacency of tile masks —
-a continent-scale component spans thousands of tiles),
-``raster_ops.vectorize_lines`` (line-fragment chains across tiles) and
-``spatial_join.dbscan`` (core-point neighborhood graph).
+a continent-scale component spans thousands of tiles) and
+``raster_ops.vectorize_lines`` (line-fragment chains across tiles).
 """
 
 from __future__ import annotations
@@ -23,10 +22,9 @@ from buzzard_spark.session import local_frame
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
+                         cache_registry: list,
                          id_col: str = 'node',
                          max_iters: int = 25,
-                         cache_registry: list | None = None,
-                         extra_release: tuple = (),
                          small_graph_edges: int = 200_000) -> DataFrame:
     """nodes: one row per node (isolated nodes allowed). edges: undirected
     (id_a, id_b). Returns (id_col, comp) with comp = min node id of the
@@ -37,15 +35,13 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     the bound is O(log² n), so 25 covers any graph this engine can hold.
 
     Composition (VERDICT r3 #2 — one reliable checkpoint per entry query):
-    as the LAST operator of a query, pass upstream persisted intermediates
-    via ``extra_release`` and this call's single reliable checkpoint
-    releases them all. As an INTERMEDIATE stage, pass a ``cache_registry``
-    list instead: the round blocks are appended to it, the labeling
+    the round blocks are appended to ``cache_registry``, the labeling
     returns lazily (already materialized through the final round's
-    localCheckpoint), and the DOWNSTREAM operator's one reliable
-    checkpoint releases everything — round 3 wrote a file-backed
-    checkpoint here AND another in the caller, the measured cause of the
-    dedup_clusters regression.
+    localCheckpoint), and the CALLER releases everything once its result
+    no longer reads them — the downstream operator's one reliable
+    checkpoint, or ``session.release_blocks`` after a collect. Round 3
+    wrote a file-backed checkpoint here AND another in the caller, the
+    measured cause of the dedup_clusters regression.
 
     Small-graph fast path: after the deduped edge set materializes, its
     COUNT (one cached-scan scalar — never rows) decides the strategy. At
@@ -57,8 +53,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     rounds below). Both paths emit the identical min-member labeling
     (pinned by pytest).
     """
-    from buzzard_spark.session import checkpoint_release
-
     # localCheckpoint (eager=False) after every round: persist alone does
     # NOT truncate the logical plan, so an iterative join would hand
     # Catalyst an exponentially deeper plan each round — analysis time
@@ -71,9 +65,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # back), and with a lazy checkpoint those branches race — concurrently
     # recomputing the upstream plan 2-3× before the cache fills. Harmless
     # when the input is checkpoint files, ruinous when the caller composes
-    # a full LSH pipeline underneath (cache_registry mode). One eager job
-    # computes the upstream exactly once; later rounds read cached blocks
-    # (cheap to race) and stay lazy so two rounds share one job.
+    # a full raster pipeline underneath. One eager job computes the
+    # upstream exactly once; later rounds read cached blocks (cheap to
+    # race) and stay lazy so two rounds share one job.
     e = (edges
          .where(F.col('id_a') != F.col('id_b'))
          .select(F.greatest('id_a', 'id_b').alias('u'),
@@ -112,11 +106,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                .join(F.broadcast(star), 'u', 'left')
                .select(F.col('u').alias(id_col),
                        F.coalesce('comp', 'u').alias('comp')))
-        if cache_registry is not None:
-            cache_registry.append(e)
-            return out
-        from buzzard_spark.session import checkpoint_release as _cr
-        return _cr(out, [e] + list(extra_release))
+        cache_registry.append(e)
+        return out
 
     def _round(e):
         # large-star: every neighbor larger than u links to min(N(u) ∪ {u});
@@ -177,10 +168,5 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
            .join(star, 'u', 'left')
            .select(F.col('u').alias(id_col),
                    F.coalesce('comp', 'u').alias('comp')))
-    if cache_registry is not None:
-        cache_registry.extend(rounds)
-        return out
-    # materialize the labeling through a reliable (file-backed) checkpoint,
-    # then drop every round's localCheckpoint blocks: iterative operators
-    # must not leak cached partitions into a long-lived session
-    return checkpoint_release(out, list(rounds) + list(extra_release))
+    cache_registry.extend(rounds)
+    return out

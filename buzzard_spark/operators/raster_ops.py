@@ -409,22 +409,28 @@ def _tile_halo_pixels_h(mask_tiles: DataFrame, halo: int,
     plus every set pixel within ``halo`` px of its window, taken from the
     tiles of the ``tile_size`` grid that hold them (``_halo_rows``; halo
     rows carry own=false). Lets every tile evaluate (2·halo+1)²
-    neighborhoods of its own pixels exactly. The shuffle is keyed by
-    destination tile."""
-    def _emit(key, pdf):
-        parts = []
-        for _, row in pdf.iterrows():
-            ty, tx, y0, x0, gy, gx = _tile_pixels(row)
-            n = len(gy)
-            parts.append((np.full(n, ty, np.int32), np.full(n, tx, np.int32),
-                          gy, gx, np.ones(n, bool)))
-            halo_rows = _halo_rows(ty, tx, y0, x0, gy, gx, halo, tile_size)
-            parts.append(halo_rows + (np.zeros(len(halo_rows[0]), bool),))
-        return pd.DataFrame(dict(zip(('tile_y', 'tile_x', 'y', 'x', 'own'),
-                                     map(np.concatenate, zip(*parts)))))
+    neighborhoods of its own pixels exactly. Each tile row emits its
+    pixel rows independently (one mapInPandas, no shuffle);
+    ``_edges_with_links`` groups them by destination tile."""
+    def _emit(iterator):
+        for pdf in iterator:
+            parts = []
+            for _, row in pdf.iterrows():
+                ty, tx, y0, x0, gy, gx = _tile_pixels(row)
+                n = len(gy)
+                parts.append((np.full(n, ty, np.int32),
+                              np.full(n, tx, np.int32),
+                              gy, gx, np.ones(n, bool)))
+                halo_rows = _halo_rows(ty, tx, y0, x0, gy, gx, halo,
+                                       tile_size)
+                parts.append(halo_rows + (np.zeros(len(halo_rows[0]), bool),))
+            if parts:
+                yield pd.DataFrame(dict(zip(
+                    ('tile_y', 'tile_x', 'y', 'x', 'own'),
+                    map(np.concatenate, zip(*parts)))))
 
-    return (mask_tiles.groupBy('tile_y', 'tile_x').applyInPandas(
-        _emit, 'tile_y int, tile_x int, y int, x int, own boolean'))
+    return mask_tiles.mapInPandas(
+        _emit, 'tile_y int, tile_x int, y int, x int, own boolean')
 
 
 _EDGE_SCHEMA = ('eid long, ax int, ay int, bx int, by int, '

@@ -42,14 +42,6 @@ from pyspark.sql import functions as F
 from buzzard_spark.session import local_frame
 
 
-class CommitConflictError(RuntimeError):
-    """A replace-commit (compaction) lost the CAS race to a concurrent
-    append — the Iceberg ``CommitFailedException`` contract: the loser
-    fails visibly and retries (re-run ``compact``, which re-reads the
-    chain including the racing append), instead of silently orphaning
-    the racer's rows from the new chain (VERDICT r4 directive #5)."""
-
-
 def _md5_file(path: str) -> str:
     h = hashlib.md5()
     with open(path, 'rb') as f:
@@ -87,8 +79,7 @@ class SnapshotTable:
     def manifests(self, start_id: int | None = None) -> list[dict]:
         """All manifests in a lineage chain, oldest first — the CURRENT
         chain by default, or the chain rooted at ``start_id`` (time
-        travel across a compaction: the pre-compaction chain is intact on
-        disk, only CURRENT's chain was replaced)."""
+        travel: ``read(as_of=…)``)."""
         out = []
         snap_id = (self.current_snapshot_id() if start_id is None
                    else start_id)
@@ -107,32 +98,14 @@ class SnapshotTable:
     # -- write -------------------------------------------------------------------
 
     def append(self, df: DataFrame, key_cols: list[str] | None = None,
-               observe: dict | None = None,
-               _replaces: int | None = None,
-               _expected_tip: int | None = None) -> dict:
+               observe: dict | None = None) -> dict:
         """Append df as a new snapshot. Returns the manifest dict.
 
         key_cols: tile/content keys recorded for resume anti-joins.
         observe: extra named aggregate Columns measured during the write
         (runs through Spark's Observation API — one pass, no extra job).
-        _replaces: internal (``compact``): commit with ``parent: None`` so
-        the new snapshot REPLACES the chain tipped at that id, recording
-        ``compacted_from`` for provenance.
-        _expected_tip: internal (``compact``): the CURRENT id observed
-        when the replaced chain was read. The commit then CASes on it —
-        the claimed id is pinned to ``_expected_tip + 1`` and a lost
-        O_EXCL claim (or a moved CURRENT) raises
-        :class:`CommitConflictError` instead of re-chaining, because
-        re-chaining past a racing append would orphan that append's rows
-        from the replacement chain (Iceberg's CommitFailedException
-        contract; VERDICT r4 directive #5).
         """
         parent = self.current_snapshot_id()
-        if _expected_tip is not None and parent != _expected_tip:
-            raise CommitConflictError(
-                f'compaction read the chain at snapshot {_expected_tip} '
-                f'but CURRENT is now {parent}: a concurrent commit '
-                f'landed — retry compact() to fold it in')
         # data lands in a writer-unique dir: two concurrent appends can
         # never clobber each other's files (the manifest references it)
         token = uuid.uuid4().hex[:8]
@@ -218,7 +191,7 @@ class SnapshotTable:
         while True:
             manifest = {
                 'snapshot_id': snap_id,
-                'parent': None if _replaces is not None else parent,
+                'parent': parent,
                 'created_ms': int(time.time() * 1000),
                 'data_dir': os.path.relpath(data_dir, self.root),
                 'files': files,
@@ -229,84 +202,6 @@ class SnapshotTable:
                 'keys_path': keys_path,
                 'metrics': dict(obs.get) if obs is not None else {},
             }
-            if _replaces is not None:
-                manifest['compacted_from'] = _replaces
-            path = os.path.join(self.manifest_dir, f'snap-{snap_id}.json')
-            try:
-                fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            except FileExistsError:
-                if _expected_tip is not None:
-                    # replace-commit CAS failure: a racing append claimed
-                    # the id after our chain read — fail fast (retryable)
-                    # rather than silently orphan the racer's snapshot;
-                    # our never-referenced data dir + sidecar are removed
-                    import shutil
-                    shutil.rmtree(data_dir, ignore_errors=True)
-                    if keys_path:
-                        shutil.rmtree(os.path.join(self.root, keys_path),
-                                      ignore_errors=True)
-                    raise CommitConflictError(
-                        f'snapshot id {snap_id} was claimed by a '
-                        f'concurrent commit after the compaction read — '
-                        f'retry compact() to fold it in')
-                parent = snap_id     # lost the claim: chain onto the winner
-                snap_id += 1
-                continue
-            with os.fdopen(fd, 'w') as f:
-                f.write(json.dumps(manifest, default=str))
-            break
-        cur = self.current_snapshot_id()
-        if cur is None or cur < snap_id:
-            self._atomic_write(self._current_path(), str(snap_id))
-        return manifest
-
-    def delete_where(self, spark: SparkSession, predicate: str) -> dict:
-        """Iceberg-style row-level DELETE by predicate: commit a DATA-LESS
-        snapshot recording a SQL predicate; at read time rows of every
-        EARLIER snapshot matching it are filtered out (NULL predicate
-        values keep the row — only TRUE deletes). Later appends are
-        untouched, so re-inserting a deleted key resurrects it, and
-        ``read(as_of=<pre-delete id>)`` still sees the rows (time travel
-        is never rewritten — the delete is part of the lineage).
-
-        This is the scan-planning flavor of Iceberg's delete files
-        ("metadata delete"): no anti-join, no data rewrite — the
-        predicate lands in the scan filter where Catalyst pushes it into
-        the parquet reader, so a delete costs O(1) at commit and only a
-        pushed filter at read. ``compact()`` afterwards materializes the
-        post-delete rows and drops the predicate from the new chain.
-
-        The predicate is analyzed against the chain's recorded schema
-        BEFORE committing (a typo'd column would otherwise poison every
-        future read).  Returns the manifest dict.
-        """
-        manifests = self._valid_manifests()
-        schema_holder = None
-        for m in reversed(manifests):
-            if not m.get('delete_predicate') and m.get('schema'):
-                schema_holder = m
-                break
-        if schema_holder is not None:
-            probe = self._empty_like(spark, [schema_holder])
-            # force analysis so an unresolvable predicate raises HERE
-            probe.where(F.expr(predicate)).schema
-        parent = self.current_snapshot_id()
-        snap_id = (parent or 0) + 1
-        while True:
-            manifest = {
-                'snapshot_id': snap_id,
-                'parent': parent,
-                'created_ms': int(time.time() * 1000),
-                'data_dir': None,
-                'files': [],
-                'schema': None,
-                'rows': 0,
-                'bytes': 0,
-                'key_cols': None,
-                'keys_path': None,
-                'metrics': {},
-                'delete_predicate': predicate,
-            }
             path = os.path.join(self.manifest_dir, f'snap-{snap_id}.json')
             try:
                 fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
@@ -321,126 +216,6 @@ class SnapshotTable:
         if cur is None or cur < snap_id:
             self._atomic_write(self._current_path(), str(snap_id))
         return manifest
-
-    @staticmethod
-    def _delete_filter(df: DataFrame, manifest_id: int,
-                       deletes: list[tuple[int, str]]) -> DataFrame:
-        """Apply every delete predicate committed AFTER ``manifest_id`` —
-        keep a row unless the predicate is definitely TRUE (NULL keeps)."""
-        for did, pred in deletes:
-            if did > manifest_id:
-                df = df.where(~F.coalesce(F.expr(pred).cast('boolean'),
-                                          F.lit(False)))
-        return df
-
-    def compact(self, spark: SparkSession,
-                target_file_bytes: int = 128 << 20,
-                dedupe_keys: list[str] | None = None) -> dict:
-        """Iceberg-style ``rewrite_data_files`` table maintenance: rewrite
-        the current chain's data into ~``target_file_bytes`` files as ONE
-        new snapshot that REPLACES the chain.
-
-        A resumable pipeline appending per-tile batches accumulates many
-        small files (every `append` is a snapshot); at the 100-TB design
-        point the manifest chain and file count grow with append count,
-        not data size — compaction folds N snapshots into one, after
-        which reads list one manifest and ~data/target files.
-
-        Contracts:
-
-        - rows: ``read()`` after == ``read()`` before (bit-identical set).
-          With ``dedupe_keys``, the LATEST-version-per-key view is
-          materialized during the rewrite (Iceberg's rewrite with deletes
-          applied) — required if the table is read with ``dedupe_keys``,
-          because a plain union rewrite would lose the snapshot ordering
-          that resolves later-wins.
-        - time travel: pre-compaction snapshots remain readable via
-          ``read(as_of=old_id)`` — nothing is deleted, only CURRENT's
-          chain is replaced (the new manifest has ``parent: None`` and
-          records ``compacted_from``).
-        - resume: the key sidecar is rewritten from the compacted data
-          (distributed, no driver collect) when every source snapshot
-          used the same ``key_cols``; ``completed_keys`` is unchanged.
-        - concurrency: a racing append that commits between compaction's
-          chain read and its commit makes the commit FAIL with
-          :class:`CommitConflictError` (the commit CASes on the observed
-          tip id — Iceberg's CommitFailedException contract). Retry
-          ``compact()``: the re-read folds the racer's rows in. No
-          snapshot is ever silently orphaned (VERDICT r4 directive #5).
-        - later-wins safety: compacting WITHOUT ``dedupe_keys`` folds
-          every version into one snapshot, after which a
-          ``read(dedupe_keys=…)`` could no longer order same-key
-          duplicates (``_snap`` collapses to one id). When the chain's
-          key sidecars show a key present in more than one snapshot,
-          compaction therefore REFUSES unless ``dedupe_keys`` is given
-          (ADVICE r4) — the check is a group-by over the tiny distinct-
-          key sidecars, not the data.
-        """
-        expected_tip = self.current_snapshot_id()
-        manifests = self._valid_manifests()
-        if not manifests:
-            raise FileNotFoundError(f'no valid snapshots under {self.root}')
-        old_tip = manifests[-1]['snapshot_id']
-        # key/sidecar logic looks only at DATA snapshots — delete_where
-        # manifests carry no keys and must not null out the chain's key_cols
-        data_ms = [m for m in manifests if not m.get('delete_predicate')]
-        key_cols = data_ms[-1].get('key_cols') if data_ms else None
-        if any(m.get('key_cols') != key_cols for m in data_ms):
-            key_cols = None
-        if dedupe_keys is None and key_cols:
-            sidecars = [os.path.join(self.root, m['keys_path'])
-                        for m in data_ms if m.get('keys_path')]
-            if len(sidecars) > 1:
-                # each sidecar is per-snapshot DISTINCT, so a count > 1
-                # means the key has versions in multiple snapshots
-                dup = (spark.read.parquet(*sidecars)
-                       .groupBy(*key_cols).count()
-                       .where(F.col('count') > 1).limit(1).count())
-                if dup:
-                    raise ValueError(
-                        'compact() without dedupe_keys on a chain with '
-                        f'multiple versions per key {key_cols}: later-'
-                        'wins reads would become nondeterministic after '
-                        'the fold — pass dedupe_keys to materialize the '
-                        'latest version during the rewrite')
-        df = self.read(spark, dedupe_keys=dedupe_keys)
-        total_bytes = sum(m['bytes'] for m in manifests)
-        n_files = max(1, -(-total_bytes // target_file_bytes))
-        return self.append(df.repartition(n_files), key_cols=key_cols,
-                           _replaces=old_tip, _expected_tip=expected_tip)
-
-    def expire_snapshots(self) -> list[int]:
-        """Delete snapshots UNREACHABLE from the current chain (the
-        pre-compaction generations ``compact`` left behind) — Iceberg's
-        ``expire_snapshots`` retention step. Returns the expired ids.
-
-        Destructive and opt-in: after this, ``read(as_of=<expired id>)``
-        raises. Any reader still holding a DataFrame over an expired file
-        fails on materialization — run retention when no time-travel
-        readers are live (the same operational contract as Iceberg).
-        Manifest json, data dir and key sidecar are all removed; the
-        shared ``data/`` parent and live snapshots are untouched.
-        """
-        import glob
-        import shutil
-
-        live = {m['snapshot_id'] for m in self.manifests()}
-        expired = []
-        for path in glob.glob(os.path.join(self.manifest_dir,
-                                           'snap-*.json')):
-            sid = int(os.path.basename(path)[5:-5])
-            if sid in live:
-                continue
-            m = self._load_manifest(sid)
-            if m.get('data_dir'):       # delete_where snapshots are data-less
-                shutil.rmtree(os.path.join(self.root, m['data_dir']),
-                              ignore_errors=True)
-            if m.get('keys_path'):
-                shutil.rmtree(os.path.join(self.root, m['keys_path']),
-                              ignore_errors=True)
-            os.remove(path)
-            expired.append(sid)
-        return sorted(expired)
 
     # -- read / resume -----------------------------------------------------------
 
@@ -538,10 +313,8 @@ class SnapshotTable:
         rather than guessing)."""
         if as_of is not None:
             # walk the chain rooted at the requested snapshot when that
-            # manifest exists — this keeps PRE-COMPACTION snapshots
-            # readable (compaction replaces CURRENT's chain but deletes
-            # nothing). Fall back to filtering the current chain for an
-            # id skipped by a CAS claim conflict.
+            # manifest exists (CURRENT may still lag a raced commit by
+            # one); otherwise filter the current chain by id
             if os.path.exists(os.path.join(self.manifest_dir,
                                            f'snap-{as_of}.json')):
                 manifests = self._valid_manifests(start_id=as_of)
@@ -554,23 +327,13 @@ class SnapshotTable:
             raise FileNotFoundError(
                 f'no valid snapshots under {self.root}'
                 + (f' at snapshot {as_of}' if as_of is not None else ''))
-        # row-level deletes (``delete_where``): a delete snapshot's
-        # predicate filters every EARLIER data snapshot in this view
-        deletes = [(m['snapshot_id'], m['delete_predicate'])
-                   for m in manifests if m.get('delete_predicate')]
-        data_ms = [m for m in manifests if not m.get('delete_predicate')]
-        if not data_ms:
-            raise FileNotFoundError(
-                f'no data snapshots under {self.root}'
-                + (f' at snapshot {as_of}' if as_of is not None else ''))
         if minmax_filter is not None:
             if dedupe_keys is not None:
                 raise ValueError(
                     'minmax_filter cannot combine with dedupe_keys: file '
                     'skipping may hide the latest version of a key')
-            kept = []                      # (manifest_id, [paths])
-            for m in data_ms:
-                paths = []
+            paths = []
+            for m in manifests:
                 for f in m['files']:
                     keep = True
                     for c, (lo, hi) in minmax_filter.items():
@@ -580,40 +343,17 @@ class SnapshotTable:
                             break
                     if keep:
                         paths.append(os.path.join(self.root, f['path']))
-                if paths:
-                    kept.append((m['snapshot_id'], paths))
-            if not kept:
-                return self._empty_like(spark, data_ms)
-            if not deletes:
-                allp = [p for _, ps in kept for p in ps]
-                return self._reader(spark, data_ms).parquet(*allp)
-            parts = None
-            for mid, paths in kept:
-                df = self._delete_filter(spark.read.parquet(*paths),
-                                         mid, deletes)
-                parts = df if parts is None else parts.unionByName(
-                    df, allowMissingColumns=True)
-            return parts
+            if not paths:
+                return self._empty_like(spark, manifests)
+            return self._reader(spark, manifests).parquet(*paths)
         if dedupe_keys is None:
-            if not deletes:
-                dirs = [os.path.join(self.root, m['data_dir'])
-                        for m in data_ms]
-                return self._reader(spark, data_ms).parquet(*dirs)
-            parts = None
-            for m in data_ms:
-                df = self._delete_filter(
-                    spark.read.parquet(os.path.join(self.root,
-                                                    m['data_dir'])),
-                    m['snapshot_id'], deletes)
-                parts = df if parts is None else parts.unionByName(
-                    df, allowMissingColumns=True)
-            return parts
+            dirs = [os.path.join(self.root, m['data_dir']) for m in manifests]
+            return self._reader(spark, manifests).parquet(*dirs)
         from pyspark.sql.window import Window
         parts = None
-        for m in data_ms:
+        for m in manifests:
             df = (spark.read.parquet(os.path.join(self.root, m['data_dir']))
                   .withColumn('_snap', F.lit(m['snapshot_id'])))
-            df = self._delete_filter(df, m['snapshot_id'], deletes)
             parts = df if parts is None else parts.unionByName(
                 df, allowMissingColumns=True)
         w = Window.partitionBy(*dedupe_keys).orderBy(F.col('_snap').desc())
@@ -659,57 +399,3 @@ class SnapshotTable:
         if done is None:
             return todo
         return todo.join(done, key_cols, 'left_anti')
-
-    def read_incremental(self, spark: SparkSession, since: int | None,
-                         end: int | None = None) -> DataFrame:
-        """Iceberg-style incremental APPEND scan: only the rows appended
-        AFTER snapshot ``since`` (exclusive), up to ``end`` (inclusive;
-        default CURRENT) — the change feed a downstream consumer reads
-        per checkpoint instead of rescanning the table::
-
-            last = my_checkpoint.load()          # snapshot id or None
-            delta = table.read_incremental(spark, last)
-            ...process delta...
-            my_checkpoint.save(table.current_snapshot_id())
-
-        ``since=None`` means "from the beginning" (first run). Returns a
-        schema-preserving EMPTY DataFrame when nothing was appended.
-
-        Contract (Iceberg's ``incremental read``): the range must be
-        append-only. A compaction or a ``delete_where`` inside the range
-        raises ``ValueError`` — a compacted snapshot REWRITES earlier
-        rows (emitting them would duplicate what the consumer already
-        saw) and a delete cannot be expressed as appended rows; the
-        caller falls back to a full ``read()`` + reconcile, exactly the
-        Iceberg recovery path. ``since`` must be ON the ``end`` chain
-        (checkpoint and table lineage agree) — a checkpoint orphaned by
-        compaction also raises rather than silently re-emitting history.
-
-        Scale shape: the delta reads ONLY the new snapshots' files —
-        O(delta), not O(table); manifests are walked driver-side (tiny
-        JSON), no data file of an already-consumed snapshot is listed.
-        """
-        manifests = self._valid_manifests(start_id=end)
-        if not manifests:
-            raise FileNotFoundError(f'no valid snapshots under {self.root}')
-        if since is not None:
-            chain_ids = {m['snapshot_id'] for m in manifests}
-            if since not in chain_ids:
-                raise ValueError(
-                    f'snapshot {since} is not on the current chain '
-                    '(compacted away or expired): incremental read '
-                    'cannot resume from it — fall back to a full read()')
-        delta = [m for m in manifests
-                 if since is None or m['snapshot_id'] > since]
-        bad = [m['snapshot_id'] for m in delta
-               if m.get('compacted_from') is not None
-               or m.get('delete_predicate')]
-        if bad:
-            raise ValueError(
-                f'snapshots {bad} in the incremental range are not pure '
-                'appends (compaction/delete): the range is not append-'
-                'only — fall back to a full read()')
-        if not delta:
-            return self._empty_like(spark, manifests)
-        dirs = [os.path.join(self.root, m['data_dir']) for m in delta]
-        return self._reader(spark, delta).parquet(*dirs)

@@ -13,7 +13,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from buzzard_spark import synth
 from buzzard_spark.functions import sqlgen
@@ -131,85 +130,6 @@ def q_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select('fid', 'volume', 'kind')
 
 
-def q_lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-flavored agg; money sums in exact integer cents."""
-    li = spark.read.parquet(f'{sf_dir}/lineitem.parquet')
-    return (li.groupBy('l_returnflag', 'l_linestatus').agg(
-        F.expr('SUM(CAST(ROUND(l_quantity * 100.0, 0) AS BIGINT))').alias('sum_qty_c'),
-        F.expr('SUM(CAST(ROUND(l_extendedprice * 100.0, 0) AS BIGINT))').alias('sum_price_c'),
-        F.count('*').alias('count_order')))
-
-
-def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join + per-group top-k via window (deterministic tie-breaking)."""
-    orders = spark.read.parquet(f'{sf_dir}/orders.parquet')
-    cust = spark.read.parquet(f'{sf_dir}/customer.parquet')
-    w = Window.partitionBy('c_custkey').orderBy(
-        F.col('o_totalprice').desc(), F.col('o_orderkey').asc())
-    return (orders.join(F.broadcast(cust),
-                        orders.o_custkey == cust.c_custkey)
-            .withColumn('rnk', F.row_number().over(w))
-            .where(F.col('rnk') <= 3)
-            .select('c_custkey', 'o_orderkey', 'rnk'))
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event aggregation: events per (UTC hour,
-    event_type) with an exact integer value sum."""
-    # ts is TIMESTAMP_NTZ (naive wall time): pin its interpretation to UTC
-    # per-expression (to_utc_timestamp), then truncate on the raw epoch —
-    # session-timezone-independent, no session-state mutation, and equal to
-    # the DuckDB oracle's epoch(date_trunc('hour', ts)) on naive timestamps
-    ev = spark.read.parquet(f'{sf_dir}/events.parquet')
-    return (ev.groupBy(
-        F.expr("(CAST(to_utc_timestamp(ts, 'UTC') AS BIGINT) DIV 3600) * 3600")
-        .alias('hour_epoch'),
-        'event_type')
-        .agg(F.count('*').alias('n_events'),
-             F.expr('SUM(CAST(ROUND(value * 1000.0, 0) AS BIGINT))').alias('sum_value_m')))
-
-
-def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity closes a session):
-    per-user session count + longest session length in events."""
-    ev = spark.read.parquet(f'{sf_dir}/events.parquet')
-    w = Window.partitionBy('user_id').orderBy('ts', 'event_id')
-    sess = (ev
-            .withColumn('prev_ts', F.lag('ts').over(w))
-            .withColumn('new_sess',
-                        F.expr('CASE WHEN prev_ts IS NULL OR '
-                               'ts > prev_ts + INTERVAL 30 MINUTES '
-                               'THEN 1 ELSE 0 END'))
-            .withColumn('sess_id', F.sum('new_sess').over(
-                w.rowsBetween(Window.unboundedPreceding, 0))))
-    return (sess.groupBy('user_id', 'sess_id')
-            .agg(F.count('*').alias('n'))
-            .groupBy('user_id')
-            .agg(F.count('*').alias('n_sessions'),
-                 F.max('n').alias('longest_session')))
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet')
-    return docs.select('doc_id', F.md5(F.encode('text', 'utf-8')).alias('fp'))
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: canonical (min) doc per content hash."""
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet')
-    return (docs.select(F.md5(F.encode('text', 'utf-8')).alias('fp'), 'doc_id')
-            .groupBy('fp')
-            .agg(F.min('doc_id').alias('keep_doc_id'),
-                 F.count('*').alias('n_dups')))
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet')
-    return docs.select(
-        'doc_id',
-        F.expr("size(split(trim(text), '\\\\s+'))").cast('long').alias('n_tokens'))
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Small-file inputs arrive as 1-2 splits; CPU-heavy per-row operators
     must fan out to all cores first (at production scale the table has
@@ -291,35 +211,6 @@ def q_find_lines_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count('*').alias('n_chains')))
 
 
-def q_bigram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level word-bigram frequencies, top 20 (deterministic order by
-    count desc then bigram) — the n-gram profile op.
-
-    The word array is materialized ONCE per row (`ws` column) before the
-    transform lambda indexes it — `element_at(split(...), i)` inside the
-    lambda would re-split the document for every bigram index, O(words²)
-    per doc (measured 13× slower at sf0.1, the round-3 regression)."""
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet')
-    ws = (_spread(docs)
-          .select(F.split(F.trim('text'), r'\s+').alias('ws'))
-          .where(F.expr('size(ws) >= 2')))
-    bigrams = ('transform(sequence(0, size(ws) - 2), '
-               "i -> concat(element_at(ws, i + 1), ' ', "
-               'element_at(ws, i + 2)))')
-    return (ws.select(F.explode(F.expr(bigrams)).alias('bigram'))
-            .groupBy('bigram').agg(F.count('*').alias('n'))
-            .orderBy(F.col('n').desc(), F.col('bigram').asc())
-            .limit(20))
-
-
-def q_region_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Region-region bbox overlap join via shared cover cells (exact
-    recall, no cross join) — the polygon-polygon analogue of the PIP
-    join. Oracle: brute all-pairs bbox predicate in DuckDB."""
-    regions = synth.regions(spark, N_REGIONS)
-    return spatial_join.rect_overlap_pairs(regions, JOIN_RES)
-
-
 def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-zone raster statistics on the 512x256 global grid: burned
     pixel count + sum/min/max of the deterministic (17x+31y) mod 97 band
@@ -327,96 +218,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form pixel intervals)."""
     polys = synth.regions_rect_wkb(spark, N_REGIONS)
     return raster_ops.zonal_stats(spark, TILE_FP, polys, tile_size=64)
-
-
-def q_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial epsilon-join: page pairs within 3 planar degrees via the
-    grid-file blocking join on res-4 cells; oracle is brute-force
-    all-pairs (the documents table is small at the gate sf)."""
-    pages = _pages(spark, sf_dir)
-    return spatial_join.distance_pairs(pages, 3.0, 4)
-
-
-def q_nearest_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid assignment: every page classified to the closest
-    of the 200 region centroids by ONE literal-fold codegen expression —
-    no join, no shuffle; oracle is the cross-join window argmin with the
-    identical IEEE dist2 and (dist2, region_id) tie order."""
-    pages = _pages(spark, sf_dir)
-    cols = sqlgen.region_cols_sql('id')
-    cents = spark.range(N_REGIONS).selectExpr(
-        'id AS region_id',
-        f"{cols['clat']} AS clat",
-        f"{cols['clng']} AS clng")
-    return spatial_join.nearest_region(pages, cents)
-
-
-def q_quadtree_leaves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive quadtree over the page distribution (cap 8, res 0..6):
-    dense cells split deep, sparse stay coarse, same-cell floods become
-    forced max-res leaves; Spark hierarchical rollup vs the oracle's
-    per-level CTE chain."""
-    pages = _pages(spark, sf_dir)
-    return spatial_join.quadtree_leaves(pages, cap=8, max_res=6)
-
-
-def q_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed DBSCAN (ε=10°, min_pts=4, res-2 blocking grid —
-    cells ≈ ε wide so the neighbor ring is 3×3): every page labeled
-    (cluster, role) with deterministic min-label border assignment;
-    oracle is brute ε-pairs + recursive-CTE closure. At the gate sf the
-    labeling is 214 core / 47 border / 239 noise over 24 clusters, so
-    every role and the multi-cluster border vote are all exercised."""
-    pages = _pages(spark, sf_dir)
-    return spatial_join.dbscan(pages, 10.0, 4, 2)
-
-
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic distributed Lloyd k-means (k=8, 3 rounds) over the
-    page coordinates — lowest-id seeds, integer micro-degree sums, one
-    IEEE division per centroid, lowest-cluster tie-break; the oracle
-    unrolls the identical rounds as CTE pairs."""
-    pages = _pages(spark, sf_dir)
-    return spatial_join.kmeans_assign(pages, k=8, iters=3)
-
-
-def q_cell_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-map tile pyramid: per-cell page counts at every resolution
-    6 → 0 from ONE corpus aggregation + a ¼-shrinking parent cascade;
-    oracle unrolls the identical cascade as per-level CTEs."""
-    pages = _pages(spark, sf_dir)
-    return spatial_join.cell_pyramid(pages, res=6)
-
-
-def q_focal_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Focal (3×3 moving-window) page-density smoothing over the res-5
-    cell grid — the cell twin of a raster box filter; explosion runs on
-    the aggregate table, never corpus rows; clamped edges value-checked
-    by the oracle's |Δrow|,|Δcol| ≤ 1 self-join."""
-    pages = _pages(spark, sf_dir)
-    return spatial_join.focal_sum(pages, res=5, radius=1)
-
-
-def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Attribution (interval) join: every click within 10 minutes AFTER a
-    view by the same user; lag in exact integer microseconds."""
-    ev = spark.read.parquet(f'{sf_dir}/events.parquet')
-    views = ev.where("event_type = 'view'").select(
-        'user_id', F.col('event_id').alias('view_id'),
-        F.col('ts').alias('vts'))
-    clicks = ev.where("event_type = 'click'").select(
-        'user_id', F.col('event_id').alias('click_id'),
-        F.col('ts').alias('cts'))
-    return (views.join(clicks, 'user_id')
-            .where(F.expr('cts >= vts AND cts <= vts + INTERVAL 10 '
-                          'MINUTES'))
-            .select('user_id', 'view_id', 'click_id',
-                    # parquet ts is TIMESTAMP_NTZ: unix_micros needs TZ —
-                    # to_utc_timestamp is identity-valued (session TZ is
-                    # pinned UTC) and the DIFFERENCE is TZ-free anyway
-                    F.expr("unix_micros(to_utc_timestamp(cts, 'UTC')) - "
-                           "unix_micros(to_utc_timestamp(vts, 'UTC'))")
-                    .cast('long').alias('lag_us')))
 
 
 def q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,48 +275,6 @@ def q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 'px_sum', 'tlx', 'tly'))
 
 
-def q_nearest_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 nearest reference centroids per page via the k-array
-    literal fold (no join, no ×|refs| blowup — the stateless bounded
-    stream-kNN form); oracle is cross join + window rank."""
-    pages = _pages(spark, sf_dir)
-    cols = sqlgen.region_cols_sql('id')
-    cents = spark.range(N_REGIONS).selectExpr(
-        'id AS region_id',
-        f"{cols['clat']} AS clat",
-        f"{cols['clng']} AS clng")
-    return spatial_join.nearest_k_refs(pages, cents, 3)
-
-
-def q_join_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniform 50-sample over the PIP-join RESULT without materializing
-    it (bottom-k by md5 rank inside the join pipeline — deterministic,
-    partition/retry/engine-invariant); the oracle value-checks the exact
-    sample identity, not just its size."""
-    pages = _pages(spark, sf_dir)
-    regions = synth.regions(spark, N_REGIONS)
-    return spatial_join.sample_join_pairs(pages, regions, JOIN_RES, 50)
-
-
-def q_pip_outside(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial anti-join: pages contained by NO region — cover-join
-    positives anti-joined back; oracle is NOT EXISTS over the bbox
-    predicate."""
-    pages = _pages(spark, sf_dir)
-    regions = synth.regions(spark, N_REGIONS)
-    return spatial_join.pip_anti_join(pages, regions, JOIN_RES)
-
-
-def q_compact_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H3/S2-style compact(): the union of the 200 region covers at res 6
-    reduced to the minimal mixed-resolution cover (merges through FIVE
-    levels at the gate sf — res 6 down to res 1); oracle is the same
-    cascade unrolled as per-level CTEs over a generate_series cover."""
-    regions = synth.regions(spark, N_REGIONS)
-    cov = spatial_join.cover_cells_rect(regions, 6).select('cell')
-    return spatial_join.compact_cells(cov, 6)
-
-
 def q_tile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed tile-grid enumeration (Footprint.tile(shrink) as rows —
     the §2.1 tiling algebra as a query)."""
@@ -538,51 +297,21 @@ def q_polygonize_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                f'AS BIGINT)) AS BIGINT)').alias('n_pixels'))
 
 
-def q_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pages per host (url parsing over the synthetic corpus)."""
-    pages = _pages(spark, sf_dir)
-    host = "regexp_extract(url, 'https://([^/]+)/', 1)"
-    return (pages.select(F.expr(host).alias('host'))
-            .groupBy('host').agg(F.count('*').alias('n_pages')))
-
-
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     'tile_assign': q_tile_assign,
     'tile_grid': q_tile_grid,
     'cell_assign_counts': q_cell_assign_counts,
     'vector_scan': q_vector_scan,
-    'lineitem_pricing': q_lineitem_pricing,
-    'top_orders_per_customer': q_top_orders_per_customer,
-    'user_sessions': q_user_sessions,
-    'interval_join': q_interval_join,
     'pip_count_by_region': q_pip_count_by_region,
-    'region_overlap_pairs': q_region_overlap_pairs,
-    'distance_pairs': q_distance_pairs,
-    'pip_outside': q_pip_outside,
     'knn_ring': q_knn_ring,
     'rasterize_pixel_count': q_rasterize_pixel_count,
     'zonal_stats': q_zonal_stats,
     'tiff_meta': q_tiff_meta,
     'polygonize_components': q_polygonize_components,
     'find_lines_total': q_find_lines_total,
-    'doc_fingerprint': q_doc_fingerprint,
-    'dedup_exact': q_dedup_exact,
-    'token_count': q_token_count,
-    'kmeans_clusters': q_kmeans_clusters,
-    'dbscan_labels': q_dbscan_labels,
     'pip_join_pairs': q_pip_join_pairs,
     'pip_polygon_count': q_pip_polygon_count,
     'cell_rollup': q_cell_rollup,
-    'events_hourly': q_events_hourly,
-    'bigram_top': q_bigram_top,
-    'host_counts': q_host_counts,
-    'nearest_region': q_nearest_region,
-    'nearest_k': q_nearest_k,
-    'quadtree_leaves': q_quadtree_leaves,
-    'compact_cover': q_compact_cover,
-    'cell_pyramid': q_cell_pyramid,
-    'focal_density': q_focal_density,
-    'join_sample': q_join_sample,
 }
 
 
@@ -782,48 +511,6 @@ def oracle_sql() -> dict[str, str]:
                  n=N_FEATURES, h=sqlgen.dlit(0.5), one=sqlgen.dlit(1.0),
                  mnx=sqlgen.dlit(VECTOR_MASK[0]), mny=sqlgen.dlit(VECTOR_MASK[1]),
                  mxx=sqlgen.dlit(VECTOR_MASK[2]), mxy=sqlgen.dlit(VECTOR_MASK[3])),
-        # CAST(SUM(...) AS BIGINT): DuckDB SUM(BIGINT) returns HUGEINT which
-        # lands in pandas as float64 — keep integer sums integer
-        'lineitem_pricing': (
-            'SELECT l_returnflag, l_linestatus, '
-            'CAST(SUM(CAST(ROUND(l_quantity * 100.0, 0) AS BIGINT)) AS BIGINT) '
-            'AS sum_qty_c, '
-            'CAST(SUM(CAST(ROUND(l_extendedprice * 100.0, 0) AS BIGINT)) AS BIGINT) '
-            'AS sum_price_c, '
-            'COUNT(*) AS count_order '
-            'FROM lineitem GROUP BY l_returnflag, l_linestatus'),
-        'top_orders_per_customer': (
-            'SELECT c_custkey, o_orderkey, rnk FROM ('
-            'SELECT c_custkey, o_orderkey, CAST(ROW_NUMBER() OVER ('
-            'PARTITION BY c_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) '
-            'AS INT) AS rnk '
-            'FROM orders JOIN customer ON o_custkey = c_custkey) WHERE rnk <= 3'),
-        'events_hourly': (
-            'SELECT CAST(epoch(date_trunc(\'hour\', ts)) AS BIGINT) AS hour_epoch, '
-            'event_type, COUNT(*) AS n_events, '
-            'CAST(SUM(CAST(ROUND(value * 1000.0, 0) AS BIGINT)) AS BIGINT) '
-            'AS sum_value_m '
-            'FROM events GROUP BY 1, 2'),
-        'user_sessions': (
-            'WITH s AS (SELECT user_id, ts, '
-            'CASE WHEN lag(ts) OVER w IS NULL OR '
-            "ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END "
-            'AS new_sess FROM events WINDOW w AS '
-            '(PARTITION BY user_id ORDER BY ts, event_id)), '
-            'g AS (SELECT user_id, SUM(new_sess) OVER '
-            '(PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) '
-            'AS sess_id FROM s), '
-            'c AS (SELECT user_id, sess_id, COUNT(*) AS n FROM g '
-            'GROUP BY 1, 2) '
-            'SELECT user_id, COUNT(*) AS n_sessions, '
-            'CAST(MAX(n) AS BIGINT) AS longest_session FROM c GROUP BY 1'),
-        'doc_fingerprint': 'SELECT doc_id, md5(text) AS fp FROM documents',
-        'dedup_exact': (
-            'SELECT md5(text) AS fp, MIN(doc_id) AS keep_doc_id, '
-            'COUNT(*) AS n_dups FROM documents GROUP BY 1'),
-        'token_count': (
-            "SELECT doc_id, CAST(length(string_split_regex(trim(text), '\\s+')) "
-            'AS BIGINT) AS n_tokens FROM documents'),
         'tile_grid': _tile_grid_oracle_sql(),
         'polygonize_components': _polygonize_oracle_sql(),
         # closed-form find_lines truth (see _find_lines_input): each line
@@ -837,62 +524,7 @@ def oracle_sql() -> dict[str, str]:
             'SELECT CAST(n_pts AS BIGINT) AS n_pts, '
             'COUNT(*) AS n_chains FROM chains GROUP BY 1'
         ).format(nh=N_FL_HORIZ, nd=N_FL_DIAG, dl=FL_DIAG_LEN),
-        'bigram_top': (
-            "WITH w AS (SELECT string_split_regex(trim(text), '\\s+') AS ws "
-            'FROM documents), '
-            'b AS (SELECT unnest(list_transform('
-            "generate_series(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i + 1]"
-            ')) AS bigram FROM w WHERE len(ws) >= 2) '
-            'SELECT bigram, COUNT(*) AS n FROM b GROUP BY 1 '
-            'ORDER BY n DESC, bigram ASC LIMIT 20'),
-        'host_counts': (
-            "SELECT regexp_extract(url, 'https://([^/]+)/', 1) AS host, "
-            'COUNT(*) AS n_pages FROM (SELECT '
-            "concat('https://host', CAST(doc_id % 1000 AS VARCHAR), "
-            "'.example/', CAST(doc_id AS VARCHAR)) AS url FROM documents) "
-            'GROUP BY 1'),
-        'region_overlap_pairs': (
-            'WITH {regions} '
-            'SELECT a.region_id AS id_a, b.region_id AS id_b '
-            'FROM regions a JOIN regions b ON a.region_id < b.region_id '
-            'AND a.minlat <= b.maxlat AND b.minlat <= a.maxlat '
-            'AND a.minlng <= b.maxlng AND b.minlng <= a.maxlng'
-        ).format(regions=regions),
         'zonal_stats': _zonal_oracle_sql(),
-        'quadtree_leaves': spatial_join.quadtree_leaves_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            cap=8, max_res=6),
-        'dbscan_labels': spatial_join.dbscan_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            10.0, 4),
-        'kmeans_clusters': spatial_join.kmeans_assign_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            k=8, iters=3),
-        'cell_pyramid': spatial_join.cell_pyramid_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            res=6),
-        'focal_density': spatial_join.focal_sum_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            res=5, radius=1),
-        'interval_join': (
-            "WITH v AS (SELECT user_id, event_id AS view_id, ts AS vts "
-            "FROM events WHERE event_type = 'view'), "
-            'c AS (SELECT user_id, event_id AS click_id, ts AS cts '
-            "FROM events WHERE event_type = 'click') "
-            'SELECT v.user_id, view_id, click_id, '
-            'CAST(epoch_us(cts) - epoch_us(vts) AS BIGINT) AS lag_us '
-            'FROM v JOIN c ON v.user_id = c.user_id '
-            'AND cts >= vts AND cts <= vts + INTERVAL 10 MINUTE'),
         'tiff_meta': (
             # px_sum closed form: rows are constant (doc_id + r) % 251;
             # with h <= 19 < 251 the mod wraps at most once, so
@@ -905,56 +537,6 @@ def oracle_sql() -> dict[str, str]:
             '- 251 * GREATEST(a + h - 251, 0)) AS BIGINT) AS px_sum, '
             'CAST(-180 + doc_id % 360 AS DOUBLE) AS tlx, '
             'CAST(90 - doc_id % 180 AS DOUBLE) AS tly FROM f'),
-        'nearest_k': spatial_join.nearest_k_refs_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            'SELECT region_id, {clat} AS clat, {clng} AS clng '
-            'FROM range({n}) t(region_id)'.format(
-                n=N_REGIONS,
-                **{kk: vv for kk, vv in
-                   sqlgen.region_cols_sql('region_id').items()
-                   if kk in ('clat', 'clng')}),
-            3),
-        'join_sample': spatial_join.sample_join_pairs_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            'SELECT region_id, {minlat} AS minlat, {maxlat} AS maxlat, '
-            '{minlng} AS minlng, {maxlng} AS maxlng '
-            'FROM range({n}) t(region_id)'.format(
-                n=N_REGIONS, **sqlgen.region_cols_sql('region_id')),
-            50),
-        'pip_outside': spatial_join.pip_anti_join_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            'SELECT region_id, {minlat} AS minlat, {maxlat} AS maxlat, '
-            '{minlng} AS minlng, {maxlng} AS maxlng '
-            'FROM range({n}) t(region_id)'.format(
-                n=N_REGIONS, **sqlgen.region_cols_sql('region_id'))),
-        'compact_cover': spatial_join.compact_cells_oracle_sql(
-            spatial_join.cover_cells_rect_oracle_sql(
-                'SELECT region_id, {minlat} AS minlat, '
-                '{maxlat} AS maxlat, {minlng} AS minlng, '
-                '{maxlng} AS maxlng FROM range({n}) t(region_id)'.format(
-                    n=N_REGIONS, **sqlgen.region_cols_sql('region_id')),
-                6), 6),
-        'nearest_region': spatial_join.nearest_region_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(lat=sqlgen.lat_sql('doc_id'),
-                                    lng=sqlgen.lng_sql('doc_id')),
-            'SELECT region_id, {clat} AS clat, {clng} AS clng '
-            'FROM range({n}) t(region_id)'.format(
-                n=N_REGIONS, **{k: v for k, v in
-                                sqlgen.region_cols_sql(
-                                    'region_id').items()
-                                if k in ('clat', 'clng')})),
-        'distance_pairs': spatial_join.distance_pairs_oracle_sql(
-            'SELECT doc_id AS page_id, {lat} AS lat, {lng} AS lng '
-            'FROM documents'.format(
-                lat=sqlgen.lat_sql('doc_id'),
-                lng=sqlgen.lng_sql('doc_id')), 3.0),
     }
 
 

@@ -3,6 +3,7 @@
 import numpy as np
 
 from buzzard_spark.operators.graph import connected_components
+from buzzard_spark.session import release_blocks
 
 
 def _truth(n_nodes, edges):
@@ -25,12 +26,20 @@ def _truth(n_nodes, edges):
     return {i: min(members) for members in comp.values() for i in members}
 
 
+def _labels(nodes, edges, **kwargs):
+    """Collect the labeling, then release the round blocks: the result
+    reads them, so the release must come after the collect."""
+    registry: list = []
+    rows = connected_components(nodes, edges, registry, **kwargs).collect()
+    release_blocks(registry)
+    return rows
+
+
 def _run(spark, n_nodes, edges):
     nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], 'node long')
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges] or [(0, 0)], 'id_a long, id_b long')
-    got = {r['node']: r['comp']
-           for r in connected_components(nodes, pairs).collect()}
+    got = {r['node']: r['comp'] for r in _labels(nodes, pairs)}
     assert got == _truth(n_nodes, edges)
 
 
@@ -74,9 +83,8 @@ def test_cc_small_graph_fastpath_equals_star_rounds(spark):
     edges = [(int(a), int(b)) for a, b in rng.randint(0, n, (400, 2))]
     nodes_df = spark.createDataFrame([(i,) for i in range(n)], 'node long')
     edges_df = spark.createDataFrame(edges, 'id_a long, id_b long')
-    fast = {(r['node'], r['comp']) for r in connected_components(
-        nodes_df, edges_df).collect()}
-    star = {(r['node'], r['comp']) for r in connected_components(
-        nodes_df, edges_df, small_graph_edges=0).collect()}
+    fast = {(r['node'], r['comp']) for r in _labels(nodes_df, edges_df)}
+    star = {(r['node'], r['comp'])
+            for r in _labels(nodes_df, edges_df, small_graph_edges=0)}
     assert fast == star
     assert len(fast) == n

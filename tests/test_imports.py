@@ -1,6 +1,6 @@
 """Every ``buzzard_spark`` import in the repo resolves.
 
-The engine imports lazily inside functions (``spatial_join.dbscan``
+The engine imports lazily inside functions (``raster_ops.polygonize``
 imports ``operators.graph`` inside the call), so an import of a module or
 name that no longer exists would fail only when that code path runs. This
 reads every ``.py`` under ``buzzard_spark/``, ``tests/`` and
@@ -53,7 +53,7 @@ def _resolve(module, name):
 def test_every_engine_import_resolves():
     found = _engine_imports()
     # the scan reaches imports nested inside function bodies
-    assert any(w.startswith('buzzard_spark/operators/spatial_join.py')
+    assert any(w.startswith('buzzard_spark/operators/raster_ops.py')
                and (m, n) == ('buzzard_spark.operators.graph',
                               'connected_components')
                for w, m, n in found)

@@ -16,8 +16,7 @@ import pytest
 from tests import oracle_queries
 
 SF_DIR = '/root/testdata/sf0.01'  # TESTDATA.md
-TABLES = ('region nation customer supplier part orders lineitem events '
-          'documents').split()
+TABLES = ('documents',)
 ORACLES = oracle_queries.oracle_sql()
 
 pytestmark = pytest.mark.skipif(not os.path.isdir(SF_DIR),

@@ -118,29 +118,6 @@ def test_cell_assign_no_python(spark, pages_parquet):
     assert '*(' in plan  # whole-stage-codegen stage markers
 
 
-def test_round5_batch2_plans_no_python_no_cartesian(spark):
-    """The round-5 second-batch spatial operators stay JVM-side and
-    cartesian-free: DBSCAN's ε-graph (distance_pairs) must show no Python
-    eval nodes and no CartesianProduct/BroadcastNestedLoopJoin, and
-    compact_cells' level cascade must run."""
-    from buzzard_spark.operators.spatial_join import (compact_cells,
-                                                      distance_pairs)
-
-    pages = synth.synthetic_pages(spark, 5_000)
-
-    eps_graph = distance_pairs(pages, 2.0, 5)
-    cells_df = pages.selectExpr('page_id % 4096 AS cell')
-    comp = compact_cells(cells_df, 3)
-    p = _plan(eps_graph)
-    assert 'BatchEvalPython' not in p and 'ArrowEvalPython' not in p
-    assert 'CartesianProduct' not in p
-    assert 'BroadcastNestedLoopJoin' not in p
-    # compact_cells/dbscan eagerly checkpoint — audit via collected output
-    # being bounded instead; their building blocks (distance_pairs,
-    # groupBy cascades) are covered above and by the operator tests.
-    assert comp.count() > 0
-
-
 def test_knn_small_batch_plan(spark):
     """Small-batch kNN: the ring join is a broadcast hash join with no
     hash exchange of the pages on ``cell``; the call leaves no persisted
@@ -176,7 +153,9 @@ def test_knn_small_batch_plan(spark):
     ckpt_files = files()
     out = knn.knn(pages, queries, 5, 4)
     assert set(dict(jsc.getPersistentRDDs())) == persisted
-    assert files() == ckpt_files
+    # no NEW file: with cleanCheckpoints on, a JVM GC during the call may
+    # delete earlier tests' checkpoint files, so equality would be racy
+    assert not (files() - ckpt_files)
     assert (out._jdf.queryExecution().optimizedPlan().getClass()
             .getSimpleName() == 'LocalRelation')
     assert out.count() == 8 * 5

@@ -229,95 +229,6 @@ def test_resume_keys_sidecar_scales_off_driver(spark, tmp_path):
     assert table.pending(todo, ['tile_y', 'tile_x']).count() == n + 500
 
 
-def test_compact_folds_chain_preserving_rows_and_time_travel(spark, tmp_path):
-    """compact(): N snapshots -> 1 replacing snapshot with identical
-    rows; pre-compaction snapshots stay readable via as_of; subsequent
-    appends chain onto the compacted snapshot."""
-    import pyspark.sql.functions as F
-
-    root = str(tmp_path / 'compact_tbl')
-    table = SnapshotTable(root)
-    for i in range(4):
-        table.append(spark.range(i * 10, (i + 1) * 10)
-                     .select(F.col('id').alias('k'),
-                             (F.col('id') * 2).alias('v')))
-    pre_ids = [m['snapshot_id'] for m in table.manifests()]
-    assert len(pre_ids) == 4
-    before = sorted((r['k'], r['v']) for r in table.read(spark).collect())
-
-    man = table.compact(spark, target_file_bytes=1 << 30)
-    assert man['parent'] is None
-    assert man['compacted_from'] == pre_ids[-1]
-    # one-manifest chain, same rows
-    assert [m['snapshot_id'] for m in table.manifests()] == \
-        [man['snapshot_id']]
-    after = sorted((r['k'], r['v']) for r in table.read(spark).collect())
-    assert after == before
-    # fewer files than the 4-snapshot chain produced
-    n_files = len(man['files'])
-    assert n_files >= 1
-
-    # time travel to a PRE-compaction snapshot still works
-    tt = sorted(r['k'] for r in
-                table.read(spark, as_of=pre_ids[1]).collect())
-    assert tt == list(range(20))
-
-    # appends after compaction chain onto it
-    table.append(spark.range(100, 105).select(
-        F.col('id').alias('k'), (F.col('id') * 2).alias('v')))
-    final = sorted(r['k'] for r in table.read(spark).collect())
-    assert final == list(range(40)) + list(range(100, 105))
-
-
-def test_compact_with_dedupe_keys_materializes_latest(spark, tmp_path):
-    """Latest-version-per-key is applied during the rewrite, so
-    dedupe_keys reads stay correct after compaction."""
-    import pyspark.sql.functions as F
-
-    root = str(tmp_path / 'compact_rmw')
-    table = SnapshotTable(root)
-    table.append(spark.createDataFrame(
-        [(1, 'old'), (2, 'old')], 'k long, v string'))
-    table.append(spark.createDataFrame(
-        [(1, 'new')], 'k long, v string'))
-    assert {(r['k'], r['v']) for r in
-            table.read(spark, dedupe_keys=['k']).collect()} == \
-        {(1, 'new'), (2, 'old')}
-
-    table.compact(spark, dedupe_keys=['k'])
-    got = {(r['k'], r['v']) for r in table.read(spark).collect()}
-    assert got == {(1, 'new'), (2, 'old')}
-    # and the dedupe_keys read path agrees post-compaction
-    got2 = {(r['k'], r['v']) for r in
-            table.read(spark, dedupe_keys=['k']).collect()}
-    assert got2 == got
-
-
-def test_compact_rewrites_key_sidecar(spark, tmp_path):
-    """Resume keys survive compaction: completed_keys after == before,
-    computed from the compacted sidecar (distributed, no driver keys)."""
-    import pyspark.sql.functions as F
-
-    root = str(tmp_path / 'compact_keys')
-    table = SnapshotTable(root)
-    for i in range(3):
-        table.append(spark.range(i * 5, (i + 1) * 5)
-                     .select(F.col('id').alias('tile'),
-                             (F.col('id') * 3).alias('v')),
-                     key_cols=['tile'])
-    before = sorted(r['tile'] for r in
-                    table.completed_keys(spark, ['tile']).collect())
-    table.compact(spark)
-    after = sorted(r['tile'] for r in
-                   table.completed_keys(spark, ['tile']).collect())
-    assert after == before == list(range(15))
-    # pending() anti-join still skips everything already computed
-    todo = spark.range(20).select(F.col('id').alias('tile'))
-    left = sorted(r['tile'] for r in
-                  table.pending(todo, ['tile']).collect())
-    assert left == list(range(15, 20))
-
-
 def test_schema_evolution_read(spark, tmp_path):
     """A later append may ADD a column: reads surface it as NULL for
     pre-evolution rows (mergeSchema), in both the plain and the
@@ -337,267 +248,3 @@ def test_schema_evolution_read(spark, tmp_path):
     rows2 = {r['k']: (r['v'], r['score'])
              for r in table.read(spark, dedupe_keys=['k']).collect()}
     assert rows2 == rows
-
-    # compaction of an evolved chain keeps the union schema
-    table.compact(spark)
-    rows3 = {r['k']: (r['v'], r['score'])
-             for r in table.read(spark).collect()}
-    assert rows3 == rows
-
-
-def test_expire_snapshots_removes_orphans_only(spark, tmp_path):
-    """expire_snapshots deletes pre-compaction generations (manifest,
-    data dir, sidecar) and nothing reachable; time travel to expired ids
-    then raises."""
-    import pyspark.sql.functions as F
-
-    root = str(tmp_path / 'expire_tbl')
-    table = SnapshotTable(root)
-    for i in range(3):
-        table.append(spark.range(i * 4, (i + 1) * 4)
-                     .select(F.col('id').alias('tile')), key_cols=['tile'])
-    pre_ids = [m['snapshot_id'] for m in table.manifests()]
-    table.compact(spark)
-    live_id = table.current_snapshot_id()
-
-    expired = table.expire_snapshots()
-    assert expired == pre_ids
-    # live snapshot intact, rows intact, resume intact
-    assert sorted(r['tile'] for r in table.read(spark).collect()) == \
-        list(range(12))
-    assert sorted(r['tile'] for r in
-                  table.completed_keys(spark, ['tile']).collect()) == \
-        list(range(12))
-    assert table.current_snapshot_id() == live_id
-    # expired id no longer readable
-    import pytest as _pytest
-    with _pytest.raises(FileNotFoundError):
-        table.read(spark, as_of=pre_ids[0])
-    # idempotent
-    assert table.expire_snapshots() == []
-
-
-def test_compact_concurrent_append_raises_and_retry_recovers(spark, tmp_path):
-    """Iceberg CommitFailedException contract (VERDICT r4 #5): an append
-    landing between compact's chain read and its commit makes the commit
-    raise CommitConflictError (retryable); nothing is lost, and the
-    retried compact folds the racer's rows into the replacement chain."""
-    from buzzard_spark.sources.snapshot_table import CommitConflictError
-
-    root = str(tmp_path / 'compact_race')
-
-    class RacyTable(SnapshotTable):
-        """Injects one racing append between compact's chain read and
-        its rewrite (the first read() call during compact)."""
-
-        def read(self, *a, **k):
-            df = super().read(*a, **k)
-            if not getattr(self, '_raced', False):
-                self._raced = True
-                SnapshotTable(self.root).append(spark.createDataFrame(
-                    [(1000, 'race')], 'k long, v string'))
-            return df
-
-    table = RacyTable(root)
-    for i in range(3):
-        table.append(spark.createDataFrame(
-            [(i, f'v{i}')], 'k long, v string'))
-
-    with pytest.raises(CommitConflictError):
-        table.compact(spark)
-
-    # the racer's commit survived; nothing orphaned
-    got = {(r['k'], r['v']) for r in table.read(spark).collect()}
-    assert got == {(0, 'v0'), (1, 'v1'), (2, 'v2'), (1000, 'race')}
-
-    # retry re-reads the chain (now including the racer) and succeeds
-    man = table.compact(spark)
-    assert man['parent'] is None
-    assert [m['snapshot_id'] for m in table.manifests()] == \
-        [man['snapshot_id']]
-    after = {(r['k'], r['v']) for r in table.read(spark).collect()}
-    assert after == got
-
-
-def test_replace_commit_lost_claim_fails_fast_and_cleans_up(spark, tmp_path):
-    """The O_EXCL leg of the compaction CAS: a racer that claimed the
-    next snapshot id (manifest exists, CURRENT not yet flipped) makes the
-    replace-commit raise instead of re-chaining past it; the loser's
-    never-referenced data dir is removed."""
-    import json as _json
-
-    from buzzard_spark.sources.snapshot_table import CommitConflictError
-
-    root = str(tmp_path / 'cas_claim')
-    table = SnapshotTable(root)
-    table.append(spark.createDataFrame([(1, 'a')], 'k long, v string'))
-    table.append(spark.createDataFrame([(2, 'b')], 'k long, v string'))
-    # simulate a racer mid-commit: snap-3 claimed, CURRENT still 2
-    with open(os.path.join(root, '_manifest', 'snap-3.json'), 'x') as f:
-        f.write(_json.dumps({'snapshot_id': 3, 'parent': 2, 'files': [],
-                             'data_dir': 'data/none', 'rows': 0,
-                             'bytes': 0, 'schema': None}))
-    n_dirs_before = len(os.listdir(os.path.join(root, 'data')))
-    with pytest.raises(CommitConflictError):
-        table.append(spark.createDataFrame([(9, 'z')], 'k long, v string'),
-                     _replaces=2, _expected_tip=2)
-    assert len(os.listdir(os.path.join(root, 'data'))) == n_dirs_before
-    assert table.current_snapshot_id() == 2
-
-
-def test_compact_refuses_multi_version_keys_without_dedupe(spark, tmp_path):
-    """ADVICE r4: compacting a chain that carries multiple versions per
-    key WITHOUT dedupe_keys would make later-wins reads nondeterministic
-    after the fold — it must refuse; with dedupe_keys it materializes
-    the latest version."""
-    root = str(tmp_path / 'compact_guard')
-    table = SnapshotTable(root)
-    table.append(spark.createDataFrame(
-        [(1, 'old'), (2, 'old')], 'k long, v string'), key_cols=['k'])
-    table.append(spark.createDataFrame(
-        [(1, 'new')], 'k long, v string'), key_cols=['k'])
-
-    with pytest.raises(ValueError, match='dedupe_keys'):
-        table.compact(spark)
-
-    table.compact(spark, dedupe_keys=['k'])
-    got = {(r['k'], r['v']) for r in table.read(spark).collect()}
-    assert got == {(1, 'new'), (2, 'old')}
-
-
-# -- row-level deletes (delete_where) ------------------------------------------
-
-def test_delete_where_filters_earlier_snapshots_only(spark, tmp_path):
-    """Predicate delete removes matching rows from EARLIER snapshots;
-    a later append resurrects them; time travel still sees them."""
-    root = str(tmp_path / 'tbl')
-    t = SnapshotTable(root)
-    t.append(spark.range(0, 10).selectExpr('id AS k', 'id * 2 AS v'))
-    t.append(spark.range(10, 20).selectExpr('id AS k', 'id * 2 AS v'))
-    pre_delete = t.current_snapshot_id()
-    t.delete_where(spark, 'k < 5 OR k >= 18')
-    got = sorted(r['k'] for r in t.read(spark).collect())
-    assert got == list(range(5, 18))
-    # time travel to before the delete sees everything
-    old = sorted(r['k'] for r in
-                 t.read(spark, as_of=pre_delete).collect())
-    assert old == list(range(20))
-    # a later append is untouched by the earlier delete
-    t.append(spark.range(0, 3).selectExpr('id AS k', 'id * 100 AS v'))
-    got2 = sorted(r['k'] for r in t.read(spark).collect())
-    assert got2 == [0, 1, 2] + list(range(5, 18))
-
-
-def test_delete_where_null_predicate_keeps_row(spark, tmp_path):
-    """A predicate evaluating to NULL must KEEP the row (only TRUE
-    deletes) — SQL three-valued logic would otherwise silently drop it."""
-    root = str(tmp_path / 'tbl')
-    t = SnapshotTable(root)
-    t.append(spark.createDataFrame([(1, 'x'), (2, None)],
-                                   'k long, s string'))
-    t.delete_where(spark, "s = 'x'")     # NULL for k=2
-    got = sorted(r['k'] for r in t.read(spark).collect())
-    assert got == [2]
-
-
-def test_delete_where_validates_predicate_schema(spark, tmp_path):
-    root = str(tmp_path / 'tbl')
-    t = SnapshotTable(root)
-    t.append(spark.range(5).selectExpr('id AS k'))
-    with pytest.raises(Exception):
-        t.delete_where(spark, 'no_such_column > 3')
-    # the failed delete must not have committed anything
-    assert t.current_snapshot_id() == 1
-
-
-def test_delete_where_with_dedupe_keys_interplay(spark, tmp_path):
-    """Delete kills the OLD version; a later re-append becomes the live
-    version under later-wins reads."""
-    root = str(tmp_path / 'tbl')
-    t = SnapshotTable(root)
-    t.append(spark.createDataFrame([(1, 10), (2, 20)], 'k long, v long'),
-             key_cols=['k'])
-    t.delete_where(spark, 'k = 1')
-    t.append(spark.createDataFrame([(1, 11)], 'k long, v long'),
-             key_cols=['k'])
-    got = {r['k']: r['v'] for r in
-           t.read(spark, dedupe_keys=['k']).collect()}
-    assert got == {1: 11, 2: 20}
-
-
-def test_delete_where_minmax_filter_composes(spark, tmp_path):
-    root = str(tmp_path / 'tbl')
-    t = SnapshotTable(root)
-    t.append(spark.range(0, 100).selectExpr('id AS k'))
-    t.delete_where(spark, 'k % 2 = 0')
-    # minmax_filter is FILE skipping; the delete predicate still applies
-    # to the surviving files' rows (the caller adds the row filter)
-    pruned = t.read(spark, minmax_filter={'k': (10, 20)})
-    got = sorted(r['k'] for r in
-                 pruned.where('k BETWEEN 10 AND 20').collect())
-    assert got == [11, 13, 15, 17, 19]
-    # every row of every kept file has the delete applied (no evens),
-    # and file skipping never resurrects a deleted row
-    rest = [r['k'] for r in pruned.collect()]
-    assert rest and all(k % 2 == 1 for k in rest)
-
-
-def test_compact_materializes_deletes(spark, tmp_path):
-    """compact() folds the chain to post-delete rows and drops the
-    predicate from the new chain (no delete manifest survives)."""
-    root = str(tmp_path / 'tbl')
-    t = SnapshotTable(root)
-    t.append(spark.range(0, 10).selectExpr('id AS k'))
-    t.delete_where(spark, 'k >= 7')
-    before = sorted(r['k'] for r in t.read(spark).collect())
-    t.compact(spark)
-    after = sorted(r['k'] for r in t.read(spark).collect())
-    assert before == after == list(range(7))
-    assert not any(m.get('delete_predicate') for m in t.manifests())
-
-
-def test_read_incremental_append_only_delta(spark, tmp_path):
-    """Incremental scan returns exactly the rows appended after the
-    checkpointed snapshot; None means from-the-beginning; the tip yields
-    a schema-preserving empty delta."""
-    table = SnapshotTable(str(tmp_path / 'inc'))
-    ids = []
-    for lo in (0, 10, 20):
-        r = table.append(spark.range(lo, lo + 10).selectExpr(
-            'id AS k', 'id * 2 AS v'))
-        ids.append(r['snapshot_id'])
-
-    assert sorted(r['k'] for r in
-                  table.read_incremental(spark, None).collect()) \
-        == list(range(30))
-    assert sorted(r['k'] for r in
-                  table.read_incremental(spark, ids[0]).collect()) \
-        == list(range(10, 30))
-    assert sorted(r['k'] for r in
-                  table.read_incremental(spark, ids[1]).collect()) \
-        == list(range(20, 30))
-    empty = table.read_incremental(spark, ids[2])
-    assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == ['k', 'v']
-    # bounded range: (ids[0], ids[1]]
-    assert sorted(r['k'] for r in table.read_incremental(
-        spark, ids[0], end=ids[1]).collect()) == list(range(10, 20))
-
-
-def test_read_incremental_rejects_non_append_ranges(spark, tmp_path):
-    """Compaction or delete_where inside the range, or a checkpoint
-    orphaned by compaction, raise instead of double-emitting rows."""
-    table = SnapshotTable(str(tmp_path / 'incbad'))
-    s1 = table.append(spark.range(0, 10).selectExpr('id AS k'))['snapshot_id']
-    table.append(spark.range(10, 20).selectExpr('id AS k'))
-    table.delete_where(spark, 'k = 3')
-    with pytest.raises(ValueError, match='not pure appends'):
-        table.read_incremental(spark, s1)
-
-    t2 = SnapshotTable(str(tmp_path / 'incbad2'))
-    s1 = t2.append(spark.range(0, 10).selectExpr('id AS k'))['snapshot_id']
-    t2.append(spark.range(10, 20).selectExpr('id AS k'))
-    t2.compact(spark)
-    # s1 was compacted off the current chain -> orphaned checkpoint
-    with pytest.raises(ValueError, match='not on the current chain'):
-        t2.read_incremental(spark, s1)

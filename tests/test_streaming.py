@@ -3,8 +3,7 @@ unchanged on a streaming DataFrame, and their streaming results equal the
 batch results on the same input."""
 
 from buzzard_spark import synth
-from buzzard_spark.operators.spatial_join import (assign_cell, nearest_k_refs,
-                                                  pip_join_rect)
+from buzzard_spark.operators.spatial_join import assign_cell, pip_join_rect
 
 
 def _run_stream(df, tmp_path):
@@ -52,21 +51,3 @@ def test_stream_pip_join_matches_batch(spark, tmp_path):
              .select('page_id', 'region_id').collect()}
     assert got == truth and truth
 
-
-def test_nearest_k_refs_streaming_matches_batch(spark, tmp_path):
-    """The k-array fold is stateless, so it runs unchanged on a stream:
-    streaming output == batch output row-for-row."""
-    pages_dir = str(tmp_path / 'nk_pages')
-    synth.synthetic_pages(spark, 500).write.parquet(pages_dir)
-    cents = spark.createDataFrame(
-        [(i, -30.0 + i * 7.0, -120.0 + i * 23.0) for i in range(9)],
-        'region_id long, clat double, clng double')
-    schema = spark.read.parquet(pages_dir).schema
-    stream = spark.readStream.schema(schema).parquet(pages_dir)
-    sink = _run_stream(nearest_k_refs(stream, cents, 3), tmp_path)
-    got = sorted(tuple(r) for r in
-                 spark.sql(f'SELECT * FROM {sink}').collect())
-    truth = sorted(tuple(r) for r in
-                   nearest_k_refs(spark.read.parquet(pages_dir),
-                                  cents, 3).collect())
-    assert got == truth and truth

@@ -1,4 +1,4 @@
-"""Tests for zonal raster statistics and the ε-join's plan shape."""
+"""Tests for zonal raster statistics."""
 
 import numpy as np
 
@@ -70,20 +70,3 @@ def test_zonal_stats_custom_value_fn(spark):
     assert r['v_sum'] == sum(1000 * y + x
                              for y in range(16) for x in range(32))
 
-
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_distance_pairs_plan_single_shuffle_no_cartesian(spark):
-    """The ε-join must be ONE equi-join on the cell id — never a
-    cartesian/broadcast-nested-loop; the ring explode is Catalyst-side."""
-    from buzzard_spark.operators.spatial_join import distance_pairs
-    pts = spark.range(0, 1000).selectExpr(
-        'id AS page_id',
-        'CAST(id % 90 AS DOUBLE) - 45.0 AS lat',
-        'CAST(id % 360 AS DOUBLE) - 180.0 AS lng')
-    plan = _plan(distance_pairs(pts, 0.5, 6))
-    assert 'CartesianProduct' not in plan
-    assert 'BroadcastNestedLoopJoin' not in plan
-    assert 'BatchEvalPython' not in plan and 'ArrowEvalPython' not in plan
