@@ -1,9 +1,9 @@
 """kNN via cell-ring expansion (north_rule operator).
 
-Plan shape for a batch of at most ``broadcast_rows`` queries (serving):
+Plan shape for a batch of at most ``MAX_QUERIES`` queries (serving):
 
-1. one Arrow trip fetches the batch (``limit(broadcast_rows + 1)``, one
-   job);
+1. one Arrow trip fetches the batch (``limit(MAX_QUERIES + 1)``, one
+   job); a larger batch raises ``ValueError`` — split the query table;
 2. the driver builds the ring side — every query's ring-``k_ring`` cells
    (``cells.cell_of`` + ``cells.ring``: longitude wraps, latitude clips)
    — as an Arrow-built local relation (:func:`driver_rings`). Spark sees
@@ -18,12 +18,6 @@ Plan shape for a batch of at most ``broadcast_rows`` queries (serving):
    that broadcasts only those queries;
 5. the result is a local relation: nothing is persisted, no checkpoint
    file is written, and the caller's collect runs no Spark job.
-
-A batch larger than ``broadcast_rows`` cannot be held on the driver and
-takes the distributed loop instead (:func:`_knn_bulk`): the ring side is
-exploded in SQL (:func:`ring_cells`), settled by ``groupBy``, and the
-ring radius doubles over the unsettled subset until it fits the brute
-pass; the result is materialized by ``checkpoint_release``.
 """
 
 from __future__ import annotations
@@ -37,14 +31,20 @@ from pyspark.sql.window import Window
 
 from buzzard_spark.kernels import cells
 from buzzard_spark.operators.spatial_join import assign_cell
-from buzzard_spark.session import checkpoint_release, local_frame
+from buzzard_spark.session import local_frame
 
 DIST2 = ('(lat - qlat) * (lat - qlat) + (lng - qlng) * (lng - qlng)')
 OUT_COLS = ('qid', 'page_id', 'dist2', 'rnk')
+# the largest query batch one call serves: the batch, its rings and its
+# top-k are all held on the driver
+MAX_QUERIES = 100_000
 
 
 def ring_cells(queries: DataFrame, res: int, k_ring: int) -> DataFrame:
-    """Explode each query row into its ring-``k_ring`` candidate cells.
+    """Explode each query row into its ring-``k_ring`` candidate cells, in
+    SQL: the reference that ``test_driver_rings_match_ring_cells`` checks
+    :func:`driver_rings` against, and the candidate count perfbench's
+    ``KnnServe.trace_counts`` reports.
 
     The candidate set is built as an ``array_distinct`` array before the
     explode (pure expression, no shuffle): when ``2*k_ring + 1 > nx`` the
@@ -66,7 +66,7 @@ def ring_cells(queries: DataFrame, res: int, k_ring: int) -> DataFrame:
 
 def driver_rings(spark, batch, schema: StructType, res: int,
                  k_ring: int) -> DataFrame:
-    """The small-batch ring side: one (qid, qlat, qlng, cell) row per
+    """The ring side: one (qid, qlat, qlng, cell) row per
     query and ring cell, the cells of :func:`ring_cells` computed on the
     driver, as a local relation. ``batch`` is the fetched pandas frame of
     ``schema``'s (qid, qlat, qlng). A query with a NULL coordinate gets no
@@ -119,20 +119,20 @@ def _guarantee(r: int, res: int) -> float:
 
 
 def knn(pages: DataFrame, queries: DataFrame, k: int, res: int,
-        k_ring: int = 2, broadcast_rows: int = 100_000) -> DataFrame:
+        k_ring: int = 2) -> DataFrame:
     """queries(qid, qlat, qlng) × pages(page_id, lat, lng) → top-k rows
     (qid, page_id, dist2, rnk). Exact — ring join + guarantee + fallback.
 
-    One limit-fetch bounds the driver trip: at or below ``broadcast_rows``
-    queries the whole batch is served through local relations (module
-    docstring); above it :func:`_knn_bulk` runs distributed and no
-    query-table-sized set is ever materialized on the driver.
+    One limit-fetch bounds the driver trip: a batch of more than
+    ``MAX_QUERIES`` queries raises ``ValueError`` (module docstring).
     """
     spark = queries.sparkSession
     q = queries.select('qid', 'qlat', 'qlng')
-    batch = q.limit(broadcast_rows + 1).toPandas()
-    if len(batch) > broadcast_rows:
-        return _knn_bulk(pages, q, k, res, k_ring, broadcast_rows)
+    batch = q.limit(MAX_QUERIES + 1).toPandas()
+    if len(batch) > MAX_QUERIES:
+        raise ValueError(
+            f'knn serves at most MAX_QUERIES={MAX_QUERIES} queries per '
+            f'call; split the query table into batches of that size')
 
     rings = driver_rings(spark, batch, q.schema, res, k_ring)
     topk_df = _topk(ring_join(rings, assign_cell(pages, res)), k) \
@@ -150,57 +150,3 @@ def knn(pages: DataFrame, queries: DataFrame, k: int, res: int,
             top = pd.concat([top, brute.toPandas()], ignore_index=True)
     return local_frame(spark, top, topk_df.schema)
 
-
-def _knn_bulk(pages: DataFrame, queries: DataFrame, k: int, res: int,
-              k_ring: int, broadcast_rows: int) -> DataFrame:
-    """Distributed rounds for a query table too large for the driver.
-
-    One limit-fetch per round both bounds the driver AND delivers the
-    unsettled rows: at or below ``broadcast_rows`` rows they take the
-    broadcast brute pass, above it the ring radius doubles and the join
-    re-runs DISTRIBUTIVELY on the unsettled subset only. Terminates: once
-    the ring covers the whole grid the candidate set is the full corpus,
-    which settles every query exactly.
-    """
-    spark = queries.sparkSession
-    pages_c = assign_cell(pages, res)
-    cached: list[DataFrame] = []
-    parts: list[DataFrame] = []
-    qcur = queries
-    r = k_ring
-    while True:
-        rings = ring_cells(qcur, res, r)
-        topk = _topk(ring_join(rings, pages_c), k).select(
-            'qid', 'qlat', 'qlng', 'page_id', 'dist2', 'rnk').persist()
-        cached.append(topk)
-        if _covers_grid(r, res):
-            parts.append(topk.select(*OUT_COLS))
-            break
-        settled_stats = (topk.groupBy('qid')
-                         .agg(F.max('rnk').alias('found'),
-                              F.max('dist2').alias('kth'))
-                         .where((F.col('found') == k) &
-                                (F.col('kth') < _guarantee(r, res))))
-        parts.append(topk.join(settled_stats.select('qid'), 'qid',
-                               'left_semi').select(*OUT_COLS))
-        unsettled_q = qcur.join(settled_stats.select('qid'), 'qid',
-                                'left_anti')
-        un = unsettled_q.limit(broadcast_rows + 1).toPandas()
-        if un.empty:
-            break
-        if len(un) <= broadcast_rows:
-            parts.append(_brute(pages, local_frame(spark, un,
-                                                   unsettled_q.schema), k))
-            break
-        # too many to broadcast: widen the ring and re-join distributively
-        # on the unsettled subset only (localCheckpoint truncates the
-        # growing anti-join lineage; materialized by the next round's
-        # limit-fetch)
-        qcur = unsettled_q.localCheckpoint(eager=False)
-        cached.append(qcur)
-        r *= 2
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return checkpoint_release(out, cached)

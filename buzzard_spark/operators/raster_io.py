@@ -53,7 +53,8 @@ def get_data(spark: SparkSession, tiles: DataFrame, raster_fp,
        tiles; a WHOLE-RASTER ``fp`` collects the entire table onto the
        driver. For bulk/streamed access use ``queue_data`` (bounded
        per-footprint pulls) or operate on the tile DataFrame directly —
-       the same caveat ``dataset._sliced_by_order`` documents.
+       the same caveat ``vector_source._sliced_by_order`` documents for
+       open-ended slices.
     """
     fp = request_fp if request_fp is not None else raster_fp
     onodata = dst_nodata if dst_nodata is not None else (

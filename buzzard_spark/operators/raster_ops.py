@@ -7,8 +7,8 @@ stages that receive only the columns their kernel reads, as Arrow tables:
 
 - ``rasterize``  — tiles ⨝ broadcast(polygons) on bbox
   (``_tile_candidates``) → groupBy(tile).applyInArrow(burn) → tile mask
-  rows. ``rasterize_lines``, ``rasterize_counts`` and ``zonal_stats``
-  share the same candidate join and stage shape.
+  rows. ``rasterize_lines`` and ``zonal_stats`` share the same
+  candidate join and stage shape.
 - ``polygonize`` — the reference never had to stitch (single array;
   SURVEY.md §7.3 hard part 3). Three phases:
     1. per-tile run-length labeling (``tile_runs``: one mapInArrow over
@@ -42,13 +42,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from buzzard_spark.kernels import geometry, raster
-from buzzard_spark.session import local_frame
+from buzzard_spark.session import local_frame, release_blocks
 
 TILE_SCHEMA = ('tile_y int, tile_x int, y0 int, x0 int, h int, w int, '
                'mask binary')
 RUN_SCHEMA = 'tile_y int, tile_x int, y int, xs int, xe int, lab int'
 POLY_SCHEMA = 'component_id long, wkb binary, area double, n_rings int'
-COUNT_SCHEMA = 'region_id long, n_pixels long'
 ZONAL_SCHEMA = ('region_id long, n_pixels long, v_sum long, v_min long, '
                 'v_max long')
 
@@ -155,37 +154,6 @@ def rasterize_lines(spark: SparkSession, fp, lines: DataFrame,
     """linestrings (line_id, wkb, minlat, minlng, maxlat, maxlng) → tile
     mask rows via per-tile DDA burn (kernels.raster.burn_lines)."""
     return _mask_tiles(spark, fp, lines, tile_size, raster.burn_lines)
-
-
-def rasterize_counts(spark: SparkSession, fp, polys: DataFrame,
-                     tile_size: int = 64) -> DataFrame:
-    """Per-region burned-pixel count: polygons ⨝ tiles, per-(tile, region)
-    scanline burn, map-side partial sums → (region_id, n_pixels).
-
-    The aggregation-shaped variant of ``rasterize`` — the distributed
-    answer to "how many pixels does each polygon cover on this grid".
-    """
-    cand = _tile_candidates(spark, fp, tile_size, polys,
-                            ('region_id', 'wkb'))
-    gt = tuple(float(v) for v in fp.gt)
-    schema = _arrow_schema(COUNT_SCHEMA)
-
-    def _count(tbl):
-        # one Python round-trip per TILE; all its candidate regions burn
-        # in a numpy loop (one tiny group per (tile, region) would pay the
-        # per-group overhead per region instead)
-        tile_fp = _tile_fp(gt, *_window(tbl))
-        rids = tbl.column('region_id').to_pylist()
-        counts = [int(raster.burn_polygons(tile_fp, [wkb]).sum())
-                  for wkb in tbl.column('wkb').to_pylist()]
-        return pa.Table.from_pydict(
-            {'region_id': rids, 'n_pixels': counts}, schema=schema)
-
-    return (cand.groupBy('tile_y', 'tile_x')
-            .applyInArrow(_count, COUNT_SCHEMA)
-            .groupBy('region_id')
-            .agg(F.sum('n_pixels').alias('n_pixels'))
-            .where(F.col('n_pixels') > 0))
 
 
 def _unpack_mask(buf, h, w):
@@ -352,8 +320,8 @@ def _thin_block(tiles: DataFrame, tile_size: int) -> DataFrame:
 
 
 def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
-               tile_size: int = 256, max_iters: int = 1024,
-               cache_registry: list | None = None) -> DataFrame:
+               cache_registry: list, tile_size: int = 256,
+               max_iters: int = 1024) -> DataFrame:
     """Distributed morphological thinning of a tiled mask — the scale
     analogue of ``kernels.raster.thin`` (the reference's ``skm.thin``
     preprocessing, buzzard/_footprint.py:1631): per round, every tile
@@ -370,18 +338,14 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
     + sparse halo pixels) — nothing mask-sized on the driver; the
     iteration count is O(max inscribed blob radius), the propagation lower
     bound any parallel thinning shares. Rounds use lazy localCheckpoints
-    (one job per round, the convergence sum) and all round blocks are
-    released through a reliable checkpoint of the result — unless a
-    ``cache_registry`` list is passed (composition inside
-    ``vectorize_lines``): then the round blocks land in the registry, the
-    final round (already block-materialized by its convergence action)
-    returns as-is, and the DOWNSTREAM operator's single reliable
-    checkpoint releases them (VERDICT r3 #2 — round 3 file-checkpointed
-    the thinned tiles here and the linework again in the caller)."""
-    from buzzard_spark.session import checkpoint_release
-
+    (one job per round, the convergence sum); the round blocks are
+    appended to ``cache_registry`` and the final round (already
+    block-materialized by its convergence action) returns as-is. The
+    CALLER releases the registry once its result no longer reads them —
+    ``vectorize_lines``' single reliable checkpoint, or
+    ``session.release_blocks`` after a collect (the contract of
+    ``graph.connected_components``)."""
     tiles = mask_tiles.select(*_WINDOW, 'mask')
-    ckpts = []
     for _ in range(0, max_iters, _THIN_SUB // 2):
         # TWO full iterations materialize per convergence job (the CC
         # sig-every-other-round trick): the checked sum counts ONLY the
@@ -391,16 +355,13 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
         # (thinning is idempotent there), so the output mask is
         # bit-identical at half the jobs.
         tiles = _thin_block(tiles, tile_size).localCheckpoint(eager=False)
-        ckpts.append(tiles)
+        cache_registry.append(tiles)
         if not tiles.agg(F.sum('_chg')).collect()[0][0]:
             break
     else:
         raise RuntimeError(
             f'thin_tiles did not converge in {max_iters} iterations')
-    if cache_registry is not None:
-        cache_registry.extend(ckpts)
-        return tiles.drop('_chg')
-    return checkpoint_release(tiles.drop('_chg'), ckpts)
+    return tiles.drop('_chg')
 
 
 def _tile_halo_pixels_h(mask_tiles: DataFrame, halo: int,
@@ -565,8 +526,7 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     # thin_tiles and the fragment CC register their round blocks here
     # instead of writing their own file-backed checkpoints
     registry: list = []
-    mask_tiles = thin_tiles(spark, mask_tiles, tile_size,
-                            cache_registry=registry)
+    mask_tiles = thin_tiles(spark, mask_tiles, registry, tile_size)
     pixels = _tile_halo_pixels_h(mask_tiles, 2, tile_size)
     edges_px = _edges_with_links(pixels).persist()
     return _vectorize_chains(spark, fp, edges_px, pixels, registry,
@@ -582,9 +542,8 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
     from buzzard_spark.operators.graph import connected_components
 
     if edges_px.isEmpty():
-        from buzzard_spark.session import checkpoint_release
-        empty = local_frame(spark, [], LINE_SCHEMA)
-        return checkpoint_release(empty, [edges_px, pixels] + registry)
+        release_blocks([edges_px, pixels] + registry)
+        return local_frame(spark, [], LINE_SCHEMA)
     ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
             .unionByName(edges_px.select('eid', F.col('eb').alias('node'))))
     deg2 = (ends.groupBy('node').agg(F.count('*').alias('d'),
@@ -814,10 +773,10 @@ def zonal_stats(spark: SparkSession, fp, polys: DataFrame,
     model). Default: ``(17 * x + 31 * y) mod 97`` — a synthetic band the
     DuckDB oracle reproduces exactly in integer arithmetic.
 
-    Scale shape: identical to :func:`rasterize_counts` — tiles ⨝
-    broadcast(polys) on bbox, ONE Python round-trip per tile burning all
-    its candidate zones, map-side partial aggregation, final exchange
-    only on (small) region ids. Zones may overlap (each aggregates
+    Scale shape: :func:`rasterize`'s candidate join — tiles ⨝
+    broadcast(polys) on bbox — then ONE Python round-trip per tile
+    burning all its candidate zones, map-side partial aggregation, final
+    exchange only on (small) region ids. Zones may overlap (each aggregates
     independently) — the labelize trick (one burn, one label raster)
     would lose overlapping zones, so the per-(tile, zone) burn is the
     correct general form. An actual stored band drops in by joining the

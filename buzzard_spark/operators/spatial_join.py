@@ -9,14 +9,10 @@ polygon at a time against one OGR layer, the engine
    whole-stage codegen, no Python),
 2. explodes each region into its cover cells (sequence() + explode, also
    JVM-side),
-3. equi-joins on cell — broadcast when the cover is small, shuffle hash
-   join with AQE skew handling otherwise,
+3. equi-joins on cell against the BROADCAST cover: the pages are never
+   shuffled for the join, so a hot cell (a dense region) is no skew —
+   every page probes the cover's hash table in its own map task,
 4. refines exactly with the geometric predicate.
-
-At 10^12-page scale the shuffle is keyed by cell, so hot cells (dense
-regions) are the skew risk: AQE skew-join splitting is enabled in
-session config; for pathological dimension-side fanout use
-``salt`` > 1 to spread each cover cell over N join keys.
 
 The filter-then-refine shape (rasterized cell signature as the join
 key, exact geometric predicate as the verify) is the published design
@@ -63,59 +59,41 @@ def assign_cell(pages: DataFrame, res: int,
                     f'ELSE coalesce({expr}, CAST(-1 AS BIGINT)) END'))
 
 
-def cover_cells_rect(regions: DataFrame, res: int, salt: int = 1) -> DataFrame:
+def cover_cells_rect(regions: DataFrame, res: int) -> DataFrame:
     """Explode rectangle regions into (region cols…, cell) cover rows.
 
     Mirrors kernels.cells.cover_rect with sequence()+explode so the whole
-    cover generation stays in the JVM. With ``salt`` > 1 each cover cell is
-    replicated into N salted keys (cell*salt+i) for skew spreading — pages
-    must then join on (cell*salt + pmod(hash, salt)).
+    cover generation stays in the JVM.
     """
     nx, ny = cells.dims(res)
     iy0 = sqlgen.lat_cell_row_sql('maxlat', res)
     iy1 = sqlgen.lat_cell_row_sql('minlat', res)
     ix0 = sqlgen.lng_cell_col_sql('minlng', res)
     ix1 = sqlgen.lng_cell_col_sql('maxlng', res)
-    out = (
+    return (
         regions
         .withColumn('_iy', F.explode(F.expr(f'sequence({iy0}, {iy1})')))
         .withColumn('_ix', F.explode(F.expr(f'sequence({ix0}, {ix1})')))
         .withColumn('cell', F.expr(f'_iy * {nx} + _ix'))
         .drop('_iy', '_ix')
     )
-    if salt > 1:
-        out = (
-            out
-            .withColumn('_s', F.explode(F.expr(f'sequence(0, {salt - 1})')))
-            .withColumn('cell', F.expr(f'cell * {salt} + _s'))
-            .drop('_s')
-        )
-    return out
 
 
-def pip_join_rect(pages: DataFrame, regions: DataFrame, res: int,
-                  broadcast_cover: bool = True, salt: int = 1) -> DataFrame:
+def pip_join_rect(pages: DataFrame, regions: DataFrame, res: int) -> DataFrame:
     """pages ⨝ rectangle-regions, point-in-rect.
 
     Returns one row per (page, containing region). The equi-join on cell
     prunes candidates; the BETWEEN refine is exact. Each page has exactly
     one cell and cover cells are distinct per region, so no dedup is needed.
     """
-    pages_c = assign_cell(pages, res)
-    if salt > 1:
-        pages_c = pages_c.withColumn(
-            'cell', F.expr(f'cell * {salt} + pmod(hash(lat, lng), {salt})'))
-    cover = cover_cells_rect(regions, res, salt=salt)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
-    joined = pages_c.join(cover, 'cell')
+    joined = assign_cell(pages, res).join(
+        F.broadcast(cover_cells_rect(regions, res)), 'cell')
     return joined.where(
         (F.col('lat') >= F.col('minlat')) & (F.col('lat') <= F.col('maxlat')) &
         (F.col('lng') >= F.col('minlng')) & (F.col('lng') <= F.col('maxlng')))
 
 
-def pip_join_wkb(pages: DataFrame, regions: DataFrame, res: int,
-                 broadcast_cover: bool = True) -> DataFrame:
+def pip_join_wkb(pages: DataFrame, regions: DataFrame, res: int) -> DataFrame:
     """pages ⨝ arbitrary-polygon regions (WKB), exact point-in-polygon.
 
     regions: (region_id, wkb binary, minlat, minlng, maxlat, maxlng).
@@ -138,11 +116,8 @@ def pip_join_wkb(pages: DataFrame, regions: DataFrame, res: int,
             out[idx] = geometry.points_in_wkb(lng_v[idx], lat_v[idx], buf)
         return pd.Series(out)
 
-    pages_c = assign_cell(pages, res)
-    cover = cover_cells_rect(regions, res)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
-    joined = pages_c.join(cover, 'cell')
+    joined = assign_cell(pages, res).join(
+        F.broadcast(cover_cells_rect(regions, res)), 'cell')
     # cheap bbox refine first (codegen), exact PIP only on bbox survivors
     joined = joined.where(
         (F.col('lat') >= F.col('minlat')) & (F.col('lat') <= F.col('maxlat')) &
@@ -150,15 +125,15 @@ def pip_join_wkb(pages: DataFrame, regions: DataFrame, res: int,
     return joined.where(_pip(F.col('lat'), F.col('lng'), F.col('wkb')))
 
 
-def pip_count_by_region(pages: DataFrame, regions: DataFrame, res: int,
-                        **kwargs) -> DataFrame:
+def pip_count_by_region(pages: DataFrame, regions: DataFrame,
+                        res: int) -> DataFrame:
     """Pages-per-region — the flagship slice query (SURVEY.md §7.1 step 3).
 
     The groupBy after the refine is a partial-aggregated (map-side combine)
     count keyed by region_id — tiny shuffle even at full scale.
     """
     return (
-        pip_join_rect(pages, regions, res, **kwargs)
+        pip_join_rect(pages, regions, res)
         .groupBy('region_id')
         .agg(F.count('*').alias('page_count'))
     )

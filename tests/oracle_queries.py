@@ -108,14 +108,6 @@ def q_pip_polygon_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count('*').alias('page_count')))
 
 
-def q_rasterize_pixel_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed scanline rasterization: burned-pixel count per region on
-    the 512×256 global grid (WKB rect regions through the generic burn path;
-    oracle = closed-form pixel-center interval arithmetic)."""
-    polys = synth.regions_rect_wkb(spark, N_REGIONS)
-    return raster_ops.rasterize_counts(spark, TILE_FP, polys, tile_size=64)
-
-
 VECTOR_MASK = (-60.0, -40.0, 60.0, 40.0)  # (minx, miny, maxx, maxy)
 N_FEATURES = 400
 
@@ -304,7 +296,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     'vector_scan': q_vector_scan,
     'pip_count_by_region': q_pip_count_by_region,
     'knn_ring': q_knn_ring,
-    'rasterize_pixel_count': q_rasterize_pixel_count,
     'zonal_stats': q_zonal_stats,
     'tiff_meta': q_tiff_meta,
     'polygonize_components': q_polygonize_components,
@@ -352,17 +343,9 @@ def _region_pixel_intervals() -> dict:
     }
 
 
-def _rasterize_oracle_sql() -> str:
-    iv = _region_pixel_intervals()
-    n = (f'(GREATEST({iv["i_hi"]} - {iv["i_lo"]} + 1, 0) * '
-         f'GREATEST({iv["j_hi"]} - {iv["j_lo"]} + 1, 0))')
-    return ('SELECT region_id, {n} AS n_pixels FROM range({cnt}) t(region_id) '
-            'WHERE {n} > 0').format(n=n, cnt=N_REGIONS)
-
-
 def _zonal_oracle_sql() -> str:
     """Per-zone stats truth: enumerate each rect's pixel interval (same
-    closed-form inverse-affine arithmetic as the rasterize oracle) and
+    closed-form inverse-affine arithmetic as the polygonize oracle) and
     aggregate the (17i + 31j) mod 97 band in exact integer arithmetic."""
     iv = _region_pixel_intervals()
     return (
@@ -488,7 +471,6 @@ def oracle_sql() -> dict[str, str]:
                      {k: k for k in ('clat', 'clng', 'halfh', 'halfw')}),
                  **{k: v for k, v in sqlgen.region_cols_sql('region_id').items()
                     if k in ('clat', 'clng', 'halfh', 'halfw')}),
-        'rasterize_pixel_count': _rasterize_oracle_sql(),
         'vector_scan': (
             'WITH f AS (SELECT fid, {lat} AS lat, {lng} AS lng, '
             'fid * 1.5E0 AS volume, '

@@ -77,9 +77,9 @@ def test_pip_join_is_broadcast_and_codegen(spark, pages_parquet):
 
 
 def test_sliced_scan_no_single_partition_exchange(spark):
-    """Slicing must not funnel the scan through one task: no global
-    (partition-less) window, no SinglePartition exchange; result identical
-    to the naive ordered slice."""
+    """A bounded slice must not funnel the scan through one task: no
+    global (partition-less) window, no SinglePartition exchange; result
+    identical to the naive ordered slice."""
     from buzzard_spark.operators import vector_source
 
     feats = synth.features(spark, 400)
@@ -230,9 +230,9 @@ def raster_inputs(spark, tmp_path_factory):
 
 def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
                                                    monkeypatch):
-    """rasterize, rasterize_counts, zonal_stats and polygonize's trace run
-    as FlatMapGroupsInArrow over exactly their kernel's columns; no
-    pandas grouped map is left on these paths."""
+    """rasterize, zonal_stats and polygonize's trace run as
+    FlatMapGroupsInArrow over exactly their kernel's columns; no pandas
+    grouped map is left on these paths."""
     from buzzard_spark import session
     from buzzard_spark.operators import raster_ops
 
@@ -252,8 +252,6 @@ def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
     assert raster_ops.polygonize(spark, fp, back, tile_size=6).count() > 0
     for plan, inputs in (
             (_plan(tiles), _WINDOW + ['wkb']),
-            (_plan(raster_ops.rasterize_counts(spark, fp, polys, 6)),
-             _WINDOW + ['region_id', 'wkb']),
             (_plan(raster_ops.zonal_stats(spark, fp, polys, tile_size=6)),
              _WINDOW + ['region_id', 'wkb']),
             (traced[-1], ['component_id', 'y', 'xs', 'xe'])):

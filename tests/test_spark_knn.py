@@ -10,6 +10,7 @@ from buzzard_spark import synth
 from buzzard_spark.functions import sqlgen
 from buzzard_spark.kernels import cells
 from buzzard_spark.operators import knn as knn_ops
+from buzzard_spark.operators import spatial_join
 
 
 def test_cell_kernel_matches_sql(spark):
@@ -24,6 +25,41 @@ def test_cell_kernel_matches_sql(spark):
         F.expr(sqlgen.cell_sql('lat', 'lng', 9))).collect()])
     truth = cells.cell_of(lat, lng, 9)
     assert (got == truth).all()
+
+
+def test_cover_cells_rect_matches_kernel(spark):
+    """spatial_join.cover_cells_rect (sequence()+explode in Catalyst) ==
+    cells.cover_rect (numpy), cell set per region: 300 seeded rects plus
+    the whole globe, a degenerate point, rects touching each pole and
+    each side of ±180, and a cell-aligned rect. A cover too wide would
+    change no join result (the refine is exact), so only this pins it."""
+    rng = np.random.RandomState(11)
+    lat0 = rng.rand(300) * 180 - 90
+    lng0 = rng.rand(300) * 360 - 180
+    rects = [(a, b, min(a + h, 90.0), min(b + w, 180.0)) for a, b, h, w in
+             zip(lat0, lng0, rng.rand(300) * 12, rng.rand(300) * 24)]
+    rects += [(-90.0, -180.0, 90.0, 180.0), (12.3, 45.6, 12.3, 45.6),
+              (80.0, -10.0, 90.0, 10.0), (-90.0, 100.0, -70.0, 120.0),
+              (-5.0, 170.0, 5.0, 180.0), (-5.0, -180.0, 5.0, -170.0),
+              (0.0, 0.0, 45.0, 90.0)]
+    regions = spark.createDataFrame(
+        [(i, *map(float, r)) for i, r in enumerate(rects)],
+        'region_id long, minlat double, minlng double, maxlat double, '
+        'maxlng double')
+    covers = None
+    for res in (0, 2, 4, 7):
+        c = spatial_join.cover_cells_rect(regions, res).select(
+            F.lit(res).alias('res'), 'region_id', 'cell')
+        covers = c if covers is None else covers.unionByName(c)
+    got = covers.toPandas().sort_values(['res', 'region_id', 'cell'])
+    for res in (0, 2, 4, 7):
+        g = got[got['res'] == res]
+        want = [np.sort(cells.cover_rect(*r, res)) for r in rects]
+        have = np.split(g['cell'].to_numpy(), np.searchsorted(
+            g['region_id'].to_numpy(), np.arange(1, len(rects))))
+        bad = [rid for rid, (h, w) in enumerate(zip(have, want))
+               if not np.array_equal(h, w)]
+        assert not bad, (res, [rects[rid] for rid in bad[:5]])
 
 
 def test_ring_contains_center_and_wraps():
@@ -129,53 +165,30 @@ def test_knn_matches_bruteforce(spark, n_pages, n_q, k, res, k_ring, kind):
         ('dist2', DoubleType()), ('rnk', IntegerType())]
 
 
-def test_knn_distributed_fallback_no_driver_collect(spark, monkeypatch):
-    """Sparse corpus, every query unsettled, broadcast threshold too small
-    to admit the driver collect (VERDICT r3 #7): the ring must widen
-    DISTRIBUTIVELY (eventually to full grid cover) and still equal brute
-    force exactly.
-
-    Mixed case: with ``broadcast_rows`` between 1 and the batch size the
-    first round runs distributed and its unsettled remainder (the polar
-    queries) takes the broadcast brute pass."""
-    n_pages, n_q, k, res = 6, 40, 4, 4
-    pages = _pages(spark, n_pages)
-    queries = _queries(spark, 'hashed', n_q)
-    out = knn_ops.knn(pages, queries, k, res, k_ring=1, broadcast_rows=1)
-    _assert_bruteforce(out.collect(), pages, queries, k)
-
-    brute_batches = []
-    brute = knn_ops._brute
-
-    def spy(pages, batch, k):
-        brute_batches.append(batch.count())
-        return brute(pages, batch, k)
-
-    monkeypatch.setattr(knn_ops, '_brute', spy)
-    pages = _pages(spark, 3000)
-    queries = _queries(spark, 'hashed', 37).unionByName(
-        _queries(spark, 'polar', 3).withColumn('qid', F.col('qid') + 37))
-    out = knn_ops.knn(pages, queries, k, 2, k_ring=1, broadcast_rows=10)
-    _assert_bruteforce(out.collect(), pages, queries, k)
-    assert len(brute_batches) == 1 and 1 <= brute_batches[0] <= 10
-
-
-def test_knn_small_and_bulk_paths_agree(spark):
-    """The driver path (batch within ``broadcast_rows``) and the
-    distributed path return the same rows under the same schema: qid and
-    page_id keep their input types (string, int here), rnk stays int."""
+def test_knn_keeps_input_key_types(spark):
+    """qid and page_id keep their input types (string, int here), rnk
+    stays int."""
     pages = _pages(spark, 400).withColumn('page_id',
                                           F.col('page_id').cast('int'))
     queries = _queries(spark, 'hashed', 12).withColumn(
         'qid', F.concat(F.lit('q'), F.col('qid').cast('string')))
-    small = knn_ops.knn(pages, queries, 5, 4, k_ring=1)
-    bulk = knn_ops.knn(pages, queries, 5, 4, k_ring=1, broadcast_rows=1)
-    assert small.schema == bulk.schema
-    assert [(f.name, f.dataType) for f in small.schema] == [
+    out = knn_ops.knn(pages, queries, 5, 4, k_ring=1)
+    assert [(f.name, f.dataType) for f in out.schema] == [
         ('qid', StringType()), ('page_id', IntegerType()),
         ('dist2', DoubleType()), ('rnk', IntegerType())]
-    assert sorted(small.collect()) == sorted(bulk.collect())
-    assert small.count() == 12 * 5
+    assert out.count() == 12 * 5
+
+
+def test_knn_rejects_batch_over_cap(spark, monkeypatch):
+    """A batch above ``MAX_QUERIES`` raises instead of being served; a
+    batch at the cap runs."""
+    monkeypatch.setattr(knn_ops, 'MAX_QUERIES', 5)
+    pages = _pages(spark, 200)
+    with pytest.raises(ValueError, match='MAX_QUERIES=5'):
+        knn_ops.knn(pages, _queries(spark, 'hashed', 6), 3, 4, k_ring=1)
+    queries = _queries(spark, 'hashed', 5)
+    out = knn_ops.knn(pages, queries, 3, 4, k_ring=1)
+    _assert_bruteforce(out.collect(), pages, queries, 3)
 
 
 @pytest.mark.parametrize('res, k_ring', [
@@ -185,7 +198,7 @@ def test_knn_small_and_bulk_paths_agree(spark):
     (0, 5),     # covers the whole grid
 ])
 def test_driver_rings_match_ring_cells(spark, res, k_ring):
-    """cells.ring on the driver (the small-batch ring side) and
+    """cells.ring on the driver (the ring side) and
     ring_cells in SQL give the same cell set per query: at the poles,
     at the antimeridian, on the clamped grid edges, and when the ring is
     wider than the grid."""
@@ -216,8 +229,6 @@ def test_assign_cell_null_coords_drop_from_join(spark):
     """NULL lat/lng rows must vanish through the cell equi-join (inner-join
     null semantics), not be seated at a valid cell (ADVICE r3: the round-3
     coalesce(expr, 0) silently mapped them to cell 0)."""
-    from buzzard_spark.operators import spatial_join
-
     pages = spark.createDataFrame(
         [(1, 89.9, -179.9), (2, None, 10.0), (3, 10.0, None)],
         'page_id long, lat double, lng double')

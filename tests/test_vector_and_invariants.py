@@ -1,6 +1,5 @@
-"""Vector-scan semantics + the two north-rule invariants:
-byte-identical text per url across the pipeline, and salted joins
-producing bit-identical results to unsalted ones."""
+"""Vector-scan semantics + the north-rule invariant: byte-identical text
+per url across the pipeline."""
 
 import numpy as np
 import pytest
@@ -63,8 +62,11 @@ def test_scan_features_projection_mask_clip_slice(spark):
 
     sliced = vector_source.scan_features(
         feats, mask=mask, slicing=slice(3, 10)).collect()
-    truth_fids = sorted(r['fid'] for r in masked)[3:10]
-    assert sorted(r['fid'] for r in sliced) == truth_fids
+    truth_fids = sorted(r['fid'] for r in masked)
+    assert sorted(r['fid'] for r in sliced) == truth_fids[3:10]
+    open_ended = vector_source.scan_features(
+        feats, mask=mask, slicing=slice(3, None)).collect()
+    assert sorted(r['fid'] for r in open_ended) == truth_fids[3:]
 
 
 def test_text_byte_identity_through_pipeline(spark, tmp_path):
@@ -86,14 +88,3 @@ def test_text_byte_identity_through_pipeline(spark, tmp_path):
              for r in spark.read.parquet(out_dir).collect()}
     assert after == baseline
 
-
-def test_salted_join_bit_identical(spark):
-    """Skew mitigation must never change results: salted cover join ==
-    unsalted cover join, row for row."""
-    pages = synth.synthetic_pages(spark, 5000)
-    regions = synth.regions(spark, 100)
-    plain = spatial_join.pip_join_rect(pages, regions, 4, salt=1) \
-        .select('page_id', 'region_id').collect()
-    salted = spatial_join.pip_join_rect(pages, regions, 4, salt=8) \
-        .select('page_id', 'region_id').collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
