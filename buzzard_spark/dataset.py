@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import json
 import os
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -32,86 +34,30 @@ from buzzard_spark.session import local_frame
 from buzzard_spark.sources.snapshot_table import SnapshotTable
 
 
-class _QueueDataIterator:
+def _prefetch(get, fps, max_queue_size):
     """Ordered pull-stream with bounded async prefetch (queue_data).
 
-    Production starts LAZILY on the first ``__next__`` — an iterator that
-    is never consumed never runs a Spark action — and ``close()`` (also
-    called by ``__del__`` / GC and usable from a ``contextlib.closing``
-    block) cancels outstanding production unconditionally, whether or not
-    iteration ever started (round 2 started the producer thread eagerly
-    and only a *started* consumer generator's ``finally`` could stop it).
+    A generator, so production starts on the first ``next`` (an iterator
+    that is never consumed runs no Spark action), and ``close()`` — also
+    run when the generator is dropped or collected — stops it whether or
+    not iteration started, cancelling the reads not yet begun; a read in
+    flight finishes in the background. At most ``max_queue_size + 1``
+    ``get`` calls are queued or running on one worker thread. A failed
+    read re-raises at its place in the order. Close belongs to the
+    consuming thread: a generator cannot be closed while another thread
+    is inside ``next``.
     """
-
-    def __init__(self, proxy, fps, max_queue_size, kwargs):
-        import queue as _queue
-        import threading
-        self._proxy = proxy
-        self._fps = fps
-        self._kwargs = kwargs
-        self._q = _queue.Queue(maxsize=max_queue_size)
-        self._stop = threading.Event()
-        self._thread = None
-        self._END = object()
-
-    def _produce(self):
-        import queue as _queue
-        q, stop = self._q, self._stop
-
-        def _put(item):
-            while not stop.is_set():
-                try:
-                    q.put(item, timeout=0.1)
-                    return True
-                except _queue.Full:
-                    continue
-            return False
-
-        try:
-            for fp in self._fps:
-                if stop.is_set():
-                    return
-                arr = self._proxy.get_data(fp, **self._kwargs)
-                if not _put(arr):
-                    return
-        except BaseException as exc:  # re-raised on the consumer side
-            _put(exc)
-            return
-        _put(self._END)
-
-    def __iter__(self):
-        return self
-
-    def __next__(self):
-        if self._stop.is_set():
-            raise StopIteration
-        if self._thread is None:
-            import threading
-            self._thread = threading.Thread(target=self._produce, daemon=True)
-            self._thread.start()
-        item = self._q.get()
-        if item is self._END:
-            self._stop.set()
-            raise StopIteration
-        if isinstance(item, BaseException):
-            self._stop.set()
-            raise item
-        return item
-
-    def close(self):
-        self._stop.set()
-        # unblock a producer waiting on a full queue
-        try:
-            while True:
-                self._q.get_nowait()
-        except Exception:
-            pass
-
-    def __del__(self):
-        try:
-            self.close()
-        except Exception:
-            pass
+    pool = ThreadPoolExecutor(max_workers=1)
+    futures = deque()
+    try:
+        for fp in fps:
+            futures.append(pool.submit(get, fp))
+            if len(futures) > max_queue_size:
+                yield futures.popleft().result()
+        while futures:
+            yield futures.popleft().result()
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
 
 
 class RasterProxy:
@@ -166,12 +112,13 @@ class RasterProxy:
     def queue_data(self, fps, max_queue_size=5, **kwargs):
         """Ordered pull-stream with bounded async prefetch — the
         reference's queue_data (buzzard/_a_async_raster.py:23-80,144-160):
-        a producer thread runs the NEXT windows' Spark actions while the
-        consumer processes the current array, overlapping compute with
-        consumption; the bounded queue is the backpressure (production
-        stalls when the consumer lags) and closing/dropping the iterator
-        cancels outstanding production."""
-        return _QueueDataIterator(self, fps, max_queue_size, kwargs)
+        a generator that keeps the next ``max_queue_size`` windows' reads
+        queued on one worker thread while the consumer processes the
+        current array, overlapping compute with consumption; the bound is
+        the backpressure (no read is queued until the consumer pulls) and
+        closing/dropping the generator cancels the queued reads."""
+        return _prefetch(lambda fp: self.get_data(fp, **kwargs), fps,
+                         max_queue_size)
 
     def iter_data(self, fps, **kwargs):
         """Ordered window iteration (prefetch pipelined via queue_data)."""
@@ -188,24 +135,20 @@ class RecipeProxy(RasterProxy):
     def __init__(self, spark, root, fp, tile_size, compute, dataset,
                  primitives=None, context_px=0, nodata=None):
         super().__init__(spark, root, fp, tile_size, nodata)
-        self._compute = compute
+        # a recipe without primitives computes from its tile footprint alone
+        self._compute = compute if primitives else \
+            (lambda tile_fp, window_fp, prims: compute(tile_fp))
         self._dataset = dataset
         self._primitives = primitives or {}
         self._context_px = context_px
 
     def ensure(self):
-        if self._primitives:
-            prim_tiles = {
-                name: self._dataset[key].tiles()
-                for name, key in self._primitives.items()}
-            df, n = recipe.derived_tile_compute(
-                self.spark, self.fp, self.tile_size, self._compute,
-                self.root, prim_tiles, context_px=self._context_px,
-                fill=self.nodata if self.nodata is not None else 0)
-        else:
-            df, n = recipe.cached_tile_compute(
-                self.spark, self.fp, self.tile_size, self._compute, self.root)
-        return n
+        prim_tiles = {name: self._dataset[key].tiles()
+                      for name, key in self._primitives.items()}
+        return recipe.derived_tile_compute(
+            self.spark, self.fp, self.tile_size, self._compute, self.root,
+            prim_tiles, context_px=self._context_px,
+            fill=self.nodata if self.nodata is not None else 0)[1]
 
     def get_data(self, fp=None, **kwargs):
         self.ensure()
@@ -227,46 +170,33 @@ class NumpyRasterProxy(RasterProxy):
         self._arr = array
 
     def tiles(self):
-        import pandas as pd
-
-        from buzzard_spark.operators.recipe import (DATA_TILE_SCHEMA,
-                                                    tile_rows)
         rows = []
         fp, tile_size = self.fp, self.tile_size
         for ty, y0 in enumerate(range(0, fp.rsizey, tile_size)):
             for tx, x0 in enumerate(range(0, fp.rsizex, tile_size)):
                 sub = self._arr[y0:y0 + tile_size, x0:x0 + tile_size]
-                rows.extend(tile_rows(
+                rows.extend(recipe.tile_rows(
                     {'tile_y': ty, 'tile_x': tx, 'y0': y0, 'x0': x0,
                      'h': sub.shape[0], 'w': sub.shape[1]}, sub))
-        cols = [f.split()[0] for f in DATA_TILE_SCHEMA.split(', ')]
+        cols = [f.split()[0] for f in recipe.DATA_TILE_SCHEMA.split(', ')]
         return local_frame(self.spark, pd.DataFrame(rows, columns=cols),
-                           DATA_TILE_SCHEMA)
+                           recipe.DATA_TILE_SCHEMA)
 
     def set_data(self, array, fp=None, mask=None, channel=0):
         """Masked in-place write into the wrapped array (aligned window)."""
         fp = self.fp if fp is None else fp
         assert fp.same_grid(self.fp), 'set_data expects an aligned window'
         x0, y0 = (int(v) for v in self.fp.spatial_to_raster(fp.tl))
-        iy0, ix0 = max(0, y0), max(0, x0)
-        iy1 = min(self.fp.rsizey, y0 + fp.rsizey)
-        ix1 = min(self.fp.rsizex, x0 + fp.rsizex)
-        if iy0 >= iy1 or ix0 >= ix1:
-            return
-        sub = (slice(iy0 - y0, iy1 - y0), slice(ix0 - x0, ix1 - x0))
         arr = np.asarray(array)
-        m = np.asarray(mask, dtype=bool)[sub] if mask is not None else \
-            np.ones((iy1 - iy0, ix1 - ix0), dtype=bool)
+        m = None if mask is None else np.asarray(mask, dtype=bool)
         if self._arr.ndim == 2:
-            src = arr[sub] if arr.ndim == 2 else arr[sub + (0,)]
-            view = self._arr[iy0:iy1, ix0:ix1]
-            view[m] = src[m].astype(self._arr.dtype, copy=False)
-            return
-        planes = {int(channel): arr} if arr.ndim == 2 else \
-            {c: arr[:, :, c] for c in range(arr.shape[2])}
+            planes = {None: arr if arr.ndim == 2 else arr[:, :, 0]}
+        else:
+            planes = {int(channel): arr} if arr.ndim == 2 else \
+                {c: arr[:, :, c] for c in range(arr.shape[2])}
         for c, plane in planes.items():
-            view = self._arr[iy0:iy1, ix0:ix1, c]
-            view[m] = plane[sub][m].astype(self._arr.dtype, copy=False)
+            dst = self._arr if c is None else self._arr[:, :, c]
+            recipe.paste(dst, 0, 0, plane, y0, x0, m)
 
 
 class VectorProxy:

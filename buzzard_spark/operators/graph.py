@@ -21,6 +21,29 @@ from pyspark.sql import functions as F
 from buzzard_spark.session import local_frame
 
 
+def union_find(pairs) -> dict:
+    """In-memory union-find over (a, b) pairs → {node: root} for every
+    node of a pair. Union-by-min with path compression: each root is its
+    set's min id, exactly the star rounds' canonical labeling."""
+    parent: dict = {}
+
+    def find(a):
+        root = a
+        while parent[root] != root:
+            root = parent[root]
+        while parent[a] != root:
+            parent[a], a = root, parent[a]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def connected_components(nodes: DataFrame, edges: DataFrame,
                          cache_registry: list,
                          id_col: str = 'node',
@@ -81,25 +104,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # collect job of the round-5 form
     small_rows = e.limit(small_graph_edges + 1).collect()
     if len(small_rows) <= small_graph_edges:
-        parent: dict = {}
-
-        def find(a):
-            root = a
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(a, a) != a:
-                parent[a], a = root, parent[a]
-            return root
-
-        for row in small_rows:
-            ra, rb = find(row['u']), find(row['v'])
-            if ra != rb:
-                # union-by-min: the surviving root is the set's min id,
-                # exactly the star rounds' canonical labeling
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        labels = [(n, find(n)) for n in parent]
+        labels = list(union_find(
+            (row['u'], row['v']) for row in small_rows).items())
         spark = nodes.sparkSession
         star = local_frame(spark, labels, 'u long, comp long')
         out = (nodes.select(F.col(id_col).alias('u'))

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from buzzard_spark.kernels import remap as remap_k
-from buzzard_spark.operators.recipe import DATA_TILE_SCHEMA
+from buzzard_spark.operators.recipe import (DATA_TILE_SCHEMA, decode, paste,
+                                            tile_rows)
 from buzzard_spark.sources.snapshot_table import SnapshotTable
 
 
@@ -95,16 +96,8 @@ def get_data(spark: SparkSession, tiles: DataFrame, raster_fp,
     for row in rows:
         if row['channel'] not in order:
             continue
-        ci = order.index(row['channel'])
-        arr = np.frombuffer(bytes(row['data']),
-                            dtype=np.dtype(row['dtype'])).reshape(
-                                row['h'], row['w'])
-        ty0, tx0 = row['y0'] - y0, row['x0'] - x0
-        sy0, sx0 = max(0, ty0), max(0, tx0)
-        sy1 = min(h, ty0 + row['h'])
-        sx1 = min(w, tx0 + row['w'])
-        sample[sy0:sy1, sx0:sx1, ci] = arr[sy0 - ty0:sy1 - ty0,
-                                           sx0 - tx0:sx1 - tx0]
+        paste(sample[:, :, order.index(row['channel'])], y0, x0,
+              decode(row), row['y0'], row['x0'])
     flat = flat_int or (channels is None and len(order) == 1)
     src_nodatas = [_src_nodata(ch) for ch in order]
     if flat:
@@ -144,35 +137,16 @@ def set_data(spark: SparkSession, cache_root: str, raster_fp,
         (F.col('y0') < y0 + h) & (F.col('y0') + F.col('h') > y0) &
         F.col('channel').isin(list(planes)))
 
-    if mask is None:
-        mask = np.ones(tuple(fp.shape), dtype=bool)
-    payload = {'planes': planes, 'mask': mask, 'x0': x0, 'y0': y0}
-
     def _apply(key, pdf):
         out = []
         for _, row in pdf.iterrows():
-            plane = payload['planes'][int(row['channel'])]
-            arr = np.frombuffer(bytes(row['data']),
-                                dtype=np.dtype(row['dtype'])).reshape(
-                                    row['h'], row['w']).copy()
-            ty0, tx0 = int(row['y0']), int(row['x0'])
-            iy0 = max(ty0, payload['y0'])
-            ix0 = max(tx0, payload['x0'])
-            iy1 = min(ty0 + int(row['h']), payload['y0'] + plane.shape[0])
-            ix1 = min(tx0 + int(row['w']), payload['x0'] + plane.shape[1])
-            sub_m = payload['mask'][iy0 - payload['y0']:iy1 - payload['y0'],
-                                    ix0 - payload['x0']:ix1 - payload['x0']]
-            sub_a = plane[iy0 - payload['y0']:iy1 - payload['y0'],
-                          ix0 - payload['x0']:ix1 - payload['x0']]
-            view = arr[iy0 - ty0:iy1 - ty0, ix0 - tx0:ix1 - tx0]
-            view[sub_m] = sub_a[sub_m].astype(arr.dtype, copy=False)
-            out.append({
-                'tile_y': int(row['tile_y']), 'tile_x': int(row['tile_x']),
-                'channel': int(row['channel']),
-                'y0': ty0, 'x0': tx0, 'h': int(row['h']), 'w': int(row['w']),
-                'dtype': str(row['dtype']),
-                'data': bytearray(arr.tobytes()),
-            })
+            arr = decode(row).copy()
+            paste(arr, int(row['y0']), int(row['x0']),
+                  planes[int(row['channel'])], y0, x0, mask)
+            out.extend(tile_rows(
+                {k: int(row[k]) for k in
+                 ('tile_y', 'tile_x', 'channel', 'y0', 'x0', 'h', 'w')},
+                arr))
         return pd.DataFrame(out)
 
     updated = (touched.groupBy('tile_y', 'tile_x', 'channel')

@@ -539,7 +539,7 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
     (per-tile union-find + fragment CC), per-chain assembly, and the
     pipeline's one reliable checkpoint. ``edges_px`` must be the
     persisted finished edge rows (eid, ax/ay/bx/by, ea, eb, la, lb)."""
-    from buzzard_spark.operators.graph import connected_components
+    from buzzard_spark.operators.graph import connected_components, union_find
 
     if edges_px.isEmpty():
         release_blocks([edges_px, pixels] + registry)
@@ -567,25 +567,8 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
     cross = pairs_t.where(F.col('_ta') != F.col('_tb')).select('id_a', 'id_b')
 
     def _uf(key, pdf):
-        parent = {}
-
-        def find(a):
-            root = a
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(a, a) != a:
-                parent[a], a = root, parent[a]
-            return root
-
-        for a, b in zip(pdf['id_a'].tolist(), pdf['id_b'].tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # union-by-min: root is the set's min eid
-        eids = sorted(set(pdf['id_a'].tolist()) | set(pdf['id_b'].tolist()))
-        return pd.DataFrame({'eid': eids,
-                             'lroot': [find(e) for e in eids]})
+        roots = union_find(zip(pdf['id_a'].tolist(), pdf['id_b'].tolist()))
+        return pd.DataFrame(list(roots.items()), columns=['eid', 'lroot'])
 
     local = intra.groupBy('_ta').applyInPandas(_uf, 'eid long, lroot long')
     # eid = (origin pixel)*4 + dir is unique per edge row by construction

@@ -233,24 +233,12 @@ class SnapshotTable:
 
     def _empty_like(self, spark: SparkSession,
                     manifests: list[dict]) -> DataFrame:
-        """Schema-preserving empty DataFrame for a prune-everything read.
-
-        Prefers the recorded manifest schema (present from round 4 on,
-        valid even when every snapshot appended zero data files — ADVICE
-        r3: indexing files[0] raised IndexError on an empty-DataFrame
-        append); falls back to scanning one existing data file with an
-        all-false filter for pre-schema manifests."""
+        """Schema-preserving empty DataFrame for a prune-everything read,
+        from the latest manifest's recorded schema (valid even when every
+        snapshot appended zero data files)."""
         from pyspark.sql.types import StructType
-        for m in reversed(manifests):
-            if m.get('schema'):
-                return local_frame(
-                    spark, [], StructType.fromJson(json.loads(m['schema'])))
-        for m in reversed(manifests):
-            if m['files']:
-                any_path = os.path.join(self.root, m['files'][0]['path'])
-                return spark.read.parquet(any_path).where(F.lit(False))
-        raise FileNotFoundError(
-            'no schema recorded and no data files in any valid snapshot')
+        return local_frame(spark, [], StructType.fromJson(
+            json.loads(manifests[-1]['schema'])))
 
     def _file_ok(self, f: dict) -> bool:
         path = os.path.join(self.root, f['path'])
@@ -260,12 +248,9 @@ class SnapshotTable:
             return False
         if st.st_size != f['bytes']:
             return False
-        md5 = f.get('md5')
-        if md5 is None:          # manifest predates checksums: size only
-            return True
         cache_key = (path, st.st_mtime_ns, st.st_size)
         if cache_key not in self._verified:
-            self._verified[cache_key] = _md5_file(path) == md5
+            self._verified[cache_key] = _md5_file(path) == f['md5']
         return self._verified[cache_key]
 
     def _valid_manifests(self, start_id: int | None = None) -> list[dict]:
@@ -284,10 +269,9 @@ class SnapshotTable:
             # dropped too: its data rows would otherwise stay visible while
             # resume recomputes (and re-appends) the same keys — duplicates.
             # Dropping keeps the invariant exact; the work is simply redone.
-            if m.get('key_cols') and m.get('keys_path') is not None:
-                kd = os.path.join(self.root, m['keys_path'])
-                if not os.path.isfile(os.path.join(kd, '_SUCCESS')):
-                    continue
+            if m['keys_path'] is not None and not os.path.isfile(
+                    os.path.join(self.root, m['keys_path'], '_SUCCESS')):
+                continue
             good.append(m)
         return good
 
@@ -364,30 +348,13 @@ class SnapshotTable:
                        key_cols: list[str]) -> DataFrame | None:
         """Distinct already-computed keys as a DataFrame — a distributed
         union of the per-snapshot parquet sidecars; no key row ever
-        touches the driver. Pre-round-4 manifests with an inline ``keys``
-        JSON list are still honored (small by construction — they were
-        driver-collected when written)."""
-        paths = []
-        legacy_rows = []
-        for m in self._valid_manifests():
-            if m.get('key_cols') != key_cols:
-                continue
-            if m.get('keys_path'):
-                paths.append(os.path.join(self.root, m['keys_path']))
-            elif m.get('keys'):
-                legacy_rows.extend(tuple(k) for k in m['keys'])
-        parts = []
-        if paths:
-            parts.append(spark.read.parquet(*paths).select(*key_cols))
-        if legacy_rows:
-            parts.append(local_frame(spark, legacy_rows, ', '.join(
-                f'{c} long' for c in key_cols)))
-        if not parts:
+        touches the driver."""
+        paths = [os.path.join(self.root, m['keys_path'])
+                 for m in self._valid_manifests()
+                 if m['key_cols'] == key_cols]
+        if not paths:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
+        return spark.read.parquet(*paths).select(*key_cols).distinct()
 
     def pending(self, todo: DataFrame, key_cols: list[str]) -> DataFrame:
         """Anti-join: rows of `todo` whose keys are not yet in the table.

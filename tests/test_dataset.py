@@ -40,6 +40,14 @@ def test_raster_create_open_get_set(ds, spark, tmp_path):
     with pytest.raises(ValueError, match='registered'):
         ds.create_raster('dem', root, fp)
 
+    # a window past the raster edge writes exactly its 15x15 overlap
+    before = ds['dem'].get_data()
+    ds['dem'].set_data(np.full((20, 20), 7.0, 'float32'),
+                       fp.clip(0, 0, 10, 10).dilate(5))
+    after = ds['dem'].get_data()
+    assert (after[:15, :15] == 7.0).all()
+    assert (after != before).sum() == 15 * 15
+
 
 def test_recipe_chain(ds, spark, tmp_path):
     fp = Footprint(tl=(0, 60), size=(60, 60), rsize=(60, 60))
@@ -125,6 +133,13 @@ def test_numpy_wrap_writable(ds, spark):
     assert (out[15:25, 15:25] == 7.0).all()
     assert out.sum() == 7.0 * 100
     assert (arr == out).all()
+    # a window past the raster edge writes exactly its 15x15 overlap
+    before = arr.copy()
+    ds['memw'].set_data(np.full((20, 20), 7.0, 'float32'),
+                        fp.clip(0, 0, 10, 10).dilate(5))
+    assert (arr[:15, :15] == 7.0).all()
+    assert (arr != before).sum() == 15 * 15
+    assert (ds['memw'].get_data() == arr).all()
     # fill() goes through the same in-RAM path
     ds['memw'].fill(1.0)
     assert (arr == 1.0).all()
