@@ -1,16 +1,13 @@
-"""Distributed connected components — alternating large-star / small-star.
+"""Connected components on the driver, for graphs of up to ``MAX_EDGES``
+edges.
 
-The two-phase star algorithm (public: Kiveris et al., "Connected Components
-in MapReduce and Beyond", SoCC'14 — also GraphFrames' default strategy)
-converges in O(log² n) rounds of plain DataFrame joins and aggregations.
-No graph state ever touches the driver (unlike a driver-side union-find,
-which at web scale would pull millions of node tuples through one process);
-every round shuffles the current edge set keyed by node id, so AQE handles
-skewed hubs like any other hot key.
+The deduplicated edge set is fetched in one bounded Spark job and resolved
+with an in-memory union-find; the labels return as a broadcast local
+relation joined to the node set. An edge set above the cap raises instead
+of pulling an unbounded graph through the driver.
 
-Used by ``raster_ops.polygonize`` (border-run adjacency of tile masks —
-a continent-scale component spans thousands of tiles) and
-``raster_ops.vectorize_lines`` (line-fragment chains across tiles).
+Used by ``raster_ops.polygonize`` (border-run adjacency of tile masks)
+and ``raster_ops.vectorize_lines`` (line-fragment chains across tiles).
 """
 
 from __future__ import annotations
@@ -20,11 +17,14 @@ from pyspark.sql import functions as F
 
 from buzzard_spark.session import local_frame
 
+# largest deduplicated edge set resolved on the driver (~3 MB of pairs)
+MAX_EDGES = 200_000
+
 
 def union_find(pairs) -> dict:
     """In-memory union-find over (a, b) pairs → {node: root} for every
     node of a pair. Union-by-min with path compression: each root is its
-    set's min id, exactly the star rounds' canonical labeling."""
+    set's min id."""
     parent: dict = {}
 
     def find(a):
@@ -45,134 +45,25 @@ def union_find(pairs) -> dict:
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
-                         cache_registry: list,
-                         id_col: str = 'node',
-                         max_iters: int = 25,
-                         small_graph_edges: int = 200_000) -> DataFrame:
+                         id_col: str = 'node') -> DataFrame:
     """nodes: one row per node (isolated nodes allowed). edges: undirected
     (id_a, id_b). Returns (id_col, comp) with comp = min node id of the
-    component — the same canonical labeling a union-find would produce.
+    component. Persists nothing.
 
-    Raises RuntimeError if the star graph has not stabilized within
-    max_iters rounds (components would be silently under-merged otherwise);
-    the bound is O(log² n), so 25 covers any graph this engine can hold.
-
-    Composition (VERDICT r3 #2 — one reliable checkpoint per entry query):
-    the round blocks are appended to ``cache_registry``, the labeling
-    returns lazily (already materialized through the final round's
-    localCheckpoint), and the CALLER releases everything once its result
-    no longer reads them — the downstream operator's one reliable
-    checkpoint, or ``session.release_blocks`` after a collect. Round 3
-    wrote a file-backed checkpoint here AND another in the caller, the
-    measured cause of the dedup_clusters regression.
-
-    Small-graph fast path: after the deduped edge set materializes, its
-    COUNT (one cached-scan scalar — never rows) decides the strategy. At
-    or below ``small_graph_edges`` the edges are collected and resolved
-    with a driver union-find, labels broadcast back — a bounded driver
-    trip (≤ ~3 MB at the default cap) that replaces O(log² n) shuffle
-    rounds whose per-job scheduling latency dominates small graphs.
-    Above the cap nothing graph-sized ever touches the driver (the star
-    rounds below). Both paths emit the identical min-member labeling
-    (pinned by pytest).
-    """
-    # localCheckpoint (eager=False) after every round: persist alone does
-    # NOT truncate the logical plan, so an iterative join would hand
-    # Catalyst an exponentially deeper plan each round — analysis time
-    # explodes long before the data does. Lazy checkpoints + a signature
-    # action only every OTHER round: two rounds of star joins materialize
-    # in a single job, halving the per-round job-scheduling latency that
-    # dominated round-2's dedup_clusters / polygonize_components walls.
-    # the INITIAL edge set materializes EAGERLY: each star round reads `e`
-    # through several plan branches (the bidirectional union + the join
-    # back), and with a lazy checkpoint those branches race — concurrently
-    # recomputing the upstream plan 2-3× before the cache fills. Harmless
-    # when the input is checkpoint files, ruinous when the caller composes
-    # a full raster pipeline underneath. One eager job computes the
-    # upstream exactly once; later rounds read cached blocks (cheap to
-    # race) and stay lazy so two rounds share one job.
-    e = (edges
-         .where(F.col('id_a') != F.col('id_b'))
-         .select(F.greatest('id_a', 'id_b').alias('u'),
-                 F.least('id_a', 'id_b').alias('v'))
-         .distinct().localCheckpoint(eager=True))
-    rounds = [e]
-
-    # one cached limit-collect both DECIDES the strategy and DELIVERS the
-    # rows (the bfs/sssp fast-path pattern): <= cap rows came back means
-    # the whole edge set came back — replaces the separate count job +
-    # collect job of the round-5 form
-    small_rows = e.limit(small_graph_edges + 1).collect()
-    if len(small_rows) <= small_graph_edges:
-        labels = list(union_find(
-            (row['u'], row['v']) for row in small_rows).items())
-        spark = nodes.sparkSession
-        star = local_frame(spark, labels, 'u long, comp long')
-        out = (nodes.select(F.col(id_col).alias('u'))
-               .join(F.broadcast(star), 'u', 'left')
-               .select(F.col('u').alias(id_col),
-                       F.coalesce('comp', 'u').alias('comp')))
-        cache_registry.append(e)
-        return out
-
-    def _round(e):
-        # large-star: every neighbor larger than u links to min(N(u) ∪ {u});
-        # emitted pairs are (larger, smaller) by construction
-        bi = e.unionByName(
-            e.select(F.col('v').alias('u'), F.col('u').alias('v')))
-        lmins = (bi.groupBy('u').agg(F.min('v').alias('_mv'))
-                 .select('u', F.least('_mv', F.col('u')).alias('m')))
-        large = (bi.join(lmins, 'u')
-                 .where(F.col('v') > F.col('u'))
-                 .select(F.col('v').alias('u'), F.col('m').alias('v'))
-                 .where(F.col('u') != F.col('v')))
-        # small-star on the large-star output (edges already u > v):
-        # all smaller neighbors (and u itself) link to the minimum neighbor
-        smins = large.groupBy('u').agg(F.min('v').alias('m'))
-        small = (large.join(smins, 'u')
-                 .select(F.col('v').alias('u'), F.col('m').alias('v'))
-                 .unionByName(smins.select('u', F.col('m').alias('v')))
-                 .where(F.col('u') != F.col('v')))
-        e_new = (small
-                 .select(F.greatest('u', 'v').alias('u'),
-                         F.least('u', 'v').alias('v'))
-                 .distinct().localCheckpoint(eager=False))
-        rounds.append(e_new)
-        return e_new
-
-    def _sig2(e_mid, e_new):
-        # ONE action returns the signatures of two consecutive rounds: the
-        # union materializes e_mid's lazy checkpoint once (e_new reads it
-        # back), so convergence is still judged on CONSECUTIVE rounds (the
-        # sound fixpoint criterion — no 2-cycle ambiguity) at half the jobs.
-        # pmod keeps the checksum sum far from BIGINT overflow (ANSI mode).
-        tagged = (e_mid.select(F.lit(0).alias('_r'), 'u', 'v')
-                  .unionByName(e_new.select(F.lit(1).alias('_r'), 'u', 'v')))
-        rows = {r['_r']: (r['n'], r['h']) for r in tagged.groupBy('_r').agg(
-            F.count('*').alias('n'),
-            F.sum(F.expr('pmod(xxhash64(u, v), 1000000007)')).alias('h')
-        ).collect()}
-        empty = (0, None)
-        return rows.get(0, empty), rows.get(1, empty)
-
-    converged = False
-    done = 0
-    while done < max_iters:
-        e_mid = _round(e)
-        e = _round(e_mid)
-        done += 2
-        s_mid, s_new = _sig2(e_mid, e)
-        if s_new == s_mid:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f'connected_components did not converge in {max_iters} rounds')
-    # converged star: every non-root node has exactly one edge to its root
-    star = e.groupBy('u').agg(F.min('v').alias('comp'))
-    out = (nodes.select(F.col(id_col).alias('u'))
-           .join(star, 'u', 'left')
-           .select(F.col('u').alias(id_col),
-                   F.coalesce('comp', 'u').alias('comp')))
-    cache_registry.extend(rounds)
-    return out
+    One job fetches at most ``MAX_EDGES + 1`` deduplicated edges; more
+    than ``MAX_EDGES`` raises ``ValueError``."""
+    rows = (edges
+            .where(F.col('id_a') != F.col('id_b'))
+            .select(F.greatest('id_a', 'id_b').alias('u'),
+                    F.least('id_a', 'id_b').alias('v'))
+            .distinct().limit(MAX_EDGES + 1).collect())
+    if len(rows) > MAX_EDGES:
+        raise ValueError(
+            f'connected_components resolves at most graph.MAX_EDGES = '
+            f'{MAX_EDGES} distinct edges on the driver; got more')
+    labels = list(union_find((r['u'], r['v']) for r in rows).items())
+    roots = local_frame(nodes.sparkSession, labels, 'u long, comp long')
+    return (nodes.select(F.col(id_col).alias('u'))
+            .join(F.broadcast(roots), 'u', 'left')
+            .select(F.col('u').alias(id_col),
+                    F.coalesce('comp', 'u').alias('comp')))

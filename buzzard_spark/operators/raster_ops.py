@@ -343,17 +343,15 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
     block-materialized by its convergence action) returns as-is. The
     CALLER releases the registry once its result no longer reads them —
     ``vectorize_lines``' single reliable checkpoint, or
-    ``session.release_blocks`` after a collect (the contract of
-    ``graph.connected_components``)."""
+    ``session.release_blocks`` after a collect."""
     tiles = mask_tiles.select(*_WINDOW, 'mask')
     for _ in range(0, max_iters, _THIN_SUB // 2):
-        # TWO full iterations materialize per convergence job (the CC
-        # sig-every-other-round trick): the checked sum counts ONLY the
-        # last full iteration's deletions — zero means a full iteration
-        # deleted nothing, the sound fixpoint criterion. Worst case runs
-        # one extra iteration at the fixpoint, which deletes nothing
-        # (thinning is idempotent there), so the output mask is
-        # bit-identical at half the jobs.
+        # TWO full iterations materialize per convergence job: the checked
+        # sum counts ONLY the last full iteration's deletions — zero means
+        # a full iteration deleted nothing, the sound fixpoint criterion.
+        # Worst case runs one extra iteration at the fixpoint, which
+        # deletes nothing (thinning is idempotent there), so the output
+        # mask is bit-identical at half the jobs.
         tiles = _thin_block(tiles, tile_size).localCheckpoint(eager=False)
         cache_registry.append(tiles)
         if not tiles.agg(F.sum('_chg')).collect()[0][0]:
@@ -509,22 +507,22 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     Scale shape (mirrors ``polygonize`` — nothing mask-sized on driver):
 
     0. distributed thinning (``thin_tiles``, the reference's ``skm.thin``
-       preprocessing — round 2 assumed already-thin input and produced
-       denser linework than buzzard on blob masks),
+       preprocessing; unthinned blob masks would yield denser linework
+       than buzzard),
     1. per-tile pixel-graph edges with the 2×2-square collapse, from one
        2-px halo indexed by the tile grid (``_tile_halo_pixels_h`` →
        ``_edges_with_links``; exact for any tile size, 1 included),
     2. node degrees = groupBy count; edges sharing a degree-2 node belong
        to one chain; intra-tile fragments contract in a per-tile
-       union-find, then distributed connected components over the fragment
+       union-find, then connected components over the cross-tile fragment
        graph (junction nodes split chains exactly like the kernel's walk),
     3. one reducer per chain orders its edges into the polyline —
        O(chain length), the longest single polyline is the natural lower
        bound for any vectorizer's output row.
     """
-    # one reliable checkpoint for the WHOLE pipeline (VERDICT r3 #2):
-    # thin_tiles and the fragment CC register their round blocks here
-    # instead of writing their own file-backed checkpoints
+    # one reliable checkpoint for the WHOLE pipeline: thin_tiles
+    # registers its round blocks here instead of writing its own
+    # file-backed checkpoints
     registry: list = []
     mask_tiles = thin_tiles(spark, mask_tiles, registry, tile_size)
     pixels = _tile_halo_pixels_h(mask_tiles, 2, tile_size)
@@ -551,13 +549,13 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
                                      F.max('eid').alias('e2'))
             .where(F.col('d') == 2))
     pairs = deg2.select(F.col('e1').alias('id_a'), F.col('e2').alias('id_b'))
-    # two-level chain resolution (round 3; round 2 pushed EVERY edge id
-    # through the global CC): pairs whose two edges originate in the same
-    # tile are contracted by a per-tile union-find first, so the global CC
-    # sees one node per intra-tile chain FRAGMENT (O(border crossings +
-    # junctions) nodes instead of O(set pixels)). lroot = min eid of the
-    # local fragment, so the global component min — and therefore the
-    # emitted chain_id — is bit-identical to the uncontracted labeling.
+    # two-level chain resolution: pairs whose two edges originate in the
+    # same tile are contracted by a per-tile union-find first, so the
+    # global CC sees one node per intra-tile chain FRAGMENT (O(border
+    # crossings + junctions) nodes instead of O(set pixels)). lroot = min
+    # eid of the local fragment, so the global component min — and
+    # therefore the emitted chain_id — is bit-identical to the
+    # uncontracted labeling.
     tkey = ('((({e} DIV 4) DIV 2097152) DIV {ts}) * 4194304 + '
             '((({e} DIV 4) % 2097152) DIV {ts})')
     pairs_t = (pairs
@@ -585,8 +583,7 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
                              F.col('lroot').alias('_lb')), 'id_b')
               .select(F.col('_la').alias('id_a'), F.col('_lb').alias('id_b')))
     comp = connected_components(
-        m.select(F.col('lroot')).distinct(), crossm, id_col='lroot',
-        cache_registry=registry)
+        m.select(F.col('lroot')).distinct(), crossm, id_col='lroot')
     chains = (m.join(comp, 'lroot')
               .select('eid', F.col('comp').alias('chain_id')))
     tagged = edges_px.join(chains, 'eid')
@@ -635,7 +632,7 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
     from buzzard_spark.session import checkpoint_release
     out = tagged.groupBy('chain_id').applyInPandas(_assemble, LINE_SCHEMA)
     # the pipeline's ONE reliable checkpoint: materialize the linework,
-    # release the persisted edge/fragment tables plus every thinning/CC
+    # release the persisted edge/fragment tables plus every thinning
     # round block registered above (cache-lifetime contract)
     return checkpoint_release(out, [edges_px, m, pixels] + registry)
 
@@ -674,12 +671,13 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
     component_id = packed min (tile_y, tile_x, lab) node of the component
     (stable, but not dense).
 
-    Scale shape (nothing graph- or mask-sized touches the driver):
+    Scale shape (nothing mask-sized touches the driver):
 
     1. per-tile run-length labeling (``tile_runs``, one mapInArrow),
-    2. cross-tile connectivity = distributed connected components over the
-       border-run adjacency graph (operators.graph, large-star/small-star
-       joins) — replaces a driver-side union-find,
+    2. cross-tile connectivity = connected components over the border-run
+       adjacency graph (``graph.connected_components``: one bounded fetch
+       of the border edges, resolved on the driver; O(total tile-border
+       length) edges, capped at ``graph.MAX_EDGES``),
     3. one reducer per component traces rings directly from its runs
        (``kernels.raster.trace_rings_from_runs``, applyInArrow over the
        component's (y, xs, xe) columns): O(perimeter) memory — the
@@ -691,7 +689,7 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
     runs = tile_runs(mask_tiles).withColumn('node', F.expr(_NODE_PACK)) \
         .persist()
     # Keep this check: it is the single job that materializes ``runs``
-    # before the border joins and CC rounds scan it. Without it the four
+    # before the border joins scan it. Without it the four
     # border-join scans start as concurrent jobs on the cold cache and
     # each recomputes ``tile_runs`` (measured on a 4-vCPU host: 4
     # single-task jobs of 0.12-0.16 s each, all labeling the same tiles).
@@ -699,12 +697,8 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
         runs.unpersist()
         return local_frame(spark, [], POLY_SCHEMA)
     edges = _border_edges(runs.drop('node'), tile_size)
-    # composed CC: round blocks go to the registry; the single reliable
-    # checkpoint at the end of this function releases them (VERDICT r3 #2)
-    registry: list = []
     labels = connected_components(
-        runs.select('node').distinct(), edges, id_col='node',
-        cache_registry=registry)
+        runs.select('node').distinct(), edges, id_col='node')
     tagged = (runs.join(labels, 'node')
               .select(F.col('comp').alias('component_id'), 'y', 'xs', 'xe'))
 
@@ -735,8 +729,8 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
 
     from buzzard_spark.session import checkpoint_release
     out = tagged.groupBy('component_id').applyInArrow(_trace, POLY_SCHEMA)
-    # materialize the polygons, release the persisted run table + CC rounds
-    return checkpoint_release(out, [runs] + registry)
+    # materialize the polygons, release the persisted run table
+    return checkpoint_release(out, [runs])
 
 
 def zonal_stats(spark: SparkSession, fp, polys: DataFrame,

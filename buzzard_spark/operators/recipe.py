@@ -132,11 +132,15 @@ def derived_tile_compute(
                 prim_union.unionByName(tagged)
         t = F.broadcast(pending).alias('t')
         p = prim_union.alias('p')
-        cand = t.join(p, (
+        hits = t.join(p, (
             (F.col('p.px0') < F.col('t.x0') + F.col('t.w') + ctx) &
             (F.col('p.px0') + F.col('p.pw') > F.col('t.x0') - ctx) &
             (F.col('p.py0') < F.col('t.y0') + F.col('t.h') + ctx) &
             (F.col('p.py0') + F.col('p.ph') > F.col('t.y0') - ctx)))
+        # one primitive-less row per pending tile, so a tile that no
+        # primitive tile overlaps still reaches _compute (all-fill windows)
+        # and completes instead of staying pending forever
+        cand = hits.unionByName(pending, allowMissingColumns=True)
 
     gt = tuple(float(v) for v in fp.gt)
     prim_names = sorted(primitives)

@@ -10,8 +10,11 @@ snapshot layer with the properties the north rule needs:
   ``CURRENT`` moves forward via temp+rename — readers never see a
   half-written snapshot and no commit silently replaces another.
 - **per-partition lineage + metrics**: each manifest records, per data
-  file, rows / bytes / per-column min-max (from the parquet footers — free)
-  plus the job-level metrics observed via ``Observation`` during the write.
+  file, rows / bytes / md5, plus the job-level metrics observed via
+  ``Observation`` during the write.
+- **one schema per table**: an append whose field names or types differ
+  from the table's recorded schema raises ``ValueError`` (nullability is
+  ignored), so every snapshot reads back with the same columns.
 - **resumability**: tile-keyed tables record the distinct key set per
   snapshot in an executor-written parquet SIDECAR (``_keys/snap-*``; the
   manifest holds only its path — keys never transit the driver);
@@ -38,8 +41,7 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-from buzzard_spark.session import local_frame
+from pyspark.sql.types import StructType
 
 
 def _md5_file(path: str) -> str:
@@ -48,6 +50,11 @@ def _md5_file(path: str) -> str:
         for chunk in iter(lambda: f.read(1 << 20), b''):
             h.update(chunk)
     return h.hexdigest()
+
+
+def _field_types(schema) -> dict:
+    """{field name: type string} — a schema with nullability dropped."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 class SnapshotTable:
@@ -76,13 +83,10 @@ class SnapshotTable:
         with open(os.path.join(self.manifest_dir, f'snap-{snap_id}.json')) as f:
             return json.load(f)
 
-    def manifests(self, start_id: int | None = None) -> list[dict]:
-        """All manifests in a lineage chain, oldest first — the CURRENT
-        chain by default, or the chain rooted at ``start_id`` (time
-        travel: ``read(as_of=…)``)."""
+    def manifests(self) -> list[dict]:
+        """All manifests of the CURRENT lineage chain, oldest first."""
         out = []
-        snap_id = (self.current_snapshot_id() if start_id is None
-                   else start_id)
+        snap_id = self.current_snapshot_id()
         while snap_id is not None:
             m = self._load_manifest(snap_id)
             out.append(m)
@@ -104,8 +108,19 @@ class SnapshotTable:
         key_cols: tile/content keys recorded for resume anti-joins.
         observe: extra named aggregate Columns measured during the write
         (runs through Spark's Observation API — one pass, no extra job).
+
+        Raises ``ValueError`` when df's field names or types differ from
+        the table's recorded schema (nullability ignored).
         """
         parent = self.current_snapshot_id()
+        if parent is not None:
+            have = StructType.fromJson(
+                json.loads(self._load_manifest(parent)['schema']))
+            if _field_types(df.schema) != _field_types(have):
+                raise ValueError(
+                    f'append schema {df.schema.simpleString()} differs '
+                    f'from the table schema {have.simpleString()} '
+                    f'under {self.root}')
         # data lands in a writer-unique dir: two concurrent appends can
         # never clobber each other's files (the manifest references it)
         token = uuid.uuid4().hex[:8]
@@ -120,41 +135,17 @@ class SnapshotTable:
         df.write.mode('overwrite').parquet(data_dir)
 
         def _file_entry(path: str) -> dict:
-            meta = pq.read_metadata(path)
-            col_stats = {}
-            schema_names = meta.schema.names
-            mins = {c: None for c in schema_names}
-            maxs = {c: None for c in schema_names}
-            for rg in range(meta.num_row_groups):
-                group = meta.row_group(rg)
-                for ci in range(group.num_columns):
-                    col = group.column(ci)
-                    stats = col.statistics
-                    name_c = col.path_in_schema
-                    if stats is None or not stats.has_min_max:
-                        continue
-                    mn, mx = stats.min, stats.max
-                    if isinstance(mn, bytes) or isinstance(mx, bytes):
-                        continue
-                    if mins[name_c] is None or mn < mins[name_c]:
-                        mins[name_c] = mn
-                    if maxs[name_c] is None or mx > maxs[name_c]:
-                        maxs[name_c] = mx
-            for c in schema_names:
-                if mins.get(c) is not None:
-                    col_stats[c] = [mins[c], maxs[c]]
             return {
                 'path': os.path.relpath(path, self.root),
-                'rows': meta.num_rows,
+                'rows': pq.read_metadata(path).num_rows,
                 'bytes': os.path.getsize(path),
                 'md5': _md5_file(path),
-                'column_minmax': col_stats,
             }
 
-        # the commit tail (footer stats + md5 per data file) fans out over
-        # a thread pool: it was a measured fixed 0.5-0.9 s sequential cost
-        # on the flagship's 8→32 scaling leg (VERDICT r3 #9) — md5 releases
-        # the GIL, so threads give near-linear speedup across files
+        # the commit tail (footer row count + md5 per data file) fans out
+        # over a thread pool: sequentially it was a measured fixed 0.5-0.9 s
+        # per commit of ~32 files; md5 releases the GIL, so threads give
+        # near-linear speedup across files
         from concurrent.futures import ThreadPoolExecutor
         paths = [os.path.join(data_dir, name)
                  for name in sorted(os.listdir(data_dir))
@@ -166,12 +157,11 @@ class SnapshotTable:
             files = [_file_entry(p) for p in paths]
 
         # resume keys live in an executor-written parquet SIDECAR, not the
-        # manifest (VERDICT r3 #5: round 3 collected every distinct key to
-        # the driver and embedded the list as JSON — at the 100-TB design
-        # point that is millions of tile keys through one process and a
-        # manifest that no longer parses cheaply). The manifest records
-        # only the sidecar path; resume anti-joins against the parquet
-        # distributively and the driver never touches a key row.
+        # manifest: embedded as JSON, every distinct key would pass through
+        # the driver, and at the 100-TB design point millions of tile keys
+        # make a manifest that no longer parses cheaply. The manifest
+        # records only the sidecar path; resume anti-joins against the
+        # parquet distributively and the driver never touches a key row.
         keys_path = None
         if key_cols:
             spark = df.sparkSession
@@ -219,27 +209,6 @@ class SnapshotTable:
 
     # -- read / resume -----------------------------------------------------------
 
-    @staticmethod
-    def _reader(spark: SparkSession, manifests: list[dict]):
-        """Parquet reader for a manifest set — schema EVOLUTION support:
-        when the chain's recorded schemas differ (a later append added a
-        column), turn on mergeSchema so old files surface the new column
-        as NULL instead of the scan silently binding to whichever file's
-        footer Spark sampled first. The footer-merge cost is paid only on
-        actually-evolved chains (schema equality is the common case)."""
-        if len({m['schema'] for m in manifests}) > 1:
-            return spark.read.option('mergeSchema', 'true')
-        return spark.read
-
-    def _empty_like(self, spark: SparkSession,
-                    manifests: list[dict]) -> DataFrame:
-        """Schema-preserving empty DataFrame for a prune-everything read,
-        from the latest manifest's recorded schema (valid even when every
-        snapshot appended zero data files)."""
-        from pyspark.sql.types import StructType
-        return local_frame(spark, [], StructType.fromJson(
-            json.loads(manifests[-1]['schema'])))
-
     def _file_ok(self, f: dict) -> bool:
         path = os.path.join(self.root, f['path'])
         try:
@@ -253,7 +222,7 @@ class SnapshotTable:
             self._verified[cache_key] = _md5_file(path) == f['md5']
         return self._verified[cache_key]
 
-    def _valid_manifests(self, start_id: int | None = None) -> list[dict]:
+    def _valid_manifests(self) -> list[dict]:
         """Manifests whose files all pass size + md5 integrity; a snapshot
         with a corrupted/missing file is dropped from the lineage (its keys
         become incomplete → recomputed), matching the reference's
@@ -262,7 +231,7 @@ class SnapshotTable:
         caught, not just truncation). Each file is hashed once per process
         (mtime/size-keyed cache)."""
         good = []
-        for m in self.manifests(start_id=start_id):
+        for m in self.manifests():
             if not all(self._file_ok(f) for f in m['files']):
                 continue
             # a keyed snapshot whose key sidecar is missing/incomplete is
@@ -276,70 +245,21 @@ class SnapshotTable:
         return good
 
     def read(self, spark: SparkSession,
-             dedupe_keys: list[str] | None = None,
-             as_of: int | None = None,
-             minmax_filter: dict | None = None) -> DataFrame:
+             dedupe_keys: list[str] | None = None) -> DataFrame:
         """Union of all valid snapshots. With ``dedupe_keys``, later
-        snapshots win per key (read-modify-write / set_data semantics).
-
-        ``as_of``: time travel — read the table as of snapshot id N
-        (snapshots appended later are invisible), the Iceberg-style
-        reproducibility contract a resumable pipeline needs.
-
-        ``minmax_filter``: ``{col: (lo, hi)}`` — manifest-level file
-        skipping: a data file whose recorded column min/max range does not
-        intersect [lo, hi] is never handed to the parquet scan. This is
-        the scan-planning layer ABOVE parquet row-group pruning: at 100 TB
-        the manifest prunes thousands of files driver-side before Spark
-        lists a single one. Incompatible with ``dedupe_keys`` (skipping a
-        file could hide the LATEST version of a key whose new value moved
-        outside the range, resurrecting a stale row — the engine refuses
-        rather than guessing)."""
-        if as_of is not None:
-            # walk the chain rooted at the requested snapshot when that
-            # manifest exists (CURRENT may still lag a raced commit by
-            # one); otherwise filter the current chain by id
-            if os.path.exists(os.path.join(self.manifest_dir,
-                                           f'snap-{as_of}.json')):
-                manifests = self._valid_manifests(start_id=as_of)
-            else:
-                manifests = [m for m in self._valid_manifests()
-                             if m['snapshot_id'] <= as_of]
-        else:
-            manifests = self._valid_manifests()
+        snapshots win per key (read-modify-write / set_data semantics)."""
+        manifests = self._valid_manifests()
         if not manifests:
-            raise FileNotFoundError(
-                f'no valid snapshots under {self.root}'
-                + (f' at snapshot {as_of}' if as_of is not None else ''))
-        if minmax_filter is not None:
-            if dedupe_keys is not None:
-                raise ValueError(
-                    'minmax_filter cannot combine with dedupe_keys: file '
-                    'skipping may hide the latest version of a key')
-            paths = []
-            for m in manifests:
-                for f in m['files']:
-                    keep = True
-                    for c, (lo, hi) in minmax_filter.items():
-                        st = (f.get('column_minmax') or {}).get(c)
-                        if st is not None and (st[0] > hi or st[1] < lo):
-                            keep = False
-                            break
-                    if keep:
-                        paths.append(os.path.join(self.root, f['path']))
-            if not paths:
-                return self._empty_like(spark, manifests)
-            return self._reader(spark, manifests).parquet(*paths)
+            raise FileNotFoundError(f'no valid snapshots under {self.root}')
         if dedupe_keys is None:
             dirs = [os.path.join(self.root, m['data_dir']) for m in manifests]
-            return self._reader(spark, manifests).parquet(*dirs)
+            return spark.read.parquet(*dirs)
         from pyspark.sql.window import Window
         parts = None
         for m in manifests:
             df = (spark.read.parquet(os.path.join(self.root, m['data_dir']))
                   .withColumn('_snap', F.lit(m['snapshot_id'])))
-            parts = df if parts is None else parts.unionByName(
-                df, allowMissingColumns=True)
+            parts = df if parts is None else parts.unionByName(df)
         w = Window.partitionBy(*dedupe_keys).orderBy(F.col('_snap').desc())
         return (parts.withColumn('_rn', F.row_number().over(w))
                 .where(F.col('_rn') == 1).drop('_rn', '_snap'))
@@ -361,7 +281,7 @@ class SnapshotTable:
 
         Plain left_anti equi-join — AQE broadcasts the done side when it is
         small and falls back to a shuffle join when it is millions of tile
-        keys (the round-3 forced broadcast assumed driver-resident keys)."""
+        keys (a forced broadcast would pull every key through the driver)."""
         done = self.completed_keys(todo.sparkSession, key_cols)
         if done is None:
             return todo

@@ -76,3 +76,31 @@ def test_derived_multi_primitive(spark, fp, tmp_path):
         context_px=0)
     got = assemble(out_df.collect(), fp)
     assert np.array_equal(got, _src(fp) * 2.0)
+
+
+def test_derived_tiles_outside_every_primitive_complete(spark, tmp_path):
+    """Output tiles that no primitive tile overlaps are computed over
+    all-``fill`` windows and recorded, so a second call computes nothing:
+    a 60×60 recipe (tile 30) over a 30×30 primitive at its top-left."""
+    big = Footprint(tl=(0, 60), size=(60, 60), rsize=(60, 60))
+    small = Footprint(tl=(0, 60), size=(30, 30), rsize=(30, 30))
+    src_root = str(tmp_path / 'src')
+    out_root = str(tmp_path / 'out')
+    cached_tile_compute(spark, small, 30, _src, src_root)
+    prims = {'dsm': SnapshotTable(src_root).read(spark)}
+
+    def _plus1(tile_fp, window_fp, prims):
+        return prims['dsm'] + 1.0
+
+    _, n1 = derived_tile_compute(spark, big, 30, _plus1, out_root, prims,
+                                 fill=-5.0)
+    assert n1 == 4
+    out_df, n2 = derived_tile_compute(spark, big, 30, _plus1, out_root,
+                                      prims, fill=-5.0)
+    assert n2 == 0
+    rows = out_df.collect()
+    assert sorted((r['tile_y'], r['tile_x']) for r in rows) == [
+        (0, 0), (0, 1), (1, 0), (1, 1)]
+    truth = np.full((60, 60), -4.0)
+    truth[:30, :30] = _src(small) + 1.0
+    assert np.array_equal(assemble(rows, big), truth)

@@ -1,9 +1,10 @@
-"""connected_components (large-star/small-star) vs a reference union-find."""
+"""connected_components vs a reference union-find."""
 
 import numpy as np
+import pytest
 
+from buzzard_spark.operators import graph
 from buzzard_spark.operators.graph import connected_components
-from buzzard_spark.session import release_blocks
 
 
 def _truth(n_nodes, edges):
@@ -26,12 +27,10 @@ def _truth(n_nodes, edges):
     return {i: min(members) for members in comp.values() for i in members}
 
 
-def _labels(nodes, edges, **kwargs):
-    """Collect the labeling, then release the round blocks: the result
-    reads them, so the release must come after the collect."""
-    registry: list = []
-    rows = connected_components(nodes, edges, registry, **kwargs).collect()
-    release_blocks(registry)
+def _labels(nodes, edges):
+    """Collect the labeling; connected_components persists nothing."""
+    rows = connected_components(nodes, edges).collect()
+    assert not dict(nodes.sparkSession.sparkContext._jsc.getPersistentRDDs())
     return rows
 
 
@@ -53,8 +52,7 @@ def test_cc_random_graphs(spark):
 
 
 def test_cc_long_chain(spark):
-    """A path of 300 nodes — the worst case for plain min-propagation
-    (O(diameter) rounds); the star algorithm must converge in O(log²)."""
+    """A path of 300 nodes: one component spanning the whole id range."""
     n = 300
     edges = [(i, i + 1) for i in range(n - 1)]
     _run(spark, n, edges)
@@ -74,17 +72,16 @@ def test_cc_star_and_cliques(spark):
     _run(spark, 80, edges)
 
 
-def test_cc_small_graph_fastpath_equals_star_rounds(spark):
-    """connected_components' bounded driver union-find (small graphs) must
-    emit the identical min-member labeling as the distributed star rounds
-    on the same graph."""
-    rng = np.random.RandomState(7)
-    n = 300
-    edges = [(int(a), int(b)) for a, b in rng.randint(0, n, (400, 2))]
-    nodes_df = spark.createDataFrame([(i,) for i in range(n)], 'node long')
-    edges_df = spark.createDataFrame(edges, 'id_a long, id_b long')
-    fast = {(r['node'], r['comp']) for r in _labels(nodes_df, edges_df)}
-    star = {(r['node'], r['comp'])
-            for r in _labels(nodes_df, edges_df, small_graph_edges=0)}
-    assert fast == star
-    assert len(fast) == n
+def test_cc_above_max_edges_raises(spark, monkeypatch):
+    """More than MAX_EDGES distinct edges raise instead of pulling the
+    graph through the driver; duplicates and self-loops do not count."""
+    monkeypatch.setattr(graph, 'MAX_EDGES', 3)
+    nodes = spark.createDataFrame([(i,) for i in range(6)], 'node long')
+    at_cap = spark.createDataFrame(
+        [(0, 1), (1, 0), (1, 2), (2, 3), (4, 4)], 'id_a long, id_b long')
+    got = {r['node']: r['comp'] for r in _labels(nodes, at_cap)}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5}
+    over = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (4, 5)], 'id_a long, id_b long')
+    with pytest.raises(ValueError, match='MAX_EDGES'):
+        connected_components(nodes, over)
