@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from buzzard_spark.session import local_frame
+from buzzard_spark.session import fetch, local_frame
 
 # largest deduplicated edge set resolved on the driver (~3 MB of pairs)
 MAX_EDGES = 200_000
@@ -50,18 +50,15 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     (id_a, id_b). Returns (id_col, comp) with comp = min node id of the
     component. Persists nothing.
 
-    One job fetches at most ``MAX_EDGES + 1`` deduplicated edges; more
-    than ``MAX_EDGES`` raises ``ValueError``."""
-    rows = (edges
-            .where(F.col('id_a') != F.col('id_b'))
-            .select(F.greatest('id_a', 'id_b').alias('u'),
-                    F.least('id_a', 'id_b').alias('v'))
-            .distinct().limit(MAX_EDGES + 1).collect())
-    if len(rows) > MAX_EDGES:
-        raise ValueError(
-            f'connected_components resolves at most graph.MAX_EDGES = '
-            f'{MAX_EDGES} distinct edges on the driver; got more')
-    labels = list(union_find((r['u'], r['v']) for r in rows).items())
+    One job fetches the deduplicated edges (``session.fetch``); more
+    than ``MAX_EDGES`` raise ``ValueError``."""
+    pdf = fetch(edges
+                .where(F.col('id_a') != F.col('id_b'))
+                .select(F.greatest('id_a', 'id_b').alias('u'),
+                        F.least('id_a', 'id_b').alias('v'))
+                .distinct(), MAX_EDGES, 'graph.MAX_EDGES')
+    labels = list(union_find(zip(pdf['u'].tolist(),
+                                 pdf['v'].tolist())).items())
     roots = local_frame(nodes.sparkSession, labels, 'u long, comp long')
     return (nodes.select(F.col(id_col).alias('u'))
             .join(F.broadcast(roots), 'u', 'left')

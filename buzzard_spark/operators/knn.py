@@ -2,8 +2,8 @@
 
 Plan shape for a batch of at most ``MAX_QUERIES`` queries (serving):
 
-1. one Arrow trip fetches the batch (``limit(MAX_QUERIES + 1)``, one
-   job); a larger batch raises ``ValueError`` — split the query table;
+1. one Arrow trip fetches the batch (``session.fetch``, one job); a
+   larger batch raises ``ValueError`` — split the query table;
 2. the driver builds the ring side — every query's ring-``k_ring`` cells
    (``cells.cell_of`` + ``cells.ring``: longitude wraps, latitude clips)
    — as an Arrow-built local relation (:func:`driver_rings`). Spark sees
@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from buzzard_spark.kernels import cells
 from buzzard_spark.operators.spatial_join import assign_cell
-from buzzard_spark.session import local_frame
+from buzzard_spark.session import fetch, local_frame
 
 DIST2 = ('(lat - qlat) * (lat - qlat) + (lng - qlng) * (lng - qlng)')
 OUT_COLS = ('qid', 'page_id', 'dist2', 'rnk')
@@ -123,16 +123,12 @@ def knn(pages: DataFrame, queries: DataFrame, k: int, res: int,
     """queries(qid, qlat, qlng) × pages(page_id, lat, lng) → top-k rows
     (qid, page_id, dist2, rnk). Exact — ring join + guarantee + fallback.
 
-    One limit-fetch bounds the driver trip: a batch of more than
+    One capped fetch bounds the driver trip: a batch of more than
     ``MAX_QUERIES`` queries raises ``ValueError`` (module docstring).
     """
     spark = queries.sparkSession
     q = queries.select('qid', 'qlat', 'qlng')
-    batch = q.limit(MAX_QUERIES + 1).toPandas()
-    if len(batch) > MAX_QUERIES:
-        raise ValueError(
-            f'knn serves at most MAX_QUERIES={MAX_QUERIES} queries per '
-            f'call; split the query table into batches of that size')
+    batch = fetch(q, MAX_QUERIES, 'knn.MAX_QUERIES')
 
     rings = driver_rings(spark, batch, q.schema, res, k_ring)
     topk_df = _topk(ring_join(rings, assign_cell(pages, res)), k) \

@@ -29,6 +29,11 @@ stages that receive only the columns their kernel reads, as Arrow tables:
   exact for every tile size, 1 included. These stages still run as
   pandas UDFs.
 
+``polygonize`` and ``vectorize_lines`` end the same way: the shapes are
+fetched to the driver (``session.fetch``, at most ``MAX_SHAPES`` rows,
+more raise ``ValueError``), every block the pipeline persisted is released
+in a ``finally``, and the result returns as a local relation.
+
 Tile rows: (tile_y int, tile_x int, y0 int, x0 int, h int, w int,
 mask binary) — mask is a packed bool numpy buffer.
 """
@@ -42,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from buzzard_spark.kernels import geometry, raster
-from buzzard_spark.session import local_frame, release_blocks
+from buzzard_spark.session import fetch, local_frame, release_blocks
 
 TILE_SCHEMA = ('tile_y int, tile_x int, y0 int, x0 int, h int, w int, '
                'mask binary')
@@ -50,6 +55,10 @@ RUN_SCHEMA = 'tile_y int, tile_x int, y int, xs int, xe int, lab int'
 POLY_SCHEMA = 'component_id long, wkb binary, area double, n_rings int'
 ZONAL_SCHEMA = ('region_id long, n_pixels long, v_sum long, v_min long, '
                 'v_max long')
+# the most polygons or polylines one polygonize / vectorize_lines call
+# returns: the driver holds every row's WKB, as it holds knn.MAX_QUERIES
+# queries
+MAX_SHAPES = 100_000
 
 _WINDOW = ('tile_y', 'tile_x', 'y0', 'x0', 'h', 'w')
 _ARROW_TYPES = {'int': pa.int32(), 'long': pa.int64(),
@@ -341,9 +350,8 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
     (one job per round, the convergence sum); the round blocks are
     appended to ``cache_registry`` and the final round (already
     block-materialized by its convergence action) returns as-is. The
-    CALLER releases the registry once its result no longer reads them —
-    ``vectorize_lines``' single reliable checkpoint, or
-    ``session.release_blocks`` after a collect."""
+    CALLER releases the registry with ``session.release_blocks`` once
+    its result no longer reads them (after a collect or fetch)."""
     tiles = mask_tiles.select(*_WINDOW, 'mask')
     for _ in range(0, max_iters, _THIN_SUB // 2):
         # TWO full iterations materialize per convergence job: the checked
@@ -519,74 +527,16 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     3. one reducer per chain orders its edges into the polyline —
        O(chain length), the longest single polyline is the natural lower
        bound for any vectorizer's output row.
+
+    The polylines are fetched to the driver and returned as a local
+    relation; more than ``MAX_SHAPES`` raise ``ValueError``. Every block
+    the pipeline persisted is released before the call returns or raises.
     """
-    # one reliable checkpoint for the WHOLE pipeline: thin_tiles
-    # registers its round blocks here instead of writing its own
-    # file-backed checkpoints
-    registry: list = []
-    mask_tiles = thin_tiles(spark, mask_tiles, registry, tile_size)
-    pixels = _tile_halo_pixels_h(mask_tiles, 2, tile_size)
-    edges_px = _edges_with_links(pixels).persist()
-    return _vectorize_chains(spark, fp, edges_px, pixels, registry,
-                             tile_size)
-
-
-def _vectorize_chains(spark, fp, edges_px, pixels, registry,
-                      tile_size):
-    """Shared tail of vectorize_lines: degree-2 chain resolution
-    (per-tile union-find + fragment CC), per-chain assembly, and the
-    pipeline's one reliable checkpoint. ``edges_px`` must be the
-    persisted finished edge rows (eid, ax/ay/bx/by, ea, eb, la, lb)."""
     from buzzard_spark.operators.graph import connected_components, union_find
-
-    if edges_px.isEmpty():
-        release_blocks([edges_px, pixels] + registry)
-        return local_frame(spark, [], LINE_SCHEMA)
-    ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
-            .unionByName(edges_px.select('eid', F.col('eb').alias('node'))))
-    deg2 = (ends.groupBy('node').agg(F.count('*').alias('d'),
-                                     F.min('eid').alias('e1'),
-                                     F.max('eid').alias('e2'))
-            .where(F.col('d') == 2))
-    pairs = deg2.select(F.col('e1').alias('id_a'), F.col('e2').alias('id_b'))
-    # two-level chain resolution: pairs whose two edges originate in the
-    # same tile are contracted by a per-tile union-find first, so the
-    # global CC sees one node per intra-tile chain FRAGMENT (O(border
-    # crossings + junctions) nodes instead of O(set pixels)). lroot = min
-    # eid of the local fragment, so the global component min — and
-    # therefore the emitted chain_id — is bit-identical to the
-    # uncontracted labeling.
-    tkey = ('((({e} DIV 4) DIV 2097152) DIV {ts}) * 4194304 + '
-            '((({e} DIV 4) % 2097152) DIV {ts})')
-    pairs_t = (pairs
-               .withColumn('_ta', F.expr(tkey.format(e='id_a', ts=tile_size)))
-               .withColumn('_tb', F.expr(tkey.format(e='id_b', ts=tile_size))))
-    intra = pairs_t.where(F.col('_ta') == F.col('_tb'))
-    cross = pairs_t.where(F.col('_ta') != F.col('_tb')).select('id_a', 'id_b')
 
     def _uf(key, pdf):
         roots = union_find(zip(pdf['id_a'].tolist(), pdf['id_b'].tolist()))
         return pd.DataFrame(list(roots.items()), columns=['eid', 'lroot'])
-
-    local = intra.groupBy('_ta').applyInPandas(_uf, 'eid long, lroot long')
-    # eid = (origin pixel)*4 + dir is unique per edge row by construction
-    # (each tile emits its own pixels' edges exactly once), so no distinct
-    # — the old distinct() was a full extra exchange of the edge set
-    m = (edges_px.select('eid')
-         .join(local, 'eid', 'left')
-         .select('eid', F.coalesce('lroot', 'eid').alias('lroot'))
-         .persist())
-    crossm = (cross
-              .join(m.select(F.col('eid').alias('id_a'),
-                             F.col('lroot').alias('_la')), 'id_a')
-              .join(m.select(F.col('eid').alias('id_b'),
-                             F.col('lroot').alias('_lb')), 'id_b')
-              .select(F.col('_la').alias('id_a'), F.col('_lb').alias('id_b')))
-    comp = connected_components(
-        m.select(F.col('lroot')).distinct(), crossm, id_col='lroot')
-    chains = (m.join(comp, 'lroot')
-              .select('eid', F.col('comp').alias('chain_id')))
-    tagged = edges_px.join(chains, 'eid')
 
     coef = tuple(float(v) for v in fp._coef)
 
@@ -629,12 +579,70 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
                          'n_pts': len(path)})
         return pd.DataFrame(rows)
 
-    from buzzard_spark.session import checkpoint_release
-    out = tagged.groupBy('chain_id').applyInPandas(_assemble, LINE_SCHEMA)
-    # the pipeline's ONE reliable checkpoint: materialize the linework,
-    # release the persisted edge/fragment tables plus every thinning
-    # round block registered above (cache-lifetime contract)
-    return checkpoint_release(out, [edges_px, m, pixels] + registry)
+    # thin_tiles registers its round blocks here; the persisted edge and
+    # fragment tables join them
+    registry: list = []
+    try:
+        mask_tiles = thin_tiles(spark, mask_tiles, registry, tile_size)
+        pixels = _tile_halo_pixels_h(mask_tiles, 2, tile_size)
+        edges_px = _edges_with_links(pixels).persist()
+        registry.append(edges_px)
+        if edges_px.isEmpty():
+            return local_frame(spark, [], LINE_SCHEMA)
+        ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
+                .unionByName(edges_px.select('eid',
+                                             F.col('eb').alias('node'))))
+        deg2 = (ends.groupBy('node').agg(F.count('*').alias('d'),
+                                         F.min('eid').alias('e1'),
+                                         F.max('eid').alias('e2'))
+                .where(F.col('d') == 2))
+        pairs = deg2.select(F.col('e1').alias('id_a'),
+                            F.col('e2').alias('id_b'))
+        # two-level chain resolution: pairs whose two edges originate in
+        # the same tile are contracted by a per-tile union-find first, so
+        # the global CC sees one node per intra-tile chain FRAGMENT
+        # (O(border crossings + junctions) nodes instead of O(set
+        # pixels)). lroot = min eid of the local fragment, so the global
+        # component min — and therefore the emitted chain_id — is
+        # bit-identical to the uncontracted labeling.
+        tkey = ('((({e} DIV 4) DIV 2097152) DIV {ts}) * 4194304 + '
+                '((({e} DIV 4) % 2097152) DIV {ts})')
+        pairs_t = (pairs
+                   .withColumn('_ta', F.expr(tkey.format(e='id_a',
+                                                         ts=tile_size)))
+                   .withColumn('_tb', F.expr(tkey.format(e='id_b',
+                                                         ts=tile_size))))
+        intra = pairs_t.where(F.col('_ta') == F.col('_tb'))
+        cross = pairs_t.where(F.col('_ta') != F.col('_tb')) \
+            .select('id_a', 'id_b')
+        local = intra.groupBy('_ta').applyInPandas(_uf,
+                                                   'eid long, lroot long')
+        # eid = (origin pixel)*4 + dir is unique per edge row by
+        # construction (each tile emits its own pixels' edges exactly
+        # once), so no distinct — it would be a full extra exchange of
+        # the edge set
+        m = (edges_px.select('eid')
+             .join(local, 'eid', 'left')
+             .select('eid', F.coalesce('lroot', 'eid').alias('lroot'))
+             .persist())
+        registry.append(m)
+        crossm = (cross
+                  .join(m.select(F.col('eid').alias('id_a'),
+                                 F.col('lroot').alias('_la')), 'id_a')
+                  .join(m.select(F.col('eid').alias('id_b'),
+                                 F.col('lroot').alias('_lb')), 'id_b')
+                  .select(F.col('_la').alias('id_a'),
+                          F.col('_lb').alias('id_b')))
+        comp = connected_components(
+            m.select(F.col('lroot')).distinct(), crossm, id_col='lroot')
+        chains = (m.join(comp, 'lroot')
+                  .select('eid', F.col('comp').alias('chain_id')))
+        out = (edges_px.join(chains, 'eid')
+               .groupBy('chain_id').applyInPandas(_assemble, LINE_SCHEMA))
+        lines = fetch(out, MAX_SHAPES, 'raster_ops.MAX_SHAPES')
+    finally:
+        release_blocks(registry)
+    return local_frame(spark, lines, LINE_SCHEMA)
 
 
 # packed node id for the border-run graph: (tile_y, tile_x, lab) → int64.
@@ -683,24 +691,12 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
        component's (y, xs, xe) columns): O(perimeter) memory — the
        component's dense bbox mask (O(area), OOM at continent scale) is
        never rebuilt.
+
+    The polygons are fetched to the driver and returned as a local
+    relation; more than ``MAX_SHAPES`` raise ``ValueError``. The run
+    table is released before the call returns or raises.
     """
     from buzzard_spark.operators.graph import connected_components
-
-    runs = tile_runs(mask_tiles).withColumn('node', F.expr(_NODE_PACK)) \
-        .persist()
-    # Keep this check: it is the single job that materializes ``runs``
-    # before the border joins scan it. Without it the four
-    # border-join scans start as concurrent jobs on the cold cache and
-    # each recomputes ``tile_runs`` (measured on a 4-vCPU host: 4
-    # single-task jobs of 0.12-0.16 s each, all labeling the same tiles).
-    if runs.isEmpty():
-        runs.unpersist()
-        return local_frame(spark, [], POLY_SCHEMA)
-    edges = _border_edges(runs.drop('node'), tile_size)
-    labels = connected_components(
-        runs.select('node').distinct(), edges, id_col='node')
-    tagged = (runs.join(labels, 'node')
-              .select(F.col('comp').alias('component_id'), 'y', 'xs', 'xe'))
 
     coef = tuple(float(v) for v in fp._coef)
     schema = _arrow_schema(POLY_SCHEMA)
@@ -727,10 +723,27 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
             'n_rings': [len(rings_w)],
         }, schema=schema)
 
-    from buzzard_spark.session import checkpoint_release
-    out = tagged.groupBy('component_id').applyInArrow(_trace, POLY_SCHEMA)
-    # materialize the polygons, release the persisted run table
-    return checkpoint_release(out, [runs])
+    runs = tile_runs(mask_tiles).withColumn('node', F.expr(_NODE_PACK)) \
+        .persist()
+    try:
+        # Keep this check: it is the single job that materializes ``runs``
+        # before the border joins scan it. Without it the four
+        # border-join scans start as concurrent jobs on the cold cache and
+        # each recomputes ``tile_runs`` (measured on a 4-vCPU host: 4
+        # single-task jobs of 0.12-0.16 s each, all labeling the same
+        # tiles).
+        if runs.isEmpty():
+            return local_frame(spark, [], POLY_SCHEMA)
+        edges = _border_edges(runs.drop('node'), tile_size)
+        labels = connected_components(
+            runs.select('node').distinct(), edges, id_col='node')
+        out = (runs.join(labels, 'node')
+               .select(F.col('comp').alias('component_id'), 'y', 'xs', 'xe')
+               .groupBy('component_id').applyInArrow(_trace, POLY_SCHEMA))
+        polys = fetch(out, MAX_SHAPES, 'raster_ops.MAX_SHAPES')
+    finally:
+        release_blocks([runs])
+    return local_frame(spark, polys, POLY_SCHEMA)
 
 
 def zonal_stats(spark: SparkSession, fp, polys: DataFrame,

@@ -4,6 +4,11 @@ These settings are the Spark-side counterpart of the reference's baked-in
 dataflow optimizations (SURVEY.md §4): AQE replaces the actor scheduler's
 runtime adaptivity, skew-join splitting replaces nothing the reference had
 (single machine), Arrow makes the pandas-UDF tile kernels batch-columnar.
+
+It also holds the one way a result leaves an operator: :func:`fetch` the
+rows to the driver under a module cap, :func:`release_blocks` whatever the
+operator persisted, return a :func:`local_frame`. No operator writes a
+reliable checkpoint or sets a checkpoint dir.
 """
 
 from __future__ import annotations
@@ -36,9 +41,6 @@ ENGINE_CONFS = {
     # crawl-order layouts at 128M rows; ~16 MB per in-flight task, well
     # inside executor memory at any scale).
     'spark.sql.codegen.aggregate.fastHashMap.capacityBit': '20',
-    # reliable checkpoints written by checkpoint_release() are deleted by
-    # the ContextCleaner once the referencing DataFrame is GC'd
-    'spark.cleaner.referenceTracking.cleanCheckpoints': 'true',
     # Python workers fork from the engine's daemon (pydaemon.py): on
     # Python < 3.12 PySpark's per-task importlib.invalidate_caches() made
     # every worker re-read the spark-core jar and pyspark.zip directories
@@ -110,24 +112,6 @@ def warm_session(spark) -> None:
         .where('rn <= 3').write.format('noop').mode('overwrite').save()
 
 
-def ensure_checkpoint_dir(spark) -> None:
-    """Set a session-scoped reliable checkpoint dir if none is configured.
-
-    Local mode uses a tmpfs/tempdir; on a real cluster deployments point
-    this at shared storage (HDFS/S3) exactly as GraphFrames requires for
-    its iterative connected components.
-    """
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return
-    import atexit
-    import shutil
-    import tempfile
-    d = tempfile.mkdtemp(prefix='bzs-ckpt-', dir=_local_dir())
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    sc.setCheckpointDir(d)
-
-
 def local_frame(spark, data, schema):
     """A ``LocalRelation`` holding driver-resolved ``data`` under ``schema``.
 
@@ -159,32 +143,33 @@ def local_frame(spark, data, schema):
                                  schema)
 
 
+def fetch(df, cap: int, name: str):
+    """The rows of ``df`` as one pandas frame, fetched in one Arrow trip
+    (``limit(cap + 1)``); more than ``cap`` rows raise ``ValueError``
+    naming the module constant ``name`` instead of pulling an unbounded
+    result through the driver. Every operator's driver trip goes through
+    here; its result leaves as :func:`local_frame` of the fetched rows."""
+    pdf = df.limit(cap + 1).toPandas()
+    if len(pdf) > cap:
+        raise ValueError(f'the driver fetches at most {name}={cap} rows of '
+                         f'this result; got more')
+    return pdf
+
+
 def release_blocks(cached=()):
-    """Unpersist every DataFrame in ``cached`` immediately (including the
-    internal RDD blocks a ``localCheckpoint`` pins, which Dataset.unpersist
-    does not manage). For operator fast paths whose RESULT is a local
-    relation (:func:`local_frame` of driver-resolved rows): the result
-    holds no lineage into the cached frames, so nothing needs a
-    materializing checkpoint first — same cache-lifetime contract as
-    :func:`checkpoint_release`, minus the file round-trip."""
+    """Unpersist every DataFrame in ``cached`` immediately, including the
+    internal RDD blocks a ``localCheckpoint`` pins, which
+    Dataset.unpersist does not manage.
+
+    This is the engine's cache-lifetime contract: an operator that
+    persists intermediates :func:`fetch`-es its result, releases them
+    here (in a ``finally``, so a raise leaks nothing either) and returns
+    a :func:`local_frame`, which holds no lineage into the released
+    frames. A long-lived session embedding the library thus never
+    accumulates cached partitions (``getPersistentRDDs()`` stays empty
+    between queries)."""
     for df in cached:
         df.unpersist()
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == 'LogicalRDD':
             plan.rdd().unpersist(False)
-
-
-def checkpoint_release(result, cached=()):
-    """Materialize ``result`` through a reliable (file-backed) checkpoint,
-    then unpersist every DataFrame in ``cached``.
-
-    This is the engine's cache-lifetime contract: operators that persist()
-    intermediates for multi-scan reuse release them here, so a long-lived
-    session embedding the library never accumulates cached partitions
-    (``sparkContext._jsc.getPersistentRDDs()`` stays empty between queries).
-    The checkpoint files themselves are removed by the ContextCleaner when
-    the returned DataFrame is GC'd (cleanCheckpoints=true)."""
-    ensure_checkpoint_dir(result.sparkSession)
-    out = result.checkpoint(eager=True)
-    release_blocks(cached)
-    return out

@@ -2,9 +2,9 @@
 sf0.01 testdata and compared with its DuckDB oracle, one case per query.
 
 Each case also checks the cache-lifetime contract: operators that persist()
-intermediates for multi-scan reuse release them before returning
-(session.checkpoint_release / release_blocks), so a long-lived session never
-accumulates cached partitions.
+intermediates for multi-scan reuse fetch their result, release the
+intermediates (session.release_blocks) and return a local relation, so a
+long-lived session never accumulates cached partitions.
 """
 
 import os

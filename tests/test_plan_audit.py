@@ -7,7 +7,8 @@
 - the cell-assignment path must stay inside WholeStageCodegen with no
   Python UDF (BatchEvalPython/ArrowEvalPython) nodes,
 - a small kNN batch broadcasts its ring side to the pages and returns a
-  local relation, persisting and checkpointing nothing,
+  local relation, persisting nothing and setting no checkpoint dir, and
+  so do polygonize and vectorize_lines,
 - Python workers come from the engine daemon, so a task's
   importlib.invalidate_caches() re-reads no unchanged zip archive,
 - the rasterize / zonal / polygonize Python stages are Arrow-native and
@@ -15,7 +16,6 @@
   without a shuffle.
 """
 
-import os
 import re
 import sys
 
@@ -121,9 +121,8 @@ def test_cell_assign_no_python(spark, pages_parquet):
 def test_knn_small_batch_plan(spark):
     """Small-batch kNN: the ring join is a broadcast hash join with no
     hash exchange of the pages on ``cell``; the call leaves no persisted
-    RDD and no checkpoint file; the result is a local relation."""
+    RDD and sets no checkpoint dir; the result is a local relation."""
     from buzzard_spark.operators import knn
-    from buzzard_spark.session import ensure_checkpoint_dir
 
     pages = synth.synthetic_pages(spark, 20_000).select(
         'page_id', 'lat', 'lng')
@@ -142,23 +141,18 @@ def test_knn_small_batch_plan(spark):
     assert 'SortMergeJoin' not in plan
     assert not re.search(r'Exchange hashpartitioning\(cell#', plan)
 
-    ensure_checkpoint_dir(spark)
-    ckpt = spark.sparkContext.getCheckpointDir().replace('file:', '', 1)
-
-    def files():
-        return {os.path.join(d, n) for d, _, ns in os.walk(ckpt) for n in ns}
-
     jsc = spark.sparkContext._jsc
     persisted = set(dict(jsc.getPersistentRDDs()))
-    ckpt_files = files()
     out = knn.knn(pages, queries, 5, 4)
     assert set(dict(jsc.getPersistentRDDs())) == persisted
-    # no NEW file: with cleanCheckpoints on, a JVM GC during the call may
-    # delete earlier tests' checkpoint files, so equality would be racy
-    assert not (files() - ckpt_files)
-    assert (out._jdf.queryExecution().optimizedPlan().getClass()
-            .getSimpleName() == 'LocalRelation')
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert _is_local(out)
     assert out.count() == 8 * 5
+
+
+def _is_local(df):
+    return (df._jdf.queryExecution().optimizedPlan().getClass()
+            .getSimpleName() == 'LocalRelation')
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 12),
@@ -233,21 +227,20 @@ def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
     """rasterize, zonal_stats and polygonize's trace run as
     FlatMapGroupsInArrow over exactly their kernel's columns; no pandas
     grouped map is left on these paths."""
-    from buzzard_spark import session
     from buzzard_spark.operators import raster_ops
 
     fp, polys, path = raster_inputs
     tiles = raster_ops.rasterize(spark, fp, polys, tile_size=6)
     traced = []
-    release = session.checkpoint_release
+    fetch = raster_ops.fetch
 
-    def spy(df, cached):
+    def spy(df, cap, name):
         traced.append(_plan(df))
-        return release(df, cached)
+        return fetch(df, cap, name)
 
-    monkeypatch.setattr(session, 'checkpoint_release', spy)
+    monkeypatch.setattr(raster_ops, 'fetch', spy)
     # polygonize reads the tiles back, so its only grouped map is its own;
-    # its closing checkpoint is the last one taken
+    # its closing fetch is the last one taken
     back = spark.read.parquet(path)
     assert raster_ops.polygonize(spark, fp, back, tile_size=6).count() > 0
     for plan, inputs in (
@@ -257,6 +250,24 @@ def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
             (traced[-1], ['component_id', 'y', 'xs', 'xe'])):
         assert _python_inputs(plan, 'FlatMapGroupsInArrow') == [inputs]
         assert 'FlatMapGroupsInPandas' not in plan
+
+
+@pytest.mark.parametrize('op', ['polygonize', 'vectorize_lines'])
+def test_raster_shapes_return_local_relation(spark, raster_inputs, op):
+    """polygonize and vectorize_lines fetch their shapes and return a
+    local relation; the call leaves no persisted RDD and sets no
+    checkpoint dir."""
+    from buzzard_spark.operators import raster_ops
+
+    fp, _polys, path = raster_inputs
+    jsc = spark.sparkContext._jsc
+    persisted = set(dict(jsc.getPersistentRDDs()))
+    out = getattr(raster_ops, op)(spark, fp, spark.read.parquet(path),
+                                  tile_size=6)
+    assert set(dict(jsc.getPersistentRDDs())) == persisted
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert _is_local(out)
+    assert out.count() > 0
 
 
 def test_tile_runs_maps_tile_rows_without_exchange(spark, raster_inputs):

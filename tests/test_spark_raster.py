@@ -293,6 +293,26 @@ def test_vectorize_lines_empty(spark):
     assert not dict(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+@pytest.mark.parametrize('op, kernel', [
+    ('polygonize', raster.find_polygons),
+    ('vectorize_lines', raster.find_lines)])
+def test_shapes_over_cap_raise_and_release(spark, fullfp, truth,
+                                           monkeypatch, op, kernel):
+    """More than ``raster_ops.MAX_SHAPES`` shapes raise instead of being
+    fetched, and the raise still releases every block the operator
+    persisted; a result of exactly the cap returns every shape."""
+    n = len(kernel(fullfp, truth))
+    assert n > 1
+    tiles = _mask_tiles_df(spark, truth, 6)
+    run = getattr(raster_ops, op)
+    monkeypatch.setattr(raster_ops, 'MAX_SHAPES', n - 1)
+    with pytest.raises(ValueError, match='MAX_SHAPES'):
+        run(spark, fullfp, tiles, tile_size=6)
+    assert not dict(spark.sparkContext._jsc.getPersistentRDDs())
+    monkeypatch.setattr(raster_ops, 'MAX_SHAPES', n)
+    assert run(spark, fullfp, tiles, tile_size=6).count() == n
+
+
 def test_find_lines_closed_form_input():
     """The oracle line set (tests/oracle_queries._find_lines_input)
     has provably closed-form find_lines output: burned pixel count, the
