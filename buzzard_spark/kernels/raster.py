@@ -11,7 +11,9 @@ GDAL-free numpy reimplementations of the reference's conversions
   4-connected components, edge-walk boundary tracing with a right-turn rule
   at pinch corners so holes touching the exterior diagonally stay holes
   (the exact case buzzard fixes with buffer(0),
-  reference: buzzard/_footprint.py:1798-1804).
+  reference: buzzard/_footprint.py:1798-1804). Its per-row labels merge
+  through ``union_find``, which the tiled operators also use to stitch
+  components and line fragments across tile borders.
 - ``burn_lines`` — DDA line rasterization on the pixel grid.
 - ``find_lines`` — mask skeleton → merged polylines (degree-2 chain merge).
 - ``slopes`` — Horn 8-neighbor gradient in degrees
@@ -171,22 +173,34 @@ def _iter_polys(obj):
 
 # -- polygonize -------------------------------------------------------------------
 
+def union_find(pairs) -> dict:
+    """In-memory union-find over (a, b) pairs → {node: root} for every
+    node of a pair. Union-by-min with path compression: each root is its
+    set's min id."""
+    parent: dict = {}
+
+    def find(a):
+        root = a
+        while parent[root] != root:
+            root = parent[root]
+        while parent[a] != root:
+            parent[a], a = root, parent[a]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def _label_components(mask):
     """4-connected component labels via row-run union-find (numpy per row)."""
     h, w = mask.shape
     labels = np.zeros((h, w), dtype=np.int32)
-    parent = [0]
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
+    merged = []  # (lab, plab): labels one run joins by overlapping both
 
     prev_runs = []  # (start, end, label) of previous row
     next_label = 1
@@ -206,19 +220,18 @@ def _label_components(mask):
                     if lab == 0:
                         lab = plab
                     else:
-                        union(lab, plab)
+                        merged.append((lab, plab))
             if lab == 0:
                 lab = next_label
-                parent.append(lab)
                 next_label += 1
             labels[y, s:e] = lab
             runs.append((s, e, lab))
-        # resolve merged labels within this row now (runs keep raw labels)
+        # runs keep raw labels; the merges resolve after the last row
         prev_runs = runs
     if next_label > 1:
-        lut = np.zeros(next_label, dtype=np.int32)
-        for i in range(1, next_label):
-            lut[i] = find(i)
+        lut = np.arange(next_label, dtype=np.int32)
+        for lab, root in union_find(merged).items():
+            lut[lab] = root
         # compact to 1..n
         uniq = np.unique(lut[1:])
         remap = np.zeros(next_label, dtype=np.int32)

@@ -13,9 +13,12 @@ stages that receive only the columns their kernel reads, as Arrow tables:
   SURVEY.md §7.3 hard part 3). Three phases:
     1. per-tile run-length labeling (``tile_runs``: one mapInArrow over
        the tile rows, no shuffle → run rows),
-    2. cross-tile connectivity: border runs of vertically adjacent tiles
-       are interval-joined; the resulting (tile,label) graph is small
-       (O(total tile-border length)) and resolved with union-find,
+    2. cross-tile connectivity, stitched on the driver: only a run on a
+       tile's first or last row or column can touch another tile, so
+       those border runs (O(total tile-border length)) are fetched, their
+       cross-tile adjacency is merged in pandas and resolved with
+       ``kernels.raster.union_find``, and the labels are broadcast back
+       onto the runs as a local relation,
     3. runs shuffled by global component id; one reducer per component
        (applyInArrow over its (y, xs, xe) runs) traces rings with the
        exact same kernel as the single-node path — so distributed
@@ -29,10 +32,12 @@ stages that receive only the columns their kernel reads, as Arrow tables:
   exact for every tile size, 1 included. These stages still run as
   pandas UDFs.
 
-``polygonize`` and ``vectorize_lines`` end the same way: the shapes are
-fetched to the driver (``session.fetch``, at most ``MAX_SHAPES`` rows,
-more raise ``ValueError``), every block the pipeline persisted is released
-in a ``finally``, and the result returns as a local relation.
+``polygonize`` and ``vectorize_lines`` stitch and end the same way: the
+rows that link tiles (border runs, cross-tile fragment links) are fetched
+to the driver (at most ``MAX_STITCH`` rows) and union-found there, the
+shapes are fetched (``session.fetch``, at most ``MAX_SHAPES`` rows; more
+than either cap raise ``ValueError``), every block the pipeline persisted
+is released in a ``finally``, and the result returns as a local relation.
 
 Tile rows: (tile_y int, tile_x int, y0 int, x0 int, h int, w int,
 mask binary) — mask is a packed bool numpy buffer.
@@ -59,6 +64,9 @@ ZONAL_SCHEMA = ('region_id long, n_pixels long, v_sum long, v_min long, '
 # returns: the driver holds every row's WKB, as it holds knn.MAX_QUERIES
 # queries
 MAX_SHAPES = 100_000
+# the most rows one driver stitch fetches: polygonize's border runs or
+# vectorize_lines' cross-tile fragment links (~4 MB of fetched rows)
+MAX_STITCH = 200_000
 
 _WINDOW = ('tile_y', 'tile_x', 'y0', 'x0', 'h', 'w')
 _ARROW_TYPES = {'int': pa.int32(), 'long': pa.int64(),
@@ -503,6 +511,19 @@ def _edges_with_links(pixels: DataFrame) -> DataFrame:
             .applyInPandas(_emit, _EDGE_SCHEMA))
 
 
+def _join_labels(df: DataFrame, key: str, a: pd.Series,
+                 b: pd.Series) -> DataFrame:
+    """df with ``comp``, the min ``key`` of its component when the
+    driver-fetched pairs (a[i], b[i]) link keys: the pairs are
+    union-found on the driver and their labels broadcast-joined as a
+    local relation; a key no pair names is its own component."""
+    roots = raster.union_find(zip(a.tolist(), b.tolist()))
+    labels = local_frame(df.sparkSession, list(roots.items()),
+                         f'{key} long, comp long')
+    return (df.join(F.broadcast(labels), key, 'left')
+            .withColumn('comp', F.coalesce('comp', key)))
+
+
 def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
                     tile_size: int = 256) -> DataFrame:
     """Distributed ``find_lines``: tile masks → merged polyline rows
@@ -522,20 +543,21 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
        ``_edges_with_links``; exact for any tile size, 1 included),
     2. node degrees = groupBy count; edges sharing a degree-2 node belong
        to one chain; intra-tile fragments contract in a per-tile
-       union-find, then connected components over the cross-tile fragment
-       graph (junction nodes split chains exactly like the kernel's walk),
+       union-find, then the cross-tile fragment links are fetched and
+       union-found on the driver (junction nodes split chains exactly
+       like the kernel's walk) and the chain labels broadcast back,
     3. one reducer per chain orders its edges into the polyline —
        O(chain length), the longest single polyline is the natural lower
        bound for any vectorizer's output row.
 
     The polylines are fetched to the driver and returned as a local
-    relation; more than ``MAX_SHAPES`` raise ``ValueError``. Every block
-    the pipeline persisted is released before the call returns or raises.
+    relation; more than ``MAX_STITCH`` fragment links or ``MAX_SHAPES``
+    polylines raise ``ValueError``. Every block the pipeline persisted is
+    released before the call returns or raises.
     """
-    from buzzard_spark.operators.graph import connected_components, union_find
-
     def _uf(key, pdf):
-        roots = union_find(zip(pdf['id_a'].tolist(), pdf['id_b'].tolist()))
+        roots = raster.union_find(zip(pdf['id_a'].tolist(),
+                                      pdf['id_b'].tolist()))
         return pd.DataFrame(list(roots.items()), columns=['eid', 'lroot'])
 
     coef = tuple(float(v) for v in fp._coef)
@@ -600,8 +622,8 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
                             F.col('e2').alias('id_b'))
         # two-level chain resolution: pairs whose two edges originate in
         # the same tile are contracted by a per-tile union-find first, so
-        # the global CC sees one node per intra-tile chain FRAGMENT
-        # (O(border crossings + junctions) nodes instead of O(set
+        # the driver sees one node per intra-tile chain FRAGMENT
+        # (O(border crossings + junctions) links instead of O(set
         # pixels)). lroot = min eid of the local fragment, so the global
         # component min — and therefore the emitted chain_id — is
         # bit-identical to the uncontracted labeling.
@@ -621,9 +643,10 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
         # construction (each tile emits its own pixels' edges exactly
         # once), so no distinct — it would be a full extra exchange of
         # the edge set
-        m = (edges_px.select('eid')
+        m = (edges_px
              .join(local, 'eid', 'left')
-             .select('eid', F.coalesce('lroot', 'eid').alias('lroot'))
+             .select('eid', 'ax', 'ay', 'bx', 'by', 'la', 'lb',
+                     F.coalesce('lroot', 'eid').alias('lroot'))
              .persist())
         registry.append(m)
         crossm = (cross
@@ -633,11 +656,10 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
                                  F.col('lroot').alias('_lb')), 'id_b')
                   .select(F.col('_la').alias('id_a'),
                           F.col('_lb').alias('id_b')))
-        comp = connected_components(
-            m.select(F.col('lroot')).distinct(), crossm, id_col='lroot')
-        chains = (m.join(comp, 'lroot')
-                  .select('eid', F.col('comp').alias('chain_id')))
-        out = (edges_px.join(chains, 'eid')
+        links = fetch(crossm, MAX_STITCH, 'raster_ops.MAX_STITCH')
+        out = (_join_labels(m, 'lroot', links['id_a'], links['id_b'])
+               .select(F.col('comp').alias('chain_id'),
+                       'ax', 'ay', 'bx', 'by', 'la', 'lb')
                .groupBy('chain_id').applyInPandas(_assemble, LINE_SCHEMA))
         lines = fetch(out, MAX_SHAPES, 'raster_ops.MAX_SHAPES')
     finally:
@@ -645,31 +667,28 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     return local_frame(spark, lines, LINE_SCHEMA)
 
 
-# packed node id for the border-run graph: (tile_y, tile_x, lab) → int64.
-# 21 bits each ⇒ up to 2^21 tiles per axis and 2^21 labels per tile
+# packed node id of a tile's labeled component: (tile_y, tile_x, lab) →
+# int64. 21 bits each ⇒ up to 2^21 tiles per axis and 2^21 labels per tile
 # (tile_size up to 2048); 63 bits total, no overflow.
 _NODE_PACK = '((CAST(tile_y AS BIGINT) * 2097152 + tile_x) * 2097152 + lab)'
 
 
-def _border_edges(runs: DataFrame, tile_size: int) -> DataFrame:
-    """Cross-tile adjacency of border runs as packed-node edge rows
-    (id_a, id_b) — stays distributed (O(total tile-border length) rows)."""
-    r = runs.withColumn('node', F.expr(_NODE_PACK))
-    # vertical adjacency: bottom row of tile (ty) ↔ top row of tile (ty+1)
-    bottom = r.where((F.col('y') + 1) % tile_size == 0).alias('a')
-    top = r.where(F.col('y') % tile_size == 0).alias('b')
-    vert = bottom.join(
-        top,
-        (F.col('a.y') + 1 == F.col('b.y')) &
-        (F.col('a.xs') < F.col('b.xe')) & (F.col('b.xs') < F.col('a.xe')))
-    # horizontal adjacency: last col of tile ↔ first col of next tile
-    right = r.where(F.col('xe') % tile_size == 0).alias('a')
-    left = r.where(F.col('xs') % tile_size == 0).alias('b')
-    horiz = right.join(
-        left,
-        (F.col('a.xe') == F.col('b.xs')) & (F.col('a.y') == F.col('b.y')))
-    sel = [F.col('a.node').alias('id_a'), F.col('b.node').alias('id_b')]
-    return vert.select(*sel).unionByName(horiz.select(*sel))
+def _stitch_pairs(border: pd.DataFrame, tile_size: int):
+    """(a, b) node series of the border runs that touch a run of another
+    tile. ``border`` holds the runs on a tile's first or last row or
+    column as (node, y, xs, xe). Two runs of different tiles touch across
+    a tile row edge (last row of one tile, first row of the next,
+    overlapping x intervals in the same tile column) or a tile column
+    edge (one run ends where the other starts, on the same row); runs of
+    one tile never abut, or they would be one run."""
+    b = border.assign(tx=border['xs'] // tile_size)
+    last = b[(b['y'] + 1) % tile_size == 0].assign(y=lambda d: d['y'] + 1)
+    vert = last.merge(b[b['y'] % tile_size == 0], on=['y', 'tx'])
+    vert = vert[(vert['xs_x'] < vert['xe_y']) & (vert['xs_y'] < vert['xe_x'])]
+    horiz = b.merge(b, left_on=['y', 'xe'], right_on=['y', 'xs'])
+    pairs = pd.concat([vert[['node_x', 'node_y']],
+                       horiz[['node_x', 'node_y']]])
+    return pairs['node_x'], pairs['node_y']
 
 
 def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
@@ -682,10 +701,12 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
     Scale shape (nothing mask-sized touches the driver):
 
     1. per-tile run-length labeling (``tile_runs``, one mapInArrow),
-    2. cross-tile connectivity = connected components over the border-run
-       adjacency graph (``graph.connected_components``: one bounded fetch
-       of the border edges, resolved on the driver; O(total tile-border
-       length) edges, capped at ``graph.MAX_EDGES``),
+    2. cross-tile connectivity, stitched on the driver: one fetch of the
+       border runs (a tile's first or last row or column: O(total
+       tile-border length) rows, capped at ``MAX_STITCH``), union-found
+       over their cross-tile adjacency (``_stitch_pairs``); the labels
+       are broadcast-joined back onto the runs as a local relation
+       (``_join_labels``), and a run no border links keeps its own node,
     3. one reducer per component traces rings directly from its runs
        (``kernels.raster.trace_rings_from_runs``, applyInArrow over the
        component's (y, xs, xe) columns): O(perimeter) memory — the
@@ -693,11 +714,10 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
        never rebuilt.
 
     The polygons are fetched to the driver and returned as a local
-    relation; more than ``MAX_SHAPES`` raise ``ValueError``. The run
-    table is released before the call returns or raises.
+    relation; more than ``MAX_STITCH`` border runs or ``MAX_SHAPES``
+    polygons raise ``ValueError``. The run table is released before the
+    call returns or raises.
     """
-    from buzzard_spark.operators.graph import connected_components
-
     coef = tuple(float(v) for v in fp._coef)
     schema = _arrow_schema(POLY_SCHEMA)
 
@@ -726,19 +746,17 @@ def polygonize(spark: SparkSession, fp, mask_tiles: DataFrame,
     runs = tile_runs(mask_tiles).withColumn('node', F.expr(_NODE_PACK)) \
         .persist()
     try:
-        # Keep this check: it is the single job that materializes ``runs``
-        # before the border joins scan it. Without it the four
-        # border-join scans start as concurrent jobs on the cold cache and
-        # each recomputes ``tile_runs`` (measured on a 4-vCPU host: 4
-        # single-task jobs of 0.12-0.16 s each, all labeling the same
-        # tiles).
-        if runs.isEmpty():
-            return local_frame(spark, [], POLY_SCHEMA)
-        edges = _border_edges(runs.drop('node'), tile_size)
-        labels = connected_components(
-            runs.select('node').distinct(), edges, id_col='node')
-        out = (runs.join(labels, 'node')
-               .select(F.col('comp').alias('component_id'), 'y', 'xs', 'xe')
+        # this fetch is the one scan that fills the ``runs`` cache
+        ts = tile_size
+        border = fetch(runs.where((F.col('y') % ts == 0) |
+                                  ((F.col('y') + 1) % ts == 0) |
+                                  (F.col('xs') % ts == 0) |
+                                  (F.col('xe') % ts == 0))
+                       .select('node', 'y', 'xs', 'xe'),
+                       MAX_STITCH, 'raster_ops.MAX_STITCH')
+        out = (_join_labels(runs, 'node', *_stitch_pairs(border, ts))
+               .select(F.col('comp').alias('component_id'),
+                       'y', 'xs', 'xe')
                .groupBy('component_id').applyInArrow(_trace, POLY_SCHEMA))
         polys = fetch(out, MAX_SHAPES, 'raster_ops.MAX_SHAPES')
     finally:

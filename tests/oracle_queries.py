@@ -191,7 +191,8 @@ def _find_lines_input(spark: SparkSession) -> DataFrame:
 
 def q_find_lines_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed find_lines end-to-end (iterative halo thinning →
-    square collapse → edge graph → fragment CC → chain merge) over the
+    square collapse → edge graph → fragment links union-found on the
+    driver → chain merge) over the
     closed-form line set (``_find_lines_input``), reported as the
     per-chain-length histogram (n_pts, n_chains) — fully value-checked
     against DuckDB interval arithmetic (was rows-only in round 3)."""

@@ -1,7 +1,7 @@
 """Every ``buzzard_spark`` import in the repo resolves.
 
-The engine imports lazily inside functions (``raster_ops.polygonize``
-imports ``operators.graph`` inside the call), so an import of a module or
+The engine imports lazily inside functions (``raster_ops._tile_fp``
+imports ``kernels.footprint`` inside the call), so an import of a module or
 name that no longer exists would fail only when that code path runs. This
 reads every ``.py`` under ``buzzard_spark/``, ``tests/`` and
 ``perfbench/`` with ``ast`` (nothing is executed) and checks each
@@ -54,8 +54,8 @@ def test_every_engine_import_resolves():
     found = _engine_imports()
     # the scan reaches imports nested inside function bodies
     assert any(w.startswith('buzzard_spark/operators/raster_ops.py')
-               and (m, n) == ('buzzard_spark.operators.graph',
-                              'connected_components')
+               and (m, n) == ('buzzard_spark.kernels.footprint',
+                              'Footprint')
                for w, m, n in found)
     broken = []
     for where, module, name in found:

@@ -13,7 +13,9 @@
   importlib.invalidate_caches() re-reads no unchanged zip archive,
 - the rasterize / zonal / polygonize Python stages are Arrow-native and
   receive only their kernel's columns; run labeling maps the tile rows
-  without a shuffle.
+  without a shuffle,
+- polygonize and vectorize_lines join their driver-stitched labels as a
+  broadcast local relation, with no sort-merge or nested-loop join.
 """
 
 import re
@@ -268,6 +270,52 @@ def test_raster_shapes_return_local_relation(spark, raster_inputs, op):
     assert spark.sparkContext.getCheckpointDir() is None
     assert _is_local(out)
     assert out.count() > 0
+
+
+def _joins(df):
+    """(join, build side under its exchange) for each join of df's
+    physical plan, leaving out the plans of the cached relations it scans
+    (an InMemoryTableScan has no children)."""
+    joins, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == 'AdaptiveSparkPlan':
+            todo.append(node.executedPlan())
+            continue
+        kids = node.children()
+        kids = [kids.apply(i) for i in range(kids.size())]
+        if name == 'BroadcastHashJoin':
+            build = kids[node.buildSide().toString() == 'BuildRight']
+            joins.append((name, build.child().nodeName()))
+        elif 'Join' in name or name == 'CartesianProduct':
+            joins.append((name, None))
+        todo += kids
+    return joins
+
+
+@pytest.mark.parametrize('op', ['polygonize', 'vectorize_lines'])
+def test_raster_stitch_labels_join_as_local_broadcast(spark, raster_inputs,
+                                                      monkeypatch, op):
+    """The labels stitched on the driver come back as a local relation:
+    the only join of the closing fetch's plan is a BroadcastHashJoin
+    whose build side is a LocalTableScan; no SortMergeJoin or
+    BroadcastNestedLoopJoin is left."""
+    from buzzard_spark.operators import raster_ops
+
+    fp, _polys, path = raster_inputs
+    joins = []
+    fetch = raster_ops.fetch
+
+    def spy(df, cap, name):
+        joins.append(_joins(df))
+        return fetch(df, cap, name)
+
+    monkeypatch.setattr(raster_ops, 'fetch', spy)
+    out = getattr(raster_ops, op)(spark, fp, spark.read.parquet(path),
+                                  tile_size=6)
+    assert out.count() > 0
+    assert joins[-1] == [('BroadcastHashJoin', 'LocalTableScan')]
 
 
 def test_tile_runs_maps_tile_rows_without_exchange(spark, raster_inputs):

@@ -68,6 +68,26 @@ def test_distributed_polygonize_matches_kernel(spark, fullfp, truth):
     assert any(r['n_rings'] > 1 for r in result)
 
 
+@pytest.mark.parametrize('ts', [1, 4], ids=['ts1', 'ts4'])
+def test_polygonize_unit_and_remainder_tiles_match_kernel(spark, fullfp,
+                                                          truth, ts):
+    """The border stitch at the tile sizes where its edge tests bite: on
+    1-px tiles every pixel is a tile and every run a border run; on 4-px
+    tiles the 21×18 grid leaves 1-px remainder tiles (21 % 4 == 1), whose
+    right edge is the raster's, not a tile edge. Same polygons as the
+    kernel, burned back bit for bit."""
+    tiles = _mask_tiles_df(spark, truth, ts)
+    result = raster_ops.polygonize(spark, fullfp, tiles,
+                                   tile_size=ts).collect()
+
+    assert len(result) == len(raster.find_polygons(fullfp, truth))
+    total_area = sum(r['area'] for r in result)
+    assert total_area == pytest.approx(float(truth.sum()))
+    burned = raster.burn_polygons(fullfp, [bytes(r['wkb']) for r in result])
+    assert (burned == truth).all()
+    assert any(r['n_rings'] > 1 for r in result)
+
+
 @pytest.mark.parametrize('op', ['rasterize', 'rasterize_lines',
                                 'zonal_stats'])
 @pytest.mark.parametrize('gt', [
@@ -114,9 +134,9 @@ def test_distributed_rasterize_lines_matches_kernel(spark):
 def test_polygonize_component_spanning_many_tiles(spark):
     """One serpentine component crossing >100 tiles (plus holes formed
     between passes is NOT the case here — pure snake), distributed output
-    must burn back bit-for-bit. Exercises the distributed connected
-    components (long chain: worst case for label propagation) and the
-    run-based O(perimeter) ring tracer."""
+    must burn back bit-for-bit. Exercises the driver border stitch (one
+    component chained through >100 tiles' border runs) and the run-based
+    O(perimeter) ring tracer."""
     w, h = 64, 64
     fp = Footprint(tl=(0, h), size=(w, h), rsize=(w, h))
     mask = np.zeros((h, w), dtype=bool)
@@ -311,6 +331,39 @@ def test_shapes_over_cap_raise_and_release(spark, fullfp, truth,
     assert not dict(spark.sparkContext._jsc.getPersistentRDDs())
     monkeypatch.setattr(raster_ops, 'MAX_SHAPES', n)
     assert run(spark, fullfp, tiles, tile_size=6).count() == n
+
+
+@pytest.mark.parametrize('op, kernel', [
+    ('polygonize', raster.find_polygons),
+    ('vectorize_lines', raster.find_lines)])
+def test_stitch_over_cap_raise_and_release(spark, fullfp, truth,
+                                           monkeypatch, op, kernel):
+    """More than ``raster_ops.MAX_STITCH`` border runs (polygonize) or
+    cross-tile fragment links (vectorize_lines) raise instead of being
+    fetched, and the raise still releases every block the operator
+    persisted; a stitch of exactly the cap returns every shape."""
+    tiles = _mask_tiles_df(spark, truth, 6)
+    run = getattr(raster_ops, op)
+    stitched = []
+    fetch = raster_ops.fetch
+
+    def spy(df, cap, name):
+        pdf = fetch(df, cap, name)
+        if name == 'raster_ops.MAX_STITCH':
+            stitched.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(raster_ops, 'fetch', spy)
+    run(spark, fullfp, tiles, tile_size=6)
+    n, = stitched
+    assert n > 1
+    monkeypatch.setattr(raster_ops, 'MAX_STITCH', n - 1)
+    with pytest.raises(ValueError, match='MAX_STITCH'):
+        run(spark, fullfp, tiles, tile_size=6)
+    assert not dict(spark.sparkContext._jsc.getPersistentRDDs())
+    monkeypatch.setattr(raster_ops, 'MAX_STITCH', n)
+    assert run(spark, fullfp, tiles, tile_size=6).count() == len(
+        kernel(fullfp, truth))
 
 
 def test_find_lines_closed_form_input():
