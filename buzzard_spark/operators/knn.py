@@ -13,9 +13,12 @@ Plan shape for a batch of at most ``MAX_QUERIES`` queries (serving):
    — deterministic tie-breaking — fetched through Arrow;
 4. geometric guarantee check, on the driver: a page outside ring r is at
    least r·min(cell_w, cell_h) degrees away, so a query is *settled* iff
-   it found k candidates with kth distance² < (r·min(cw,ch))²; unsettled
-   queries (sparse neighborhoods, the poles) take one brute-force pass
-   that broadcasts only those queries;
+   it found k candidates with kth distance² < (r·min(cw,ch))²; the
+   unsettled queries (sparse neighborhoods, the poles) re-run steps 2-4
+   one cell resolution coarser with the same ring radius, and at
+   resolution 0 with the radius doubled, until the ring covers the grid
+   and holds every page. A round holds at most max((2·k_ring+1)², 32)
+   ring cells per query, over at most ``res`` + 5 rounds;
 5. the result is a local relation: nothing is persisted, no checkpoint
    file is written, and the caller's collect runs no Spark job.
 """
@@ -69,14 +72,11 @@ def driver_rings(spark, batch, schema: StructType, res: int,
     """The ring side: one (qid, qlat, qlng, cell) row per
     query and ring cell, the cells of :func:`ring_cells` computed on the
     driver, as a local relation. ``batch`` is the fetched pandas frame of
-    ``schema``'s (qid, qlat, qlng). A query with a NULL coordinate gets no
-    ring (assign_cell's -1 sentinel joins nothing either)."""
-    lat = batch['qlat'].to_numpy(dtype=np.float64)
-    lng = batch['qlng'].to_numpy(dtype=np.float64)
-    ok = np.flatnonzero(~(np.isnan(lat) | np.isnan(lng)))
-    rings = [cells.ring(c, k_ring, res)
-             for c in cells.cell_of(lat[ok], lng[ok], res)]
-    frame = batch.iloc[np.repeat(ok, [len(r) for r in rings])].assign(
+    ``schema``'s (qid, qlat, qlng), with no NULL coordinate."""
+    rings = [cells.ring(c, k_ring, res) for c in cells.cell_of(
+        batch['qlat'].to_numpy(np.float64),
+        batch['qlng'].to_numpy(np.float64), res)]
+    frame = batch.loc[batch.index.repeat([len(r) for r in rings])].assign(
         cell=np.concatenate(rings or [np.empty(0, np.int64)]))
     return local_frame(spark, frame, StructType(
         list(schema.fields) + [StructField('cell', LongType(), False)]))
@@ -97,13 +97,6 @@ def _topk(cand: DataFrame, k: int) -> DataFrame:
             .where(F.col('rnk') <= k))
 
 
-def _brute(pages: DataFrame, batch: DataFrame, k: int) -> DataFrame:
-    """Exact top-k of a small query batch against every page (the batch
-    is the broadcast side)."""
-    cand = F.broadcast(batch).crossJoin(pages.select('page_id', 'lat', 'lng'))
-    return _topk(cand, k).select(*OUT_COLS)
-
-
 def _covers_grid(r: int, res: int) -> bool:
     # a ring this wide covers every cell (lat clips, lng wraps): its
     # candidates are the full corpus — exact by construction
@@ -121,28 +114,37 @@ def _guarantee(r: int, res: int) -> float:
 def knn(pages: DataFrame, queries: DataFrame, k: int, res: int,
         k_ring: int = 2) -> DataFrame:
     """queries(qid, qlat, qlng) × pages(page_id, lat, lng) → top-k rows
-    (qid, page_id, dist2, rnk). Exact — ring join + guarantee + fallback.
+    (qid, page_id, dist2, rnk). Exact — ring rounds, each settling the
+    queries its guarantee covers, the rest coarsened until the ring covers
+    the grid. A query with a NULL coordinate returns no row, as a page
+    with one joins no cell.
 
     One capped fetch bounds the driver trip: a batch of more than
     ``MAX_QUERIES`` queries raises ``ValueError`` (module docstring).
     """
     spark = queries.sparkSession
     q = queries.select('qid', 'qlat', 'qlng')
-    batch = fetch(q, MAX_QUERIES, 'knn.MAX_QUERIES')
-
-    rings = driver_rings(spark, batch, q.schema, res, k_ring)
-    topk_df = _topk(ring_join(rings, assign_cell(pages, res)), k) \
-        .select(*OUT_COLS)
-    top = topk_df.toPandas()
-    if not _covers_grid(k_ring, res):
+    batch = fetch(q, MAX_QUERIES, 'knn.MAX_QUERIES').dropna(
+        subset=['qlat', 'qlng'])
+    r, parts = k_ring, []
+    while True:
+        rings = driver_rings(spark, batch, q.schema, res, r)
+        topk_df = _topk(ring_join(rings, assign_cell(pages, res)), k) \
+            .select(*OUT_COLS)
+        top = topk_df.toPandas()
+        if _covers_grid(r, res):
+            parts.append(top)
+            break
         stats = top.groupby('qid').agg(found=('rnk', 'max'),
                                        kth=('dist2', 'max'))
         settled = stats.index[(stats['found'] == k)
-                              & (stats['kth'] < _guarantee(k_ring, res))]
-        top = top[top['qid'].isin(settled)]
-        unsettled = batch[~batch['qid'].isin(settled)]
-        if len(unsettled):
-            brute = _brute(pages, local_frame(spark, unsettled, q.schema), k)
-            top = pd.concat([top, brute.toPandas()], ignore_index=True)
-    return local_frame(spark, top, topk_df.schema)
-
+                              & (stats['kth'] < _guarantee(r, res))]
+        parts.append(top[top['qid'].isin(settled)])
+        batch = batch[~batch['qid'].isin(settled)]
+        if not len(batch):
+            break
+        # a coarser cell widens the ring's reach at the same cell count;
+        # at res 0 only a wider ring can
+        res, r = (res - 1, r) if res else (0, max(2 * r, 1))
+    return local_frame(spark, pd.concat(parts, ignore_index=True),
+                       topk_df.schema)

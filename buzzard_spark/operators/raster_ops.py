@@ -609,8 +609,6 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
         pixels = _tile_halo_pixels_h(mask_tiles, 2, tile_size)
         edges_px = _edges_with_links(pixels).persist()
         registry.append(edges_px)
-        if edges_px.isEmpty():
-            return local_frame(spark, [], LINE_SCHEMA)
         ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
                 .unionByName(edges_px.select('eid',
                                              F.col('eb').alias('node'))))

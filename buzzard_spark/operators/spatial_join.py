@@ -116,13 +116,9 @@ def pip_join_wkb(pages: DataFrame, regions: DataFrame, res: int) -> DataFrame:
             out[idx] = geometry.points_in_wkb(lng_v[idx], lat_v[idx], buf)
         return pd.Series(out)
 
-    joined = assign_cell(pages, res).join(
-        F.broadcast(cover_cells_rect(regions, res)), 'cell')
     # cheap bbox refine first (codegen), exact PIP only on bbox survivors
-    joined = joined.where(
-        (F.col('lat') >= F.col('minlat')) & (F.col('lat') <= F.col('maxlat')) &
-        (F.col('lng') >= F.col('minlng')) & (F.col('lng') <= F.col('maxlng')))
-    return joined.where(_pip(F.col('lat'), F.col('lng'), F.col('wkb')))
+    return pip_join_rect(pages, regions, res).where(
+        _pip(F.col('lat'), F.col('lng'), F.col('wkb')))
 
 
 def pip_count_by_region(pages: DataFrame, regions: DataFrame,

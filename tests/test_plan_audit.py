@@ -120,9 +120,10 @@ def test_cell_assign_no_python(spark, pages_parquet):
     assert '*(' in plan  # whole-stage-codegen stage markers
 
 
-def test_knn_small_batch_plan(spark):
-    """Small-batch kNN: the ring join is a broadcast hash join with no
-    hash exchange of the pages on ``cell``; the call leaves no persisted
+def test_knn_small_batch_plan(spark, monkeypatch):
+    """Small-batch kNN: every round's ring join is a broadcast hash join
+    with no hash exchange of the pages on ``cell`` — also the coarser
+    rounds of a batch holding a polar query; the call leaves no persisted
     RDD and sets no checkpoint dir; the result is a local relation."""
     from buzzard_spark.operators import knn
 
@@ -131,25 +132,39 @@ def test_knn_small_batch_plan(spark):
     queries = spark.createDataFrame(
         [(i, -40.0 + 10.0 * i, -170.0 + 45.0 * i) for i in range(8)],
         'qid long, qlat double, qlng double')
+    polar = queries.unionByName(spark.createDataFrame(
+        [(8, 89.5, 20.0)], 'qid long, qlat double, qlng double'))
 
-    rings = knn.driver_rings(spark, queries.toPandas(), queries.schema, 4, 2)
-    joined = knn.ring_join(rings, spatial_join.assign_cell(pages, 4))
-    joined.collect()  # finalize the AQE plan
-    plan = _plan(joined)
-    # the ring side (left) is the broadcast one and the pages stream;
-    # these test pages are small enough that a ring side without a size
-    # estimate would get the pages broadcast instead (BuildRight)
-    assert re.search(r'BroadcastHashJoin .*, Inner, BuildLeft', plan)
-    assert 'SortMergeJoin' not in plan
-    assert not re.search(r'Exchange hashpartitioning\(cell#', plan)
+    joins = []
+    ring_join = knn.ring_join
 
+    def spy(rings, pages_c):
+        joins.append(ring_join(rings, pages_c))
+        return joins[-1]
+
+    monkeypatch.setattr(knn, 'ring_join', spy)
     jsc = spark.sparkContext._jsc
     persisted = set(dict(jsc.getPersistentRDDs()))
-    out = knn.knn(pages, queries, 5, 4)
-    assert set(dict(jsc.getPersistentRDDs())) == persisted
-    assert spark.sparkContext.getCheckpointDir() is None
-    assert _is_local(out)
-    assert out.count() == 8 * 5
+    for batch, rounds in ((queries, 1), (polar, 2)):
+        joins.clear()
+        out = knn.knn(pages, batch, 5, 4)
+        assert set(dict(jsc.getPersistentRDDs())) == persisted
+        assert spark.sparkContext.getCheckpointDir() is None
+        assert _is_local(out)
+        assert out.count() == batch.count() * 5
+        assert len(joins) >= rounds
+        for joined in joins:
+            joined.collect()  # finalize the AQE plan
+            plan = _plan(joined)
+            # the ring side (left) is the broadcast one and the pages
+            # stream; these test pages are small enough that a ring side
+            # without a size estimate would get the pages broadcast
+            # instead (BuildRight)
+            assert re.search(r'BroadcastHashJoin .*, Inner, BuildLeft', plan)
+            for join in ('SortMergeJoin', 'BroadcastNestedLoopJoin',
+                         'CartesianProduct'):
+                assert join not in plan
+            assert not re.search(r'Exchange hashpartitioning\(cell#', plan)
 
 
 def _is_local(df):

@@ -1,4 +1,4 @@
-"""kNN cell-ring expansion vs single-node numpy brute force (F8 oracle),
+"""kNN cell-ring rounds vs single-node numpy brute force (F8 oracle),
 plus cell-index kernel sanity."""
 
 import numpy as np
@@ -94,7 +94,8 @@ def test_cell_bounds_center():
 def _queries(spark, kind, n_q):
     """A query batch: ``hashed`` spreads over the testdata's lat band;
     ``antimeridian`` sits within 0.05 deg of lng ±180; ``polar`` lies above
-    85 deg, where no page is (the ring finds too few: brute pass)."""
+    85 deg, where no page is (the first ring finds too few: coarser
+    rounds settle it)."""
     if kind == 'hashed':
         return spark.range(n_q).select(
             F.col('id').alias('qid'),
@@ -142,11 +143,16 @@ def _assert_bruteforce(got_rows, pages, queries, k):
 @pytest.mark.parametrize('n_pages, n_q, k, res, k_ring, kind', [
     # dense: ring path settles most queries
     pytest.param(3000, 25, 10, 4, 2, 'hashed', id='3000-25-10-4-2'),
-    # sparse: brute-force fallback dominates
+    # sparse: most queries take coarser rounds
     pytest.param(200, 15, 8, 6, 1, 'hashed', id='200-15-8-6-1'),
+    # sparse at a fine resolution: rounds coarsen down to res 0
+    pytest.param(200, 6, 8, 9, 1, 'hashed', id='sparse-res-9'),
+    # ring 0 settles nothing (its guarantee is 0): the radius must grow
+    # at res 0 for the loop to end
+    pytest.param(300, 6, 5, 2, 0, 'hashed', id='ring-0'),
     # the ring wraps across lng ±180
     pytest.param(3000, 12, 6, 3, 2, 'antimeridian', id='antimeridian'),
-    # above every page: every query takes the brute pass
+    # above every page: every query takes coarser rounds
     pytest.param(3000, 6, 6, 4, 1, 'polar', id='polar'),
     # res 0, ring 5: the ring covers the whole 8x4 grid (settled by
     # construction, no guarantee check)
@@ -177,6 +183,40 @@ def test_knn_keeps_input_key_types(spark):
         ('qid', StringType()), ('page_id', IntegerType()),
         ('dist2', DoubleType()), ('rnk', IntegerType())]
     assert out.count() == 12 * 5
+
+
+def test_knn_null_coordinate_query_returns_no_rows(spark):
+    """A query with a NULL lat or lng returns no row, as a page with one
+    joins no cell; the other queries of its batch are served."""
+    pages = _pages(spark, 300)
+    queries = spark.createDataFrame(
+        [(0, None, 10.0), (1, 12.5, 40.0), (2, -30.0, None),
+         (3, None, None), (4, -5.0, -120.0)],
+        'qid long, qlat double, qlng double')
+    out = knn_ops.knn(pages, queries, 4, 3, k_ring=1)
+    _assert_bruteforce(out.collect(), pages, queries.dropna(), 4)
+
+
+def test_knn_rounds_bound_ring_and_count(spark, monkeypatch):
+    """A sparse query set at a fine resolution: every round's ring side
+    holds at most max((2·k_ring+1)², 32) cells per query, and there are
+    at most res + 5 rounds."""
+    n_pages, n_q, k, res, k_ring = 200, 6, 8, 9, 1
+    rounds = []
+    driver_rings = knn_ops.driver_rings
+
+    def spy(*args):
+        rings = driver_rings(*args)
+        rounds.append(int(rings.toPandas()['qid'].value_counts().max()))
+        return rings
+
+    monkeypatch.setattr(knn_ops, 'driver_rings', spy)
+    pages = _pages(spark, n_pages)
+    queries = _queries(spark, 'hashed', n_q)
+    out = knn_ops.knn(pages, queries, k, res, k_ring)
+    _assert_bruteforce(out.collect(), pages, queries, k)
+    assert 1 < len(rounds) <= res + 5, rounds
+    assert max(rounds) <= max((2 * k_ring + 1) ** 2, 32), rounds
 
 
 def test_knn_rejects_batch_over_cap(spark, monkeypatch):

@@ -205,10 +205,24 @@ def _canon_rings(rings):
     return sorted(out)
 
 
-def test_polygonize_empty(spark):
+def _empty_tiles(spark, kind):
+    """No tile rows, or the 2×2 tiles of an all-zero 12×12 mask."""
+    if kind == 'no-tiles':
+        return spark.createDataFrame([], raster_ops.TILE_SCHEMA)
+    return _mask_tiles_df(spark, np.zeros((12, 12), dtype=bool), 6)
+
+
+@pytest.mark.parametrize('kind', ['no-tiles', 'zero-mask'])
+def test_polygonize_empty(spark, kind):
+    """An input with no set pixel gives no shape, under the operator's
+    schema, and the run releases every block it persisted."""
     fp = Footprint(tl=(0, 0), size=(12, 12), rsize=(12, 12))
-    empty = spark.createDataFrame([], raster_ops.TILE_SCHEMA)
-    assert raster_ops.polygonize(spark, fp, empty, tile_size=6).count() == 0
+    out = raster_ops.polygonize(spark, fp, _empty_tiles(spark, kind),
+                                tile_size=6)
+    assert out.count() == 0
+    assert out.schema == spark.createDataFrame(
+        [], raster_ops.POLY_SCHEMA).schema
+    assert not dict(spark.sparkContext._jsc.getPersistentRDDs())
 
 
 def _canon_lines(lines):
@@ -304,12 +318,16 @@ def test_distributed_vectorize_lines_blob_mask_thins_like_kernel(spark):
     assert _canon_lines(got) == _canon_lines(want)
 
 
-def test_vectorize_lines_empty(spark):
+@pytest.mark.parametrize('kind', ['no-tiles', 'zero-mask'])
+def test_vectorize_lines_empty(spark, kind):
+    """An input with no set pixel gives no polyline, under the operator's
+    schema, and the run releases every block it persisted."""
     fp = Footprint(tl=(0, 0), size=(12, 12), rsize=(12, 12))
-    empty = spark.createDataFrame([], raster_ops.TILE_SCHEMA)
-    assert raster_ops.vectorize_lines(spark, fp, empty, tile_size=6) \
-        .count() == 0
-    # the empty branch releases every block it persisted
+    out = raster_ops.vectorize_lines(spark, fp, _empty_tiles(spark, kind),
+                                     tile_size=6)
+    assert out.count() == 0
+    assert out.schema == spark.createDataFrame(
+        [], raster_ops.LINE_SCHEMA).schema
     assert not dict(spark.sparkContext._jsc.getPersistentRDDs())
 
 
