@@ -5,10 +5,11 @@ The reference runs these per-array on one machine
 of tile rows and the kernels (kernels.raster) run per tile in Python
 stages that receive only the columns their kernel reads, as Arrow tables:
 
-- ``rasterize``  — tiles ⨝ broadcast(polygons) on bbox
-  (``_tile_candidates``) → groupBy(tile).applyInArrow(burn) → tile mask
-  rows. ``rasterize_lines`` and ``zonal_stats`` share the same
-  candidate join and stage shape.
+- ``rasterize``  — one fetch of the polygons' bbox and wkb (at most
+  ``MAX_SHAPES`` rows), then one mapInArrow over the tile ids
+  (``_tile_map``): each tile picks its candidates by bbox overlap and
+  burns them → tile mask rows, with no join and no shuffle.
+  ``rasterize_lines`` and ``zonal_stats`` share the same fetch and map.
 - ``polygonize`` — the reference never had to stitch (single array;
   SURVEY.md §7.3 hard part 3). Three phases:
     1. per-tile run-length labeling (``tile_runs``: one mapInArrow over
@@ -60,9 +61,10 @@ RUN_SCHEMA = 'tile_y int, tile_x int, y int, xs int, xe int, lab int'
 POLY_SCHEMA = 'component_id long, wkb binary, area double, n_rings int'
 ZONAL_SCHEMA = ('region_id long, n_pixels long, v_sum long, v_min long, '
                 'v_max long')
-# the most polygons or polylines one polygonize / vectorize_lines call
-# returns: the driver holds every row's WKB, as it holds knn.MAX_QUERIES
-# queries
+# the most shapes one call holds on the driver: the polygons or polylines
+# polygonize / vectorize_lines return, or the geometries rasterize,
+# rasterize_lines and zonal_stats fetch to burn; the driver holds every
+# row's WKB, as it holds knn.MAX_QUERIES queries
 MAX_SHAPES = 100_000
 # the most rows one driver stitch fetches: polygonize's border runs or
 # vectorize_lines' cross-tile fragment links (~4 MB of fetched rows)
@@ -101,40 +103,6 @@ def tile_grid_df(spark: SparkSession, fp, tile_size: int) -> DataFrame:
     )
 
 
-def _tile_candidates(spark: SparkSession, fp, tile_size: int,
-                     geoms: DataFrame, cols: tuple) -> DataFrame:
-    """Tiles ⨝ broadcast(geoms) on bbox overlap: one row per (tile,
-    geometry) pair, projected to the tile window and the geometry
-    columns ``cols`` the kernel reads.
-
-    geoms carries a world bbox (minlat, minlng, maxlat, maxlng). The tile
-    bbox below, and the per-tile footprint ``_tile_fp`` builds, hold for
-    a north-up fp only, so any other fp is refused.
-    """
-    a, b, c, d, e, f = fp._coef
-    if not (b == 0 and d == 0 and a > 0 and e < 0):
-        raise ValueError('tiled rasterization needs a north-up footprint '
-                         '(b = d = 0, a > 0, e < 0); affine: %s'
-                         % str(fp._coef))
-    tiles = tile_grid_df(spark, fp, tile_size).select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    return tiles.join(
-        F.broadcast(geoms),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat'))
-    ).select(*_WINDOW, *cols)
-
-
-def _window(tbl):
-    """(y0, x0, h, w) of a candidate group's tile."""
-    return tuple(tbl.column(k)[0].as_py() for k in ('y0', 'x0', 'h', 'w'))
-
-
 def _tile_fp(gt, y0, x0, h, w):
     """Footprint of a tile window of the north-up grid ``gt``."""
     from buzzard_spark.kernels.footprint import Footprint
@@ -142,34 +110,91 @@ def _tile_fp(gt, y0, x0, h, w):
                          gt[3] + y0 * gt[5], gt[4], gt[5]), rsize=(w, h))
 
 
+def _tile_map(spark: SparkSession, fp, tile_size: int, geoms: DataFrame,
+              cols: tuple, kernel, ddl: str) -> DataFrame:
+    """``kernel(window, tile_fp, cand)`` over every tile of the
+    shrink-tiling of fp whose bbox meets a geometry's bbox, as one
+    mapInArrow over ``spark.range`` of the tile ids; the kernel returns
+    the tile's output rows as ``ddl`` columns.
+
+    geoms carries a world bbox (minlat, minlng, maxlat, maxlng). The bbox
+    and the kernel's ``cols`` are fetched once, when this is called (at
+    most ``MAX_SHAPES`` rows; more raise ``ValueError``), and reach the
+    tasks in the closure. Each task derives a tile's window
+    (tile_y, tile_x, y0, x0, h, w) with ``tile_grid_df``'s integer
+    arithmetic and its candidates with the bbox overlap test in float64;
+    ``cand`` maps each of ``cols`` to the candidates' values. A tile with
+    no candidate emits nothing. The tile bbox, and the per-tile footprint
+    ``_tile_fp`` builds, hold for a north-up fp only, so any other fp is
+    refused before any job runs.
+    """
+    a, b, c, d, e, f = (float(v) for v in fp._coef)
+    if not (b == 0 and d == 0 and a > 0 and e < 0):
+        raise ValueError('tiled rasterization needs a north-up footprint '
+                         '(b = d = 0, a > 0, e < 0); affine: %s'
+                         % str(fp._coef))
+    bbox = ('minlat', 'minlng', 'maxlat', 'maxlng')
+    g = fetch(geoms.select(*bbox, *cols), MAX_SHAPES,
+              'raster_ops.MAX_SHAPES')
+    minlat, minlng, maxlat, maxlng = (g[k].to_numpy(np.float64)
+                                      for k in bbox)
+    values = {k: g[k].to_numpy() for k in cols}
+    rx, ry = int(fp.rsizex), int(fp.rsizey)
+    ntx = -(-rx // tile_size)
+    nty = -(-ry // tile_size)
+    gt = tuple(float(v) for v in fp.gt)
+    schema = _arrow_schema(ddl)
+
+    def _map(batches):
+        for batch in batches:
+            for tid in batch.column('id').to_pylist():
+                ty, tx = divmod(tid, ntx)
+                y0, x0 = ty * tile_size, tx * tile_size
+                h, w = min(tile_size, ry - y0), min(tile_size, rx - x0)
+                cand = np.flatnonzero(
+                    (x0 * a + c <= maxlng) & ((x0 + w) * a + c >= minlng) &
+                    ((y0 + h) * e + f <= maxlat) & (y0 * e + f >= minlat))
+                if cand.size:
+                    yield pa.RecordBatch.from_pydict(
+                        kernel((ty, tx, y0, x0, h, w),
+                               _tile_fp(gt, y0, x0, h, w),
+                               {k: v[cand] for k, v in values.items()}),
+                        schema=schema)
+
+    return spark.range(ntx * nty).mapInArrow(_map, ddl)
+
+
 def _mask_tiles(spark, fp, geoms, tile_size, burn) -> DataFrame:
     """One tile mask row per tile with ≥1 candidate geometry:
     ``burn(tile_fp, wkbs)`` → bool mask."""
-    cand = _tile_candidates(spark, fp, tile_size, geoms, ('wkb',))
-    gt = tuple(float(v) for v in fp.gt)
-    schema = _arrow_schema(TILE_SCHEMA)
-
-    def _burn(tbl):
-        mask = burn(_tile_fp(gt, *_window(tbl)),
-                    tbl.column('wkb').to_pylist())
-        row = {k: [tbl.column(k)[0].as_py()] for k in _WINDOW}
+    def _burn(window, tile_fp, cand):
+        mask = burn(tile_fp, list(cand['wkb']))
+        row = {k: [v] for k, v in zip(_WINDOW, window)}
         row['mask'] = [np.packbits(mask).tobytes()]
-        return pa.Table.from_pydict(row, schema=schema)
+        return row
 
-    return cand.groupBy('tile_y', 'tile_x').applyInArrow(_burn, TILE_SCHEMA)
+    return _tile_map(spark, fp, tile_size, geoms, ('wkb',), _burn,
+                     TILE_SCHEMA)
 
 
 def rasterize(spark: SparkSession, fp, polys: DataFrame,
               tile_size: int = 256) -> DataFrame:
     """polys (region_id, wkb, minlat, minlng, maxlat, maxlng — world bbox)
-    → tile mask rows. Only tiles intersecting ≥1 polygon are emitted."""
+    → tile mask rows. Only tiles intersecting ≥1 polygon are emitted.
+
+    Scale shape: one fetch, one map (``_tile_map``). The polygons' bbox
+    and wkb are fetched when this is called (one job, at most
+    ``MAX_SHAPES`` polygons, more raise ``ValueError``); each tile then
+    burns its candidates in a mapInArrow over the tile ids, with no join
+    and no shuffle."""
     return _mask_tiles(spark, fp, polys, tile_size, raster.burn_polygons)
 
 
 def rasterize_lines(spark: SparkSession, fp, lines: DataFrame,
                     tile_size: int = 256) -> DataFrame:
     """linestrings (line_id, wkb, minlat, minlng, maxlat, maxlng) → tile
-    mask rows via per-tile DDA burn (kernels.raster.burn_lines)."""
+    mask rows via per-tile DDA burn (kernels.raster.burn_lines); the same
+    fetch-then-map shape as :func:`rasterize`."""
     return _mask_tiles(spark, fp, lines, tile_size, raster.burn_lines)
 
 
@@ -779,45 +804,42 @@ def zonal_stats(spark: SparkSession, fp, polys: DataFrame,
     model). Default: ``(17 * x + 31 * y) mod 97`` — a synthetic band the
     DuckDB oracle reproduces exactly in integer arithmetic.
 
-    Scale shape: :func:`rasterize`'s candidate join — tiles ⨝
-    broadcast(polys) on bbox — then ONE Python round-trip per tile
-    burning all its candidate zones, map-side partial aggregation, final
-    exchange only on (small) region ids. Zones may overlap (each aggregates
-    independently) — the labelize trick (one burn, one label raster)
-    would lose overlapping zones, so the per-(tile, zone) burn is the
-    correct general form. An actual stored band drops in by joining the
-    value tiles on (tile_y, tile_x) instead of recomputing — the
+    Scale shape: one fetch, one map — :func:`rasterize`'s: the zones'
+    bbox, ``region_id`` and wkb are fetched when this is called (one job,
+    at most ``MAX_SHAPES`` zones, more raise ``ValueError``), then ONE
+    mapInArrow over the tile ids burns each tile's candidate zones and
+    emits per-(tile, zone) partial rows; the only exchange is the final
+    aggregate's, on (small) region ids. Zones may overlap (each
+    aggregates independently) — the labelize trick (one burn, one label
+    raster) would lose overlapping zones, so the per-(tile, zone) burn is
+    the correct general form. An actual stored band drops in by joining
+    the value tiles on (tile_y, tile_x) instead of recomputing — the
     aggregation shape is unchanged.
     """
-    cand = _tile_candidates(spark, fp, tile_size, polys,
-                            ('region_id', 'wkb'))
-    gt = tuple(float(v) for v in fp.gt)
     vfn = value_fn if value_fn is not None else (
         lambda ys, xs: (17 * xs[None, :] + 31 * ys[:, None]) % 97)
-    schema = _arrow_schema(ZONAL_SCHEMA)
+    names = _arrow_schema(ZONAL_SCHEMA).names
 
-    def _stats(tbl):
-        y0, x0, h, w = _window(tbl)
-        tile_fp = _tile_fp(gt, y0, x0, h, w)
+    def _stats(window, tile_fp, cand):
+        _ty, _tx, y0, x0, h, w = window
         ys = np.arange(y0, y0 + h, dtype=np.int64)
         xs = np.arange(x0, x0 + w, dtype=np.int64)
         vals = np.asarray(vfn(ys, xs), dtype=np.int64)
-        out = {k: [] for k in schema.names}
-        for rid, wkb in zip(tbl.column('region_id').to_pylist(),
-                            tbl.column('wkb').to_pylist()):
+        out = {k: [] for k in names}
+        for rid, wkb in zip(cand['region_id'], cand['wkb']):
             mask = raster.burn_polygons(tile_fp, [wkb])
             if not mask.any():
                 continue
             mv = vals[mask]
-            out['region_id'].append(rid)
+            out['region_id'].append(int(rid))
             out['n_pixels'].append(int(mask.sum()))
             out['v_sum'].append(int(mv.sum()))
             out['v_min'].append(int(mv.min()))
             out['v_max'].append(int(mv.max()))
-        return pa.Table.from_pydict(out, schema=schema)
+        return out
 
-    return (cand.groupBy('tile_y', 'tile_x')
-            .applyInArrow(_stats, ZONAL_SCHEMA)
+    return (_tile_map(spark, fp, tile_size, polys, ('region_id', 'wkb'),
+                      _stats, ZONAL_SCHEMA)
             .groupBy('region_id')
             .agg(F.sum('n_pixels').alias('n_pixels'),
                  F.sum('v_sum').alias('v_sum'),

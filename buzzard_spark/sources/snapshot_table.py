@@ -247,17 +247,26 @@ class SnapshotTable:
     def read(self, spark: SparkSession,
              dedupe_keys: list[str] | None = None) -> DataFrame:
         """Union of all valid snapshots. With ``dedupe_keys``, later
-        snapshots win per key (read-modify-write / set_data semantics)."""
+        snapshots win per key (read-modify-write / set_data semantics).
+
+        Each scan carries its manifest's recorded schema, so reading
+        starts no schema-inference job (``append`` keeps one schema per
+        table)."""
         manifests = self._valid_manifests()
         if not manifests:
             raise FileNotFoundError(f'no valid snapshots under {self.root}')
+
+        def _scan(m):
+            return spark.read.schema(
+                StructType.fromJson(json.loads(m['schema'])))
+
         if dedupe_keys is None:
             dirs = [os.path.join(self.root, m['data_dir']) for m in manifests]
-            return spark.read.parquet(*dirs)
+            return _scan(manifests[-1]).parquet(*dirs)
         from pyspark.sql.window import Window
         parts = None
         for m in manifests:
-            df = (spark.read.parquet(os.path.join(self.root, m['data_dir']))
+            df = (_scan(m).parquet(os.path.join(self.root, m['data_dir']))
                   .withColumn('_snap', F.lit(m['snapshot_id'])))
             parts = df if parts is None else parts.unionByName(df)
         w = Window.partitionBy(*dedupe_keys).orderBy(F.col('_snap').desc())

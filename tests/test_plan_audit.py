@@ -11,7 +11,8 @@
   so do polygonize and vectorize_lines,
 - Python workers come from the engine daemon, so a task's
   importlib.invalidate_caches() re-reads no unchanged zip archive,
-- the rasterize / zonal / polygonize Python stages are Arrow-native and
+- rasterize and zonal_stats map over the tile ids with no join or
+  shuffle below the map; polygonize's Python stages are Arrow-native and
   receive only their kernel's columns; run labeling maps the tile rows
   without a shuffle,
 - polygonize and vectorize_lines join their driver-stitched labels as a
@@ -239,15 +240,44 @@ def raster_inputs(spark, tmp_path_factory):
     return fp, polys, path
 
 
+def _node(df, name):
+    """The first node called ``name`` of df's physical plan (through an
+    adaptive plan's current plan), or None."""
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == name:
+            return node
+        if node.nodeName() == 'AdaptiveSparkPlan':
+            todo.append(node.executedPlan())
+            continue
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return None
+
+
 def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
                                                    monkeypatch):
-    """rasterize, zonal_stats and polygonize's trace run as
-    FlatMapGroupsInArrow over exactly their kernel's columns; no pandas
-    grouped map is left on these paths."""
+    """rasterize and zonal_stats burn in one MapInArrow straight over the
+    Range of tile ids: no nested-loop join and no Exchange below it, and
+    zonal's only Exchange is its aggregate's, on region_id. polygonize's
+    trace runs as FlatMapGroupsInArrow over exactly its kernel's columns;
+    no pandas grouped map is left on these paths."""
     from buzzard_spark.operators import raster_ops
 
     fp, polys, path = raster_inputs
     tiles = raster_ops.rasterize(spark, fp, polys, tile_size=6)
+    zonal = raster_ops.zonal_stats(spark, fp, polys, tile_size=6)
+    for df, exchanges in ((tiles, []), (zonal, ['region_id'])):
+        plan = _plan(df)
+        assert _python_inputs(plan, 'MapInArrow') == [['id']]
+        below = _node(df, 'MapInArrow').toString()
+        assert 'Range' in below and 'Exchange' not in below
+        assert 'BroadcastNestedLoopJoin' not in plan
+        assert re.findall(r'Exchange hashpartitioning\((\w+)#', plan) \
+            == exchanges
+        assert plan.count('Exchange') == len(exchanges)
+        assert 'FlatMapGroupsIn' not in plan
     traced = []
     fetch = raster_ops.fetch
 
@@ -260,13 +290,10 @@ def test_raster_python_stages_are_arrow_and_pruned(spark, raster_inputs,
     # its closing fetch is the last one taken
     back = spark.read.parquet(path)
     assert raster_ops.polygonize(spark, fp, back, tile_size=6).count() > 0
-    for plan, inputs in (
-            (_plan(tiles), _WINDOW + ['wkb']),
-            (_plan(raster_ops.zonal_stats(spark, fp, polys, tile_size=6)),
-             _WINDOW + ['region_id', 'wkb']),
-            (traced[-1], ['component_id', 'y', 'xs', 'xe'])):
-        assert _python_inputs(plan, 'FlatMapGroupsInArrow') == [inputs]
-        assert 'FlatMapGroupsInPandas' not in plan
+    plan = traced[-1]
+    assert _python_inputs(plan, 'FlatMapGroupsInArrow') == [
+        ['component_id', 'y', 'xs', 'xe']]
+    assert 'FlatMapGroupsInPandas' not in plan
 
 
 @pytest.mark.parametrize('op', ['polygonize', 'vectorize_lines'])

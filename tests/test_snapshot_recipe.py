@@ -146,6 +146,47 @@ def test_empty_append_reads_back_empty(spark, tmp_path):
     assert out.schema.simpleString() == 'struct<k:bigint,v:string>'
 
 
+def _jobs_in(spark, group, run):
+    """run() under job group ``group``; the ids of the Spark jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize('dedupe_keys', [None, ['k']],
+                         ids=['plain', 'dedupe'])
+def test_read_starts_no_job(spark, tmp_path, dedupe_keys):
+    """Each scan of ``read`` carries its manifest's recorded schema, so
+    reading a 3-snapshot table starts no Spark job (a schema-inferring
+    scan starts one), and returns the rows of a schema-inferring read."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / 'tbl')
+    table = SnapshotTable(root)
+    for snap in range(3):
+        table.append(spark.range(5).select(
+            F.col('id').alias('k'), (F.col('id') * 10 + snap).alias('v')))
+    dirs = [os.path.join(root, m['data_dir']) for m in table.manifests()]
+    _, inferred_jobs = _jobs_in(spark, f'infer-{dedupe_keys}',
+                                lambda: spark.read.parquet(dirs[0]))
+    assert inferred_jobs
+    out, jobs = _jobs_in(spark, f'read-{dedupe_keys}',
+                         lambda: table.read(spark, dedupe_keys=dedupe_keys))
+    assert jobs == []
+    got = sorted(tuple(r) for r in out.collect())
+    if dedupe_keys is None:
+        want = sorted(tuple(r) for r in spark.read.parquet(*dirs).collect())
+        assert len(want) == 15
+    else:
+        want = [(k, k * 10 + 2) for k in range(5)]
+    assert got == want
+
+
 def test_resume_keys_sidecar_scales_off_driver(spark, tmp_path):
     """Resume keys live in an executor-written parquet sidecar: a key
     count that would be driver-unfriendly as manifest JSON (120k)

@@ -496,3 +496,133 @@ def test_thin_tiles_rejects_off_grid_tiles(spark):
     tiles = _mask_tiles_df(spark, mask, 4)
     with pytest.raises(PythonException, match='off the tile_size=3 grid'):
         _thinned(spark, tiles, 3)
+
+
+def _rect_rows(rects):
+    """Geometry rows (region_id, wkb, world bbox) of (minx, miny, maxx,
+    maxy) rectangles."""
+    rows = []
+    for rid, (x0, y0, x1, y1) in enumerate(rects):
+        ring = np.asarray([(x0, y0), (x1, y0), (x1, y1), (x0, y1),
+                           (x0, y0)], float)
+        rows.append((rid, bytearray(geometry.wkb_polygon(ring)),
+                     float(y0), float(x0), float(y1), float(x1)))
+    return rows
+
+
+_GEOM_DDL = ('region_id long, wkb binary, minlat double, minlng double, '
+             'maxlat double, maxlng double')
+
+
+def _assert_tile_map_matches_kernel(spark, fp, rows, ts):
+    """rasterize and zonal_stats of ``rows`` == the kernel: every tile of
+    ``tile_grid_df`` whose bbox meets a geometry's bbox (the inclusive
+    test, in float64) emits exactly its window and the burn of its
+    candidates, no other tile emits a row, the tiles stitch to the
+    whole-raster burn, and each zone's stats are the whole-raster masked
+    reductions. Returns the emitted tile keys."""
+    polys = spark.createDataFrame(rows, _GEOM_DDL)
+    got = {}
+    for r in raster_ops.rasterize(spark, fp, polys, tile_size=ts).collect():
+        key = (r['tile_y'], r['tile_x'])
+        assert key not in got
+        got[key] = (r['y0'], r['x0'], r['h'], r['w'], bytes(r['mask']))
+    a, _, c, _, e, f = (float(v) for v in fp._coef)
+    gt = tuple(float(v) for v in fp.gt)
+    want = {}
+    for t in raster_ops.tile_grid_df(spark, fp, ts).collect():
+        y0, x0, h, w = t['y0'], t['x0'], t['h'], t['w']
+        cand = [bytes(wkb) for _, wkb, minlat, minlng, maxlat, maxlng in rows
+                if x0 * a + c <= maxlng and (x0 + w) * a + c >= minlng
+                and (y0 + h) * e + f <= maxlat and y0 * e + f >= minlat]
+        if cand:
+            mask = raster.burn_polygons(
+                raster_ops._tile_fp(gt, y0, x0, h, w), cand)
+            want[(t['tile_y'], t['tile_x'])] = (
+                y0, x0, h, w, np.packbits(mask).tobytes())
+    assert got == want
+    full = np.zeros(tuple(fp.shape), bool)
+    for y0, x0, h, w, buf in got.values():
+        full[y0:y0 + h, x0:x0 + w] |= raster_ops._unpack_mask(buf, h, w)
+    assert (full == raster.burn_polygons(
+        fp, [bytes(r[1]) for r in rows])).all()
+
+    zonal = {r['region_id']: (r['n_pixels'], r['v_sum'], r['v_min'],
+                              r['v_max'])
+             for r in raster_ops.zonal_stats(spark, fp, polys,
+                                             tile_size=ts).collect()}
+    h, w = fp.shape
+    vals = (17 * np.arange(w, dtype=np.int64)[None, :]
+            + 31 * np.arange(h, dtype=np.int64)[:, None]) % 97
+    want_z = {}
+    for rid, wkb, *_ in rows:
+        mask = raster.burn_polygons(fp, [bytes(wkb)])
+        if mask.any():
+            mv = vals[mask]
+            want_z[rid] = (int(mask.sum()), int(mv.sum()), int(mv.min()),
+                           int(mv.max()))
+    assert zonal == want_z
+    return set(got)
+
+
+def test_tile_map_empty_geometries(spark):
+    """No geometry: no tile row and no zone, under each operator's
+    schema."""
+    fp = Footprint(tl=(0, 12), size=(12, 12), rsize=(12, 12))
+    polys = spark.createDataFrame([], _GEOM_DDL)
+    for op, ddl in (('rasterize', raster_ops.TILE_SCHEMA),
+                    ('zonal_stats', raster_ops.ZONAL_SCHEMA)):
+        out = getattr(raster_ops, op)(spark, fp, polys, tile_size=6)
+        assert out.collect() == []
+        assert out.schema == spark.createDataFrame([], ddl).schema
+
+
+def test_tile_map_bbox_on_tile_edge(spark):
+    """A bbox edge exactly on a tile edge (t_maxx == minlng, t_miny ==
+    maxlat) makes that tile a candidate, as the inclusive test says,
+    though the burn sets no pixel in it."""
+    fp = Footprint(tl=(0, 12), size=(12, 12), rsize=(12, 12))
+    # x in [6, 9] starts on the edge between tile columns 0 and 1, and
+    # y in [1, 6] ends on the edge between tile rows 0 and 1: only tile
+    # (1, 1) holds a burned pixel
+    keys = _assert_tile_map_matches_kernel(
+        spark, fp, _rect_rows([(6.0, 1.0, 9.0, 6.0)]), 6)
+    assert keys == {(0, 0), (0, 1), (1, 0), (1, 1)}
+
+
+def test_tile_map_geometry_past_raster_edge(spark):
+    """A zone that crosses the raster's edge burns only its inside part;
+    one wholly outside emits no tile and no zone."""
+    fp = Footprint(tl=(0, 12), size=(12, 12), rsize=(12, 12))
+    keys = _assert_tile_map_matches_kernel(
+        spark, fp, _rect_rows([(9.0, -3.0, 20.0, 4.0),
+                               (20.0, 20.0, 30.0, 30.0),
+                               (-5.0, 8.0, 2.0, 15.0)]), 5)
+    assert keys == {(0, 0), (1, 1), (1, 2), (2, 1), (2, 2)}
+
+
+@pytest.mark.parametrize('ts', [1, 4], ids=['ts1', 'ts4'])
+def test_tile_map_unit_and_remainder_tiles(spark, fullfp, truth, ts):
+    """The findburn polygons on 1-px tiles and on 4-px tiles, whose 21×18
+    grid leaves 1-px remainder tiles (21 % 4 == 1, 18 % 4 == 2)."""
+    rows = [tuple(r) for r in _polys_df(spark, fullfp, truth).collect()]
+    keys = _assert_tile_map_matches_kernel(spark, fullfp, rows, ts)
+    ntx = -(-fullfp.rsizex // ts)
+    assert any(tx == ntx - 1 for _, tx in keys)
+
+
+def test_tile_map_geometry_cap(spark, fullfp, truth, monkeypatch):
+    """More than ``raster_ops.MAX_SHAPES`` geometries raise when rasterize
+    or zonal_stats is called, persisting nothing; exactly the cap burns
+    as the kernel does."""
+    rows = [tuple(r) for r in _polys_df(spark, fullfp, truth).collect()]
+    polys = spark.createDataFrame(rows, _GEOM_DDL)
+    jsc = spark.sparkContext._jsc
+    persisted = set(dict(jsc.getPersistentRDDs()))
+    monkeypatch.setattr(raster_ops, 'MAX_SHAPES', len(rows) - 1)
+    for op in ('rasterize', 'zonal_stats'):
+        with pytest.raises(ValueError, match=r'raster_ops\.MAX_SHAPES'):
+            getattr(raster_ops, op)(spark, fullfp, polys, tile_size=6)
+        assert set(dict(jsc.getPersistentRDDs())) == persisted
+    monkeypatch.setattr(raster_ops, 'MAX_SHAPES', len(rows))
+    _assert_tile_map_matches_kernel(spark, fullfp, rows, 6)
