@@ -166,26 +166,3 @@ def region_cols_np(region_ids):
 # irregular-but-convex CCW pentagon template for polygon regions —
 # plain two-decimal constants so SQL oracles can rebuild identical vertices
 PENTAGON = ((1.0, 0.0), (0.31, 0.95), (-0.81, 0.59), (-0.81, -0.59), (0.31, -0.95))
-
-
-def pentagon_pip_sql(lat_col: str, lng_col: str, cols: dict) -> str:
-    """Convex half-plane PIP against the pentagon region — AND of edge
-    cross-products ≥ 0 (CCW). Vertices: (clng + halfw·px, clat + halfh·py)."""
-    def vx(i):
-        px, _ = PENTAGON[i % 5]
-        return '({clng} + {halfw} * {px})'.format(
-            clng=cols['clng'], halfw=cols['halfw'], px=dlit(px))
-
-    def vy(i):
-        _, py = PENTAGON[i % 5]
-        return '({clat} + {halfh} * {py})'.format(
-            clat=cols['clat'], halfh=cols['halfh'], py=dlit(py))
-
-    terms = []
-    for i in range(5):
-        x1, y1, x2, y2 = vx(i), vy(i), vx(i + 1), vy(i + 1)
-        terms.append(
-            '(({x2} - {x1}) * ({py} - {y1}) - ({y2} - {y1}) * ({px} - {x1})) '
-            '>= {zero}'.format(x1=x1, y1=y1, x2=x2, y2=y2,
-                               px=lng_col, py=lat_col, zero=dlit(0.0)))
-    return '(' + ' AND '.join(terms) + ')'

@@ -59,11 +59,6 @@ def cell_bounds(cell, res):
     return minlng, maxlat - h, minlng + w, maxlat
 
 
-def cell_center(cell, res):
-    minlng, minlat, maxlng, maxlat = cell_bounds(cell, res)
-    return (minlat + maxlat) / 2.0, (minlng + maxlng) / 2.0
-
-
 def ring(cell, k, res):
     """All cells within Chebyshev distance k of `cell` (incl. itself).
 

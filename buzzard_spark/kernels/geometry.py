@@ -105,22 +105,6 @@ def _decode_at(buf, off):
     raise ValueError('unsupported wkb geometry type %d' % gtype)
 
 
-def wkb_bbox(buf: bytes):
-    """(minx, miny, maxx, maxy) of any supported geometry."""
-    kind, payload = wkb_decode(buf)
-    if kind == 'point':
-        x, y = payload
-        return (x, y, x, y)
-    if kind == 'linestring':
-        arr = payload
-    elif kind == 'polygon':
-        arr = payload[0]
-    else:  # multipolygon: exteriors only
-        arr = np.vstack([rings[0] for rings in payload])
-    return (float(arr[:, 0].min()), float(arr[:, 1].min()),
-            float(arr[:, 0].max()), float(arr[:, 1].max()))
-
-
 # -- point-in-polygon -----------------------------------------------------------
 
 def points_in_ring(px, py, ring) -> np.ndarray:

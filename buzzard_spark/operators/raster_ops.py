@@ -27,11 +27,12 @@ stages that receive only the columns their kernel reads, as Arrow tables:
 
 - ``thin_tiles`` / ``vectorize_lines`` — the reference's find_lines
   (thin → pixel graph → linemerge). Each tile needs the set pixels
-  within a halo of H px around its window: every pixel is sent to each
-  tile of the grid whose window, grown by H, holds it (``_halo_rows``,
-  reaching ceil(H / tile_size) tiles per direction), so the halo is
-  exact for every tile size, 1 included. These stages still run as
-  pandas UDFs.
+  within a halo of H px around its window; one helper serves both
+  (``_halo_map``): every tile row sends the packed strip of its mask
+  inside each grid neighbour's window grown by H (reaching
+  ceil(H / tile_size) tiles per direction, so the halo is exact for
+  every tile size, 1 included), and one Arrow grouped map per tile
+  pastes its strips into the grown window and runs the kernel.
 
 ``polygonize`` and ``vectorize_lines`` stitch and end the same way: the
 rows that link tiles (border runs, cross-tile fragment links) are fetched
@@ -51,6 +52,8 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from buzzard_spark.kernels import geometry, raster
 from buzzard_spark.session import fetch, local_frame, release_blocks
@@ -71,14 +74,11 @@ MAX_SHAPES = 100_000
 MAX_STITCH = 200_000
 
 _WINDOW = ('tile_y', 'tile_x', 'y0', 'x0', 'h', 'w')
-_ARROW_TYPES = {'int': pa.int32(), 'long': pa.int64(),
-                'double': pa.float64(), 'binary': pa.binary()}
 
 
 def _arrow_schema(ddl: str) -> pa.Schema:
     """The pyarrow schema an Arrow UDF must return for a DDL string."""
-    return pa.schema([(name, _ARROW_TYPES[typ]) for name, typ in
-                      (field.split() for field in ddl.split(','))])
+    return to_arrow_schema(_parse_datatype_string(ddl))
 
 
 def tile_grid_df(spark: SparkSession, fp, tile_size: int) -> DataFrame:
@@ -253,48 +253,88 @@ LINE_SCHEMA = 'chain_id long, wkb binary, n_pts int'
 _THIN_SCHEMA = TILE_SCHEMA + ', _chg long'
 # thinning subiterations per halo exchange (= the halo depth in pixels)
 _THIN_SUB = 4
+# full thinning iterations before thin_tiles gives up with RuntimeError
+_THIN_MAX_ITERS = 1024
 
 
-def _halo_rows(tile_y, tile_x, y0, x0, gy, gx, halo, tile_size):
-    """Halo copies of one tile's set pixels (GLOBAL int32 ``gy``, ``gx``)
-    as (tile_y, tile_x, y, x) arrays: every pixel goes to each OTHER tile
-    of the ``tile_size`` grid whose window, grown by ``halo`` px, holds
-    it. Reaching ceil(halo / tile_size) tiles in each direction makes the
-    halo exact for every tile size, 1 included; negative tile indices are
-    skipped, and rows past the grid's far edge meet no tile downstream.
-    A tile whose (y0, x0) is off the grid raises ``ValueError`` (a wrong
-    ``tile_size`` would otherwise give silently wrong masks)."""
-    if (y0, x0) != (tile_y * tile_size, tile_x * tile_size):
-        raise ValueError(
-            f'tile ({tile_y}, {tile_x}) starts at (y0, x0) = ({y0}, {x0}), '
-            f'off the tile_size={tile_size} grid')
+def _halo_map(tiles: DataFrame, halo: int, tile_size: int, kernel,
+              ddl: str) -> DataFrame:
+    """``kernel(window, P)`` once per tile row, where P is the tile's
+    window grown by ``halo`` px on every side, holding the set pixels of
+    every tile of the ``tile_size`` grid inside it; the kernel returns the
+    tile's output rows as ``ddl`` columns.
+
+    Two stages, one exchange:
+
+    1. one mapInArrow over the tile rows, no shuffle: each row emits
+       itself (``own``) and, for every tile within ceil(halo / tile_size)
+       grid steps whose grown window overlaps it, the packed sub-rectangle
+       of its mask inside that grown window, with the sub-rectangle's
+       global (y0, x0, h, w). Reaching that far makes the halo exact for
+       every tile size, 1 included; empty strips and negative tile
+       indices are skipped, and strips past the grid's far edge meet no
+       own row downstream. A tile whose (y0, x0) is off the grid raises
+       ``ValueError`` (a wrong ``tile_size`` would otherwise give silently
+       wrong windows).
+    2. one ``groupBy('tile_y', 'tile_x').applyInArrow``: a group with an
+       own row pastes every row into a zero (h + 2·halo) × (w + 2·halo)
+       window and runs the kernel; a group of strips only emits nothing.
+    """
     reach = -(-halo // tile_size)
+    strip_ddl = TILE_SCHEMA + ', own boolean'
+    strip_schema = _arrow_schema(strip_ddl)
+    schema = _arrow_schema(ddl)
 
-    def _hits(t, g):
-        # grid offset k → which pixels tile (t + k)'s grown window holds
-        return [(k, (g >= (t + k) * tile_size - halo) &
-                 (g < (t + k + 1) * tile_size + halo))
-                for k in range(-reach, reach + 1) if t + k >= 0]
+    def _span(t, k, lo, n):
+        # [start, end) of tile (t + k)'s grown window within [lo, lo + n)
+        return (max(lo, (t + k) * tile_size - halo),
+                min(lo + n, (t + k + 1) * tile_size + halo))
 
-    dest_y, dest_x, idx = [], [], []
-    for dy, in_y in _hits(tile_y, gy):
-        for dx, in_x in _hits(tile_x, gx):
-            if dy or dx:
-                i = np.flatnonzero(in_y & in_x)
-                dest_y.append(np.full(len(i), tile_y + dy, np.int32))
-                dest_x.append(np.full(len(i), tile_x + dx, np.int32))
-                idx.append(i)
-    idx = np.concatenate(idx)
-    return np.concatenate(dest_y), np.concatenate(dest_x), gy[idx], gx[idx]
+    def _strips(batches):
+        for batch in batches:
+            rows = batch.to_pydict()
+            out = {k: [] for k in strip_schema.names}
+            for ty, tx, y0, x0, h, w, buf in zip(
+                    *(rows[k] for k in _WINDOW), rows['mask']):
+                if (y0, x0) != (ty * tile_size, tx * tile_size):
+                    raise ValueError(
+                        f'tile ({ty}, {tx}) starts at (y0, x0) = '
+                        f'({y0}, {x0}), off the tile_size={tile_size} grid')
+                mask = _unpack_mask(buf, h, w)
+                emit = [(ty, tx, y0, x0, h, w, buf, True)]
+                for dy in range(-reach, reach + 1):
+                    sy0, sy1 = _span(ty, dy, y0, h)
+                    for dx in range(-reach, reach + 1):
+                        sx0, sx1 = _span(tx, dx, x0, w)
+                        if ((dy or dx) and min(ty + dy, tx + dx) >= 0
+                                and sy0 < sy1 and sx0 < sx1):
+                            sub = mask[sy0 - y0:sy1 - y0, sx0 - x0:sx1 - x0]
+                            if sub.any():
+                                emit.append((ty + dy, tx + dx, sy0, sx0,
+                                             sy1 - sy0, sx1 - sx0,
+                                             np.packbits(sub).tobytes(),
+                                             False))
+                for row in emit:
+                    for k, v in zip(strip_schema.names, row):
+                        out[k].append(v)
+            yield pa.RecordBatch.from_pydict(out, schema=strip_schema)
 
+    def _paste(_key, tbl):
+        rows = tbl.to_pydict()
+        if True not in rows['own']:
+            return schema.empty_table()
+        i = rows['own'].index(True)
+        window = tuple(rows[k][i] for k in _WINDOW)
+        _ty, _tx, y0, x0, h, w = window
+        P = np.zeros((h + 2 * halo, w + 2 * halo), bool)
+        for sy0, sx0, sh, sw, buf in zip(rows['y0'], rows['x0'], rows['h'],
+                                         rows['w'], rows['mask']):
+            y, x = sy0 - y0 + halo, sx0 - x0 + halo
+            P[y:y + sh, x:x + sw] |= _unpack_mask(buf, sh, sw)
+        return pa.Table.from_pydict(kernel(window, P), schema=schema)
 
-def _tile_pixels(row):
-    """(tile_y, tile_x, y0, x0) and the GLOBAL int32 (gy, gx) of the set
-    pixels of one tile row."""
-    ys, xs = np.nonzero(_unpack_mask(row['mask'], int(row.h), int(row.w)))
-    ty, tx, y0, x0 = (int(row[k]) for k in ('tile_y', 'tile_x', 'y0', 'x0'))
-    return (ty, tx, y0, x0, (ys + y0).astype(np.int32),
-            (xs + x0).astype(np.int32))
+    return (tiles.select(*_WINDOW, 'mask').mapInArrow(_strips, strip_ddl)
+            .groupBy('tile_y', 'tile_x').applyInArrow(_paste, ddl))
 
 
 def _thin_block(tiles: DataFrame, tile_size: int) -> DataFrame:
@@ -302,46 +342,22 @@ def _thin_block(tiles: DataFrame, tile_size: int) -> DataFrame:
     0/1) in ONE halo exchange: with an H = ``_THIN_SUB``-pixel halo, each
     subiteration invalidates one outer ring of the local window, so every
     OWN pixel's H-step evolution is exact (bit-identical to H global
-    subiterations). One mapInPandas + one cogroup shuffle per block
-    instead of one per subiteration — at scale the per-round barrier and
-    shuffle is the dominant thinning cost. The halo is indexed by the
-    ``tile_size`` grid (``_halo_rows``), so it is exact for any tile size.
+    subiterations). One ``_halo_map`` (one exchange) per block instead of
+    one per subiteration — at scale the per-round barrier and shuffle is
+    the dominant thinning cost.
 
     ``_chg`` counts own-pixel deletions in the LAST TWO subiterations
     (the final full iteration) — the convergence statistic."""
     H = _THIN_SUB
 
-    def _emit_halo(iterator):
-        for pdf in iterator:
-            parts = [_halo_rows(*_tile_pixels(row), H, tile_size)
-                     for _, row in pdf.iterrows()]
-            if parts:
-                yield pd.DataFrame(dict(zip(('tile_y', 'tile_x', 'y', 'x'),
-                                            map(np.concatenate,
-                                                zip(*parts)))))
-
-    halos = tiles.mapInPandas(_emit_halo, 'tile_y int, tile_x int, '
-                                          'y int, x int')
-
-    def _apply(key, tpdf, hpdf):
-        if not len(tpdf):
-            return pd.DataFrame(columns=[
-                'tile_y', 'tile_x', 'y0', 'x0', 'h', 'w', 'mask', '_chg'])
-        row = tpdf.iloc[0]
-        h, w = int(row.h), int(row.w)
-        y0, x0 = int(row.y0), int(row.x0)
-        mask = _unpack_mask(row['mask'], h, w)
-        # window = own tile + H-px halo ring, plus the 1-px zero pad
-        # _thin_delete needs; cells beyond the halo are assumed empty,
-        # which is exactly the staleness the per-subiteration validity
-        # argument absorbs (ring k of the window is stale after k
-        # subiterations; own pixels sit >= H rings deep).
-        P = np.zeros((h + 2 * H + 2, w + 2 * H + 2), bool)
-        P[H + 1:H + 1 + h, H + 1:H + 1 + w] = mask
-        if len(hpdf):
-            hy = hpdf['y'].to_numpy(np.int64) - y0 + H + 1
-            hx = hpdf['x'].to_numpy(np.int64) - x0 + H + 1
-            P[hy, hx] = True
+    def _thin(window, P):
+        ty, tx, y0, x0, h, w = window
+        # the halo window plus the 1-px zero pad _thin_delete needs; cells
+        # beyond the halo are assumed empty, which is exactly the
+        # staleness the per-subiteration validity argument absorbs (ring k
+        # of the window is stale after k subiterations; own pixels sit
+        # >= H rings deep).
+        P = np.pad(P, 1)
         chg = 0
         for k in range(H):
             d = raster._thin_delete(P, k % 2)
@@ -349,35 +365,31 @@ def _thin_block(tiles: DataFrame, tile_size: int) -> DataFrame:
                 chg += int(d[H:H + h, H:H + w].sum())
             if d.any():
                 P[1:-1, 1:-1] &= ~d
-        return pd.DataFrame([{
-            'tile_y': int(row.tile_y), 'tile_x': int(row.tile_x),
-            'y0': y0, 'x0': x0, 'h': h, 'w': w,
-            'mask': bytearray(np.packbits(
-                P[H + 1:H + 1 + h, H + 1:H + 1 + w]).tobytes()),
-            '_chg': chg}])
+        own = P[H + 1:H + 1 + h, H + 1:H + 1 + w]
+        return {'tile_y': [ty], 'tile_x': [tx], 'y0': [y0], 'x0': [x0],
+                'h': [h], 'w': [w], 'mask': [np.packbits(own).tobytes()],
+                '_chg': [chg]}
 
-    return (tiles.groupby('tile_y', 'tile_x')
-            .cogroup(halos.groupby('tile_y', 'tile_x'))
-            .applyInPandas(_apply, _THIN_SCHEMA))
+    return _halo_map(tiles, H, tile_size, _thin, _THIN_SCHEMA)
 
 
 def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
-               cache_registry: list, tile_size: int = 256,
-               max_iters: int = 1024) -> DataFrame:
+               cache_registry: list, tile_size: int = 256) -> DataFrame:
     """Distributed morphological thinning of a tiled mask — the scale
     analogue of ``kernels.raster.thin`` (the reference's ``skm.thin``
     preprocessing, buzzard/_footprint.py:1631): per round, every tile
     receives the set pixels within ``_THIN_SUB`` px of its window from
-    every tile of the ``tile_size`` grid that holds them (a grid-indexed
-    halo, exact for any tile size) and runs ``_THIN_SUB`` Lam-Lee-Suen
-    subiterations (``_thin_block``); the loop stops when a full iteration
-    deletes nothing anywhere. Output masks are bit-identical to the
-    kernel on the stitched array. Tile rows must lie on the
-    ``tile_size`` grid (``tile_grid_df``); an off-grid row fails the job
-    with ``ValueError``.
+    every tile of the ``tile_size`` grid that holds them (``_halo_map``,
+    a grid-indexed halo, exact for any tile size) and runs ``_THIN_SUB``
+    Lam-Lee-Suen subiterations (``_thin_block``); the loop stops when a
+    full iteration deletes nothing anywhere, and more than
+    ``_THIN_MAX_ITERS`` iterations raise ``RuntimeError``. Output masks
+    are bit-identical to the kernel on the stitched array, one row per
+    input tile row. Tile rows must lie on the ``tile_size`` grid
+    (``tile_grid_df``); an off-grid row fails the job with ``ValueError``.
 
-    Scale shape: each round is one cogroup shuffle of (packed tile masks
-    + sparse halo pixels) — nothing mask-sized on the driver; the
+    Scale shape: each round is one exchange of (packed tile masks +
+    packed halo strips) — nothing mask-sized on the driver; the
     iteration count is O(max inscribed blob radius), the propagation lower
     bound any parallel thinning shares. Rounds use lazy localCheckpoints
     (one job per round, the convergence sum); the round blocks are
@@ -386,7 +398,7 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
     CALLER releases the registry with ``session.release_blocks`` once
     its result no longer reads them (after a collect or fetch)."""
     tiles = mask_tiles.select(*_WINDOW, 'mask')
-    for _ in range(0, max_iters, _THIN_SUB // 2):
+    for _ in range(0, _THIN_MAX_ITERS, _THIN_SUB // 2):
         # TWO full iterations materialize per convergence job: the checked
         # sum counts ONLY the last full iteration's deletions — zero means
         # a full iteration deleted nothing, the sound fixpoint criterion.
@@ -399,76 +411,38 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
             break
     else:
         raise RuntimeError(
-            f'thin_tiles did not converge in {max_iters} iterations')
+            f'thin_tiles did not converge in {_THIN_MAX_ITERS} iterations')
     return tiles.drop('_chg')
-
-
-def _tile_halo_pixels_h(mask_tiles: DataFrame, halo: int,
-                        tile_size: int) -> DataFrame:
-    """Pixel rows (tile_y, tile_x, y, x, own bool): each tile's set pixels
-    plus every set pixel within ``halo`` px of its window, taken from the
-    tiles of the ``tile_size`` grid that hold them (``_halo_rows``; halo
-    rows carry own=false). Lets every tile evaluate (2·halo+1)²
-    neighborhoods of its own pixels exactly. Each tile row emits its
-    pixel rows independently (one mapInPandas, no shuffle);
-    ``_edges_with_links`` groups them by destination tile."""
-    def _emit(iterator):
-        for pdf in iterator:
-            parts = []
-            for _, row in pdf.iterrows():
-                ty, tx, y0, x0, gy, gx = _tile_pixels(row)
-                n = len(gy)
-                parts.append((np.full(n, ty, np.int32),
-                              np.full(n, tx, np.int32),
-                              gy, gx, np.ones(n, bool)))
-                halo_rows = _halo_rows(ty, tx, y0, x0, gy, gx, halo,
-                                       tile_size)
-                parts.append(halo_rows + (np.zeros(len(halo_rows[0]), bool),))
-            if parts:
-                yield pd.DataFrame(dict(zip(
-                    ('tile_y', 'tile_x', 'y', 'x', 'own'),
-                    map(np.concatenate, zip(*parts)))))
-
-    return mask_tiles.mapInPandas(
-        _emit, 'tile_y int, tile_x int, y int, x int, own boolean')
 
 
 _EDGE_SCHEMA = ('eid long, ax int, ay int, bx int, by int, '
                 'ea long, eb long, la long, lb long')
 
 
-def _edges_with_links(pixels: DataFrame) -> DataFrame:
-    """Pixel-graph edge extraction + 2×2-square collapse from ONE
-    2-px-halo view (``_tile_halo_pixels_h``): one applyInPandas pass per
-    tile emits the finished edge rows (eid, endpoints, square-extended
-    endpoints ea/eb, nullable square top-lefts la/lb). Edge rule of
-    kernels.raster.find_lines: 4-neighbors always, diagonals only when no
-    4-connected detour exists; each edge is emitted once, by the tile
-    owning its first endpoint. Node ids pack a pixel as y·2^21 + x and
-    eid = node·4 + direction — collision-free up to 2^21 px per side.
-    Validity: an edge's far endpoint b lies within 1 px of an own pixel,
-    b's candidate squares within 1 px of b, and their member pixels
-    within 1 px again — all inside the 2-px halo, so la/lb (and the
-    row-major last-wins tie-break of kernels.raster.square_links,
-    reproduced by ascending-TL overwrite) are computed exactly as the
-    global kernel computes them. Segments fully inside squares (la AND lb
-    both set) are dropped."""
-    def _emit(key, pdf):
-        cols = ['eid', 'ax', 'ay', 'bx', 'by', 'ea', 'eb', 'la', 'lb']
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        xs = pdf['x'].to_numpy(np.int64)
-        ys = pdf['y'].to_numpy(np.int64)
-        own_rows = pdf['own'].to_numpy(bool)
-        if not own_rows.any():
-            return pd.DataFrame(columns=cols)
-        x0, y0 = int(xs.min()) - 1, int(ys.min()) - 1
-        W = int(xs.max()) - x0 + 2
-        H = int(ys.max()) - y0 + 2
-        grid = np.zeros((H, W), bool)
-        grid[ys - y0, xs - x0] = True
+def _edges_with_links(mask_tiles: DataFrame, tile_size: int) -> DataFrame:
+    """Pixel-graph edge extraction + 2×2-square collapse from ONE 2-px
+    halo window per tile (``_halo_map``): each tile emits the finished
+    edge rows (eid, endpoints, square-extended endpoints ea/eb, nullable
+    square top-lefts la/lb). Edge rule of kernels.raster.find_lines:
+    4-neighbors always, diagonals only when no 4-connected detour exists;
+    each edge is emitted once, by the tile owning its first endpoint.
+    Node ids pack a pixel as y·2^21 + x and eid = node·4 + direction —
+    collision-free up to 2^21 px per side. Validity: an edge's far
+    endpoint b lies within 1 px of an own pixel, b's candidate squares
+    within 1 px of b, and their member pixels within 1 px again — all
+    inside the 2-px halo, so la/lb (and the row-major last-wins
+    tie-break of kernels.raster.square_links, reproduced by ascending-TL
+    overwrite) are computed exactly as the global kernel computes them.
+    Segments fully inside squares (la AND lb both set) are dropped."""
+    names = _arrow_schema(_EDGE_SCHEMA).names
+
+    def _edges(window, grid):
+        _ty, _tx, y0, x0, h, w = window
+        # the window's global origin: 2 px above and left of the tile
+        y0, x0 = y0 - 2, x0 - 2
+        H, W = grid.shape
         owng = np.zeros((H, W), bool)
-        owng[ys[own_rows] - y0, xs[own_rows] - x0] = True
+        owng[2:2 + h, 2:2 + w] = grid[2:2 + h, 2:2 + w]
         sq = np.zeros((H, W), bool)
         sq[:-1, :-1] = (grid[:-1, :-1] & grid[1:, :-1] &
                         grid[:-1, 1:] & grid[1:, 1:])
@@ -494,21 +468,17 @@ def _edges_with_links(pixels: DataFrame) -> DataFrame:
             tly = np.where(m, yidx - dy, tly)
             tlx = np.where(m, xidx - dx, tlx)
 
-        frames = []
+        out = {k: [] for k in names}
         for di, (dx, dy) in enumerate(((1, 0), (0, 1), (1, 1), (1, -1))):
             pair = owng & _shift(grid, dy, dx)
             if dx and dy:
                 pair &= ~(_shift(grid, 0, dx) | _shift(grid, dy, 0))
             py, px = np.nonzero(pair)
-            if not len(py):
-                continue
             lay = tly[py, px]
             lax = tlx[py, px]
             lby = tly[py + dy, px + dx]
             lbx = tlx[py + dy, px + dx]
             keep = (lay < 0) | (lby < 0)
-            if not keep.any():
-                continue
             py, px = py[keep], px[keep]
             lay, lax = lay[keep], lax[keep]
             lby, lbx = lby[keep], lbx[keep]
@@ -519,21 +489,22 @@ def _edges_with_links(pixels: DataFrame) -> DataFrame:
             nb = by * 2097152 + bx
             la = (lay + y0) * 2097152 + (lax + x0)
             lb = (lby + y0) * 2097152 + (lbx + x0)
-            frames.append(pd.DataFrame({
-                'eid': na * 4 + di,
-                'ax': ax.astype(np.int32), 'ay': ay.astype(np.int32),
-                'bx': bx.astype(np.int32), 'by': by.astype(np.int32),
-                'ea': np.where(lay >= 0, la, na),
-                'eb': np.where(lby >= 0, lb, nb),
-                'la': pd.Series(la, dtype='Int64').where(lay >= 0),
-                'lb': pd.Series(lb, dtype='Int64').where(lby >= 0),
-            }))
-        if not frames:
-            return pd.DataFrame(columns=cols)
-        return pd.concat(frames, ignore_index=True)
+            out['eid'].append(na * 4 + di)
+            out['ax'].append(ax.astype(np.int32))
+            out['ay'].append(ay.astype(np.int32))
+            out['bx'].append(bx.astype(np.int32))
+            out['by'].append(by.astype(np.int32))
+            out['ea'].append(np.where(lay >= 0, la, na))
+            out['eb'].append(np.where(lby >= 0, lb, nb))
+            # a square's top-left is a set pixel, so never negative
+            out['la'].append(np.where(lay >= 0, la, -1))
+            out['lb'].append(np.where(lby >= 0, lb, -1))
+        out = {k: np.concatenate(v) for k, v in out.items()}
+        for k in ('la', 'lb'):
+            out[k] = pa.array(out[k], mask=out[k] < 0)
+        return out
 
-    return (pixels.groupBy('tile_y', 'tile_x')
-            .applyInPandas(_emit, _EDGE_SCHEMA))
+    return _halo_map(mask_tiles, 2, tile_size, _edges, _EDGE_SCHEMA)
 
 
 def _join_labels(df: DataFrame, key: str, a: pd.Series,
@@ -564,8 +535,9 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
        preprocessing; unthinned blob masks would yield denser linework
        than buzzard),
     1. per-tile pixel-graph edges with the 2×2-square collapse, from one
-       2-px halo indexed by the tile grid (``_tile_halo_pixels_h`` →
-       ``_edges_with_links``; exact for any tile size, 1 included),
+       2-px halo window per tile indexed by the tile grid
+       (``_edges_with_links`` over ``_halo_map``; exact for any tile size,
+       1 included),
     2. node degrees = groupBy count; edges sharing a degree-2 node belong
        to one chain; intra-tile fragments contract in a per-tile
        union-find, then the cross-tile fragment links are fetched and
@@ -580,59 +552,58 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     polylines raise ``ValueError``. Every block the pipeline persisted is
     released before the call returns or raises.
     """
-    def _uf(key, pdf):
-        roots = raster.union_find(zip(pdf['id_a'].tolist(),
-                                      pdf['id_b'].tolist()))
-        return pd.DataFrame(list(roots.items()), columns=['eid', 'lroot'])
+    uf_schema = _arrow_schema('eid long, lroot long')
+    line_schema = _arrow_schema(LINE_SCHEMA)
+
+    def _uf(_key, tbl):
+        roots = raster.union_find(zip(tbl.column('id_a').to_pylist(),
+                                      tbl.column('id_b').to_pylist()))
+        return pa.Table.from_pydict({'eid': list(roots),
+                                     'lroot': list(roots.values())},
+                                    schema=uf_schema)
 
     coef = tuple(float(v) for v in fp._coef)
 
-    def _assemble(key, pdf):
+    def _assemble(key, tbl):
         # one reducer per chain: rebuild vertex-list segments (with the
         # square-collapse endpoint extensions) and merge them with the
         # SAME deterministic linemerge walk as the kernel
         # (kernels.raster.merge_segments) — distributed == kernel by
         # construction
-        cid = int(key[0])
         segs = []
-        la_col = pdf['la']
-        lb_col = pdf['lb']
-        for i, (ax, ay, bx, by) in enumerate(
-                zip(pdf['ax'], pdf['ay'], pdf['bx'], pdf['by'])):
-            a = (int(ax), int(ay))
-            b = (int(bx), int(by))
+        for ax, ay, bx, by, la, lb in zip(
+                *(tbl.column(k).to_pylist()
+                  for k in ('ax', 'ay', 'bx', 'by', 'la', 'lb'))):
+            a = (ax, ay)
+            b = (bx, by)
             path = [a, b]
-            la = la_col.iloc[i]
-            lb = lb_col.iloc[i]
-            if pd.notna(la):
-                tl = (int(la) % 2097152, int(la) // 2097152)
+            if la is not None:
+                tl = (la % 2097152, la // 2097152)
                 if tl != a:
                     path.insert(0, tl)
-            if pd.notna(lb):
-                tl = (int(lb) % 2097152, int(lb) // 2097152)
+            if lb is not None:
+                tl = (lb % 2097152, lb // 2097152)
                 if tl != b:
                     path.append(tl)
             segs.append(path)
-        from buzzard_spark.kernels import geometry as geom
         a_, b_, c_, d_, e_, f_ = coef
-        rows = []
+        out = {k: [] for k in line_schema.names}
         for path in raster.merge_segments(segs):
             px = np.asarray([p[0] + 0.5 for p in path])
             py = np.asarray([p[1] + 0.5 for p in path])
             line = np.column_stack(
                 [px * a_ + py * b_ + c_, px * d_ + py * e_ + f_])
-            rows.append({'chain_id': cid,
-                         'wkb': bytearray(geom.wkb_linestring(line)),
-                         'n_pts': len(path)})
-        return pd.DataFrame(rows)
+            out['chain_id'].append(key[0].as_py())
+            out['wkb'].append(geometry.wkb_linestring(line))
+            out['n_pts'].append(len(path))
+        return pa.Table.from_pydict(out, schema=line_schema)
 
     # thin_tiles registers its round blocks here; the persisted edge and
     # fragment tables join them
     registry: list = []
     try:
         mask_tiles = thin_tiles(spark, mask_tiles, registry, tile_size)
-        pixels = _tile_halo_pixels_h(mask_tiles, 2, tile_size)
-        edges_px = _edges_with_links(pixels).persist()
+        edges_px = _edges_with_links(mask_tiles, tile_size).persist()
         registry.append(edges_px)
         ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
                 .unionByName(edges_px.select('eid',
@@ -660,8 +631,8 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
         intra = pairs_t.where(F.col('_ta') == F.col('_tb'))
         cross = pairs_t.where(F.col('_ta') != F.col('_tb')) \
             .select('id_a', 'id_b')
-        local = intra.groupBy('_ta').applyInPandas(_uf,
-                                                   'eid long, lroot long')
+        local = (intra.select('_ta', 'id_a', 'id_b').groupBy('_ta')
+                 .applyInArrow(_uf, 'eid long, lroot long'))
         # eid = (origin pixel)*4 + dir is unique per edge row by
         # construction (each tile emits its own pixels' edges exactly
         # once), so no distinct — it would be a full extra exchange of
@@ -683,7 +654,7 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
         out = (_join_labels(m, 'lroot', links['id_a'], links['id_b'])
                .select(F.col('comp').alias('chain_id'),
                        'ax', 'ay', 'bx', 'by', 'la', 'lb')
-               .groupBy('chain_id').applyInPandas(_assemble, LINE_SCHEMA))
+               .groupBy('chain_id').applyInArrow(_assemble, LINE_SCHEMA))
         lines = fetch(out, MAX_SHAPES, 'raster_ops.MAX_SHAPES')
     finally:
         release_blocks(registry)

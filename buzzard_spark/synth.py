@@ -1,13 +1,10 @@
 """Deterministic synthetic web-page corpus (Common-Crawl-style).
 
-Two sources, same geoparsing arithmetic (functions.sqlgen):
-
-- ``pages_from_documents``: the testdata ``documents`` parquet with derived
-  url / lat / lng — used by the oracle-checked queries (the DuckDB oracle
-  re-derives the identical columns in SQL).
-- ``synthetic_pages``: ``spark.range(n)``-generated pages at any scale —
-  used by perfbench (the generator is O(1) memory per partition and
-  scale-free).
+``synthetic_pages``: ``spark.range(n)``-generated pages at any scale —
+used by perfbench (the generator is O(1) memory per partition and
+scale-free). Its geoparsing arithmetic (functions.sqlgen) is the one the
+oracle-checked queries derive from the testdata ``documents`` parquet
+(tests/helpers.py), and the DuckDB oracles re-derive in SQL.
 
 Everything is built from Catalyst expressions — zero Python in the row path.
 """
@@ -19,20 +16,6 @@ from pyspark.sql import functions as F
 
 from buzzard_spark.functions import sqlgen
 from buzzard_spark.session import local_frame
-
-
-def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet → pages(page_id, url, text, lang, lat, lng)."""
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet')
-    return docs.select(
-        F.col('doc_id').alias('page_id'),
-        F.expr("concat('https://host', CAST(doc_id % 1000 AS STRING), "
-               "'.example/', CAST(doc_id AS STRING))").alias('url'),
-        'text',
-        'lang',
-        F.expr(sqlgen.lat_sql('doc_id')).alias('lat'),
-        F.expr(sqlgen.lng_sql('doc_id')).alias('lng'),
-    )
 
 
 N_LAT_STRIPS = 4096
@@ -90,54 +73,6 @@ def synthetic_pages(spark: SparkSession, n: int, partitions: int | None = None,
         F.expr(f'coalesce({lat}, 0D)').alias('lat'),
         F.expr(f"coalesce({sqlgen.lng_sql('page_id')}, 0D)").alias('lng'),
     )
-
-
-def regions_pentagon(spark: SparkSession, count: int) -> DataFrame:
-    """Convex-pentagon polygon regions as WKB + bbox columns.
-
-    Same centers / half-sizes as the rectangle regions (sqlgen mirrors);
-    built driver-side (dimension table — at 10^12-page scale the polygon
-    side stays tiny relative to pages; a mapInPandas generator would make
-    this executor-side if the dimension itself were huge).
-    """
-    import numpy as np
-
-    from buzzard_spark.kernels import geometry
-
-    cols = sqlgen.region_cols_np(np.arange(count))
-    pent = np.asarray(sqlgen.PENTAGON)
-    rows = []
-    for r in range(count):
-        vx = cols['clng'][r] + cols['halfw'][r] * pent[:, 0]
-        vy = cols['clat'][r] + cols['halfh'][r] * pent[:, 1]
-        ring = np.column_stack([vx, vy])
-        rows.append((r, bytearray(geometry.wkb_polygon(ring)),
-                     float(vy.min()), float(vx.min()),
-                     float(vy.max()), float(vx.max())))
-    return local_frame(
-        spark, rows, 'region_id long, wkb binary, minlat double, '
-                     'minlng double, maxlat double, maxlng double')
-
-
-def regions_rect_wkb(spark: SparkSession, count: int) -> DataFrame:
-    """The rectangle regions as WKB polygons + bbox columns (for operators
-    that take arbitrary WKB geometry, e.g. the distributed rasterizer)."""
-    import numpy as np
-
-    from buzzard_spark.kernels import geometry
-
-    cols = sqlgen.region_cols_np(np.arange(count))
-    rows = []
-    for r in range(count):
-        lo_x, hi_x = cols['minlng'][r], cols['maxlng'][r]
-        lo_y, hi_y = cols['minlat'][r], cols['maxlat'][r]
-        ring = np.asarray([(lo_x, lo_y), (hi_x, lo_y), (hi_x, hi_y),
-                           (lo_x, hi_y), (lo_x, lo_y)])
-        rows.append((r, bytearray(geometry.wkb_polygon(ring)),
-                     float(lo_y), float(lo_x), float(hi_y), float(hi_x)))
-    return local_frame(
-        spark, rows, 'region_id long, wkb binary, minlat double, '
-                     'minlng double, maxlat double, maxlng double')
 
 
 def features(spark: SparkSession, count: int) -> DataFrame:

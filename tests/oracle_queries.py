@@ -22,6 +22,7 @@ from buzzard_spark.operators import knn as knn_ops
 from buzzard_spark.operators import raster_ops
 from buzzard_spark.operators import spatial_join
 from buzzard_spark.operators import vector_source as vector_ops
+from tests import helpers
 
 CELL_RES = 9          # BASELINE.json: "H3 res-9 index" analogue
 JOIN_RES = 4          # coarser cover grid for region join
@@ -34,7 +35,7 @@ TILE_FP = Footprint(tl=(-180.0, 90.0), size=(360.0, 180.0), rsize=(512, 256))
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return synth.pages_from_documents(spark, sf_dir)
+    return helpers.pages_from_documents(spark, sf_dir)
 
 
 def _knn_queries_df(spark: SparkSession) -> DataFrame:
@@ -102,7 +103,7 @@ def q_knn_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_polygon_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact point-in-polygon join (WKB pentagons, ray-casting UDF refine)."""
     pages = _pages(spark, sf_dir)
-    polys = synth.regions_pentagon(spark, N_REGIONS)
+    polys = helpers.regions_pentagon(spark, N_REGIONS)
     return (spatial_join.pip_join_wkb(pages, polys, JOIN_RES)
             .groupBy('region_id')
             .agg(F.count('*').alias('page_count')))
@@ -209,7 +210,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel count + sum/min/max of the deterministic (17x+31y) mod 97 band
     over WKB rect zones (pixel-center rule; oracle enumerates the
     closed-form pixel intervals)."""
-    polys = synth.regions_rect_wkb(spark, N_REGIONS)
+    polys = helpers.regions_rect_wkb(spark, N_REGIONS)
     return raster_ops.zonal_stats(spark, TILE_FP, polys, tile_size=64)
 
 
@@ -280,7 +281,7 @@ def q_polygonize_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_pixels); the oracle recomputes both from closed-form interval
     arithmetic (region-adjacency connected components + union-of-rectangles
     area), so the whole raster→vector path is value-checked."""
-    polys = synth.regions_rect_wkb(spark, N_REGIONS)
+    polys = helpers.regions_rect_wkb(spark, N_REGIONS)
     tiles = raster_ops.rasterize(spark, TILE_FP, polys, tile_size=64)
     comps = raster_ops.polygonize(spark, TILE_FP, tiles, tile_size=64)
     px_area = float(abs(TILE_FP.pxsizex * TILE_FP.pxsizey))
@@ -467,7 +468,7 @@ def oracle_sql() -> dict[str, str]:
             'SELECT region_id, COUNT(*) AS page_count FROM pages JOIN polys '
             'ON {pip} GROUP BY region_id'
         ).format(pages=pages, n=N_REGIONS,
-                 pip=sqlgen.pentagon_pip_sql(
+                 pip=helpers.pentagon_pip_sql(
                      'lat', 'lng',
                      {k: k for k in ('clat', 'clng', 'halfh', 'halfw')}),
                  **{k: v for k, v in sqlgen.region_cols_sql('region_id').items()

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from buzzard_spark.kernels import geometry as G
+from tests import helpers
 
 
 def test_wkb_point_roundtrip():
@@ -20,7 +21,7 @@ def test_wkb_polygon_roundtrip_with_hole():
     assert kind == 'polygon' and len(rings) == 2
     assert (rings[0][0] == rings[0][-1]).all()  # closed
     assert len(rings[0]) == 5 and len(rings[1]) == 5
-    assert G.wkb_bbox(buf) == (0.0, 0.0, 10.0, 10.0)
+    assert helpers.wkb_bbox(buf) == (0.0, 0.0, 10.0, 10.0)
 
 
 def test_wkb_multipolygon_roundtrip():

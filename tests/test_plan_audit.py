@@ -371,3 +371,45 @@ def test_tile_runs_maps_tile_rows_without_exchange(spark, raster_inputs):
     assert _python_inputs(plan, 'MapInArrow') == [_WINDOW + ['mask']]
     assert 'Exchange' not in plan
     assert 'FlatMapGroupsIn' not in plan
+
+
+def test_find_lines_halo_maps_are_arrow_over_one_exchange(spark,
+                                                          raster_inputs,
+                                                          monkeypatch):
+    """Every thinning round and vectorize_lines' edge stage is one halo
+    map: a FlatMapGroupsInArrow over exactly one Exchange,
+    hashpartitioning on (tile_y, tile_x), fed by the strips' MapInArrow.
+    No plan of vectorize_lines holds a pandas UDF or a cogroup."""
+    from buzzard_spark.operators import raster_ops
+
+    fp, _polys, path = raster_inputs
+    halos, plans = [], []
+    halo_map, fetch = raster_ops._halo_map, raster_ops.fetch
+
+    def halo_spy(*args):
+        # audited when built: the caller persists or checkpoints it next
+        df = halo_map(*args)
+        halos.append(_node(df, 'FlatMapGroupsInArrow').toString())
+        plans.append(_plan(df))
+        return df
+
+    def fetch_spy(df, cap, name):
+        plans.append(_plan(df))
+        return fetch(df, cap, name)
+
+    monkeypatch.setattr(raster_ops, '_halo_map', halo_spy)
+    monkeypatch.setattr(raster_ops, 'fetch', fetch_spy)
+    out = raster_ops.vectorize_lines(spark, fp, spark.read.parquet(path),
+                                     tile_size=6)
+    assert out.count() > 0
+    # at least one thinning round, then the edge stage
+    assert len(halos) >= 2
+    for below in halos:
+        assert below.count('Exchange') == 1
+        keys = re.findall(r'Exchange hashpartitioning\(([^)]*)\)', below)
+        assert [re.sub(r'#\d+L?', '', k).split(', ')[:-1] for k in keys] \
+            == [['tile_y', 'tile_x']]
+        assert 'MapInArrow' in below
+    for plan in plans:
+        assert 'InPandas' not in plan
+        assert 'CoGroup' not in plan

@@ -11,6 +11,7 @@ from buzzard_spark.functions import sqlgen
 from buzzard_spark.kernels import cells
 from buzzard_spark.operators import knn as knn_ops
 from buzzard_spark.operators import spatial_join
+from tests import helpers
 
 
 def test_cell_kernel_matches_sql(spark):
@@ -87,7 +88,7 @@ def test_cell_bounds_center():
     minlng, minlat, maxlng, maxlat = cells.cell_bounds(c, 6)
     assert minlng <= 20.0 < maxlng
     assert minlat <= 10.0 < maxlat
-    clat, clng = cells.cell_center(c, 6)
+    clat, clng = helpers.cell_center(c, 6)
     assert minlat < clat < maxlat and minlng < clng < maxlng
 
 

@@ -422,6 +422,11 @@ def test_find_lines_closed_form_input():
 
 
 def _mask_tiles_df(spark, mask, tile_size):
+    return spark.createDataFrame(_tile_rows(mask, tile_size),
+                                 raster_ops.TILE_SCHEMA)
+
+
+def _tile_rows(mask, tile_size):
     h, w = mask.shape
     rows = []
     for ty, y0 in enumerate(range(0, h, tile_size)):
@@ -431,7 +436,23 @@ def _mask_tiles_df(spark, mask, tile_size):
             sub = mask[y0:y0 + th, x0:x0 + tw]
             rows.append((ty, tx, y0, x0, th, tw,
                          bytearray(np.packbits(sub).tobytes())))
-    return spark.createDataFrame(rows, raster_ops.TILE_SCHEMA)
+    return rows
+
+
+def _sparse(rows):
+    """The tile rows with a set pixel, plus the empty tile with the most
+    such neighbours; every other empty tile is dropped."""
+    live = {r[:2] for r in rows if any(r[6])}
+
+    def _live_nbrs(r):
+        return sum((r[0] + dy, r[1] + dx) in live
+                   for dy in (-1, 0, 1) for dx in (-1, 0, 1))
+
+    empty = [r for r in rows if r[:2] not in live]
+    assert len(empty) > 1
+    keep = max(empty, key=_live_nbrs)
+    assert _live_nbrs(keep) > 0
+    return [r for r in rows if r[:2] in live] + [keep]
 
 
 def _thinned(spark, tiles, tile_size):
@@ -455,12 +476,14 @@ def _stitch(rows, shape):
     return out
 
 
-@pytest.mark.parametrize('seed, shape, tile_sizes', [
-    *(pytest.param(seed, (39, 54), (16, 6, 3), id=str(seed))
+@pytest.mark.parametrize('seed, shape, tile_sizes, pad', [
+    *(pytest.param(seed, (39, 54), (16, 6, 3), 0, id=str(seed))
       for seed in (0, 1, 2)),
-    pytest.param(3, (22, 25), (3,), id='3-ts3'),
-    pytest.param(4, (10, 10), (1,), id='4-ts1')])
-def test_thin_tiles_deep_halo_matches_kernel(spark, seed, shape, tile_sizes):
+    pytest.param(3, (22, 25), (3,), 0, id='3-ts3'),
+    pytest.param(4, (10, 10), (1,), 0, id='4-ts1'),
+    pytest.param(5, (22, 25), (6, 3), 14, id='5-sparse')])
+def test_thin_tiles_deep_halo_matches_kernel(spark, seed, shape, tile_sizes,
+                                             pad):
     """The halo-deepened thinning block (4 subiterations per exchange,
     _thin_block) must stay bit-identical to kernels.raster.thin on the
     stitched mask — on the tile_size=16 grid (halo within the next
@@ -469,7 +492,10 @@ def test_thin_tiles_deep_halo_matches_kernel(spark, seed, shape, tile_sizes):
     remainder tiles) or 4 tiles over (1-px tiles), on random multi-blob
     masks whose thinning runs many real iterations. The small grids keep
     small masks: on them every tile is one Python group of the round's
-    cogroup."""
+    grouped map. With ``pad``, the blobs get a zero margin of that many
+    px below and right, and the input drops the empty tiles except one
+    next to set pixels (``_sparse``): absent neighbours send no halo, and
+    every input row comes back once, with its window."""
     rng = np.random.default_rng(seed)
     h, w = shape
     mask = np.zeros(shape, bool)
@@ -479,11 +505,17 @@ def test_thin_tiles_deep_halo_matches_kernel(spark, seed, shape, tile_sizes):
         yy, xx = np.ogrid[:h, :w]
         mask |= ((yy - cy) ** 2 / max(ry, 1) ** 2 +
                  (xx - cx) ** 2 / max(rx, 1) ** 2) <= 1.0
+    mask = np.pad(mask, ((0, pad), (0, pad)))
     want = raster.thin(mask)
     assert want.sum() > 0 and (want != mask).any()
     for ts in tile_sizes:
-        tiles = _mask_tiles_df(spark, mask, ts)
-        got = _stitch(_thinned(spark, tiles, ts), mask.shape)
+        rows = _tile_rows(mask, ts)
+        if pad:
+            rows = _sparse(rows)
+        tiles = spark.createDataFrame(rows, raster_ops.TILE_SCHEMA)
+        got_rows = _thinned(spark, tiles, ts)
+        assert sorted(r[:6] for r in got_rows) == sorted(r[:6] for r in rows)
+        got = _stitch(got_rows, mask.shape)
         assert (got == want).all(), f'tile_size={ts} mismatch'
 
 
